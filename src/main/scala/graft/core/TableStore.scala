@@ -48,6 +48,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, Do
   */
 object TableStore {
 
+  /** Hash bucketing spec: data is split into `n` leaf dirs by
+    * pmod(hash(keys), n). */
   final case class Bucketing(keys: Seq[String], n: Int) {
     def expr: Column = pmod(hash(keys.map(col): _*), lit(n))
   }
@@ -66,22 +68,26 @@ object TableStore {
     * immutable; a DV commit changes only the manifest + sidecar. */
   final case class DvRef(path: String, deleted: Long)
 
-  /** A parsed manifest: the complete committed state of one version. */
-  /** `txns`: per-writer transaction high-watermarks (streaming query id
+  /** A parsed manifest: the complete committed state of one version.
+    *
+    * `txns`: per-writer transaction high-watermarks (streaming query id
     * -> last committed epoch), carried through every commit — the
     * Delta txn-action pattern that makes streaming-sink epoch commits
-    * idempotent (exactly-once). */
-  /** `cdf`: change-data-feed recording enabled — row-level mutations
+    * idempotent (exactly-once).
+    *
+    * `cdf`: change-data-feed recording enabled — row-level mutations
     * (merge / update / delete) persist their change rows under
-    * `_cdf/<version>/` in the same write pass as the data. */
-  /** `colmap`: COLUMN MAPPING (the Delta column-mapping model): logical
+    * `_cdf/<version>/` in the same write pass as the data.
+    *
+    * `colmap`: COLUMN MAPPING (the Delta column-mapping model): logical
     * column name -> the PHYSICAL name carried in parquet files.
     * Identity entries are omitted, so the map is empty until the first
     * RENAME / post-DROP re-ADD. Every manifest field (schema, stats
     * keys, bucketing keys, checks, bloomCols) speaks LOGICAL names;
     * only the parquet file boundary (writers, readers, footer stats,
-    * bloom sidecar names) translates through `phys`. */
-  /** `droppedPhys`: physical names of DROPPED columns that may still
+    * bloom sidecar names) translates through `phys`.
+    *
+    * `droppedPhys`: physical names of DROPPED columns that may still
     * exist in live files — a later ADD COLUMN with a colliding name
     * gets a fresh physical identity so old values can never
     * resurrect. */
@@ -228,8 +234,6 @@ class TableStore(spark: SparkSession, root: String) {
     new String(Files.readAllBytes(latestPtr(name)), StandardCharsets.UTF_8).trim.toLong
   }
 
-  /** Hash bucketing spec: data is split into `n` leaf dirs by
-    * pmod(hash(keys), n). */
   // ---- manifest (de)serialization ----
   // FULL snapshot record:
   //   {"schema": <ddl>, "dirs": [..], "bucketkeys": [..], "nbuckets": N,
@@ -263,9 +267,6 @@ class TableStore(spark: SparkSession, root: String) {
       s"${jsonStr(d)}: {\"path\": ${jsonStr(r.path)}, \"deleted\": ${r.deleted}}"
     }.mkString(",")}}"
 
-  /** The O(columns)-sized manifest fields, shared by full and delta
-    * records (a delta always carries them whole — only the O(dirs)
-    * maps are worth diffing). */
   /** Protocol gate (Delta's reader-version idea, minimal form): every
     * manifest record states the MINIMUM reader feature level required
     * to interpret it correctly. A future record format that adds a
@@ -282,6 +283,9 @@ class TableStore(spark: SparkSession, root: String) {
           "before reading this table")
     }
 
+  /** The O(columns)-sized manifest fields, shared by full and delta
+    * records (a delta always carries them whole — only the O(dirs)
+    * maps are worth diffing). */
   private def smallParts(m: Manifest): String = {
     val txnsPart =
       if (m.txns.isEmpty) "" else s""", "txns": ${longMapFragment(m.txns)}"""
@@ -582,12 +586,10 @@ class TableStore(spark: SparkSession, root: String) {
                      propOverrides: Map[String, String] = Map.empty,
                      extraPhys: Seq[Column] = Nil,
                      appendShaped: Boolean = false): Long = {
-    import meta.{schema, bucketing}
     // invariant checked BEFORE any data writes: a violating caller must
     // fail fast, not stream the whole DataFrame and orphan the dir
     require(!appendShaped || carryForward == meta.dirs,
       s"append-shaped commit on $name must carry every base dir")
-    val priorStats = meta.stats
     // version pinned from the manifest READ, not re-read here: a rival
     // landing between the caller's readManifest and this commit must
     // fail the put-if-absent, not get silently overwritten
@@ -595,28 +597,14 @@ class TableStore(spark: SparkSession, root: String) {
       if (!exists(name)) 0L
       else if (meta.baseVersion >= 0L) meta.baseVersion + 1
       else currentVersion(name) + 1 // fresh (unread) manifest on an existing table
-    val newDirs = df match {
-      case Some(d0) =>
-        carryForward ++ writeBatch(name, enforceChecks(d0, meta.allChecks), v, meta,
-          extraPhys)
-      case None => carryForward
-    }
-    // stats: keep carried dirs' entries, collect footers for new dirs
-    // (footers speak physical names; manifest stats speak logical)
-    // footer I/O per dir is independent — collect in parallel (a
-    // 32-bucket commit is otherwise 32 serial dir listings + opens).
-    // A CARRIED dir with no entry is never re-attempted: dirs are
+    val added = df.toSeq.flatMap(d0 =>
+      writeBatch(name, enforceChecks(d0, meta.allChecks), v, meta, extraPhys))
+    // footers are read for the new dirs only: carried dirs keep their
+    // entries, and one with NO entry is never re-attempted — dirs are
     // immutable, so a footer pass that yielded nothing at its own
-    // commit yields nothing forever — re-collecting would add O(stats-
-    // less dirs) filesystem reads to EVERY subsequent commit.
-    val carriedSet = carryForward.toSet
-    val stats = { import scala.collection.parallel.CollectionConverters._
-      newDirs.par.flatMap { d =>
-        priorStats.get(d).map(d -> _).orElse(
-          if (carriedSet.contains(d)) None
-          else DirStats.collect(dir(name).resolve("data").resolve(d), meta.physSchema)
-            .map(meta.statsToLogical).map(d -> _))
-      }.toMap.seq }
+    // commit yields nothing forever; re-collecting would add O(stats-
+    // less dirs) filesystem reads to EVERY subsequent commit
+    val addedStats = collectStats(name, meta, added)
     // APPEND-shaped commits (caller DECLARED append intent and carries
     // every base dir, only additions) take the optimistic-concurrency
     // path: a manifest collision rebases the added dirs onto the
@@ -624,29 +612,22 @@ class TableStore(spark: SparkSession, root: String) {
     // inferred from carryForward == meta.dirs: on a ZERO-dir table that
     // inference would classify INSERT OVERWRITE (and all-insert merges)
     // as appends and silently rebase a rival's rows INTO the overwrite.
-    if (appendShaped && df.isDefined && exists(name)) {
-      // set membership, NOT carryForward.contains: the List scan made
-      // this O(dirs^2) — 42 of a 10^5-dir append's 43 s (ProbeAppendHot)
-      val added = newDirs.filterNot(carriedSet.contains)
-      commitAppendWithRetry(name, meta, added,
-        stats.view.filterKeys(added.contains).toMap, propOverrides)
-    } else {
+    if (appendShaped && df.isDefined && exists(name))
+      commitAppend(name, meta, added, addedStats, propOverrides)
+    else {
+      // set probe, NOT carryForward.contains: the List scan made this
+      // O(dirs^2) — 42 of a 10^5-dir append's 43 s (ProbeAppendHot)
+      val carriedSet = carryForward.toSet
       // non-append shape (overwrite / rewrite / compaction): depends on
       // the rows it read, so a lost race is a conflict, never a rebase
-      commitExclusive(name, v, meta.copy(dirs = newDirs, stats = stats,
+      commitExclusive(name, v, meta.copy(dirs = carryForward ++ added,
+        stats = meta.stats.view.filterKeys(carriedSet).toMap ++ addedStats,
         props = meta.props ++ propOverrides),
         if (df.isDefined) "rewrite commit" else "metadata commit")
       v
     }
   }
 
-  /** Write `d`'s rows as version v's batch dir under data/ and return
-    * the new manifest dir entries: the batch dir itself, or its bucket
-    * LEAF dirs for bucketed tables. Files are written with PHYSICAL
-    * column names (identity unless a column was renamed). The unique
-    * suffix means two writers racing to the same version write
-    * DIFFERENT data dirs, so the loser (who fails the manifest's
-    * CREATE_NEW) can never trample the winner's data. */
   /** Manifest prop holding the next unassigned row id (its presence is
     * what "row tracking enabled" means). */
   private val RowTrackingProp = "rowtracking.next"
@@ -655,6 +636,13 @@ class TableStore(spark: SparkSession, root: String) {
     * (row-tracking postimages); never part of the logical schema. */
   private val RidCol = "__rid"
 
+  /** Write `d`'s rows as version v's batch dir under data/ and return
+    * the new manifest dir entries: the batch dir itself, or its bucket
+    * LEAF dirs for bucketed tables. Files are written with PHYSICAL
+    * column names (identity unless a column was renamed). The unique
+    * suffix means two writers racing to the same version write
+    * DIFFERENT data dirs, so the loser (who fails the manifest's
+    * CREATE_NEW) can never trample the winner's data. */
   private def writeBatch(name: String, d: DataFrame, v: Long,
                          meta: Manifest,
                          extraPhys: Seq[Column] = Nil,
@@ -678,11 +666,7 @@ class TableStore(spark: SparkSession, root: String) {
           .select(physCols ++ extraPhys :+ col("__b"): _*)
           .repartition(b.n, col("__b"))
           .write.mode("overwrite").partitionBy("__b").parquet(target.toString)
-        if (!Files.exists(target)) Seq.empty
-        else Using.resource(Files.list(target))(
-          _.iterator().asScala
-            .map(_.getFileName.toString).filter(_.startsWith("__b="))
-            .map(l => s"$batch/$l").toSeq.sorted)
+        leafNames(target).map(l => s"$batch/$l")
       case None =>
         sizedForWrite(d.select(physCols ++ extraPhys: _*))
           .write.mode("overwrite").parquet(target.toString)
@@ -690,6 +674,49 @@ class TableStore(spark: SparkSession, root: String) {
     }
     onStep("batch-written")
     written
+  }
+
+  /** The `<prefix><k>` leaf dirs a partitioned write laid out under
+    * `batch` (bucket leaves by default), by name, sorted — none when the
+    * write produced no dir at all (zero rows). */
+  private def leafNames(batch: Path, prefix: String = "__b="): Seq[String] =
+    if (!Files.isDirectory(batch)) Seq.empty
+    else Using.resource(Files.list(batch))(_.iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith(prefix)).toSeq.sorted)
+
+  /** Move executor-written data files into data/<batch>, each under its
+    * `__b=<k>` leaf when its parent dir names one (bucket-routed
+    * writers), and return the manifest dir entries they now form: the
+    * batch dir and/or its leaves, sorted. An empty file list leaves an
+    * empty batch dir — one (empty) entry. */
+  private def moveIntoBatch(name: String, batch: String, files: Seq[Path]): Seq[String] = {
+    val target = dataRoot(name).resolve(batch)
+    Files.createDirectories(target)
+    if (files.isEmpty) return Seq(batch)
+    files.groupBy(f =>
+      Option(f.getParent).map(_.getFileName.toString).filter(_.startsWith("__b=")))
+      .toSeq.sortBy(_._1).map { case (leaf, fs) =>
+        val to = leaf.fold(target)(target.resolve)
+        Files.createDirectories(to)
+        fs.foreach(f => Files.move(f, to.resolve(f.getFileName)))
+        leaf.fold(batch)(l => s"$batch/$l")
+      }
+  }
+
+  /** Footer statistics of freshly written `dirs`, keyed by manifest dir
+    * entry, with logical column names (footers speak physical ones) —
+    * what every commit records for the dirs it adds (data skipping, see
+    * [[DirStats]]). Footer I/O per dir is independent, so dirs collect
+    * in parallel (a 32-bucket commit is otherwise 32 serial listings).
+    * `absentIsNull = false` for dirs an EXTERNAL writer produced: a
+    * missing column chunk there cannot be assumed to mean an all-null
+    * column added after the write. */
+  private def collectStats(name: String, m: Manifest, dirs: Seq[String],
+                           absentIsNull: Boolean = true): Map[String, DirStats] = {
+    import scala.collection.parallel.CollectionConverters._
+    dirs.par.flatMap(d =>
+      DirStats.collect(dataRoot(name).resolve(d), m.physSchema, absentIsNull)
+        .map(ds => d -> m.statsToLogical(ds))).seq.toMap
   }
 
   /** Optimized write (the Delta `optimizeWrite` idea): when the
@@ -733,44 +760,29 @@ class TableStore(spark: SparkSession, root: String) {
     * cleanup, so on-disk state is byte-identical to a kill there. */
   private[graft] var onStep: String => Unit = _ => ()
 
-  /** Optimistic concurrency for APPEND-shaped commits, the Delta
-    * conflict-resolution model restricted to its safe core: an append
-    * depends on no prior ROWS, so losing the manifest race to another
-    * writer is resolved by re-reading the winner's manifest and
-    * committing base-dirs-of-the-winner + our added dirs. The rebase is
-    * refused (ConcurrentModificationException) when the winner changed
-    * METADATA our data was written under — schema, bucketing layout, or
-    * CHECK constraints (our rows were validated against the old set) —
-    * the same conflicts Delta's WriteSerializable level rejects. All
-    * other concurrent commits (appends, compaction, DV deletes, other
-    * tables' state) compose with an append. The manifest CREATE_NEW
-    * put-if-absent is what detects the race — no locks. */
-  private def commitAppendWithRetry(name: String, base: Manifest,
-                                    added: Seq[String],
-                                    addedStats: Map[String, DirStats],
-                                    propOverrides: Map[String, String] = Map.empty): Long = {
+  /** The optimistic commit loop every rebasing writer (batch appends,
+    * DSv2 attaches, streaming epochs) shares — the Delta conflict-
+    * resolution model restricted to its safe core. Each attempt re-reads
+    * the latest manifest, asks the caller's `rebase` step for the
+    * manifest to commit on top of it (None: nothing left to commit —
+    * already applied), and refuses a rival METADATA change the rows
+    * were written and validated under ([[refuseMetadataConflict]]).
+    * The manifest CREATE_NEW put-if-absent is what detects a lost race
+    * — no locks; the loser re-reads the winner and retries, at most 50
+    * times. Returns the committed version, or None when `rebase`
+    * declined. */
+  private def commitOptimistic(name: String, base: Manifest, what: String)(
+      rebase: Manifest => Option[Manifest]): Option[Long] = {
     var attempts = 0
     while (attempts < 50) {
       onBeforeOptimisticCommit()
       val curV = currentVersion(name)
       val latest = readManifest(name, curV)
-      refuseMetadataConflict(name, latest, base, "append")
-      // identity watermarks: our rows were minted from base's `next`;
-      // a concurrent writer advancing it means overlapping ids — the
-      // rebase must refuse (Delta refuses concurrent identity appends
-      // for exactly this reason)
-      val idKeys = (base.props.keySet ++ latest.props.keySet)
-        .filter(_.startsWith("identity."))
-      if (idKeys.exists(k => base.props.get(k) != latest.props.get(k)))
-        throw new java.util.ConcurrentModificationException(
-          s"append to $name conflicts with a concurrent identity-column " +
-            "assignment — retry the whole operation")
+      val next = rebase(latest).getOrElse(return None)
+      refuseMetadataConflict(name, latest, base, what)
       try {
-        commitManifest(name, curV + 1,
-          latest.copy(dirs = latest.dirs ++ added,
-            stats = latest.stats ++ addedStats,
-            props = latest.props ++ propOverrides))
-        return curV + 1
+        commitManifest(name, curV + 1, next)
+        return Some(curV + 1)
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           attempts += 1
@@ -782,8 +794,31 @@ class TableStore(spark: SparkSession, root: String) {
       }
     }
     throw new java.util.ConcurrentModificationException(
-      s"append to $name lost the commit race $attempts times — giving up")
+      s"$what to $name lost the commit race $attempts times — giving up")
   }
+
+  /** APPEND-shaped commit: an append depends on no prior ROWS, so a lost
+    * race rebases — the winner's dirs plus our `added` ones. All other
+    * concurrent commits (appends, compaction, DV deletes, other tables'
+    * state) compose with an append; only a rival identity-watermark
+    * advance refuses, besides the shared metadata refusal. */
+  private def commitAppend(name: String, base: Manifest, added: Seq[String],
+                           addedStats: Map[String, DirStats],
+                           propOverrides: Map[String, String] = Map.empty): Long =
+    commitOptimistic(name, base, "append") { latest =>
+      // identity watermarks: our rows were minted from base's `next`;
+      // a concurrent writer advancing it means overlapping ids — the
+      // rebase must refuse (Delta refuses concurrent identity appends
+      // for exactly this reason)
+      val idKeys = (base.props.keySet ++ latest.props.keySet)
+        .filter(_.startsWith("identity."))
+      if (idKeys.exists(k => base.props.get(k) != latest.props.get(k)))
+        throw new java.util.ConcurrentModificationException(
+          s"append to $name conflicts with a concurrent identity-column " +
+            "assignment — retry the whole operation")
+      Some(latest.copy(dirs = latest.dirs ++ added,
+        stats = latest.stats ++ addedStats, props = latest.props ++ propOverrides))
+    }.get
 
   /** The rebase refusal both optimistic writers share: the rows being
     * attached were written and VALIDATED under `base`'s metadata, so a
@@ -803,11 +838,6 @@ class TableStore(spark: SparkSession, root: String) {
           "(schema / bucketing / constraints) — retry the whole operation")
   }
 
-  /** The commit protocol: build any missing bloom-index files for the
-    * version's dirs (no-op unless the table has bloom columns — carried
-    * dirs keep theirs, so only just-written dirs cost a read pass),
-    * write manifest v, then atomically swap the _LATEST pointer. The
-    * single place this sequence lives. */
   /** Commit with staged change-feed rows: row-level writers stage their
     * `_cdf` contents under a dot-dir and only a SUCCESSFUL manifest
     * commit moves it to `_cdf/<v>`. A commit that loses the version
@@ -855,8 +885,7 @@ class TableStore(spark: SparkSession, root: String) {
     * lost put-if-absent race into a clear conflict error. Row-level
     * mutations and metadata changes depend on the manifest state they
     * read, so the only safe resolutions are the append-shaped rebases
-    * ([[commitAppendWithRetry]] / [[commitEpochWithRetry]] / the attach
-    * retries) or LOUD rejection — never re-pointing the stale snapshot
+    * ([[commitOptimistic]]) or LOUD rejection — never re-pointing the stale snapshot
     * at whatever version is now current, which would silently discard
     * the concurrent winner's dirs, deletion vectors, or metadata (lost
     * update / resurrected tombstones). */
@@ -1028,9 +1057,22 @@ class TableStore(spark: SparkSession, root: String) {
     }
   }
 
-  /** Dot-dir staging path for a version's change-feed rows. */
-  private def cdfStaging(name: String, v: Long, uuid: String): Path =
-    dir(name).resolve("_cdf").resolve(s".v$v-$uuid")
+  /** Stage version v's change rows when `m` records the change feed
+    * (None otherwise): `write` lays them out (as
+    * `__cdc=<kind>/` dirs) under the `.v<v>-<uuid>` dot-dir that
+    * [[commitWithCdf]] moves to `_cdf/<v>` once the manifest commits.
+    * The uuid is the writer's commit-local one, shared with its data
+    * dirs and DV sidecar — what [[completeCdfStaging]] matches on. */
+  private def stageChanges(name: String, m: Manifest, v: Long, uuid: String)(
+      write: Path => Unit): Option[Path] =
+    if (!m.cdf) None
+    else {
+      val cdfDir = dir(name).resolve("_cdf").resolve(s".v$v-$uuid")
+      Files.createDirectories(cdfDir)
+      write(cdfDir)
+      onStep("cdf-staged")
+      Some(cdfDir)
+    }
 
   /** Nullable at EVERY nesting level (struct fields, array elements,
     * map values) — forcing only the top level would leave codegen
@@ -1046,6 +1088,13 @@ class TableStore(spark: SparkSession, root: String) {
     case other => other
   }
 
+  /** The commit protocol: normalize the manifest (nullable schema, DVs
+    * of dropped dirs pruned, identity watermarks and row-tracking bases
+    * advanced), build any missing bloom-index files for the version's
+    * dirs (no-op unless the table has bloom columns — carried dirs keep
+    * theirs, so only just-written dirs cost a read pass), write manifest
+    * v, then atomically swap the _LATEST pointer. The single place this
+    * sequence lives. */
   private def commitManifest(name: String, v: Long, m0: Manifest): Unit = {
     // the manifest schema is always NULLABLE (same stance as
     // spark.read.parquet): parquet files can't enforce non-nullability,
@@ -1306,49 +1355,18 @@ class TableStore(spark: SparkSession, root: String) {
     }
   }
 
-  /** DELETE ... WHERE cond as a MERGE-ON-READ commit: instead of
-    * rewriting the dirs the predicate touches ([[delete]]'s
-    * copy-on-write), record the matching rows' (file, position)
-    * tombstones in a `_dv/` sidecar and commit only metadata. At
-    * 100 TB a point delete writes kilobytes instead of rewriting
-    * gigabytes; reads anti-join the (tiny) tombstone set until a
-    * rewrite of the dir (merge / update / compact / optimize)
-    * materializes the deletion and drops the DV. Stats/bloom pruning
-    * bounds stay sound — DVs only remove rows. With the change feed
-    * on, the deleted rows land under `_cdf/<v>` in the same pass. */
-  def deleteVectorized(name: String, condition: Column): Unit = {
-    val m = readManifest(name, currentVersion(name))
-    val (touched, _) = pruneDirsByCondition(name, m, condition)
-    if (touched.isEmpty) return
-    val v = m.baseVersion + 1
-    val uuid = java.util.UUID.randomUUID.toString.take(8)
-    // one scan of the touched dirs stages the matching rows (the small
-    // side, by MoR's premise) with their positions; sidecar + change
-    // rows derive from it. Persisted, not written to a temp parquet:
-    // the set feeds 2-3 downstream jobs and a disk roundtrip per
-    // commit doubles the fixed cost of small mutations; MEMORY_AND_DISK
-    // spills if a predicate unexpectedly matches big
-    // change rows materialize `__rid` when tracking is on, so a CDF
-    // consumer can key deletes on `_row_id` (keyless replication)
-    val trackingCdf = m.cdf && m.props.contains(RowTrackingProp)
-    val staged0 = scanLiveWithPos(name, m, touched, withRid = trackingCdf)
-      .filter(coalesce(condition, lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist in finally: a DV/CDF write failure or a lost commit
-    // race must not leave the staged blocks pinned in the executors
-    try {
-    val staged = if (!trackingCdf) staged0 else resolveRid(staged0, m)
-    val perDir = staged.select(dirOf("__relpath").as("dir"))
-      .groupBy("dir").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perDir.isEmpty) return
-    val newDirs = perDir.keySet
-    // dirs that already carry a DV merge their old tombstones in, so
-    // each dir keeps exactly one sidecar reference
+  /** Write version v's deletion-vector sidecar `dv-<v>-<uuid>`: the
+    * `fresh` (dir, relpath, pos) tombstones merged with the prior DVs of
+    * the dirs they touch, so each dir keeps exactly one sidecar
+    * reference. `perDir` counts the fresh tombstones per dir; returns
+    * those dirs' new references (metadata-only COUNT stays exact).
+    * Sidecars sort by (relpath, pos) so a scan task's per-file probe
+    * prunes row groups. */
+  private def writeDvSidecar(name: String, m: Manifest, v: Long, uuid: String,
+                             fresh: DataFrame,
+                             perDir: Map[String, Long]): Map[String, DvRef] = {
     val dvName = s"dv-$v-$uuid"
-    val fresh = staged.select(dirOf("__relpath").as("dir"),
-      col("__relpath").as("relpath"), col("__pos").as("pos"))
-    val priorDvd = newDirs.filter(m.dvs.contains).toSeq
+    val priorDvd = perDir.keySet.toSeq.sorted.filter(m.dvs.contains)
     val combined =
       if (priorDvd.isEmpty) fresh
       else fresh.unionByName(
@@ -1359,24 +1377,33 @@ class TableStore(spark: SparkSession, root: String) {
     combined.sortWithinPartitions("relpath", "pos")
       .write.mode("overwrite").parquet(dvRoot(name).resolve(dvName).toString)
     onStep("dv-written")
-    val stagedCdf = if (!m.cdf) None else {
-      val cdfDir = cdfStaging(name, v, uuid)
-      Files.createDirectories(cdfDir)
-      // _cdf files carry PHYSICAL names, like every parquet this store writes
-      val cdfRid = if (trackingCdf) Seq(col(RidCol)) else Nil
-      staged.select(m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ cdfRid: _*)
-        .write.mode("overwrite")
-        .parquet(cdfDir.resolve("__cdc=delete").toString)
-      onStep("cdf-staged")
-      Some(cdfDir)
+    perDir.map { case (d, n) =>
+      d -> DvRef(dvName, m.dvs.get(d).map(_.deleted).getOrElse(0L) + n)
     }
-    val updated = newDirs.map { d =>
-      val prior = m.dvs.get(d).map(_.deleted).getOrElse(0L)
-      d -> DvRef(dvName, prior + perDir(d))
-    }.toMap
-    commitWithCdf(name, v, m.copy(dvs = m.dvs ++ updated), stagedCdf)
-    } finally staged0.unpersist()
   }
+
+  /** The (dir, relpath, pos) tombstones of a [[scanLiveWithPos]] frame. */
+  private def tombstonesOf(staged: DataFrame): DataFrame =
+    staged.select(dirOf("__relpath").as("dir"),
+      col("__relpath").as("relpath"), col("__pos").as("pos"))
+
+  /** Rows per manifest dir of a [[scanLiveWithPos]] frame (one job). */
+  private def rowsPerDir(staged: DataFrame): Map[String, Long] =
+    staged.select(dirOf("__relpath").as("dir")).groupBy("dir").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** DELETE ... WHERE cond as a MERGE-ON-READ commit: instead of
+    * rewriting the dirs the predicate touches ([[delete]]'s
+    * copy-on-write), record the matching rows' (file, position)
+    * tombstones in a `_dv/` sidecar and commit only metadata. At
+    * 100 TB a point delete writes kilobytes instead of rewriting
+    * gigabytes; reads anti-join the (tiny) tombstone set until a
+    * rewrite of the dir (merge / update / compact / optimize)
+    * materializes the deletion and drops the DV. Stats/bloom pruning
+    * bounds stay sound — DVs only remove rows. With the change feed
+    * on, the deleted rows land under `_cdf/<v>` in the same pass. */
+  def deleteVectorized(name: String, condition: Column): Unit =
+    mutateVectorized(name, condition, None)
 
   /** UPDATE ... SET ... WHERE cond as a MERGE-ON-READ commit: the
     * matched rows' (file, position) tombstones land in a `_dv/`
@@ -1390,97 +1417,80 @@ class TableStore(spark: SparkSession, root: String) {
     * gets fresh footer stats. With the change feed on, preimage and
     * postimage rows land under `_cdf/<v>` in the same pass. */
   def updateVectorized(name: String, condition: Column,
-                       set: Map[String, Column]): Unit = {
+                       set: Map[String, Column]): Unit =
+    mutateVectorized(name, condition, Some(set))
+
+  /** Shared body of the merge-on-read mutations: tombstone the rows
+    * matching `condition` and, for an UPDATE (`set` defined), append
+    * their post-SET images as a new batch dir — one commit. */
+  private def mutateVectorized(name: String, condition: Column,
+                               set: Option[Map[String, Column]]): Unit = {
     val m = readManifest(name, currentVersion(name))
     // a typo'd SET column would otherwise be silently dropped while the
     // matched rows are still tombstoned and re-appended unchanged
-    require(set.keySet.subsetOf(m.schema.fieldNames.toSet),
+    set.foreach(s => require(s.keySet.subsetOf(m.schema.fieldNames.toSet),
       s"SET references non-existent column(s): " +
-        s"${(set.keySet -- m.schema.fieldNames).mkString(", ")}")
+        s"${(s.keySet -- m.schema.fieldNames).mkString(", ")}"))
     val (touched, _) = pruneDirsByCondition(name, m, condition)
     if (touched.isEmpty) return
     val v = m.baseVersion + 1
     val uuid = java.util.UUID.randomUUID.toString.take(8)
+    // row tracking: resolve each staged row's STABLE id (carried __rid
+    // from a prior rewrite, else the manifest base + position) so a
+    // postimage file can materialize it — the id survives the
+    // tombstone+re-append — and change rows carry it, so a CDF
+    // consumer can key on `_row_id` (keyless replication)
+    val tracking = m.props.contains(RowTrackingProp) && (set.isDefined || m.cdf)
+    val ridCols = if (tracking) Seq(col(RidCol)) else Nil
     // one scan of the touched dirs stages the matching rows (the small
     // side, by MoR's premise) with their positions; tombstones,
     // postimages, and change rows all derive from this single pass.
-    // Persisted (spill-safe), not round-tripped through a temp parquet
-    // — the write+re-read doubled the fixed cost of small mutations
-    val tracking = m.props.contains(RowTrackingProp)
-    val schemaCols = m.schema.map(f => col(f.name))
+    // Persisted (MEMORY_AND_DISK spills if a predicate unexpectedly
+    // matches big), not round-tripped through a temp parquet — the
+    // write+re-read doubled the fixed cost of small mutations
     val staged0 = scanLiveWithPos(name, m, touched, withRid = tracking)
       .filter(coalesce(condition, lit(false)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // unpersist in finally: a postimage/DV/CDF write failure or a lost
     // commit race must not leave the staged blocks pinned
     try {
-    // row tracking: resolve each staged row's STABLE id now (carried
-    // __rid from a prior rewrite, else the manifest base + position)
-    // so the postimage file can materialize it — the id survives the
-    // tombstone+re-append
-    val staged = if (!tracking) staged0 else resolveRid(staged0, m)
-    val perDir = staged.select(dirOf("__relpath").as("dir"))
-      .groupBy("dir").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perDir.isEmpty) return
-    // post-SET images (every staged row matched, so SET applies
-    // unconditionally), conformed + CHECK-enforced like any append
-    val out = m.schema.map(f =>
-      set.get(f.name).map(_.as(f.name)).getOrElse(col(f.name).as(f.name)))
-    val conformCols = m.schema.map(f => col(f.name).cast(f.dataType).as(f.name))
-    val outRid = if (tracking) out :+ col(RidCol) else out
-    val conformRid = if (tracking) conformCols :+ col(RidCol) else conformCols
-    val postimage = enforceChecks(
-      staged.select(outRid: _*).select(conformRid: _*), m.allChecks)
-    val newDirs = writeBatch(name, postimage, v, m,
-      extraPhys = if (tracking) Seq(col(RidCol)) else Nil,
-      uuid = Some(uuid))
-    // tombstones: fresh positions + the prior DVs of dirs gaining new
-    // ones, merged so each dir keeps exactly one sidecar reference
-    val dvName = s"dv-$v-$uuid"
-    val fresh = staged.select(dirOf("__relpath").as("dir"),
-      col("__relpath").as("relpath"), col("__pos").as("pos"))
-    val priorDvd = perDir.keySet.filter(m.dvs.contains).toSeq
-    val combined =
-      if (priorDvd.isEmpty) fresh
-      else fresh.unionByName(
-        dvRows(name, m, priorDvd)
-          .select(col("__dv_relpath").as("relpath"), col("__dv_pos").as("pos"))
-          .withColumn("dir", dirOf("relpath"))
-          .select("dir", "relpath", "pos"))
-    combined.sortWithinPartitions("relpath", "pos")
-      .write.mode("overwrite").parquet(dvRoot(name).resolve(dvName).toString)
-    onStep("dv-written")
-    val stagedCdf = if (!m.cdf) None else {
-      val cdfDir = cdfStaging(name, v, uuid)
-      Files.createDirectories(cdfDir)
-      // with row tracking the change rows MATERIALIZE the stable id, so
-      // a change-feed consumer can key on `_row_id` (keyless replication)
-      val cdfRid = if (tracking) Seq(col(RidCol)) else Nil
-      val toPhys = m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ cdfRid
-      // ONE write for both images: partitionBy lays out the same
-      // `__cdc=<kind>/` dirs the reader globs, at half the job count
-      // (these commits are fixed-cost-dominated at small batch sizes)
-      staged.select(schemaCols ++ cdfRid: _*).select(toPhys: _*)
-        .withColumn("__cdc", lit("update_preimage"))
-        .unionByName(postimage.select(toPhys: _*)
-          .withColumn("__cdc", lit("update_postimage")))
-        .write.mode("overwrite").partitionBy("__cdc")
-        .parquet(cdfDir.toString)
-      onStep("cdf-staged")
-      Some(cdfDir)
-    }
-    val updatedDvs = perDir.keySet.map { d =>
-      val prior = m.dvs.get(d).map(_.deleted).getOrElse(0L)
-      d -> DvRef(dvName, prior + perDir(d))
-    }.toMap
-    val stats = { import scala.collection.parallel.CollectionConverters._
-      m.stats ++ newDirs.par.flatMap(d =>
-        DirStats.collect(dataRoot(name).resolve(d), m.physSchema)
-          .map(m.statsToLogical).map(d -> _)).seq }
-    commitWithCdf(name, v,
-      m.copy(dirs = m.dirs ++ newDirs, stats = stats, dvs = m.dvs ++ updatedDvs),
-      stagedCdf)
+      val staged = if (!tracking) staged0 else resolveRid(staged0, m)
+      val perDir = rowsPerDir(staged)
+      if (perDir.isEmpty) return
+      // post-SET images (every staged row matched, so SET applies
+      // unconditionally), conformed + CHECK-enforced like any append
+      val postimage = set.map { s =>
+        val out = m.schema.map(f =>
+          s.get(f.name).map(_.as(f.name)).getOrElse(col(f.name).as(f.name)))
+        val conformCols = m.schema.map(f => col(f.name).cast(f.dataType).as(f.name))
+        enforceChecks(staged.select(out ++ ridCols: _*)
+          .select(conformCols ++ ridCols: _*), m.allChecks)
+      }
+      val newDirs = postimage.toSeq.flatMap(p =>
+        writeBatch(name, p, v, m, extraPhys = ridCols, uuid = Some(uuid)))
+      val dvs = writeDvSidecar(name, m, v, uuid, tombstonesOf(staged), perDir)
+      val stagedCdf = stageChanges(name, m, v, uuid) { cdfDir =>
+        // _cdf files carry PHYSICAL names, like every parquet this store writes
+        val toPhys = m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ ridCols
+        postimage match {
+          case None =>
+            staged.select(toPhys: _*).write.mode("overwrite")
+              .parquet(cdfDir.resolve("__cdc=delete").toString)
+          case Some(post) =>
+            // ONE write for both images: partitionBy lays out the same
+            // `__cdc=<kind>/` dirs the reader globs, at half the job
+            // count (these commits are fixed-cost-dominated)
+            staged.select(m.schema.map(f => col(f.name)) ++ ridCols: _*)
+              .select(toPhys: _*).withColumn("__cdc", lit("update_preimage"))
+              .unionByName(post.select(toPhys: _*)
+                .withColumn("__cdc", lit("update_postimage")))
+              .write.mode("overwrite").partitionBy("__cdc")
+              .parquet(cdfDir.toString)
+        }
+      }
+      commitWithCdf(name, v, m.copy(dirs = m.dirs ++ newDirs,
+        stats = m.stats ++ collectStats(name, m, newDirs), dvs = m.dvs ++ dvs),
+        stagedCdf)
     } finally staged0.unpersist()
   }
 
@@ -1701,7 +1711,7 @@ class TableStore(spark: SparkSession, root: String) {
     * watermark advances IN THE SAME COMMIT as the rows, so a replayed
     * or crashed write can never double-assign. Two appends racing on
     * the watermark conflict loudly (the optimistic rebase refuses —
-    * see commitAppendWithRetry) instead of minting duplicate ids. */
+    * see [[commitAppend]]) instead of minting duplicate ids. */
   def setIdentityColumn(name: String, colName: String, start: Long = 1L): Unit = {
     val m = readManifest(name, currentVersion(name))
     require(m.schema.fieldNames.contains(colName), s"no such column: $colName")
@@ -1792,15 +1802,9 @@ class TableStore(spark: SparkSession, root: String) {
   private[graft] def attachDirWhere(name: String, batchDir: String,
                                     condition: Column): Unit = {
     val m = readManifest(name, currentVersion(name))
-    val dirs: Seq[String] = m.bucketing match {
-      case Some(_) =>
-        val batch = dataRoot(name).resolve(batchDir)
-        if (!Files.isDirectory(batch)) Seq.empty
-        else Using.resource(Files.list(batch))(_.iterator().asScala
-          .map(_.getFileName.toString).filter(_.startsWith("__b="))
-          .map(l => s"$batchDir/$l").toSeq.sorted)
-      case None => Seq(batchDir)
-    }
+    val dirs: Seq[String] =
+      if (m.bucketing.isEmpty) Seq(batchDir)
+      else leafNames(dataRoot(name).resolve(batchDir)).map(l => s"$batchDir/$l")
     val stagedView = scanDirs(dirs, name, m.physSchema).select(m.logicalCols: _*)
     if (!stagedView.filter(!coalesce(condition, lit(false))).isEmpty)
       throw new IllegalArgumentException(
@@ -1809,7 +1813,7 @@ class TableStore(spark: SparkSession, root: String) {
     requireChecksPass(name, m, dirs)
     replaceRegionCommit(name, m, condition, newDirsOf = (_, _) => dirs,
       extraProps = Map.empty,
-      statsAbsentIsNull = false) // external writer, like attachDir
+      absentIsNull = false) // external writer, like attachDir
   }
 
   /** Shared core of [[overwriteWhere]] / [[attachDirWhere]]: replace
@@ -1826,7 +1830,7 @@ class TableStore(spark: SparkSession, root: String) {
   private def replaceRegionCommit(name: String, m: Manifest, condition: Column,
                                   newDirsOf: (Long, String) => Seq[String],
                                   extraProps: Map[String, String],
-                                  statsAbsentIsNull: Boolean = true): Unit = {
+                                  absentIsNull: Boolean = true): Unit = {
     val v = m.baseVersion + 1
     val uuid = java.util.UUID.randomUUID.toString.take(8)
     val (touched, _) = pruneDirsByCondition(name, m, condition)
@@ -1843,10 +1847,7 @@ class TableStore(spark: SparkSession, root: String) {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
       val staged = staged0.map(s => if (!trackingCdf) s else resolveRid(s, m))
-      val perDir = staged.map(_.select(dirOf("__relpath").as("dir"))
-        .groupBy("dir").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-        .getOrElse(Map.empty[String, Long])
+      val perDir = staged.map(rowsPerDir).getOrElse(Map.empty[String, Long])
       // exact live counts decide full drops: footer totals minus prior
       // tombstones, only for dirs that matched at all
       val liveCount: Map[String, Long] = {
@@ -1860,37 +1861,13 @@ class TableStore(spark: SparkSession, root: String) {
       val dropped = perDir.keySet.filter(d => perDir(d) == liveCount(d))
       val partial = (perDir.keySet -- dropped).toSeq.sorted
       val newDirs = newDirsOf(v, uuid)
-      // DV sidecar only for partially-replaced dirs (+ their prior DVs,
-      // merged so each dir keeps exactly one sidecar reference)
-      val dvName = s"dv-$v-$uuid"
+      // DV sidecar only for partially-replaced dirs
       val updatedDvs: Map[String, DvRef] =
         if (partial.isEmpty) Map.empty
-        else {
-          val partialSet = partial.toSet
-          val fresh = staged.get
-            .withColumn("dir", dirOf("__relpath"))
-            .filter(col("dir").isin(partial: _*))
-            .select(col("dir"), col("__relpath").as("relpath"),
-              col("__pos").as("pos"))
-          val priorDvd = partial.filter(m.dvs.contains)
-          val combined =
-            if (priorDvd.isEmpty) fresh
-            else fresh.unionByName(
-              dvRows(name, m, priorDvd)
-                .select(col("__dv_relpath").as("relpath"), col("__dv_pos").as("pos"))
-                .withColumn("dir", dirOf("relpath"))
-                .select("dir", "relpath", "pos"))
-          combined.sortWithinPartitions("relpath", "pos")
-            .write.mode("overwrite").parquet(dvRoot(name).resolve(dvName).toString)
-          onStep("dv-written")
-          partialSet.map { d =>
-            val prior = m.dvs.get(d).map(_.deleted).getOrElse(0L)
-            d -> DvRef(dvName, prior + perDir(d))
-          }.toMap
-        }
-      val stagedCdf = if (!m.cdf) None else {
-        val cdfDir = cdfStaging(name, v, uuid)
-        Files.createDirectories(cdfDir)
+        else writeDvSidecar(name, m, v, uuid,
+          tombstonesOf(staged.get).filter(col("dir").isin(partial: _*)),
+          perDir.view.filterKeys(partial.toSet).toMap)
+      val stagedCdf = stageChanges(name, m, v, uuid) { cdfDir =>
         val cdfRid = if (trackingCdf) Seq(col(RidCol)) else Nil
         val toPhys = m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ cdfRid
         // ONE write lays out both `__cdc=<kind>/` dirs; insert rows
@@ -1903,17 +1880,11 @@ class TableStore(spark: SparkSession, root: String) {
             .unionByName(insertRows, allowMissingColumns = true))
           .getOrElse(insertRows)
           .write.mode("overwrite").partitionBy("__cdc").parquet(cdfDir.toString)
-        onStep("cdf-staged")
-        Some(cdfDir)
       }
       val keptDirs = m.dirs.filterNot(dropped.contains)
-      val stats = { import scala.collection.parallel.CollectionConverters._
-        (m.stats -- dropped) ++ newDirs.par.flatMap(d =>
-          DirStats.collect(dataRoot(name).resolve(d), m.physSchema,
-              absentIsNull = statsAbsentIsNull)
-            .map(m.statsToLogical).map(d -> _)).seq }
       commitWithCdf(name, v,
-        m.copy(dirs = keptDirs ++ newDirs, stats = stats,
+        m.copy(dirs = keptDirs ++ newDirs,
+          stats = (m.stats -- dropped) ++ collectStats(name, m, newDirs, absentIsNull),
           dvs = (m.dvs -- dropped) ++ updatedDvs,
           props = m.props ++ extraProps),
         stagedCdf)
@@ -2108,13 +2079,6 @@ class TableStore(spark: SparkSession, root: String) {
     small.size
   }
 
-  /** OPTIMIZE-family commits rewrite files but change no rows: with the
-    * change feed on, stamp an empty `_cdf/<v>` marker so the CDF reader
-    * reports zero changes instead of a spurious full delete+insert.
-    * `v` is the version the caller COMMITTED (pinned) and `cdf` the flag
-    * it carried into that version — never re-read here: a rival append
-    * landing right after the commit must not get ITS version stamped
-    * "zero logical changes" (which would erase its rows from the feed). */
   /** Manifest prop stamping a version as PHYSICAL-ONLY (compact /
     * optimize / DV purge): the value is the stamping commit's own
     * version, so the prop carried forward onto later manifests matches
@@ -2127,6 +2091,13 @@ class TableStore(spark: SparkSession, root: String) {
   private def noChangeStamp(m: Manifest, v: Long): Map[String, String] =
     if (!m.cdf) Map.empty else Map(NoChangeProp -> v.toString)
 
+  /** OPTIMIZE-family commits rewrite files but change no rows: with the
+    * change feed on, stamp an empty `_cdf/<v>` marker so the CDF reader
+    * reports zero changes instead of a spurious full delete+insert.
+    * `v` is the version the caller COMMITTED (pinned) and `cdf` the flag
+    * it carried into that version — never re-read here: a rival append
+    * landing right after the commit must not get ITS version stamped
+    * "zero logical changes" (which would erase its rows from the feed). */
   private def markNoLogicalChange(name: String, v: Long, cdf: Boolean): Unit =
     if (cdf)
       Files.createDirectories(dir(name).resolve("_cdf").resolve(v.toString)): Unit
@@ -2206,12 +2177,11 @@ class TableStore(spark: SparkSession, root: String) {
         .sortWithinPartitions(col("__z")))
   }
 
-  /** Shared tail of the OPTIMIZE rewrites: write the clustered rows with
-    * ONE MANIFEST DIR PER POST-SHUFFLE PARTITION (narrow disjoint stats
-    * per dir), collect fresh stats, commit. Drops any helper columns the
-    * clustering added (only schema columns are written). */
-  /** Write one range-clustered batch for version v; returns its leaf
-    * dirs + their footer stats (the caller commits). */
+  /** Write one range-clustered batch for version v with ONE MANIFEST
+    * DIR PER POST-SHUFFLE PARTITION (narrow disjoint stats per dir);
+    * returns its leaf dirs + their footer stats (the caller commits).
+    * Drops any helper columns the clustering added (only schema columns
+    * are written). */
   private def writeClusteredBatch(name: String, m: Manifest,
                                   clustered: DataFrame, v: Long)
       : (Seq[String], Map[String, DirStats]) = {
@@ -2225,19 +2195,12 @@ class TableStore(spark: SparkSession, root: String) {
       .select(m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ keepRid :+
         spark_partition_id().as("__r"): _*)
       .write.mode("overwrite").partitionBy("__r").parquet(target.toString)
-    val leaves =
-      if (!Files.exists(target)) Seq.empty
-      else Using.resource(Files.list(target))(
-        _.iterator().asScala
-          .map(_.getFileName.toString).filter(_.startsWith("__r="))
-          .map(l => s"$batch/$l").toSeq.sorted)
-    val stats = { import scala.collection.parallel.CollectionConverters._
-      leaves.par.flatMap(l =>
-        DirStats.collect(dir(name).resolve("data").resolve(l), m.physSchema)
-          .map(m.statsToLogical).map(l -> _)).toMap.seq }
-    (leaves, stats)
+    val leaves = leafNames(target, prefix = "__r=").map(l => s"$batch/$l")
+    (leaves, collectStats(name, m, leaves))
   }
 
+  /** Shared tail of the full OPTIMIZE rewrites: write the clustered
+    * rows as one batch, commit it as the table's only dirs. */
   private def clusterRewrite(name: String, m: Manifest, clustered: DataFrame): Unit = {
     val v = m.baseVersion + 1
     val (leaves, stats) = writeClusteredBatch(name, m, clustered, v)
@@ -2581,6 +2544,12 @@ class TableStore(spark: SparkSession, root: String) {
     try Files.getLastModifiedTime(p).toMillis
     catch { case _: java.io.IOException => System.currentTimeMillis() }
 
+  /** Test hook: runs right after vacuum resolves `cur` — the window in
+    * which a concurrent commit can land a version vacuum's retained-set
+    * arithmetic never saw (deterministic race injection, as
+    * [[onBeforeOptimisticCommit]]). */
+  private[graft] var onVacuumAfterVersionRead: () => Unit = () => ()
+
   /** VACUUM: physically delete data no version within the retained
     * window references — superseded batch dirs/bucket leaves and orphan
     * dirs from aborted DSv2 writes. Keeps the latest `retainVersions`
@@ -2593,12 +2562,6 @@ class TableStore(spark: SparkSession, root: String) {
     * read. The reference lists VACUUM as future work
     * (/root/reference/README.md:654-659); the manifest design makes it
     * a set subtraction here. */
-  /** Test hook: runs right after vacuum resolves `cur` — the window in
-    * which a concurrent commit can land a version vacuum's retained-set
-    * arithmetic never saw (deterministic race injection, as
-    * [[onBeforeOptimisticCommit]]). */
-  private[graft] var onVacuumAfterVersionRead: () => Unit = () => ()
-
   def vacuum(name: String, retainVersions: Int = 1,
              dryRun: Boolean = false): Seq[Path] = {
     require(retainVersions >= 1, "must retain at least the current version")
@@ -2770,13 +2733,20 @@ class TableStore(spark: SparkSession, root: String) {
     * so a violating row fails the WRITE JOB (single pass, no extra
     * validation scan) — the Delta constraints model. The filter's
     * assert_true(...) is null for passing rows, so the predicate is
-    * always true and removes nothing; it exists only to evaluate. */
-  private def enforceChecks(df: DataFrame, checks: Map[String, String]): DataFrame =
+    * always true and removes nothing; it exists only to evaluate. On a
+    * change-feed frame ([[commitCdc]]'s `__cdc`-tagged rows) only the
+    * `current` rows are table rows — preimage/delete rows are prior
+    * data and must not re-fail. */
+  private def enforceChecks(df: DataFrame, checks: Map[String, String]): DataFrame = {
+    val changeRows = df.columns.contains("__cdc")
     checks.foldLeft(df) { case (d, (cname, sql)) =>
-      d.filter(assert_true(
-        coalesce(expr(sql), lit(false)),
+      val ok =
+        if (!changeRows) expr(sql)
+        else when(col("__cdc") =!= "current", lit(true)).otherwise(expr(sql))
+      d.filter(assert_true(coalesce(ok, lit(false)),
         lit(s"CHECK constraint $cname violated: $sql")).isNull)
     }
+  }
 
   /** ALTER TABLE ADD CONSTRAINT ... CHECK (expr): validates the
     * expression against the schema AND the existing rows (a constraint
@@ -2858,14 +2828,19 @@ class TableStore(spark: SparkSession, root: String) {
     * Defined exactly when the merge's own prune would be (bucket keys
     * covered by `keys`, every dir bucketed); the fingerprint lets the
     * merge verify the layout didn't change in between and fall back to
-    * computing its own set (never unsound, only slower). */
+    * computing its own set (never unsound, only slower). The keys are
+    * cast to the table's types first, as the merge's own conform does:
+    * Spark's `hash` is type-sensitive, so an Int-typed caller column
+    * over a BIGINT key would otherwise yield other buckets' ids and
+    * the pruned merge would miss matching rows (duplicate keys). */
   private[graft] def mergeBucketGate(name: String, keys: Seq[String])
       : Option[(String, Column)] = {
     val m = readManifest(name, currentVersion(name))
     m.bucketing
       .filter(bb => bb.keys.forall(keys.contains) &&
         m.dirs.forall(_.contains("/__b=")))
-      .map(bb => (bucketingFingerprint(bb), collect_set(bb.expr)))
+      .map(bb => (bucketingFingerprint(bb), collect_set(pmod(
+        hash(bb.keys.map(k => col(k).cast(m.schema(k).dataType)): _*), lit(bb.n)))))
   }
 
   /** Bucket-pruned target split: (affected dirs' rows, carried dirs).
@@ -2995,23 +2970,11 @@ class TableStore(spark: SparkSession, root: String) {
       txns = (txn.toSeq ++ extraTxns).foldLeft(m.txns) { case (t, (a, v)) =>
         if (t.get(a).forall(_ < v)) t + (a -> v) else t
       })
-    if (!m.cdf)
-      commit(name, Some(joined.select(out ++ ridKeep: _*)), mTxn,
-        carried, extraPhys = ridKeep): Unit
-    else {
-      // change feed: every joined row explodes into its post-state plus
-      // its change rows, written in the SAME pass (partitioned by kind)
-      val old = schema.map(f => col(f.name).as(f.name))
-      val arr = when(both,
-          array(kindStruct("current", out ++ ridKeep),
-            kindStruct("update_preimage", old ++ ridKeep),
-            kindStruct("update_postimage", out ++ ridKeep)))
-        .when(sMatched, array(kindStruct("current", out ++ ridKeep),
-          kindStruct("insert", out ++ ridKeep)))
-        .otherwise(array(kindStruct("current", old ++ ridKeep)))
-      commitCdc(name, mTxn,
-        explodeKinds(joined, arr, schema, ridNames(m)), carried)
-    }
+    val old = schema.map(f => col(f.name).as(f.name))
+    commitMutation(name, mTxn, carried, joined.select(out ++ ridKeep: _*), joined,
+      when(both, updateKinds(out, old, ridKeep))
+        .when(sMatched, kinds("current" -> (out ++ ridKeep), "insert" -> (out ++ ridKeep)))
+        .otherwise(kinds("current" -> (old ++ ridKeep))))
   }
 
   /** MERGE upsert WITH SCHEMA EVOLUTION (Delta's `WITH SCHEMA
@@ -3089,19 +3052,12 @@ class TableStore(spark: SparkSession, root: String) {
         "current version and retry"))
     val keyRows = keysDf.select(keys.map(col): _*).distinct()
     val (target, carried, b) = pruneByKeys(name, m, keyRows, keys)
-    val ridKeep = rewriteExtra(m)
-    if (!m.cdf)
-      commit(name, Some(target.join(keyRows, keys, "left_anti")),
-        m.copy(bucketing = b), carried, extraPhys = ridKeep): Unit
-    else {
-      val joined = target.join(keyRows.withColumn("__kdel", lit(true)), keys, "left_outer")
-      val old = m.schema.map(f => col(f.name).as(f.name))
-      val arr = when(col("__kdel").isNotNull,
-          array(kindStruct("delete", old ++ ridKeep)))
-        .otherwise(array(kindStruct("current", old ++ ridKeep)))
-      commitCdc(name, m.copy(bucketing = b),
-        explodeKinds(joined, arr, m.schema, ridNames(m)), carried)
-    }
+    val old = m.schema.map(f => col(f.name).as(f.name)) ++ rewriteExtra(m)
+    commitMutation(name, m.copy(bucketing = b), carried,
+      target.join(keyRows, keys, "left_anti"),
+      target.join(keyRows.withColumn("__kdel", lit(true)), keys, "left_outer"),
+      when(col("__kdel").isNotNull, kinds("delete" -> old))
+        .otherwise(kinds("current" -> old)))
   }
 
   /** MERGE update-only (M4, SCD2 close): for target rows matching source
@@ -3124,22 +3080,14 @@ class TableStore(spark: SparkSession, root: String) {
         .getOrElse(col(f.name).as(f.name))
     }
     val ridKeep = rewriteExtra(m)
-    if (!m.cdf)
-      commit(name, Some(conformKeep(joined.select(out ++ ridKeep: _*), m.schema, ridKeep)),
-        m.copy(stats = Map.empty), Seq.empty, extraPhys = ridKeep): Unit
-    else {
-      // change feed: PRECISE per-row changes in the same write pass
-      // (like mergeUpsert/mergeDelete) — without this branch the
-      // full-table rewrite records nothing and the feed synthesizes a
-      // whole-table delete+insert for what was a targeted update
-      val old = m.schema.map(f => col(f.name).as(f.name))
-      val arr = when(hit,
-          array(kindStruct("current", out ++ ridKeep),
-            kindStruct("update_preimage", old ++ ridKeep),
-            kindStruct("update_postimage", out ++ ridKeep)))
-        .otherwise(array(kindStruct("current", old ++ ridKeep)))
-      commitCdc(name, m, explodeKinds(joined, arr, m.schema, ridNames(m)), Seq.empty)
-    }
+    // change feed: PRECISE per-row changes in the same write pass —
+    // without them the full-table rewrite records nothing and the feed
+    // synthesizes a whole-table delete+insert for a targeted update
+    val old = m.schema.map(f => col(f.name).as(f.name))
+    commitMutation(name, m, Seq.empty,
+      conformKeep(joined.select(out ++ ridKeep: _*), m.schema, ridKeep), joined,
+      when(hit, updateKinds(out, old, ridKeep))
+        .otherwise(kinds("current" -> (old ++ ridKeep))))
   }
 
   /** Best-effort translation of an UPDATE/DELETE condition into v1
@@ -3213,19 +3161,11 @@ class TableStore(spark: SparkSession, root: String) {
       set.get(c).map(v => when(condition, v).otherwise(col(c)).as(c)).getOrElse(col(c).as(c))
     }
     val ridKeep = rewriteExtra(m)
-    if (!m.cdf)
-      commit(name, Some(conformKeep(target.select(out ++ ridKeep: _*), m.schema,
-        ridKeep)), m, carried, extraPhys = ridKeep): Unit
-    else {
-      val hit = coalesce(condition, lit(false))
-      val old = m.schema.map(f => col(f.name).as(f.name))
-      val arr = when(hit,
-          array(kindStruct("current", out ++ ridKeep),
-            kindStruct("update_preimage", old ++ ridKeep),
-            kindStruct("update_postimage", out ++ ridKeep)))
-        .otherwise(array(kindStruct("current", old ++ ridKeep)))
-      commitCdc(name, m, explodeKinds(target, arr, m.schema, ridNames(m)), carried)
-    }
+    val old = m.schema.map(f => col(f.name).as(f.name))
+    commitMutation(name, m, carried,
+      conformKeep(target.select(out ++ ridKeep: _*), m.schema, ridKeep), target,
+      when(coalesce(condition, lit(false)), updateKinds(out, old, ridKeep))
+        .otherwise(kinds("current" -> (old ++ ridKeep))))
   }
 
   /** DELETE ... WHERE cond (pruned copy-on-write like [[update]]).
@@ -3253,17 +3193,10 @@ class TableStore(spark: SparkSession, root: String) {
       commit(name, None, m, carried): Unit
       return
     }
-    val ridKeep = rewriteExtra(m)
-    if (!m.cdf)
-      commit(name, Some(target.filter(!coalesce(condition, lit(false)))),
-        m, carried, extraPhys = ridKeep): Unit
-    else {
-      val old = m.schema.map(f => col(f.name).as(f.name))
-      val arr = when(coalesce(condition, lit(false)),
-          array(kindStruct("delete", old ++ ridKeep)))
-        .otherwise(array(kindStruct("current", old ++ ridKeep)))
-      commitCdc(name, m, explodeKinds(target, arr, m.schema, ridNames(m)), carried)
-    }
+    val old = m.schema.map(f => col(f.name).as(f.name)) ++ rewriteExtra(m)
+    commitMutation(name, m, carried, target.filter(!coalesce(condition, lit(false))),
+      target, when(coalesce(condition, lit(false)), kinds("delete" -> old))
+        .otherwise(kinds("current" -> old)))
   }
 
   /** Attach a data dir that an external writer (the DSv2 write path)
@@ -3280,11 +3213,7 @@ class TableStore(spark: SparkSession, root: String) {
     // into a version built from pre-mutation rows
     val m = readManifest(name,
       if (basedOnVersion >= 0L) basedOnVersion else currentVersion(name))
-    // absentIsNull=false: this dir came from an external writer, so a
-    // missing column chunk can't be assumed to mean ADD-COLUMN all-null
-    val dirStats = DirStats.collect(
-      dir(name).resolve("data").resolve(dirName), m.physSchema,
-      absentIsNull = false).map(m.statsToLogical).map(dirName -> _).toList.toMap
+    val dirStats = collectStats(name, m, Seq(dirName), absentIsNull = false)
     requireChecksPass(name, m, Seq(dirName))
     if (replace)
       // OVERWRITE depends on the rows it replaced — a lost race is a
@@ -3295,7 +3224,7 @@ class TableStore(spark: SparkSession, root: String) {
     else
       // APPEND rebases onto a rival's manifest via the shared bounded
       // retry (metadata conflicts refused, 50-attempt cap, test hook)
-      commitAppendWithRetry(name, m, Seq(dirName), dirStats): Unit
+      commitAppend(name, m, Seq(dirName), dirStats): Unit
   }
 
   /** Attach a batch the DSv2 write path laid out as hash-bucket LEAF
@@ -3305,28 +3234,17 @@ class TableStore(spark: SparkSession, root: String) {
     * available with no compact() step. `replace` = INSERT OVERWRITE. */
   def attachBucketedDirs(name: String, batchDir: String, replace: Boolean): Unit = {
     val m = readManifest(name, currentVersion(name))
-    val batch = dataRoot(name).resolve(batchDir)
-    val leaves =
-      if (!Files.isDirectory(batch)) Seq.empty
-      else Using.resource(Files.list(batch))(
-        _.iterator().asScala
-          .map(_.getFileName.toString).filter(_.startsWith("__b="))
-          .map(l => s"$batchDir/$l").toSeq.sorted)
-    // footer collects are independent per leaf — parallel across leaves
-    // (DirStats parallelizes only WITHIN a dir, and bucket leaves hold
-    // one file each: a 10^4-leaf attach measured ~9 ms/leaf SEQUENTIAL
-    // driver-side in ProbeManifest, the whole attach wall)
-    val leafStats = { import scala.collection.parallel.CollectionConverters._
-      leaves.par.map(l =>
-        DirStats.collect(dataRoot(name).resolve(l), m.physSchema,
-          absentIsNull = false).map(m.statsToLogical).map(l -> _))
-        .seq.flatten.toMap }
+    val leaves = leafNames(dataRoot(name).resolve(batchDir)).map(l => s"$batchDir/$l")
+    // footer collects are parallel across leaves: bucket leaves hold one
+    // file each, and a 10^4-leaf attach measured ~9 ms/leaf SEQUENTIAL
+    // driver-side in ProbeManifest, the whole attach wall
+    val leafStats = collectStats(name, m, leaves, absentIsNull = false)
     requireChecksPass(name, m, leaves)
     if (replace)
       commitExclusive(name, m.baseVersion + 1,
         m.copy(dirs = leaves, stats = leafStats), "INSERT OVERWRITE")
     else
-      commitAppendWithRetry(name, m, leaves, leafStats): Unit
+      commitAppend(name, m, leaves, leafStats): Unit
   }
 
   /** Commit a MERGE-ON-READ (delta-based) SQL row-level operation in
@@ -3352,58 +3270,23 @@ class TableStore(spark: SparkSession, root: String) {
     // merge-on-read merges
     val newDirs: Seq[String] =
       if (insertFiles.isEmpty) Seq.empty
-      else {
-        val batch = f"b$v%09d-$uuid"
-        val target = dataRoot(name).resolve(batch)
-        val byLeaf = insertFiles.groupBy(f =>
-          Option(f.getParent).map(_.getFileName.toString).filter(_.startsWith("__b=")))
-        byLeaf.toSeq.sortBy(_._1).flatMap {
-          case (Some(leaf), fs) =>
-            Files.createDirectories(target.resolve(leaf))
-            fs.foreach(f => Files.move(f, target.resolve(leaf).resolve(f.getFileName)))
-            Seq(s"$batch/$leaf")
-          case (None, fs) =>
-            Files.createDirectories(target)
-            fs.foreach(f => Files.move(f, target.resolve(f.getFileName)))
-            Seq(batch)
-        }.distinct
-      }
+      else moveIntoBatch(name, f"b$v%09d-$uuid", insertFiles)
     requireChecksPass(name, m, newDirs)
     // tombstones -> merged DV sidecars on the touched dirs
-    var dvsUpdated: Map[String, DvRef] = Map.empty
-    var fresh: Option[DataFrame] = None
-    if (deleteFiles.nonEmpty) {
-      val staged = spark.read.parquet(deleteFiles.map(_.toString): _*)
-        .select(dirOf("relpath").as("dir"), col("relpath"), col("pos"))
-      fresh = Some(staged)
-      val perDir = staged.groupBy("dir").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (perDir.nonEmpty) {
-        val unknown = perDir.keySet.diff(m.dirs.toSet)
-        require(unknown.isEmpty,
-          s"delta delete references non-live dirs: ${unknown.take(3).mkString(",")}")
-        val dvName = s"dv-$v-$uuid"
-        val priorDvd = perDir.keySet.filter(m.dvs.contains).toSeq
-        val combined =
-          if (priorDvd.isEmpty) staged
-          else staged.unionByName(
-            dvRows(name, m, priorDvd)
-              .select(col("__dv_relpath").as("relpath"), col("__dv_pos").as("pos"))
-              .withColumn("dir", dirOf("relpath"))
-              .select("dir", "relpath", "pos"))
-        combined.sortWithinPartitions("relpath", "pos")
-          .write.mode("overwrite")
-          .parquet(dvRoot(name).resolve(dvName).toString)
-        onStep("dv-written")
-        dvsUpdated = perDir.keySet.map { d =>
-          val prior = m.dvs.get(d).map(_.deleted).getOrElse(0L)
-          d -> DvRef(dvName, prior + perDir(d))
-        }.toMap
-      }
-    }
-    val stagedCdf = if (!m.cdf) None else {
-      val cdfDir = cdfStaging(name, v, uuid)
-      Files.createDirectories(cdfDir)
+    val fresh: Option[DataFrame] =
+      if (deleteFiles.isEmpty) None
+      else Some(spark.read.parquet(deleteFiles.map(_.toString): _*)
+        .select(dirOf("relpath").as("dir"), col("relpath"), col("pos")))
+    val perDir = fresh.map(_.groupBy("dir").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+      .getOrElse(Map.empty[String, Long])
+    val unknown = perDir.keySet.diff(m.dirs.toSet)
+    require(unknown.isEmpty,
+      s"delta delete references non-live dirs: ${unknown.take(3).mkString(",")}")
+    val dvsUpdated =
+      if (perDir.isEmpty) Map.empty[String, DvRef]
+      else writeDvSidecar(name, m, v, uuid, fresh.get, perDir)
+    val stagedCdf = stageChanges(name, m, v, uuid) { cdfDir =>
       val toPhys = m.schema.map(f => col(f.name).as(m.phys(f.name)))
       fresh.foreach { staged =>
         val touched = staged.select("dir").distinct()
@@ -3420,16 +3303,11 @@ class TableStore(spark: SparkSession, root: String) {
         scanDirs(newDirs, name, m.physSchema)
           .write.mode("overwrite")
           .parquet(cdfDir.resolve("__cdc=insert").toString)
-      onStep("cdf-staged")
-      Some(cdfDir)
     }
     deleteFiles.foreach(Files.deleteIfExists(_))
-    val stats = m.stats ++ newDirs.flatMap(d =>
-      DirStats.collect(dataRoot(name).resolve(d), m.physSchema,
-        absentIsNull = false).map(m.statsToLogical).map(d -> _))
-    commitWithCdf(name, v,
-      m.copy(dirs = m.dirs ++ newDirs, stats = stats, dvs = m.dvs ++ dvsUpdated),
-      stagedCdf)
+    commitWithCdf(name, v, m.copy(dirs = m.dirs ++ newDirs,
+      stats = m.stats ++ collectStats(name, m, newDirs, absentIsNull = false),
+      dvs = m.dvs ++ dvsUpdated), stagedCdf)
   }
 
   /** Commit a version that REPLACES the `removed` live dirs with the
@@ -3453,10 +3331,8 @@ class TableStore(spark: SparkSession, root: String) {
         s"it read: ${(removed -- m.dirs.toSet).mkString(",")}")
     val carry = m.dirs.filterNot(removed.contains)
     val carrySet = carry.toSet // set probe: filterKeys over a List scan is O(dirs^2)
-    val carryStats = m.stats.view.filterKeys(carrySet.contains).toMap
-    val stats = carryStats ++ DirStats.collect(
-      dir(name).resolve("data").resolve(dirName), m.physSchema,
-      absentIsNull = false).map(m.statsToLogical).map(dirName -> _)
+    val stats = m.stats.view.filterKeys(carrySet.contains).toMap ++
+      collectStats(name, m, Seq(dirName), absentIsNull = false)
     requireChecksPass(name, m, Seq(dirName))
     commitExclusive(name, m.baseVersion + 1,
       m.copy(dirs = carry :+ dirName, stats = stats), "row-level rewrite")
@@ -3518,86 +3394,36 @@ class TableStore(spark: SparkSession, root: String) {
       files.foreach(Files.deleteIfExists(_))
       return false
     }
-    if (files.isEmpty && !replaceAll) {
-      // empty append epoch: still advance the watermark (no data dir)
-      commitEpochWithRetry(name, queryId, epochId, Seq.empty, Map.empty, m,
-        replaceAll = false)
-      return true
-    }
-    val batch = f"st${currentVersion(name) + 1}%09d-" +
-      java.util.UUID.randomUUID.toString.take(8)
-    val target = dir(name).resolve("data").resolve(batch)
-    Files.createDirectories(target)
-    // an empty COMPLETE epoch replaces the table with the empty batch
-    val newDirs: Seq[String] =
-      if (files.isEmpty) Seq(batch)
-      else files.map { f =>
-        val parent = f.getParent.getFileName.toString
-        if (parent.startsWith("__b=")) {
-          val leaf = target.resolve(parent)
-          Files.createDirectories(leaf)
-          Files.move(f, leaf.resolve(f.getFileName))
-          s"$batch/$parent"
-        } else {
-          Files.move(f, target.resolve(f.getFileName))
-          batch
-        }
-      }.distinct
-    val batchStats = { import scala.collection.parallel.CollectionConverters._
-      newDirs.par.flatMap(d =>
-        DirStats.collect(dataRoot(name).resolve(d), m.physSchema,
-          absentIsNull = false).map(m.statsToLogical).map(d -> _)).toMap.seq }
-    requireChecksPass(name, m, newDirs)
-    if (!commitEpochWithRetry(name, queryId, epochId, newDirs, batchStats, m,
-        replaceAll)) {
-      FsUtil.deleteRecursively(target.toFile) // lost to a re-delivery
-      return false
-    }
-    true
-  }
-
-  /** Epoch commit with optimistic retry: losing the manifest race to a
-    * concurrent batch append re-reads the winner's manifest, re-checks
-    * the exactly-once txn guard, and re-attempts — streaming sink and
-    * batch writers compose. Returns false when a concurrent commit
-    * already recorded this (queryId, epoch). */
-  private def commitEpochWithRetry(name: String, queryId: String, epochId: Long,
-                                   added: Seq[String],
-                                   addedStats: Map[String, DirStats],
-                                   base: Manifest,
-                                   replaceAll: Boolean): Boolean = {
-    var attempts = 0
-    while (attempts < 50) {
-      onBeforeOptimisticCommit()
-      val curV = currentVersion(name)
-      val mm = readManifest(name, curV)
-      if (mm.txns.get(queryId).exists(_ >= epochId)) return false
-      // the epoch's files were written + CHECK-validated under `base`'s
-      // metadata (attachStreamEpoch's read) — a rival schema/bucketing/
-      // constraint change means those files no longer belong, exactly
-      // like a batch append's rebase
-      refuseMetadataConflict(name, mm, base, "stream epoch")
-      try {
+    // an empty APPEND epoch only advances the watermark (no data dir);
+    // an empty COMPLETE epoch replaces the table with an empty batch
+    val batch = if (files.isEmpty && !replaceAll) None
+      else Some(f"st${currentVersion(name) + 1}%09d-" +
+        java.util.UUID.randomUUID.toString.take(8))
+    val newDirs = batch.toSeq.flatMap(moveIntoBatch(name, _, files))
+    val batchStats = collectStats(name, m, newDirs, absentIsNull = false)
+    if (batch.isDefined) requireChecksPass(name, m, newDirs)
+    // optimistic rebase: losing the manifest race to a concurrent batch
+    // append re-reads the winner's manifest, re-checks the exactly-once
+    // txn guard, and re-attempts — streaming sink and batch writers
+    // compose. The epoch's files were written + CHECK-validated under
+    // `m`'s metadata, so a rival schema/bucketing/constraint change
+    // refuses, exactly like a batch append's rebase.
+    val committed = commitOptimistic(name, m, "stream epoch") { latest =>
+      if (latest.txns.get(queryId).exists(_ >= epochId)) None
+      else {
         // Complete output mode: the sink owns the table — the epoch's
         // recomputed result REPLACES the live dirs (commitManifest
         // prunes the dropped dirs' DV/rowbase entries)
         val (dirs, stats) =
-          if (replaceAll) (added, addedStats)
-          else (mm.dirs ++ added, mm.stats ++ addedStats)
-        commitManifest(name, curV + 1, mm.copy(
-          dirs = dirs, stats = stats,
-          txns = mm.txns + (queryId -> epochId)))
-        return true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1
-          // same ghost-adoption as the batch append rebase: a crashed
-          // writer's unpublished manifest must not wedge the sink
-          if (!adoptGhostVersion(name, curV + 1)) Thread.sleep(50)
+          if (replaceAll) (newDirs, batchStats)
+          else (latest.dirs ++ newDirs, latest.stats ++ batchStats)
+        Some(latest.copy(dirs = dirs, stats = stats,
+          txns = latest.txns + (queryId -> epochId)))
       }
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"epoch commit to $name lost the race $attempts times — giving up")
+    }.isDefined
+    // lost to a re-delivery: the epoch's batch dir is junk
+    if (!committed) batch.foreach(b => FsUtil.deleteRecursively(dataRoot(name).resolve(b).toFile))
+    committed
   }
 
   /** Incremental batch read (change-feed-lite): the rows ADDED between
@@ -3669,8 +3495,28 @@ class TableStore(spark: SparkSession, root: String) {
   def properties(name: String): Map[String, String] =
     readManifest(name, currentVersion(name)).props
 
-  private def kindStruct(kind: String, cols: Seq[Column]): Column =
-    struct(lit(kind).as("__cdc") +: cols: _*)
+  /** A per-row change-kind array: one (kind, row) struct per entry —
+    * what [[explodeKinds]] turns back into `__cdc`-tagged rows. */
+  private def kinds(entries: (String, Seq[Column])*): Column =
+    array(entries.map { case (kind, cols) => struct(lit(kind).as("__cdc") +: cols: _*) }: _*)
+
+  /** The kinds of a row an UPDATE changed: its post-state as the table's
+    * `current` row, plus the pre/postimage change rows. */
+  private def updateKinds(out: Seq[Column], old: Seq[Column], rid: Seq[Column]): Column =
+    kinds("current" -> (out ++ rid), "update_preimage" -> (old ++ rid),
+      "update_postimage" -> (out ++ rid))
+
+  /** The change-feed fork every copy-on-write mutation shares. With the
+    * feed off, the rewritten rows `post` (carrying `__rid` on row-tracked
+    * tables) commit through [[commit]]; with it on, each row of `rows`
+    * explodes by its `changes` kind array (the `current` post-state plus its
+    * change rows) and [[commitCdc]] lands both in one write pass. Either
+    * frame is only planned when its branch runs. */
+  private def commitMutation(name: String, meta: Manifest, carried: Seq[String],
+                             post: => DataFrame, rows: => DataFrame,
+                             changes: => Column): Unit =
+    if (!meta.cdf) commit(name, Some(post), meta, carried, extraPhys = rewriteExtra(meta)): Unit
+    else commitCdc(name, meta, explodeKinds(rows, changes, meta.schema, ridNames(meta)), carried)
 
   /** Explode each row's array of (kind, row) structs back to columns —
     * the shape [[commitCdc]] writes partitioned by kind. */
@@ -3707,7 +3553,7 @@ class TableStore(spark: SparkSession, root: String) {
     // cols, never stored); checks run on LOGICAL names first
     val physCols = meta.schema.map(f => col(f.name).as(meta.phys(f.name))) ++
       (if (exploded.columns.contains(RidCol)) Seq(col(RidCol)) else Nil)
-    enforceChecks2(toWrite, meta.allChecks)
+    enforceChecks(toWrite, meta.allChecks)
       .select(col("__cdc") +: physCols ++: parts.drop(1).map(col): _*)
       .write.mode("overwrite").partitionBy(parts: _*).parquet(staging.toString)
     val batch = f"b$v%09d-$uuid"
@@ -3715,57 +3561,27 @@ class TableStore(spark: SparkSession, root: String) {
     val curStaged = staging.resolve("__cdc=current")
     val newDirs: Seq[String] =
       if (!Files.isDirectory(curStaged)) Seq.empty
-      else meta.bucketing match {
-        case Some(_) =>
-          Files.createDirectories(target)
-          val leaves = Using.resource(Files.list(curStaged))(_.iterator().asScala
-            .map(_.getFileName.toString).filter(_.startsWith("__b=")).toSeq.sorted)
-          leaves.foreach(l => Files.move(curStaged.resolve(l), target.resolve(l)))
-          leaves.map(l => s"$batch/$l")
-        case None =>
-          Files.move(curStaged, target)
-          Seq(batch)
+      else if (meta.bucketing.isEmpty) { Files.move(curStaged, target); Seq(batch) }
+      else {
+        Files.createDirectories(target)
+        leafNames(curStaged).map { l =>
+          Files.move(curStaged.resolve(l), target.resolve(l))
+          s"$batch/$l"
+        }
       }
     onStep("batch-written")
-    val cdfDir = cdfStaging(name, v, uuid)
-    Files.createDirectories(cdfDir)
-    Using.resource(Files.list(staging))(_.iterator().asScala.toSeq)
-      .filter(_.getFileName.toString.startsWith("__cdc="))
-      .foreach(p => Files.move(p, cdfDir.resolve(p.getFileName)))
-    FsUtil.deleteRecursively(staging.toFile)
-    onStep("cdf-staged")
-    val stats = { import scala.collection.parallel.CollectionConverters._
-      meta.stats.view.filterKeys(carried.contains).toMap ++
-        newDirs.par.flatMap(d =>
-          DirStats.collect(dataRoot(name).resolve(d), meta.physSchema)
-            .map(meta.statsToLogical).map(d -> _)).seq }
-    commitWithCdf(name, v, meta.copy(dirs = carried ++ newDirs, stats = stats),
-      Some(cdfDir))
+    val stagedCdf = stageChanges(name, meta, v, uuid) { cdfDir =>
+      Using.resource(Files.list(staging))(_.iterator().asScala.toSeq)
+        .filter(_.getFileName.toString.startsWith("__cdc="))
+        .foreach(p => Files.move(p, cdfDir.resolve(p.getFileName)))
+      FsUtil.deleteRecursively(staging.toFile)
+    }
+    val carriedSet = carried.toSet
+    commitWithCdf(name, v, meta.copy(dirs = carried ++ newDirs,
+      stats = meta.stats.view.filterKeys(carriedSet).toMap ++
+        collectStats(name, meta, newDirs)), stagedCdf)
   }
 
-  /** Check enforcement for the CDC write: only `current` rows are table
-    * rows — preimage/delete rows are prior data and must not re-fail. */
-  private def enforceChecks2(df: DataFrame, checks: Map[String, String]): DataFrame =
-    checks.foldLeft(df) { case (d, (cname, sql)) =>
-      d.filter(assert_true(
-        coalesce(when(col("__cdc") =!= "current", lit(true)).otherwise(expr(sql)), lit(false)),
-        lit(s"CHECK constraint $cname violated: $sql")).isNull)
-    }
-
-  /** CHANGE DATA FEED read: every row-level change in
-    * `(fromVersion, toVersion]` with `_change_type` ∈ {insert, delete,
-    * update_preimage, update_postimage} and `_commit_version`. Three
-    * sources, cheapest wins per version (the Delta CDF read model):
-    *   - a recorded `_cdf/<v>` dir (row-level mutations after
-    *     [[setChangeFeed]]) — read as-is, zero derivation;
-    *   - a pure append / pure dir-drop step — synthesized from the
-    *     added (insert) or removed (delete) dirs; dirs are immutable so
-    *     this is exact, and it is why appends never write change rows;
-    *   - a full replace (INSERT OVERWRITE / truncate-load / restore) —
-    *     delete-of-prior-snapshot + insert-of-new-snapshot.
-    * A partial rewrite with no recorded dir throws: the change rows
-    * were never captured and cannot be reconstructed from immutable
-    * dirs alone. `fromVersion = -1` includes version 0's creation. */
   /** One per-version change source, resolved by the shared decision
     * tree both CDF read surfaces interpret. */
   private[graft] sealed trait ChangeSrc
@@ -3780,9 +3596,6 @@ class TableStore(spark: SparkSession, root: String) {
                                                      kind: String, v: Long)
       extends ChangeSrc
 
-  /** The change-feed decision tree (see [[readChangesBetween]] for the
-    * semantics): cheapest valid source per version, or throw when the
-    * changes were never captured and can't be reconstructed. */
   /** A vacuum may have swept part of a requested change window
     * (manifests, checkpoints and `_cdf` dirs all sweep below its
     * retained head together) — refuse with the window semantics spelled
@@ -3802,6 +3615,9 @@ class TableStore(spark: SparkSession, root: String) {
             "restart the change reader from a retained version", e)
     }
 
+  /** The change-feed decision tree (see [[readChangesBetween]] for the
+    * semantics): cheapest valid source per version, or throw when the
+    * changes were never captured and can't be reconstructed. */
   private[graft] def changeSources(name: String, fromVersion: Long,
                                    toVersion: Long): Seq[ChangeSrc] = {
     require(fromVersion >= -1 && fromVersion <= toVersion,
@@ -3873,7 +3689,22 @@ class TableStore(spark: SparkSession, root: String) {
     }
   }
 
-  /** With `withRowIds`, every change row also carries `_row_id` — the
+  /** CHANGE DATA FEED read: every row-level change in
+    * `(fromVersion, toVersion]` with `_change_type` ∈ {insert, delete,
+    * update_preimage, update_postimage} and `_commit_version`. Three
+    * sources, cheapest wins per version (the Delta CDF read model):
+    *   - a recorded `_cdf/<v>` dir (row-level mutations after
+    *     [[setChangeFeed]]) — read as-is, zero derivation;
+    *   - a pure append / pure dir-drop step — synthesized from the
+    *     added (insert) or removed (delete) dirs; dirs are immutable so
+    *     this is exact, and it is why appends never write change rows;
+    *   - a full replace (INSERT OVERWRITE / truncate-load / restore) —
+    *     delete-of-prior-snapshot + insert-of-new-snapshot.
+    * A partial rewrite with no recorded dir throws: the change rows
+    * were never captured and cannot be reconstructed from immutable
+    * dirs alone. `fromVersion = -1` includes version 0's creation.
+    *
+    * With `withRowIds`, every change row also carries `_row_id` — the
     * row's stable tracking id: recorded MoR change rows read the
     * `__rid` their `_cdf` files materialize; synthesized
     * appends/drops derive base + position from that version's

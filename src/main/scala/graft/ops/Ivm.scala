@@ -1384,7 +1384,8 @@ object Ivm {
     // cheap projections + one broadcast anti-join over pinned frames —
     // cheaper than a third checkpoint job at any batch size
     val out = dimRows.foldLeft(liveRows.unionByName(tombstones))(_ unionByName _)
-    // ONE two-stage aggregate over the checkpointed `out` serves FOUR
+    // ONE two-stage aggregate over `out` (recomputed from its pinned
+    // leaves, not checkpointed — see above) serves FOUR
     // former jobs (r15 optimization, guide §1.2): emptiness (the old
     // out.isEmpty), the merge's key-uniqueness gate (max rows per key —
     // a fanning-out `enrich` still fails loudly, the M6 contract), the
@@ -1424,7 +1425,9 @@ object Ivm {
   }
 
   /** [[applyJoinDeltaFeed]]/[[applyTwoSidedJoinDelta]]'s combined
-    * pre-merge gate: one job over the checkpointed merge source. */
+    * pre-merge gate: one job over the merge source `out`. The two-sided
+    * apply checkpoints `out`; [[applyJoinDeltaFeed]] does not — its
+    * `out` is recomputed from pinned (checkpointed) leaves. */
   private final case class JoinGate(nKeys: Long, nLiveKeys: Long,
                                     buckets: Option[(String, Set[Int])])
 

@@ -101,6 +101,24 @@ class TableStoreSpec extends AnyFunSuite {
     assert(ts.read("t").select("id").as[Long].collect().toSet === Set(1L, 3L))
   }
 
+  test("a precomputed bucket gate over Int keys prunes a BIGINT-keyed merge soundly") {
+    val ts = freshStore()
+    ts.createBucketed("t", (1L to 64L).map(i => (i, s"old$i")).toDF("id", "v"),
+      Seq("id"), 8)
+    // the caller's gate frame types the key as INT: Spark's hash() is
+    // type-sensitive, so hashing it as-is names other buckets than the
+    // table's BIGINT layout does
+    val src = (1 to 16).map(i => (i, s"new$i")).toDF("id", "v")
+    val (fp, gate) = ts.mergeBucketGate("t", Seq("id")).get
+    val ids = src.agg(gate).collect()(0).getSeq[Int](0).toSet
+    ts.mergeUpsert("t", src, Seq("id"), changeTypeCol = None,
+      verifyUniqueSource = false, precomputedBuckets = Some((fp, ids)))
+    val got = ts.read("t").as[(Long, String)].collect()
+    assert(got.length === 64, "every matched key must update in place, not duplicate")
+    assert(got.toMap === (1L to 64L).map(i =>
+      i -> (if (i <= 16L) s"new$i" else s"old$i")).toMap)
+  }
+
   test("update applies set-map only where condition holds (M5)") {
     val ts = freshStore()
     ts.create("t", Seq((1L, false), (2L, false)).toDF("id", "is_deleted"))
