@@ -885,10 +885,10 @@ class TableStore(spark: SparkSession, root: String) {
     * lost put-if-absent race into a clear conflict error. Row-level
     * mutations and metadata changes depend on the manifest state they
     * read, so the only safe resolutions are the append-shaped rebases
-    * ([[commitOptimistic]]) or LOUD rejection — never re-pointing the stale snapshot
-    * at whatever version is now current, which would silently discard
-    * the concurrent winner's dirs, deletion vectors, or metadata (lost
-    * update / resurrected tombstones). */
+    * ([[commitOptimistic]]) or LOUD rejection — never re-pointing the
+    * stale snapshot at whatever version is now current, which would
+    * silently discard the concurrent winner's dirs, deletion vectors,
+    * or metadata (lost update / resurrected tombstones). */
   private def commitExclusive(name: String, v: Long, m: Manifest, op: String): Unit = {
     onBeforeOptimisticCommit() // deterministic race injection (tests)
     try commitManifest(name, v, m)
@@ -1495,7 +1495,7 @@ class TableStore(spark: SparkSession, root: String) {
   }
 
   /** Live scan of `dirs` with DVs applied AND position metadata kept
-    * (`__relpath`, `__pos`) — the input [[deleteVectorized]] stages.
+    * (`__relpath`, `__pos`) — the input [[mutateVectorized]] stages.
     * With `withRid` the scan also surfaces the materialized `__rid`
     * column row-tracking postimage files carry (null in files that
     * predate tracking or were never rewritten — their ids derive from
@@ -3422,7 +3422,8 @@ class TableStore(spark: SparkSession, root: String) {
       }
     }.isDefined
     // lost to a re-delivery: the epoch's batch dir is junk
-    if (!committed) batch.foreach(b => FsUtil.deleteRecursively(dataRoot(name).resolve(b).toFile))
+    if (!committed)
+      batch.foreach(b => FsUtil.deleteRecursively(dataRoot(name).resolve(b).toFile))
     committed
   }
 
@@ -3498,7 +3499,8 @@ class TableStore(spark: SparkSession, root: String) {
   /** A per-row change-kind array: one (kind, row) struct per entry —
     * what [[explodeKinds]] turns back into `__cdc`-tagged rows. */
   private def kinds(entries: (String, Seq[Column])*): Column =
-    array(entries.map { case (kind, cols) => struct(lit(kind).as("__cdc") +: cols: _*) }: _*)
+    array(entries.map { case (kind, cols) =>
+      struct(lit(kind).as("__cdc") +: cols: _*) }: _*)
 
   /** The kinds of a row an UPDATE changed: its post-state as the table's
     * `current` row, plus the pre/postimage change rows. */
@@ -3515,8 +3517,11 @@ class TableStore(spark: SparkSession, root: String) {
   private def commitMutation(name: String, meta: Manifest, carried: Seq[String],
                              post: => DataFrame, rows: => DataFrame,
                              changes: => Column): Unit =
-    if (!meta.cdf) commit(name, Some(post), meta, carried, extraPhys = rewriteExtra(meta)): Unit
-    else commitCdc(name, meta, explodeKinds(rows, changes, meta.schema, ridNames(meta)), carried)
+    if (!meta.cdf)
+      commit(name, Some(post), meta, carried, extraPhys = rewriteExtra(meta)): Unit
+    else
+      commitCdc(name, meta, explodeKinds(rows, changes, meta.schema, ridNames(meta)),
+        carried)
 
   /** Explode each row's array of (kind, row) structs back to columns —
     * the shape [[commitCdc]] writes partitioned by kind. */
