@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
 
   /** The queries reported in the driver-parsed JSON line — one per
@@ -28,34 +26,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // defensive: a no-op for MICROS parquet, but keeps the LongType
-      // branch of the dtype-adaptive events() reader reachable if the
-      // testdata ever regenerates as TIMESTAMP(NANOS) again (r6 ADVICE)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // storage-partitioned joins ON for the whole run: sql_spj_join
-      // needs the conf at EVALUATION time, and set inside its query fn
-      // it leaked to whatever queries happened to sort after it —
-      // order-dependent plans. Constant-on is the deterministic choice
-      // (and the representative one for a bucketed-table engine).
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // default 100-entry codegen cache evicts everything over a
-      // 189-query suite, so the end-of-suite suspect RE-RUNS measured
-      // effectively COLD: r8's job_incremental re-run read 15.95 s
-      // where the same query in a warm context reads 6.7 s (the 9 s
-      // delta is whole-stage-codegen compilation + JIT of the wide
-      // staging-chain plans, not data processing — ProfileIncremental).
-      // 2000 entries keeps every plan shape of the suite resident
-      // (~50 KB of generated code each ≪ the 2 g code-cache reserve;
-      // the fresh-constant CPU canary still guards actual exhaustion)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
     // warm up executor threads, codegen compiler, and the FS cache so the
     // first timed query doesn't absorb session start-up (~3-4 s). The
     // warm-up time doubles as a co-tenant contention sentinel: r5's
@@ -401,6 +372,9 @@ object Bench {
     println(stdoutLine(total, head, results.size, failed.toSeq,
       unvalidated.size, remeasured.size, canaries.toSeq, canariesIo.toSeq,
       warmupSec, sfDir, authoritative, canariesSched.toSeq))
+    if (core.FsUtil.failedDeletes > 0)
+      System.err.println(s"[bench] WARNING: ${core.FsUtil.failedDeletes} fixture-trash " +
+        "entries under java.io.tmpdir/.graft_trash could not be deleted")
     spark.stop()
   }
 

@@ -209,10 +209,9 @@ object QueriesJobs {
       DateSpine.dimDate(s, "1995-01-01", "2002-12-31"))
 
   // ---- composite-job cores, parameterized by the transactions frame —
-  //      the QDefs feed them PaymentData.transactions(s, dir);
-  //      tools.ScaleProbeJobs feeds k-times-replicated orders through
-  //      the same generator, so the 1x/4x/16x curves time EXACTLY the
-  //      benched logic (r7 VERDICT #2) ----
+  //      the QDefs feed them PaymentData.transactions(s, dir); the
+  //      1x/4x/16x curves in SURVEY.md §7.5 item 16 (r7 VERDICT #2) fed
+  //      k-times-replicated orders through the same cores ----
 
   /** job_incremental: day-1 load below the cutoff + watermark record,
     * day-2 own-watermark incremental merge with late-arrival derivation,

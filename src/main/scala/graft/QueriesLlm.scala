@@ -418,7 +418,7 @@ object QueriesLlm {
     * the guard on whatever width comes out. Band-join work becomes
     * ~nBands * N * TargetBucket — LINEAR in N once the derivation
     * engages (contrast fixed 4-bit bands, whose N²/16 was measurably
-    * quadratic by 16x in ScaleProbeAnn r7).
+    * quadratic by 16x in r7's ANN curves, SURVEY.md §7.5 item 15).
     *
     * TargetBucket = 128 keeps both fixtures (500 / 2 000 vectors) at
     * the 4-bit floor — the width the 0.8 recall gate is green at — and
@@ -428,7 +428,7 @@ object QueriesLlm {
     * neighbors are WEAK (this synthetic set's top-5 cosine averages
     * ~0.35, p~0.6) recall decays with width, so past ~10^6 vectors the
     * designated scale paths are IVF/PQ (e4/e5, flat recall curves in
-    * ScaleProbeAnn) while LSH's linear-work knob is for corpora with
+    * SURVEY.md §7.5 item 15) while LSH's linear-work knob is for corpora with
     * strong near-neighbors (dedup shapes, cosine >= 0.8, where
     * p^8 per band still catches a pair in 16 bands w.p. ~0.97). */
   private[graft] def deriveBandBits(n: Long): Int = {
@@ -439,7 +439,7 @@ object QueriesLlm {
   }
 
   /** e3's core over any normed (vec_id, v, nrm) frame — parameterized so
-    * ScaleProbeAnn can measure it on replicated corpora.
+    * it can be measured on replicated corpora (SURVEY.md §7.5 item 15).
     *
     * `bandBits` sets bucket count per band (2^bandBits); the BAND COUNT
     * stays fixed at 16, each band hashing its own fresh `bandBits`

@@ -813,8 +813,8 @@ object QueriesMutation {
     //      whose tombstone ratio crossed the threshold (purging their
     //      deletion vectors); content is preserved exactly and
     //      lightly-deleted dirs keep their cheap DV sidecars. Cost is
-    //      O(rewritten bytes), never O(table) — ScaleProbeMutation's
-    //      measured curve. The oracle proves content equality after
+    //      O(rewritten bytes), never O(table) — the measured curve is in
+    //      PLANS.md, "r12 scale curves at HEAD". The oracle proves content equality after
     //      the tombstone purge. ----
     "m18_compact_dv" -> QDef(
       (s, dir) => {

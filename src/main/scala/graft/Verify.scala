@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,24 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local runs only)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // defensive: no-op for MICROS parquet, keeps the LongType branch
-      // of the dtype-adaptive events() reader reachable on a NANOS
-      // testdata regeneration (r6 ADVICE)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // storage-partitioned joins ON for the whole run: sql_spj_join
-      // needs the conf at EVALUATION time, and set inside its query fn
-      // it leaked to whatever queries happened to sort after it —
-      // order-dependent plans. Constant-on is the deterministic choice
-      // (and the representative one for a bucketed-table engine).
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cores)
     // same pre-run trash sweep as Bench (r15): the dump itself isn't
     // timed, but the driver's bench often follows it in one session —
     // don't hand that run a fixture-trash backlog to sweep mid-suite
@@ -85,6 +67,9 @@ object Verify {
       failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     // provenance: which commit produced this dump, and when (r5/r6 ADVICE)
     Files.writeString(Paths.get(s"$outDir/_meta.json"), s"{${Stamp.jsonFields}}")
+    if (core.FsUtil.failedDeletes > 0)
+      System.err.println(s"[verify] WARNING: ${core.FsUtil.failedDeletes} fixture-trash " +
+        "entries under java.io.tmpdir/.graft_trash could not be deleted")
     spark.stop()
   }
 }

@@ -616,7 +616,8 @@ class TableStore(spark: SparkSession, root: String) {
       commitAppend(name, meta, added, addedStats, propOverrides)
     else {
       // set probe, NOT carryForward.contains: the List scan made this
-      // O(dirs^2) — 42 of a 10^5-dir append's 43 s (ProbeAppendHot)
+      // O(dirs^2) — 42 of a 10^5-dir append's 43 s (PLANS.md, "manifest
+      // driver-memory/latency at 10^5 dirs")
       val carriedSet = carryForward.toSet
       // non-append shape (overwrite / rewrite / compaction): depends on
       // the rows it read, so a lost race is a conflict, never a rebase
@@ -1274,7 +1275,8 @@ class TableStore(spark: SparkSession, root: String) {
 
   /** [[readProbe]]'s dir selection, exposed for measurement: how many
     * dirs would a probe read vs the table's total (the dirs-read
-    * evidence behind the FK-index scale story — tools/ProbeFkIndex). */
+    * evidence behind the FK-index scale story — PLANS.md, "r13: the
+    * probe residues measured"). */
   def probeDirCount(name: String, probe: DataFrame, cols: Seq[String],
                     cap: Int = 10000): (Int, Int) = {
     val m = readManifest(name, currentVersion(name))
@@ -2601,7 +2603,8 @@ class TableStore(spark: SparkSession, root: String) {
       onDiskVersions.filter(_ < keepVersions.head).flatMap(dirsOf).toSet
     // per-top-dir probes below must be O(1), not O(|referenced|+|live|)
     // prefix scans per entry — that made the sweep loop O(dirs^2) on
-    // 10^5-dir histories (ProbeManifest/ProbeAppendHot round)
+    // 10^5-dir histories (PLANS.md, "manifest driver-memory/latency at
+    // 10^5 dirs")
     def topOf(d: String): String = {
       val i = d.indexOf('/'); if (i < 0) d else d.substring(0, i)
     }
@@ -3569,10 +3572,14 @@ class TableStore(spark: SparkSession, root: String) {
       else if (meta.bucketing.isEmpty) { Files.move(curStaged, target); Seq(batch) }
       else {
         Files.createDirectories(target)
-        leafNames(curStaged).map { l =>
+        val leaves = leafNames(curStaged).map { l =>
           Files.move(curStaged.resolve(l), target.resolve(l))
           s"$batch/$l"
         }
+        // emptied by the leaf moves; left in place it would be staged
+        // below as a stray `current` change kind under _cdf/<v>
+        Files.delete(curStaged)
+        leaves
       }
     onStep("batch-written")
     val stagedCdf = stageChanges(name, meta, v, uuid) { cdfDir =>

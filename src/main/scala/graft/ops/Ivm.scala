@@ -1474,7 +1474,8 @@ object Ivm {
 
   /** ADAPTIVE probe-arm choice per batch (r13 VERDICT #4): a probe
     * reads ~min(|candidate rows|, |dirs|) dirs (the dirs-read law,
-    * tools/ProbeFkIndex), so once the index's candidate KEY set
+    * PLANS.md, "r13: the probe residues measured"), so once the
+    * index's candidate KEY set
     * reaches the view's dir count the bucket-read-by-candidate-keys
     * degrades to a full scan PLUS the index overhead — the measured
     * 64-FK regression (1.67 s ix vs 1.19 s scan at 512 dirs). The

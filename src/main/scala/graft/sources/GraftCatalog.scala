@@ -727,7 +727,7 @@ class GraftScanBuilder(schema: StructType, dirFiles: Seq[(String, Seq[String])],
       }
       // set probe: Seq.contains here was O(dirs x surviving-dirs) —
       // most of a point-predicate plan's wall on a 10^5-dir table
-      // (ProbeCatScanHot stack samples)
+      // (PLANS.md, "manifest driver-memory/latency at 10^5 dirs")
       val liveSet = liveDirs.toSet
       val live = dirFiles.filter(df => liveSet.contains(df._1))
       new GraftScan(schema, required, live, stats, pushed, streamSource,
@@ -1802,8 +1802,7 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
     }
 
   /** Batch reads decode through Spark's vectorized parquet reader
-    * (ColumnarBatch straight into whole-stage codegen); the row reader
-    * remains as the -Dgraft.sql.vectorized=false escape hatch. Scans
+    * (ColumnarBatch straight into whole-stage codegen). Scans
     * projecting the `_file` metadata column (group-filter subqueries —
     * tiny) take the row path, which synthesizes it per row. Files
     * carrying a deletion vector stay columnar too: their batches pass
@@ -1811,7 +1810,7 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
     * those files so the running row count is the file row index) —
     * DV'd hot files no longer demote the whole scan to the row path. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    GraftVectorized.enabled && !forceRowPath &&
+    !forceRowPath &&
       !required.fieldNames.contains(GraftFileMeta.Name) &&
       !required.fieldNames.contains(GraftPosMeta.Name) &&
       !required.fieldNames.contains(GraftRowIdMeta.Name)

@@ -237,11 +237,6 @@ class GraftDvSkipColumnarReader(inner: PartitionReader[ColumnarBatch],
 }
 
 object GraftVectorized {
-  /** Escape hatch: -Dgraft.sql.vectorized=false falls back to the
-    * row-at-a-time parquet-mr reader. */
-  def enabled: Boolean =
-    sys.props.getOrElse("graft.sql.vectorized", "true").equalsIgnoreCase("true")
-
   /** Combined parquet predicate for a partition, or null. */
   def predicate(pushed: Array[Filter], fullSchema: StructType): FilterPredicate =
     pushed.toSeq.flatMap(f => GraftFilters.translate(f, fullSchema))

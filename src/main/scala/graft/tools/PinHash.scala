@@ -34,14 +34,7 @@ object PinHash {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PinHash <queryName> [more...]")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     args.foreach { name =>
       val df = graft.Queries.all(name).fn(spark, "/root/testdata/sf0.001")
       println(s"""    "$name" -> "${resultHash(df)}",""")

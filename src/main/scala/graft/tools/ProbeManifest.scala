@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Manifest driver-memory/latency scale probe (r10 VERDICT #6): the one
@@ -34,11 +33,7 @@ import org.apache.spark.sql.functions._
 object ProbeManifest {
   def main(args: Array[String]): Unit = {
     val maxN = args.headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
     spark.range(1000000).selectExpr("sum(id)").collect(): Unit // warm
 
     def heapUsed(): Long = {

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Empirical probe behind TableStore.parquetWidenable: writes one
   * parquet file per narrow type and re-reads it under each widened
   * requested schema through spark.read (the same
@@ -11,9 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ProbeParquetWidening {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.Session.local(4)
     import s.implicits._
     val p = "/tmp/graft_widen_probe"
     graft.core.FsUtil.deleteRecursively(new java.io.File(p))

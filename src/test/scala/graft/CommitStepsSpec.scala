@@ -145,13 +145,13 @@ class CommitStepsSpec extends AnyFunSuite {
       "batch-written,manifest-linked,latest-published | +1 dirs=4 dvs=0 stats=4 rows=21 cdf=-"),
     ("mergeUpsert cdf", () => bucketed(cdf = true),
       ts => ts.mergeUpsert("t", upsertSrc(), Seq("id"), changeTypeCol = None),
-      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=4 dvs=0 stats=4 rows=21 cdf=[current,insert,update_postimage,update_preimage]"),
+      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=4 dvs=0 stats=4 rows=21 cdf=[insert,update_postimage,update_preimage]"),
     ("mergeDelete", () => bucketed(),
       ts => ts.mergeDelete("t", Seq(3L, 7L).toDF("id"), Seq("id")),
       "batch-written,manifest-linked,latest-published | +1 dirs=4 dvs=0 stats=4 rows=18 cdf=-"),
     ("mergeDelete cdf", () => bucketed(cdf = true),
       ts => ts.mergeDelete("t", Seq(3L, 7L).toDF("id"), Seq("id")),
-      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=4 dvs=0 stats=4 rows=18 cdf=[current,delete]"),
+      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=4 dvs=0 stats=4 rows=18 cdf=[delete]"),
     ("mergeUpdate", () => plain(),
       ts => ts.mergeUpdate("t", Seq(3L, 13L).toDF("id"), Seq("id"), lit(true),
         Map("v" -> lit("m"))),

@@ -244,7 +244,6 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("storage-partitioned join: co-bucketed tables join without shuffle") {
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       store.createBucketed("spj_a",
@@ -260,24 +259,18 @@ class GraftCatalogSpec extends AnyFunSuite {
       // correctness spot check
       assert(joined.filter("id = 42").select("va", "vb")
         .as[(String, String)].head() === ("a42", "b42"))
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
-    }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("aggregation on bucket keys runs shuffle-free (key-grouped scan)") {
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    try {
-      store.createBucketed("spj_agg",
-        (0L until 300L).map(i => (i % 30, i.toDouble)).toDF("k", "x"), Seq("k"), n = 8)
-      val agg = spark.sql("SELECT k, sum(x) AS sx, count(*) AS n FROM graft.spj_agg GROUP BY k")
-      assert(agg.count() === 30)
-      val plan = agg.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"expected shuffle-free aggregation over the key-grouped scan, got:\n$plan")
-      assert(agg.filter("k = 3").select("n").as[Long].head() === 10L)
-    } finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+    store.createBucketed("spj_agg",
+      (0L until 300L).map(i => (i % 30, i.toDouble)).toDF("k", "x"), Seq("k"), n = 8)
+    val agg = spark.sql("SELECT k, sum(x) AS sx, count(*) AS n FROM graft.spj_agg GROUP BY k")
+    assert(agg.count() === 30)
+    val plan = agg.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"),
+      s"expected shuffle-free aggregation over the key-grouped scan, got:\n$plan")
+    assert(agg.filter("k = 3").select("n").as[Long].head() === 10L)
   }
 
   test("a failing TBLPROPERTIES rolls the whole CREATE TABLE back — the " +

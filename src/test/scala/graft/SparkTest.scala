@@ -3,17 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (guide: one per suite; one per
-  * JVM is cheaper still since Test/fork gives us a dedicated JVM). */
+  * JVM is cheaper still since Test/fork gives us a dedicated JVM), built
+  * by the same factory as Bench and Verify. */
 object SparkTest {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local(8)
 }
