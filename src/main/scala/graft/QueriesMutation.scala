@@ -814,8 +814,8 @@ object QueriesMutation {
     //      deletion vectors); content is preserved exactly and
     //      lightly-deleted dirs keep their cheap DV sidecars. Cost is
     //      O(rewritten bytes), never O(table) — the measured curve is in
-    //      PLANS.md, "r12 scale curves at HEAD". The oracle proves content equality after
-    //      the tombstone purge. ----
+    //      PLANS.md, "r12 scale curves at HEAD". The oracle proves
+    //      content equality after the tombstone purge. ----
     "m18_compact_dv" -> QDef(
       (s, dir) => {
         val st = freshStore(s, "m18_compact")

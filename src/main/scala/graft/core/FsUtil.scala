@@ -83,6 +83,6 @@ private[graft] final class TrashSweeper(root: File, delete: File => Unit) {
     claimed.add(entry)
     if (f.renameTo(entry))
       sweeper.execute { () => try sweep(entry) finally claimed.remove(entry): Unit }
-    else { claimed.remove(entry); FsUtil.deleteRecursively(f) }
+    else { claimed.remove(entry); delete(f) }
   }
 }
