@@ -1,11 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import org.apache.spark.graftest.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,8 +21,10 @@ import graft.core.TableStore
   * of the version it commits — versions advanced, live dir count,
   * deletion-vector count, dirs carrying stats, live rows, and the
   * change-kind dirs recorded under `_cdf/<v>` (`-` when none exists,
-  * `[]` for an empty "no logical change" marker). A refactor of the
-  * commit-side helpers must leave every row byte-identical. */
+  * `[]` for an empty "no logical change" marker) — and the Spark jobs
+  * the operation ran (`jobs=`). A refactor of the commit-side helpers
+  * must leave every row byte-identical; a change that lowers a job
+  * count updates its row and says so in CHANGES.md. */
 class CommitStepsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
   import spark.implicits._
@@ -96,114 +101,127 @@ class CommitStepsSpec extends AnyFunSuite {
   /** (label, fixture, operation, expected record) — the pinned table. */
   private val cases: Seq[(String, () => TableStore, TableStore => Unit, String)] = Seq(
     ("append", () => plain(), ts => ts.append("t", rows(21L, 25L, "c")),
-      "batch-written,manifest-linked,latest-published | +1 dirs=3 dvs=0 stats=3 rows=25 cdf=-"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=3 dvs=0 stats=3 rows=25 cdf=- jobs=2"),
     ("overwrite", () => plain(), ts => ts.overwrite("t", rows(1L, 5L, "o")),
-      "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=5 cdf=-"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=5 cdf=- jobs=2"),
     ("overwriteWhere", () => plain(),
       ts => ts.overwriteWhere("t", col("id") <= 12L, rows(0L, 0L, "w")),
-      "batch-written,dv-written,manifest-linked,latest-published | +1 dirs=2 dvs=1 stats=2 rows=9 cdf=-"),
+      "batch-written,dv-written,manifest-linked,latest-published | +1 dirs=2 dvs=1 stats=2 rows=9 cdf=- jobs=6"),
     ("overwriteWhere cdf", () => plain(cdf = true),
       ts => ts.overwriteWhere("t", col("id") <= 12L, rows(0L, 0L, "w")),
-      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=1 stats=2 rows=9 cdf=[delete,insert]"),
+      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=1 stats=2 rows=9 cdf=[delete,insert] jobs=7"),
     ("attachDir", () => { val ts = plain(); external(ts, "ext-a", rows(21L, 22L, "x")); ts },
       ts => ts.attachDir("t", "ext-a", replace = false),
-      "manifest-linked,latest-published | +1 dirs=3 dvs=0 stats=3 rows=22 cdf=-"),
+      "manifest-linked,latest-published | +1 dirs=3 dvs=0 stats=3 rows=22 cdf=- jobs=0"),
     ("attachDir replace", () => { val ts = plain(); external(ts, "ext-a", rows(21L, 22L, "x")); ts },
       ts => ts.attachDir("t", "ext-a", replace = true),
-      "manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=2 cdf=-"),
+      "manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=2 cdf=- jobs=0"),
     ("attachBucketedDirs", () => { val ts = bucketed(); externalBucketed(ts, "ext-b", rows(21L, 28L, "x")); ts },
       ts => ts.attachBucketedDirs("t", "ext-b", replace = false),
-      "manifest-linked,latest-published | +1 dirs=8 dvs=0 stats=8 rows=28 cdf=-"),
+      "manifest-linked,latest-published | +1 dirs=8 dvs=0 stats=8 rows=28 cdf=- jobs=0"),
     ("attachDirWhere", () => { val ts = plain(); external(ts, "ext-w", rows(2L, 3L, "x")); ts },
       ts => ts.attachDirWhere("t", "ext-w", col("id") <= 3L),
-      "dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=19 cdf=-"),
+      "dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=19 cdf=- jobs=5"),
     ("replaceDirs", () => { val ts = plain(); external(ts, "ext-r", rows(1L, 4L, "x")); ts },
       ts => ts.replaceDirs("t", Set(ts.liveDirs("t").head), "ext-r"),
-      "manifest-linked,latest-published | +1 dirs=2 dvs=0 stats=2 rows=14 cdf=-"),
+      "manifest-linked,latest-published | +1 dirs=2 dvs=0 stats=2 rows=14 cdf=- jobs=0"),
     ("attachStreamEpoch empty", () => plain(),
       ts => { ts.attachStreamEpoch("t", "q", 0L, Seq.empty): Unit },
-      "manifest-linked,latest-published | +1 dirs=2 dvs=0 stats=2 rows=20 cdf=-"),
+      "manifest-linked,latest-published | +1 dirs=2 dvs=0 stats=2 rows=20 cdf=- jobs=0"),
     ("attachStreamEpoch files", () => plain(),
       ts => { ts.attachStreamEpoch("t", "q", 0L, epochFiles(rows(21L, 23L, "e"), false)): Unit },
-      "manifest-linked,latest-published | +1 dirs=3 dvs=0 stats=3 rows=23 cdf=-"),
+      "manifest-linked,latest-published | +1 dirs=3 dvs=0 stats=3 rows=23 cdf=- jobs=1"),
     ("attachStreamEpoch bucketed files", () => bucketed(),
       ts => { ts.attachStreamEpoch("t", "q", 0L, epochFiles(rows(21L, 28L, "e"), true)): Unit },
-      "manifest-linked,latest-published | +1 dirs=8 dvs=0 stats=8 rows=28 cdf=-"),
+      "manifest-linked,latest-published | +1 dirs=8 dvs=0 stats=8 rows=28 cdf=- jobs=2"),
     ("attachStreamEpoch replaceAll", () => plain(),
       ts => { ts.attachStreamEpoch("t", "q", 0L, epochFiles(rows(1L, 2L, "e"), false),
         replaceAll = true): Unit },
-      "manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=2 cdf=-"),
+      "manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=2 cdf=- jobs=1"),
     ("commitDelta (SQL MERGE merge-on-read)", () => plain(), commitDeltaOf,
-      "dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=-"),
+      "dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=- jobs=6"),
     ("commitDelta (SQL MERGE merge-on-read) cdf", () => plain(cdf = true),
       commitDeltaOf,
-      "dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[delete,insert]"),
+      "dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[delete,insert] jobs=11"),
     ("commitDelta (SQL MERGE merge-on-read) bucketed", () => bucketed(), commitDeltaOf,
-      "dv-written,manifest-linked,latest-published | +1 dirs=6 dvs=1 stats=6 rows=22 cdf=-"),
+      "dv-written,manifest-linked,latest-published | +1 dirs=6 dvs=1 stats=6 rows=22 cdf=- jobs=7"),
     ("mergeUpsert", () => bucketed(),
       ts => ts.mergeUpsert("t", upsertSrc(), Seq("id"), changeTypeCol = None),
-      "batch-written,manifest-linked,latest-published | +1 dirs=4 dvs=0 stats=4 rows=21 cdf=-"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=4 dvs=0 stats=4 rows=21 cdf=- jobs=7"),
     ("mergeUpsert cdf", () => bucketed(cdf = true),
       ts => ts.mergeUpsert("t", upsertSrc(), Seq("id"), changeTypeCol = None),
-      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=4 dvs=0 stats=4 rows=21 cdf=[insert,update_postimage,update_preimage]"),
+      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=4 dvs=0 stats=4 rows=21 cdf=[insert,update_postimage,update_preimage] jobs=7"),
     ("mergeDelete", () => bucketed(),
       ts => ts.mergeDelete("t", Seq(3L, 7L).toDF("id"), Seq("id")),
-      "batch-written,manifest-linked,latest-published | +1 dirs=4 dvs=0 stats=4 rows=18 cdf=-"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=4 dvs=0 stats=4 rows=18 cdf=- jobs=6"),
     ("mergeDelete cdf", () => bucketed(cdf = true),
       ts => ts.mergeDelete("t", Seq(3L, 7L).toDF("id"), Seq("id")),
-      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=4 dvs=0 stats=4 rows=18 cdf=[delete]"),
+      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=4 dvs=0 stats=4 rows=18 cdf=[delete] jobs=6"),
     ("mergeUpdate", () => plain(),
       ts => ts.mergeUpdate("t", Seq(3L, 13L).toDF("id"), Seq("id"), lit(true),
         Map("v" -> lit("m"))),
-      "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=-"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=- jobs=4"),
     ("mergeUpdate cdf", () => plain(cdf = true),
       ts => ts.mergeUpdate("t", Seq(3L, 13L).toDF("id"), Seq("id"), lit(true),
         Map("v" -> lit("m"))),
-      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=[update_postimage,update_preimage]"),
+      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=[update_postimage,update_preimage] jobs=3"),
     ("update", () => plain(),
       ts => ts.update("t", col("id") <= 3L, Map("v" -> lit("s"))),
-      "batch-written,manifest-linked,latest-published | +1 dirs=2 dvs=0 stats=2 rows=20 cdf=-"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=2 dvs=0 stats=2 rows=20 cdf=- jobs=2"),
     ("update cdf", () => plain(cdf = true),
       ts => ts.update("t", col("id") <= 3L, Map("v" -> lit("s"))),
-      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=0 stats=2 rows=20 cdf=[update_postimage,update_preimage]"),
+      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=0 stats=2 rows=20 cdf=[update_postimage,update_preimage] jobs=1"),
     ("delete", () => plain(),
       ts => ts.delete("t", col("id") <= 3L),
-      "batch-written,manifest-linked,latest-published | +1 dirs=2 dvs=0 stats=2 rows=17 cdf=-"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=2 dvs=0 stats=2 rows=17 cdf=- jobs=2"),
     ("delete cdf", () => plain(cdf = true),
       ts => ts.delete("t", col("id") <= 3L),
-      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=0 stats=2 rows=17 cdf=[delete]"),
+      "batch-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=0 stats=2 rows=17 cdf=[delete] jobs=1"),
     ("deleteVectorized", () => plain(),
       ts => ts.deleteVectorized("t", col("id") <= 3L),
-      "dv-written,manifest-linked,latest-published | +1 dirs=2 dvs=1 stats=2 rows=17 cdf=-"),
+      "dv-written,manifest-linked,latest-published | +1 dirs=2 dvs=1 stats=2 rows=17 cdf=- jobs=4"),
     ("deleteVectorized cdf", () => plain(cdf = true),
       ts => ts.deleteVectorized("t", col("id") <= 3L),
-      "dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=1 stats=2 rows=17 cdf=[delete]"),
+      "dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=1 stats=2 rows=17 cdf=[delete] jobs=5"),
     ("updateVectorized", () => plain(),
       ts => ts.updateVectorized("t", col("id") <= 3L, Map("v" -> lit("g"))),
-      "batch-written,dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=-"),
+      "batch-written,dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=- jobs=6"),
     ("updateVectorized cdf", () => plain(cdf = true),
       ts => ts.updateVectorized("t", col("id") <= 3L, Map("v" -> lit("g"))),
-      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage]"),
+      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage] jobs=7"),
     ("updateVectorized cdf rowtracking",
       () => { val ts = plain(cdf = true); ts.enableRowTracking("t"); ts },
       ts => ts.updateVectorized("t", col("id") <= 3L, Map("v" -> lit("g"))),
-      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage]"),
+      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage] jobs=11"),
     ("compact", () => plain(),
       ts => ts.compact("t"),
-      "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=-"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=- jobs=2"),
     ("compact cdf", () => plain(cdf = true),
       ts => ts.compact("t"),
-      "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=[]"),
+      "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=[] jobs=2"),
   )
 
-  /** Run `op` on a fresh fixture; render its step trace and the shape
-    * of the head version it leaves behind. */
+  /** Jobs started on the shared session since the last reset. */
+  private lazy val jobCount: AtomicInteger = {
+    val n = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+    })
+    n
+  }
+
+  /** Run `op` on a fresh fixture; render its step trace, the shape of
+    * the head version it leaves behind and the jobs it ran. */
   private def record(build: () => TableStore, op: TableStore => Unit): String = {
     val ts = build()
     val before = ts.currentVersion("t")
     val steps = mutable.Buffer.empty[String]
+    ListenerBus.drain(spark.sparkContext)
+    jobCount.set(0)
     ts.onStep = s => steps += s
     try op(ts) finally ts.onStep = _ => ()
+    ListenerBus.drain(spark.sparkContext)
+    val jobs = jobCount.get
     val v = ts.currentVersion("t")
     val snap = ts.snapshot("t")
     val cdfDir = ts.dataRoot("t").getParent.resolve("_cdf").resolve(v.toString)
@@ -214,7 +232,7 @@ class CommitStepsSpec extends AnyFunSuite {
         .map(_.stripPrefix("__cdc=")).toSeq.sorted).mkString("[", ",", "]")
     s"${steps.mkString(",")} | +${v - before} dirs=${snap.dirs.size} " +
       s"dvs=${snap.dvs.size} stats=${snap.dirs.count(snap.stats.contains)} " +
-      s"rows=${ts.read("t").count()} cdf=$kinds"
+      s"rows=${ts.read("t").count()} cdf=$kinds jobs=$jobs"
   }
 
   cases.foreach { case (label, build, op, expected) =>
