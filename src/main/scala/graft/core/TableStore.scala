@@ -54,6 +54,19 @@ object TableStore {
     def expr: Column = pmod(hash(keys.map(col): _*), lit(n))
   }
 
+  /** Run `body`, rethrowing a failed guard — an `assert_true(cond,
+    * message)` evaluated in a task, whose message reaches the driver
+    * buried in a SparkException's cause chain — as an
+    * IllegalArgumentException(message). Other failures propagate. */
+  def guarded[T](message: String)(body: => T): T =
+    try body
+    catch {
+      case scala.util.control.NonFatal(e) if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).take(16)
+          .exists(c => Option(c.getMessage).exists(_.contains(message))) =>
+        throw new IllegalArgumentException(message, e)
+    }
+
   /** Per-table-path monitor serializing `_LATEST` pointer moves for
     * every same-process writer, whatever TableStore instance they hold
     * (tests and the catalog routinely open several stores on one root).
@@ -135,6 +148,13 @@ object TableStore {
       }
   }
 
+  /** The rows a merge-on-read mutation tombstones: `staged` carries
+    * their `__relpath`/`__pos`, `perDir` counts them per manifest dir,
+    * and the `dropped` dirs (all live rows matched) leave the manifest
+    * whole instead of getting a DV entry. */
+  private[core] final case class Tombstones(staged: DataFrame, perDir: Map[String, Long],
+                                            dropped: Set[String] = Set.empty)
+
   final case class Snapshot(version: Long, schema: StructType,
                             dirs: Seq[String], bucketing: Option[Bucketing],
                             stats: Map[String, DirStats] = Map.empty,
@@ -183,7 +203,7 @@ object TableStore {
 
 class TableStore(spark: SparkSession, root: String) {
 
-  import TableStore.{Bucketing, DvRef, Manifest, Snapshot}
+  import TableStore.{Bucketing, DvRef, Manifest, Snapshot, Tombstones}
 
   // Spark 4 defaults parquet timestamps to INT96 (legacy); the DSv2 SQL
   // read path (GraftPartitionReader) decodes INT64 micros, so pin the
@@ -646,15 +666,9 @@ class TableStore(spark: SparkSession, root: String) {
     * CREATE_NEW) can never trample the winner's data. */
   private def writeBatch(name: String, d: DataFrame, v: Long,
                          meta: Manifest,
-                         extraPhys: Seq[Column] = Nil,
-                         uuid: Option[String] = None): Seq[String] = {
+                         extraPhys: Seq[Column] = Nil): Seq[String] = {
     val physCols = meta.schema.map(f => col(f.name).as(meta.phys(f.name)))
-    // CDF-staging writers pass their commit-local uuid so the batch dir
-    // shares it with the `.v<v>-<uuid>` staging (and any DV sidecar) —
-    // completeCdfStaging identifies a crashed writer's staging by that
-    // shared uuid (commitDelta/commitCdc already share theirs)
-    val batch = f"b$v%09d-" +
-      uuid.getOrElse(java.util.UUID.randomUUID.toString.take(8))
+    val batch = f"b$v%09d-" + java.util.UUID.randomUUID.toString.take(8)
     val target = dir(name).resolve("data").resolve(batch)
     val written = meta.bucketing match {
       case Some(b) =>
@@ -741,6 +755,12 @@ class TableStore(spark: SparkSession, root: String) {
       d.repartition(wanted.toInt)
     else d
   }
+
+  /** [[writeBatch]]'s sizing for a frame written under `m`'s layout
+    * (bucketed writes lay rows out by bucket anyway) — a merge-on-read
+    * postimage is not one file per scan partition on either feed path. */
+  private def sizedFor(m: Manifest, d: DataFrame): DataFrame =
+    if (m.bucketing.isDefined) d else sizedForWrite(d)
 
   /** Test hook: runs immediately before each optimistic manifest-write
     * attempt (deterministic interleaving of a "concurrent" writer). */
@@ -1358,16 +1378,22 @@ class TableStore(spark: SparkSession, root: String) {
   }
 
   /** Write version v's deletion-vector sidecar `dv-<v>-<uuid>`: the
-    * `fresh` (dir, relpath, pos) tombstones merged with the prior DVs of
-    * the dirs they touch, so each dir keeps exactly one sidecar
-    * reference. `perDir` counts the fresh tombstones per dir; returns
-    * those dirs' new references (metadata-only COUNT stays exact).
+    * tombstones of `t`'s kept (not dropped) dirs merged with those
+    * dirs' prior DVs, so each dir keeps exactly one sidecar reference.
+    * Returns their new references (metadata-only COUNT stays exact);
+    * none, and no sidecar, when every touched dir drops whole.
     * Sidecars sort by (relpath, pos) so a scan task's per-file probe
     * prunes row groups. */
   private def writeDvSidecar(name: String, m: Manifest, v: Long, uuid: String,
-                             fresh: DataFrame,
-                             perDir: Map[String, Long]): Map[String, DvRef] = {
+                             t: Tombstones): Map[String, DvRef] = {
+    val perDir = t.perDir -- t.dropped
+    if (perDir.isEmpty) return Map.empty
     val dvName = s"dv-$v-$uuid"
+    val all = t.staged.select(dirOf("__relpath").as("dir"),
+      col("__relpath").as("relpath"), col("__pos").as("pos"))
+    val fresh =
+      if (t.dropped.isEmpty) all
+      else all.filter(col("dir").isin(perDir.keySet.toSeq.sorted: _*))
     val priorDvd = perDir.keySet.toSeq.sorted.filter(m.dvs.contains)
     val combined =
       if (priorDvd.isEmpty) fresh
@@ -1384,12 +1410,7 @@ class TableStore(spark: SparkSession, root: String) {
     }
   }
 
-  /** The (dir, relpath, pos) tombstones of a [[scanLiveWithPos]] frame. */
-  private def tombstonesOf(staged: DataFrame): DataFrame =
-    staged.select(dirOf("__relpath").as("dir"),
-      col("__relpath").as("relpath"), col("__pos").as("pos"))
-
-  /** Rows per manifest dir of a [[scanLiveWithPos]] frame (one job). */
+  /** Rows per manifest dir of a `__relpath` frame (one job). */
   private def rowsPerDir(staged: DataFrame): Map[String, Long] =
     staged.select(dirOf("__relpath").as("dir")).groupBy("dir").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1416,15 +1437,15 @@ class TableStore(spark: SparkSession, root: String) {
     * every dir the predicate might touch; the copy-on-write [[update]]
     * stays the right call when most of a dir changes. Stats/bloom
     * bounds on old dirs stay sound (DVs only remove rows); the new dir
-    * gets fresh footer stats. With the change feed on, preimage and
-    * postimage rows land under `_cdf/<v>` in the same pass. */
+    * gets fresh footer stats. With the change feed on, postimage data
+    * and pre/postimage change rows land in ONE write job. */
   def updateVectorized(name: String, condition: Column,
                        set: Map[String, Column]): Unit =
     mutateVectorized(name, condition, Some(set))
 
   /** Shared body of the merge-on-read mutations: tombstone the rows
     * matching `condition` and, for an UPDATE (`set` defined), append
-    * their post-SET images as a new batch dir — one commit. */
+    * their post-SET images — one [[commitMutation]] carrying every dir. */
   private def mutateVectorized(name: String, condition: Column,
                                set: Option[Map[String, Column]]): Unit = {
     val m = readManifest(name, currentVersion(name))
@@ -1433,71 +1454,65 @@ class TableStore(spark: SparkSession, root: String) {
     set.foreach(s => require(s.keySet.subsetOf(m.schema.fieldNames.toSet),
       s"SET references non-existent column(s): " +
         s"${(s.keySet -- m.schema.fieldNames).mkString(", ")}"))
-    val (touched, _) = pruneDirsByCondition(name, m, condition)
-    if (touched.isEmpty) return
-    val v = m.baseVersion + 1
-    val uuid = java.util.UUID.randomUUID.toString.take(8)
     // row tracking: resolve each staged row's STABLE id (carried __rid
     // from a prior rewrite, else the manifest base + position) so a
     // postimage file can materialize it — the id survives the
     // tombstone+re-append — and change rows carry it, so a CDF
     // consumer can key on `_row_id` (keyless replication)
     val tracking = m.props.contains(RowTrackingProp) && (set.isDefined || m.cdf)
-    val ridCols = if (tracking) Seq(col(RidCol)) else Nil
-    // one scan of the touched dirs stages the matching rows (the small
-    // side, by MoR's premise) with their positions; tombstones,
-    // postimages, and change rows all derive from this single pass.
-    // Persisted (MEMORY_AND_DISK spills if a predicate unexpectedly
-    // matches big), not round-tripped through a temp parquet — the
-    // write+re-read doubled the fixed cost of small mutations
-    val staged0 = scanLiveWithPos(name, m, touched, withRid = tracking)
+    val rid = if (tracking) Seq(col(RidCol)) else Nil
+    val old = m.schema.map(f => col(f.name))
+    // post-SET images (every staged row matched, so SET applies
+    // unconditionally), cast to the declared types; CHECK-enforced by
+    // the commit like any written row
+    val out = set.map(s => m.schema.map(f =>
+      s.get(f.name).map(_.cast(f.dataType)).getOrElse(col(f.name)).as(f.name)))
+    withMatches(name, m, condition, withRid = tracking, dropWhole = false) {
+      case None => ()
+      case Some(t) =>
+        // postimages are sized like a batch; a delete writes change rows only
+        commitMutation(name, m, m.dirs, out.map(o => t.staged.select(o ++ rid: _*)),
+          if (set.isDefined) sizedFor(m, t.staged) else t.staged,
+          out.fold(kinds("delete" -> (old ++ rid)))(updateKinds(_, old, rid)), Some(t))
+    }
+  }
+
+  /** Run `body` on the live rows matching `condition` (None: none
+    * does) — ONE pruned scan with positions (`__rid` resolved when
+    * `withRid`) feeding tombstones, postimages and change rows alike,
+    * persisted (MEMORY_AND_DISK), not round-tripped through a temp
+    * parquet, which doubled a small mutation's fixed cost. With
+    * `dropWhole`, a dir whose live rows ALL match drops whole (exact:
+    * footer row counts minus prior tombstones). */
+  private def withMatches(name: String, m: Manifest, condition: Column,
+                          withRid: Boolean, dropWhole: Boolean)(
+      body: Option[Tombstones] => Unit): Unit = {
+    val (touched, _) = pruneDirsByCondition(name, m, condition)
+    // a zero-dir scan has no file metadata to position against
+    if (touched.isEmpty) return body(None)
+    val staged0 = scanLiveWithPos(name, m, touched, withRid)
       .filter(coalesce(condition, lit(false)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // unpersist in finally: a postimage/DV/CDF write failure or a lost
-    // commit race must not leave the staged blocks pinned
+    // unpersist in finally: a failed write or a lost commit race must
+    // not leave the staged blocks pinned
     try {
-      val staged = if (!tracking) staged0 else resolveRid(staged0, m)
+      val staged = if (!withRid) staged0 else resolveRid(staged0, m)
       val perDir = rowsPerDir(staged)
-      if (perDir.isEmpty) return
-      // post-SET images (every staged row matched, so SET applies
-      // unconditionally), conformed + CHECK-enforced like any append
-      val postimage = set.map { s =>
-        val out = m.schema.map(f =>
-          s.get(f.name).map(_.as(f.name)).getOrElse(col(f.name).as(f.name)))
-        val conformCols = m.schema.map(f => col(f.name).cast(f.dataType).as(f.name))
-        enforceChecks(staged.select(out ++ ridCols: _*)
-          .select(conformCols ++ ridCols: _*), m.allChecks)
-      }
-      val newDirs = postimage.toSeq.flatMap(p =>
-        writeBatch(name, p, v, m, extraPhys = ridCols, uuid = Some(uuid)))
-      val dvs = writeDvSidecar(name, m, v, uuid, tombstonesOf(staged), perDir)
-      val stagedCdf = stageChanges(name, m, v, uuid) { cdfDir =>
-        // _cdf files carry PHYSICAL names, like every parquet this store writes
-        val toPhys = m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ ridCols
-        postimage match {
-          case None =>
-            staged.select(toPhys: _*).write.mode("overwrite")
-              .parquet(cdfDir.resolve("__cdc=delete").toString)
-          case Some(post) =>
-            // ONE write for both images: partitionBy lays out the same
-            // `__cdc=<kind>/` dirs the reader globs, at half the job
-            // count (these commits are fixed-cost-dominated)
-            staged.select(m.schema.map(f => col(f.name)) ++ ridCols: _*)
-              .select(toPhys: _*).withColumn("__cdc", lit("update_preimage"))
-              .unionByName(post.select(toPhys: _*)
-                .withColumn("__cdc", lit("update_postimage")))
-              .write.mode("overwrite").partitionBy("__cdc")
-              .parquet(cdfDir.toString)
+      val dropped =
+        if (!dropWhole) Set.empty[String]
+        else {
+          import scala.collection.parallel.CollectionConverters._
+          perDir.keySet.par.filter { d =>
+            val total = DirStats.fileRowCounts(dataRoot(name).resolve(d)).map(_._2).sum
+            perDir(d) == total - m.dvs.get(d).map(_.deleted).getOrElse(0L)
+          }.seq.toSet
         }
-      }
-      commitWithCdf(name, v, m.copy(dirs = m.dirs ++ newDirs,
-        stats = m.stats ++ collectStats(name, m, newDirs), dvs = m.dvs ++ dvs),
-        stagedCdf)
+      body(if (perDir.isEmpty) None else Some(Tombstones(staged, perDir, dropped)))
     } finally staged0.unpersist()
   }
 
   /** Live scan of `dirs` with DVs applied AND position metadata kept
-    * (`__relpath`, `__pos`) — the input [[mutateVectorized]] stages.
+    * (`__relpath`, `__pos`) — the input [[withMatches]] stages.
     * With `withRid` the scan also surfaces the materialized `__rid`
     * column row-tracking postimage files carry (null in files that
     * predate tracking or were never rewritten — their ids derive from
@@ -1774,22 +1789,37 @@ class TableStore(spark: SparkSession, root: String) {
     * rewritten). Incoming rows land as a fresh batch dir (bucketed
     * layout preserved) with footer stats; identity / generated /
     * CHECK enforcement all apply as in any write. With the change feed
-    * on, delete and insert rows land under `_cdf/<v>` in the same pass
-    * (insert rows carry no `__rid`: fresh ids are assigned only at
-    * commit — the same NULL-id contract as copy-on-write postimages).
-    * Rewrite-shaped commit: a racing writer conflicts loudly, never
-    * rebases. */
+    * on, data, insert and delete rows land in ONE write job, so the
+    * recorded inserts are the committed rows whatever the source's
+    * determinism (they carry a NULL `__rid`, the copy-on-write insert
+    * contract). Rewrite-shaped: a racing writer conflicts loudly.
+    *
+    * @throws IllegalArgumentException when an incoming row violates the
+    *   region contract (nothing is committed) */
   def overwriteWhere(name: String, condition: Column, df: DataFrame): Unit = {
     val m = readManifest(name, currentVersion(name))
     val (withIds, idProps) = applyIdentity(df, m)
+    val outside = "overwriteWhere: incoming row does not satisfy the replace " +
+      s"predicate ($condition)"
     val incoming = conform(applyGenerated(withIds, m), m.schema)
-      .filter(assert_true(coalesce(condition, lit(false)),
-        lit("overwriteWhere: incoming row does not satisfy the replace " +
-          s"predicate ($condition)")).isNull)
-    replaceRegionCommit(name, m, condition,
-      newDirsOf = (v, uuid) => writeBatch(name,
-        enforceChecks(incoming, m.allChecks), v, m, uuid = Some(uuid)),
-      extraProps = idProps)
+      .filter(assert_true(coalesce(condition, lit(false)), lit(outside)).isNull)
+    val cols = m.schema.map(f => col(f.name))
+    val rid = if (m.cdf) ridNames(m) else Nil
+    TableStore.guarded(outside) {
+      withMatches(name, m, condition, withRid = rid.nonEmpty, dropWhole = true) { t =>
+        // the feed-on frame: incoming rows are data + inserts, replaced rows deletes
+        def rows: DataFrame = {
+          val noRid = rid.map(r => lit(null).cast("long").as(r))
+          val ins = incoming.select(
+            kinds("current" -> (cols ++ noRid), "insert" -> (cols ++ noRid)).as("__k"))
+          t.fold(ins)(t => ins.unionByName(t.staged.select(
+            kinds("delete" -> (cols ++ rid.map(col))).as("__k"))))
+        }
+        commitMutation(name, m.copy(props = m.props ++ idProps),
+          m.dirs.filterNot(t.fold(Set.empty[String])(_.dropped)),
+          Some(incoming), sizedFor(m, rows), col("__k"), t)
+      }
+    }
   }
 
   /** DSv2 twin of [[overwriteWhere]] (SQL `INSERT INTO ... REPLACE
@@ -1798,9 +1828,9 @@ class TableStore(spark: SparkSession, root: String) {
     * CHECK constraints against the staged FILES (one bounded scan
     * each, BEFORE any metadata changes — a violation commits nothing,
     * and the orphan dir stays invisible and GC-able like every aborted
-    * DSv2 write), then run the same one-commit region replacement.
-    * On a bucketed table the batch dir's `__b=<k>` leaves each become
-    * their own manifest dir (layout preserved through the replace). */
+    * DSv2 write), then commit the same region replacement through
+    * [[commitWritten]]. On a bucketed table each of the batch dir's
+    * `__b=<k>` leaves becomes its own manifest dir. */
   private[graft] def attachDirWhere(name: String, batchDir: String,
                                     condition: Column): Unit = {
     val m = readManifest(name, currentVersion(name))
@@ -1813,84 +1843,11 @@ class TableStore(spark: SparkSession, root: String) {
         s"REPLACE WHERE on $name: staged rows do not satisfy the replace " +
           s"predicate ($condition) — nothing committed")
     requireChecksPass(name, m, dirs)
-    replaceRegionCommit(name, m, condition, newDirsOf = (_, _) => dirs,
-      extraProps = Map.empty,
-      absentIsNull = false) // external writer, like attachDir
-  }
-
-  /** Shared core of [[overwriteWhere]] / [[attachDirWhere]]: replace
-    * `condition`'s region with the new dirs in ONE commit (tombstone /
-    * drop decisions, DV sidecar, change rows, stats, manifest).
-    * `newDirsOf` is called with the commit version so the library path
-    * can materialize its batch dir under the right version number.
-    * The recorded change feed's insert rows are read BACK from the
-    * written batch files, never by re-executing the caller's plan — a
-    * second execution of a non-deterministic source (identity
-    * assignment, rand()) could mint change rows that disagree with
-    * the rows actually committed, and even a deterministic plan would
-    * pay a full second run. */
-  private def replaceRegionCommit(name: String, m: Manifest, condition: Column,
-                                  newDirsOf: (Long, String) => Seq[String],
-                                  extraProps: Map[String, String],
-                                  absentIsNull: Boolean = true): Unit = {
-    val v = m.baseVersion + 1
-    val uuid = java.util.UUID.randomUUID.toString.take(8)
-    val (touched, _) = pruneDirsByCondition(name, m, condition)
-    val trackingCdf = m.cdf && m.props.contains(RowTrackingProp)
-    // one scan of the touched dirs stages the matching (live) rows with
-    // their positions; tombstones, full-drop decisions, and delete
-    // change rows all derive from this single pass. None when pruning
-    // proves nothing can match (pure insert) — a zero-dir scan has no
-    // file metadata to position against.
-    val staged0: Option[DataFrame] =
-      if (touched.isEmpty) None
-      else Some(scanLiveWithPos(name, m, touched, withRid = trackingCdf)
-        .filter(coalesce(condition, lit(false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    try {
-      val staged = staged0.map(s => if (!trackingCdf) s else resolveRid(s, m))
-      val perDir = staged.map(rowsPerDir).getOrElse(Map.empty[String, Long])
-      // exact live counts decide full drops: footer totals minus prior
-      // tombstones, only for dirs that matched at all
-      val liveCount: Map[String, Long] = {
-        import scala.collection.parallel.CollectionConverters._
-        perDir.keySet.toSeq.par.map { d =>
-          val total = DirStats.fileRowCounts(dataRoot(name).resolve(d))
-            .map(_._2).sum
-          d -> (total - m.dvs.get(d).map(_.deleted).getOrElse(0L))
-        }.seq.toMap
-      }
-      val dropped = perDir.keySet.filter(d => perDir(d) == liveCount(d))
-      val partial = (perDir.keySet -- dropped).toSeq.sorted
-      val newDirs = newDirsOf(v, uuid)
-      // DV sidecar only for partially-replaced dirs
-      val updatedDvs: Map[String, DvRef] =
-        if (partial.isEmpty) Map.empty
-        else writeDvSidecar(name, m, v, uuid,
-          tombstonesOf(staged.get).filter(col("dir").isin(partial: _*)),
-          perDir.view.filterKeys(partial.toSet).toMap)
-      val stagedCdf = stageChanges(name, m, v, uuid) { cdfDir =>
-        val cdfRid = if (trackingCdf) Seq(col(RidCol)) else Nil
-        val toPhys = m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ cdfRid
-        // ONE write lays out both `__cdc=<kind>/` dirs; insert rows
-        // null-fill __rid (ids only exist after the commit)
-        val insertRows = scanDirs(newDirs, name, m.physSchema)
-          .select(m.schema.map(f => col(m.phys(f.name))): _*)
-          .withColumn("__cdc", lit("insert"))
-        staged.map(_.select(m.schema.map(f => col(f.name)) ++ cdfRid: _*)
-            .select(toPhys: _*).withColumn("__cdc", lit("delete"))
-            .unionByName(insertRows, allowMissingColumns = true))
-          .getOrElse(insertRows)
-          .write.mode("overwrite").partitionBy("__cdc").parquet(cdfDir.toString)
-      }
-      val keptDirs = m.dirs.filterNot(dropped.contains)
-      commitWithCdf(name, v,
-        m.copy(dirs = keptDirs ++ newDirs,
-          stats = (m.stats -- dropped) ++ collectStats(name, m, newDirs, absentIsNull),
-          dvs = (m.dvs -- dropped) ++ updatedDvs,
-          props = m.props ++ extraProps),
-        stagedCdf)
-    } finally staged0.foreach(_.unpersist())
+    val rid = if (m.cdf) ridNames(m) else Nil
+    withMatches(name, m, condition, withRid = rid.nonEmpty, dropWhole = true) { t =>
+      commitWritten(name, m, java.util.UUID.randomUUID.toString.take(8), dirs, t,
+        t.map(_.staged.select(m.schema.map(f => col(f.name)) ++ rid.map(col): _*)))
+    }
   }
 
   /** INSERT INTO append: O(new rows) — adds dirs, keeps the rest (on a
@@ -2737,7 +2694,7 @@ class TableStore(spark: SparkSession, root: String) {
     * validation scan) — the Delta constraints model. The filter's
     * assert_true(...) is null for passing rows, so the predicate is
     * always true and removes nothing; it exists only to evaluate. On a
-    * change-feed frame ([[commitCdc]]'s `__cdc`-tagged rows) only the
+    * change-feed frame ([[writeCdc]]'s `__cdc`-tagged rows) only the
     * `current` rows are table rows — preimage/delete rows are prior
     * data and must not re-fail. */
   private def enforceChecks(df: DataFrame, checks: Map[String, String]): DataFrame = {
@@ -2974,7 +2931,7 @@ class TableStore(spark: SparkSession, root: String) {
         if (t.get(a).forall(_ < v)) t + (a -> v) else t
       })
     val old = schema.map(f => col(f.name).as(f.name))
-    commitMutation(name, mTxn, carried, joined.select(out ++ ridKeep: _*), joined,
+    commitMutation(name, mTxn, carried, Some(joined.select(out ++ ridKeep: _*)), joined,
       when(both, updateKinds(out, old, ridKeep))
         .when(sMatched, kinds("current" -> (out ++ ridKeep), "insert" -> (out ++ ridKeep)))
         .otherwise(kinds("current" -> (old ++ ridKeep))))
@@ -3057,7 +3014,7 @@ class TableStore(spark: SparkSession, root: String) {
     val (target, carried, b) = pruneByKeys(name, m, keyRows, keys)
     val old = m.schema.map(f => col(f.name).as(f.name)) ++ rewriteExtra(m)
     commitMutation(name, m.copy(bucketing = b), carried,
-      target.join(keyRows, keys, "left_anti"),
+      Some(target.join(keyRows, keys, "left_anti")),
       target.join(keyRows.withColumn("__kdel", lit(true)), keys, "left_outer"),
       when(col("__kdel").isNotNull, kinds("delete" -> old))
         .otherwise(kinds("current" -> old)))
@@ -3088,7 +3045,7 @@ class TableStore(spark: SparkSession, root: String) {
     // synthesizes a whole-table delete+insert for a targeted update
     val old = m.schema.map(f => col(f.name).as(f.name))
     commitMutation(name, m, Seq.empty,
-      conformKeep(joined.select(out ++ ridKeep: _*), m.schema, ridKeep), joined,
+      Some(conformKeep(joined.select(out ++ ridKeep: _*), m.schema, ridKeep)), joined,
       when(hit, updateKinds(out, old, ridKeep))
         .otherwise(kinds("current" -> (old ++ ridKeep))))
   }
@@ -3166,7 +3123,7 @@ class TableStore(spark: SparkSession, root: String) {
     val ridKeep = rewriteExtra(m)
     val old = m.schema.map(f => col(f.name).as(f.name))
     commitMutation(name, m, carried,
-      conformKeep(target.select(out ++ ridKeep: _*), m.schema, ridKeep), target,
+      Some(conformKeep(target.select(out ++ ridKeep: _*), m.schema, ridKeep)), target,
       when(coalesce(condition, lit(false)), updateKinds(out, old, ridKeep))
         .otherwise(kinds("current" -> (old ++ ridKeep))))
   }
@@ -3197,7 +3154,7 @@ class TableStore(spark: SparkSession, root: String) {
       return
     }
     val old = m.schema.map(f => col(f.name).as(f.name)) ++ rewriteExtra(m)
-    commitMutation(name, m, carried, target.filter(!coalesce(condition, lit(false))),
+    commitMutation(name, m, carried, Some(target.filter(!coalesce(condition, lit(false)))),
       target, when(coalesce(condition, lit(false)), kinds("delete" -> old))
         .otherwise(kinds("current" -> old)))
   }
@@ -3257,15 +3214,14 @@ class TableStore(spark: SparkSession, root: String) {
     * (no live dir rewritten) and the inserted files attach as a new
     * batch dir. A SQL MERGE matching 0.1% of a 100 TB table writes
     * that 0.1% plus kilobytes of tombstones — never the table. With
-    * the change feed on, deleted preimages are re-read from the
-    * touched dirs by position (one bounded extra scan) and inserted
-    * rows recorded, both under `_cdf/<v>` (delete+insert is the
-    * documented representation of updates on this path). */
+    * the change feed on, deleted preimages re-read from the touched
+    * dirs by position and the inserted rows are recorded under
+    * `_cdf/<v>` (delete+insert is the documented representation of
+    * updates on this path). */
   def commitDelta(name: String, deleteFiles: Seq[Path],
                   insertFiles: Seq[Path]): Unit = {
     val m = readManifest(name, currentVersion(name))
     if (deleteFiles.isEmpty && insertFiles.isEmpty) return
-    val v = m.baseVersion + 1
     val uuid = java.util.UUID.randomUUID.toString.take(8)
     // inserted rows -> one new batch dir (files carry physical names);
     // bucketed writers staged under __b=<k> leaves — each leaf becomes
@@ -3273,44 +3229,50 @@ class TableStore(spark: SparkSession, root: String) {
     // merge-on-read merges
     val newDirs: Seq[String] =
       if (insertFiles.isEmpty) Seq.empty
-      else moveIntoBatch(name, f"b$v%09d-$uuid", insertFiles)
+      else moveIntoBatch(name, f"b${m.baseVersion + 1}%09d-$uuid", insertFiles)
     requireChecksPass(name, m, newDirs)
-    // tombstones -> merged DV sidecars on the touched dirs
-    val fresh: Option[DataFrame] =
-      if (deleteFiles.isEmpty) None
-      else Some(spark.read.parquet(deleteFiles.map(_.toString): _*)
-        .select(dirOf("relpath").as("dir"), col("relpath"), col("pos")))
-    val perDir = fresh.map(_.groupBy("dir").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      .getOrElse(Map.empty[String, Long])
-    val unknown = perDir.keySet.diff(m.dirs.toSet)
+    val tomb = if (deleteFiles.isEmpty) None else {
+      val staged = spark.read.parquet(deleteFiles.map(_.toString): _*)
+        .select(col("relpath").as("__relpath"), col("pos").as("__pos"))
+      Some(Tombstones(staged, rowsPerDir(staged))).filter(_.perDir.nonEmpty)
+    }
+    val unknown = tomb.fold(Set.empty[String])(_.perDir.keySet).diff(m.dirs.toSet)
     require(unknown.isEmpty,
       s"delta delete references non-live dirs: ${unknown.take(3).mkString(",")}")
-    val dvsUpdated =
-      if (perDir.isEmpty) Map.empty[String, DvRef]
-      else writeDvSidecar(name, m, v, uuid, fresh.get, perDir)
-    val stagedCdf = stageChanges(name, m, v, uuid) { cdfDir =>
-      val toPhys = m.schema.map(f => col(f.name).as(m.phys(f.name)))
-      fresh.foreach { staged =>
-        val touched = staged.select("dir").distinct()
-          .collect().map(_.getString(0)).toSeq
-        if (touched.nonEmpty)
-          scanLiveWithPos(name, m, touched)
-            .join(staged.select(col("relpath").as("__relpath"),
-              col("pos").as("__pos")), Seq("__relpath", "__pos"), "left_semi")
-            .select(toPhys: _*)
-            .write.mode("overwrite")
-            .parquet(cdfDir.resolve("__cdc=delete").toString)
-      }
-      if (newDirs.nonEmpty)
-        scanDirs(newDirs, name, m.physSchema)
-          .write.mode("overwrite")
-          .parquet(cdfDir.resolve("__cdc=insert").toString)
-    }
+    commitWritten(name, m, uuid, newDirs, tomb, tomb.map(t =>
+      scanLiveWithPos(name, m, t.perDir.keySet.toSeq.sorted)
+        .join(t.staged, Seq("__relpath", "__pos"), "left_semi")
+        .select(m.schema.map(f => col(f.name)): _*)))
     deleteFiles.foreach(Files.deleteIfExists(_))
-    commitWithCdf(name, v, m.copy(dirs = m.dirs ++ newDirs,
-      stats = m.stats ++ collectStats(name, m, newDirs, absentIsNull = false),
-      dvs = m.dvs ++ dvsUpdated), stagedCdf)
+  }
+
+  /** The commit of [[commitDelta]] and [[attachDirWhere]]: `newDirs`,
+    * which an executor already wrote, plus `tomb`'s DV sidecar and
+    * dropped dirs, in ONE version. With the feed on, the `deleted` rows
+    * (logical columns, `__rid` when carried) and the inserted rows read
+    * back from `newDirs` stage in ONE `partitionBy("__cdc")` write. */
+  private def commitWritten(name: String, m: Manifest, uuid: String,
+                            newDirs: Seq[String], tomb: Option[Tombstones],
+                            deleted: => Option[DataFrame]): Unit = {
+    val v = m.baseVersion + 1
+    val dvs = tomb.fold(Map.empty[String, DvRef])(writeDvSidecar(name, m, v, uuid, _))
+    val stagedCdf = stageChanges(name, m, v, uuid) { cdfDir =>
+      // _cdf files carry PHYSICAL names, like every parquet this store writes
+      val inserts = if (newDirs.isEmpty) None else Some(
+        scanDirs(newDirs, name, m.physSchema)
+          .select(m.schema.map(f => col(m.phys(f.name))): _*)
+          .withColumn("__cdc", lit("insert")))
+      val deletes = deleted.map(d => d.select(
+        m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ ridOf(d): _*)
+        .withColumn("__cdc", lit("delete")))
+      // insert rows null-fill __rid (ids only exist after the commit)
+      (deletes ++ inserts).reduceOption(_.unionByName(_, allowMissingColumns = true))
+        .foreach(_.write.mode("overwrite").partitionBy("__cdc").parquet(cdfDir.toString))
+    }
+    val dropped = tomb.fold(Set.empty[String])(_.dropped)
+    commitWithCdf(name, v, m.copy(dirs = m.dirs.filterNot(dropped) ++ newDirs,
+      stats = (m.stats -- dropped) ++ collectStats(name, m, newDirs, absentIsNull = false),
+      dvs = m.dvs ++ dvs), stagedCdf)
   }
 
   /** Commit a version that REPLACES the `removed` live dirs with the
@@ -3511,23 +3473,60 @@ class TableStore(spark: SparkSession, root: String) {
     kinds("current" -> (out ++ rid), "update_preimage" -> (old ++ rid),
       "update_postimage" -> (out ++ rid))
 
-  /** The change-feed fork every copy-on-write mutation shares. With the
-    * feed off, the rewritten rows `post` (carrying `__rid` on row-tracked
-    * tables) commit through [[commit]]; with it on, each row of `rows`
-    * explodes by its `changes` kind array (the `current` post-state plus its
-    * change rows) and [[commitCdc]] lands both in one write pass. Either
-    * frame is only planned when its branch runs. */
+  /** The one write path of every library row-level mutation: keep the
+    * `carried` dirs, add the written batch and, for merge-on-read (copy-
+    * on-write with nothing rewritten), `tomb`'s DVs and dropped dirs.
+    * Feed off: `post` (None: no data; `__rid` on row-tracked rewrites)
+    * goes through [[commit]], or [[writeBatch]] when tombstoned. Feed
+    * on: each row of `rows` explodes by its `changes` kind array (the
+    * `current` post-state plus change rows) and [[writeCdc]] lands both
+    * in ONE job; an empty `_cdf/<v>` still marks "recorded, none
+    * occurred". Each frame is planned only in its branch. */
   private def commitMutation(name: String, meta: Manifest, carried: Seq[String],
-                             post: => DataFrame, rows: => DataFrame,
-                             changes: => Column): Unit =
-    if (!meta.cdf)
-      commit(name, Some(post), meta, carried, extraPhys = rewriteExtra(meta)): Unit
-    else
-      commitCdc(name, meta, explodeKinds(rows, changes, meta.schema, ridNames(meta)),
-        carried)
+                             post: => Option[DataFrame], rows: => DataFrame,
+                             changes: => Column,
+                             tomb: Option[Tombstones] = None): Unit =
+    if (!meta.cdf && tomb.isEmpty) {
+      val p = post
+      commit(name, p, meta, carried, extraPhys = p.toSeq.flatMap(ridOf)): Unit
+    } else {
+      val v = meta.baseVersion + 1
+      val uuid = java.util.UUID.randomUUID.toString.take(8)
+      val (newDirs, staging) =
+        if (!meta.cdf)
+          (post.toSeq.flatMap(p => writeBatch(name, enforceChecks(p, meta.allChecks),
+            v, meta, ridOf(p))), None)
+        else {
+          val (dirs, kinds) = writeCdc(name, meta, v, uuid,
+            explodeKinds(rows, changes, meta.schema, ridNames(meta)))
+          // copy-on-write marks its rewrite even when no row survived;
+          // a merge-on-read delete writes no batch at all
+          if (tomb.isEmpty || dirs.nonEmpty) onStep("batch-written")
+          (dirs, Some(kinds))
+        }
+      val dvs = tomb.fold(Map.empty[String, DvRef])(writeDvSidecar(name, meta, v, uuid, _))
+      val stagedCdf = stageChanges(name, meta, v, uuid) { cdfDir =>
+        staging.foreach { s =>
+          Using.resource(Files.list(s))(_.iterator().asScala.toSeq)
+            .filter(_.getFileName.toString.startsWith("__cdc="))
+            .foreach(p => Files.move(p, cdfDir.resolve(p.getFileName)))
+          FsUtil.deleteRecursively(s.toFile)
+        }
+      }
+      val carriedSet = carried.toSet
+      commitWithCdf(name, v, meta.copy(dirs = carried ++ newDirs,
+        stats = meta.stats.view.filterKeys(carriedSet).toMap ++
+          collectStats(name, meta, newDirs),
+        dvs = meta.dvs ++ dvs), stagedCdf)
+    }
+
+  /** `__rid` when `df` carries it: the stable ids a row-tracked rewrite
+    * materializes into the files it writes. */
+  private def ridOf(df: DataFrame): Seq[Column] =
+    if (df.columns.contains(RidCol)) Seq(col(RidCol)) else Nil
 
   /** Explode each row's array of (kind, row) structs back to columns —
-    * the shape [[commitCdc]] writes partitioned by kind. */
+    * the shape [[writeCdc]] writes partitioned by kind. */
   private def explodeKinds(df: DataFrame, arr: Column, schema: StructType,
                            extras: Seq[String] = Nil): DataFrame =
     df.select(explode(arr).as("__e"))
@@ -3539,17 +3538,13 @@ class TableStore(spark: SparkSession, root: String) {
   private def ridNames(m: Manifest): Seq[String] =
     if (m.props.contains(RowTrackingProp)) Seq(RidCol) else Nil
 
-  /** The change-data-feed twin of [[commit]]: ONE write job lands both
-    * the post-mutation data (`__cdc=current` rows -> the new batch dir)
-    * and the change rows (every other kind -> `_cdf/<v>/__cdc=<kind>/`)
-    * — change capture costs zero extra passes over the data, the same
-    * property Delta's CDC writer has. An empty `_cdf/<v>` dir is still
-    * created: it marks "changes recorded, none occurred", which the
-    * reader distinguishes from "not recorded". */
-  private def commitCdc(name: String, meta: Manifest, exploded: DataFrame,
-                        carried: Seq[String]): Unit = {
-    val v = meta.baseVersion + 1
-    val uuid = java.util.UUID.randomUUID.toString.take(8)
+  /** [[commitMutation]]'s change-feed write: ONE job lays out the data
+    * (`__cdc=current` -> batch `b<v>-<uuid>` or its `__b=<k>` leaves,
+    * whose entries it returns) and the change rows (`__cdc=<kind>/`
+    * dirs left in the returned `data/.cdc-<uuid>` staging) — zero
+    * extra passes over the data, like Delta's CDC writer. */
+  private def writeCdc(name: String, meta: Manifest, v: Long, uuid: String,
+                       exploded: DataFrame): (Seq[String], Path) = {
     val staging = dataRoot(name).resolve(s".cdc-$uuid")
     val (toWrite, parts) = meta.bucketing match {
       case Some(b) =>
@@ -3560,7 +3555,7 @@ class TableStore(spark: SparkSession, root: String) {
     // data AND _cdf files carry physical names (__cdc/__b are partition
     // cols, never stored); checks run on LOGICAL names first
     val physCols = meta.schema.map(f => col(f.name).as(meta.phys(f.name))) ++
-      (if (exploded.columns.contains(RidCol)) Seq(col(RidCol)) else Nil)
+      ridOf(exploded)
     enforceChecks(toWrite, meta.allChecks)
       .select(col("__cdc") +: physCols ++: parts.drop(1).map(col): _*)
       .write.mode("overwrite").partitionBy(parts: _*).parquet(staging.toString)
@@ -3577,21 +3572,11 @@ class TableStore(spark: SparkSession, root: String) {
           s"$batch/$l"
         }
         // emptied by the leaf moves; left in place it would be staged
-        // below as a stray `current` change kind under _cdf/<v>
+        // as a stray `current` change kind under _cdf/<v>
         Files.delete(curStaged)
         leaves
       }
-    onStep("batch-written")
-    val stagedCdf = stageChanges(name, meta, v, uuid) { cdfDir =>
-      Using.resource(Files.list(staging))(_.iterator().asScala.toSeq)
-        .filter(_.getFileName.toString.startsWith("__cdc="))
-        .foreach(p => Files.move(p, cdfDir.resolve(p.getFileName)))
-      FsUtil.deleteRecursively(staging.toFile)
-    }
-    val carriedSet = carried.toSet
-    commitWithCdf(name, v, meta.copy(dirs = carried ++ newDirs,
-      stats = meta.stats.view.filterKeys(carriedSet).toMap ++
-        collectStats(name, meta, newDirs)), stagedCdf)
+    (newDirs, staging)
   }
 
   /** One per-version change source, resolved by the shared decision

@@ -115,7 +115,11 @@ object Ivm {
     * idempotent under re-delivery (see the class note: effectively
     * required for at-least-once drivers). Composite `groupCols` serve
     * the auxiliary-state views (mv3's (group, value) multiplicity
-    * table). */
+    * table).
+    *
+    * @throws IllegalArgumentException when the feed drives a count
+    *   negative (it overlaps an already-applied window and no `txn`
+    *   caught it); nothing is committed. */
   def applyCountSumDelta(st: TableStore, view: String, feed: DataFrame,
                          groupCols: Seq[String], valueCol: String,
                          txn: Option[(String, Long)] = None): Unit = {
@@ -147,15 +151,16 @@ object Ivm {
     // own evaluation as an assert_true filter — the former standalone
     // `require(next.filter(...).isEmpty)` was one extra Spark job per
     // apply (r15 optimization, guide §1.2)
-    val next = delta.join(old, groupCols, "left_outer")
-      .select(keys ++ Seq(
-        (coalesce(col("n_rows"), lit(0L)) + col("dn")).as("n_rows"),
-        (coalesce(col("sum_qty"), lit(0L)) + col("dsum")).as("sum_qty")): _*)
-      .filter(assert_true(col("n_rows") >= 0L,
-        lit(s"IVM count went negative on $view — the feed overlaps an " +
-          "already-applied range (double apply); pass a txn to make " +
-          "applies idempotent")).isNull)
-      .localCheckpoint()
+    val negative = s"IVM count went negative on $view — the feed overlaps an " +
+      "already-applied range (double apply); pass a txn to make applies idempotent"
+    val next = TableStore.guarded(negative) {
+      delta.join(old, groupCols, "left_outer")
+        .select(keys ++ Seq(
+          (coalesce(col("n_rows"), lit(0L)) + col("dn")).as("n_rows"),
+          (coalesce(col("sum_qty"), lit(0L)) + col("dsum")).as("sum_qty")): _*)
+        .filter(assert_true(col("n_rows") >= 0L, lit(negative)).isNull)
+        .localCheckpoint()
+    }
     // next is unique on groupCols by construction (a groupBy output
     // joined 1:1), so the merge's uniqueness gate is provably redundant
     // — gate off and hand over the bucket ids the gate job collected
@@ -174,7 +179,7 @@ object Ivm {
     * NULL convention applied to every moment); a group whose window
     * carries only NULL values is untouched. Retractions are exact: a
     * fully-retracted group's sums land at literal (0, 0, 0) (the
-    * n_rows=0 tombstone [[compactView]] sweeps). Same loud negative
+    * n_rows=0 tombstone [[compactView]] sweeps). Same typed negative
     * guard and `txn` contract as applyCountSumDelta. */
   def applyMomentsDelta(st: TableStore, view: String, feed: DataFrame,
                         groupCols: Seq[String], valueCol: String,
@@ -201,16 +206,18 @@ object Ivm {
       .join(broadcast(changed.select(keys: _*)), groupCols, "left_semi")
     // negative guard + uniqueness gate-off + precomputed buckets:
     // exactly applyCountSumDelta's r15 shape (see the notes there)
-    val next = changed.join(old, groupCols, "left_outer")
-      .select(keys ++ Seq(
-        (coalesce(col("n_rows"), lit(0L)) + col("dn")).as("n_rows"),
-        (coalesce(col("sum_v"), lit(0L)) + col("dsum")).as("sum_v"),
-        (coalesce(col("sum_sq"), lit(0L)) + col("dsq")).as("sum_sq")): _*)
-      .filter(assert_true(col("n_rows") >= 0L,
-        lit(s"IVM moments count went negative on $view — the feed " +
-          "overlaps an already-applied range (double apply); pass a txn " +
-          "to make applies idempotent")).isNull)
-      .localCheckpoint()
+    val negative = s"IVM moments count went negative on $view — the feed " +
+      "overlaps an already-applied range (double apply); pass a txn to make " +
+      "applies idempotent"
+    val next = TableStore.guarded(negative) {
+      changed.join(old, groupCols, "left_outer")
+        .select(keys ++ Seq(
+          (coalesce(col("n_rows"), lit(0L)) + col("dn")).as("n_rows"),
+          (coalesce(col("sum_v"), lit(0L)) + col("dsum")).as("sum_v"),
+          (coalesce(col("sum_sq"), lit(0L)) + col("dsq")).as("sum_sq")): _*)
+        .filter(assert_true(col("n_rows") >= 0L, lit(negative)).isNull)
+        .localCheckpoint()
+    }
     st.mergeUpsert(view, next, groupCols, txn = txn,
       verifyUniqueSource = false, precomputedBuckets = g.buckets)
   }
@@ -1036,8 +1043,8 @@ object Ivm {
     * pinned recompute arm exists and `srcName`/`srcVersion` are not
     * even parameters — the 100 TB property: a retraction-heavy feed
     * costs the same as an insert-only one. A negative merged count
-    * fails loudly (feed overlaps an already-applied window — the
-    * applyCountSumDelta contract); `txn` exactly as there. */
+    * fails with applyCountSumDelta's typed error; `txn` exactly as
+    * there. */
   def applyQuantileDelta(st: TableStore, view: String, feed: DataFrame,
                          groupCols: Seq[String], valueCol: String,
                          alpha: Double,
@@ -1089,15 +1096,17 @@ object Ivm {
       .select(keys ++ Seq(col("e.bin").as("__bin"), col("e.n").as("n")): _*)
     // negative-bin guard folded into the checkpoint's own evaluation
     // (assert_true filter) — one fewer job per apply, same loud error
-    val merged = old
-      .unionByName(binDelta
-        .select(keys ++ Seq(col("__bin"), col("dn").as("n")): _*))
-      .groupBy(keys :+ col("__bin"): _*).agg(sum(col("n")).as("n"))
-      .filter(assert_true(col("n") >= 0L,
-        lit(s"IVM quantile bin count went negative on $view — the feed " +
-          "overlaps an already-applied range (double apply); pass a txn " +
-          "to make applies idempotent")).isNull)
-      .localCheckpoint() // pin: rebuild + dead re-read it
+    val negative = s"IVM quantile bin count went negative on $view — the " +
+      "feed overlaps an already-applied range (double apply); pass a txn to " +
+      "make applies idempotent"
+    val merged = TableStore.guarded(negative) {
+      old
+        .unionByName(binDelta
+          .select(keys ++ Seq(col("__bin"), col("dn").as("n")): _*))
+        .groupBy(keys :+ col("__bin"): _*).agg(sum(col("n")).as("n"))
+        .filter(assert_true(col("n") >= 0L, lit(negative)).isNull)
+        .localCheckpoint() // pin: rebuild + dead re-read it
+    }
     val rebuilt = histFromBins(merged.filter(col("n") > 0L), groupCols)
     val dead = touched.join(rebuilt.select(keys: _*), groupCols, "left_anti")
       .select(keys ++ Seq(lit(null).cast(HistType).as("hist"),

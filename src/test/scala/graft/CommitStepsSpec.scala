@@ -109,7 +109,7 @@ class CommitStepsSpec extends AnyFunSuite {
       "batch-written,dv-written,manifest-linked,latest-published | +1 dirs=2 dvs=1 stats=2 rows=9 cdf=- jobs=6"),
     ("overwriteWhere cdf", () => plain(cdf = true),
       ts => ts.overwriteWhere("t", col("id") <= 12L, rows(0L, 0L, "w")),
-      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=1 stats=2 rows=9 cdf=[delete,insert] jobs=7"),
+      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=2 dvs=1 stats=2 rows=9 cdf=[delete,insert] jobs=6"),
     ("attachDir", () => { val ts = plain(); external(ts, "ext-a", rows(21L, 22L, "x")); ts },
       ts => ts.attachDir("t", "ext-a", replace = false),
       "manifest-linked,latest-published | +1 dirs=3 dvs=0 stats=3 rows=22 cdf=- jobs=0"),
@@ -142,7 +142,7 @@ class CommitStepsSpec extends AnyFunSuite {
       "dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=- jobs=6"),
     ("commitDelta (SQL MERGE merge-on-read) cdf", () => plain(cdf = true),
       commitDeltaOf,
-      "dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[delete,insert] jobs=11"),
+      "dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[delete,insert] jobs=8"),
     ("commitDelta (SQL MERGE merge-on-read) bucketed", () => bucketed(), commitDeltaOf,
       "dv-written,manifest-linked,latest-published | +1 dirs=6 dvs=1 stats=6 rows=22 cdf=- jobs=7"),
     ("mergeUpsert", () => bucketed(),
@@ -188,11 +188,11 @@ class CommitStepsSpec extends AnyFunSuite {
       "batch-written,dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=- jobs=6"),
     ("updateVectorized cdf", () => plain(cdf = true),
       ts => ts.updateVectorized("t", col("id") <= 3L, Map("v" -> lit("g"))),
-      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage] jobs=7"),
+      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage] jobs=6"),
     ("updateVectorized cdf rowtracking",
       () => { val ts = plain(cdf = true); ts.enableRowTracking("t"); ts },
       ts => ts.updateVectorized("t", col("id") <= 3L, Map("v" -> lit("g"))),
-      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage] jobs=11"),
+      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage] jobs=9"),
     ("compact", () => plain(),
       ts => ts.compact("t"),
       "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=- jobs=2"),

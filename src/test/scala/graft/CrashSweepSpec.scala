@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.control.ControlThrowable
 
 import org.apache.spark.sql.SparkSession
@@ -44,9 +45,10 @@ class CrashSweepSpec extends AnyFunSuite {
 
   /** Age every in-flight dot-dir (feed staging, commit scratch) past
     * the live-writer grace window — the recovery runs "two minutes
-    * after the crash", like the hand-built tests did. */
-  private def ageScratch(td: Path): Unit = {
-    val old = FileTime.fromMillis(System.currentTimeMillis() - 120000L)
+    * after the crash", like the hand-built tests did (`ageMs` longer
+    * for vacuum's one-hour scratch guard). */
+  private def ageScratch(td: Path, ageMs: Long = 120000L): Unit = {
+    val old = FileTime.fromMillis(System.currentTimeMillis() - ageMs)
     Seq("_cdf", "data", "_dv", "_v").map(td.resolve).filter(Files.isDirectory(_))
       .foreach { d =>
         scala.util.Using.resource(Files.list(d))(_.iterator().forEachRemaining(p =>
@@ -124,55 +126,75 @@ class CrashSweepSpec extends AnyFunSuite {
 
   // ---- scenario 1b: the GDPR mark — a merge-on-read UPDATE on a
   // row-tracked table with the feed on (postimage dir + DV sidecar +
-  // pre/postimages carrying stable ids, one commit) ----
+  // pre/postimages carrying stable ids, one commit), on an unbucketed
+  // and on a 16-bucket table (the benchmark's silver shape) ----
   test("sweep: writer death after EVERY step of a CDF row-tracked " +
       "vectorized update converges; ids survive and the feed records once") {
-    def build(): TableStore = {
-      val ts = new TableStore(spark,
-        Files.createTempDirectory("sweep_gdpr").toString)
-      ts.create("t", (1L to 10L).map(i => (i, s"r$i")).toDF("id", "v"))
-      ts.setChangeFeed("t", enabled = true)
-      ts.enableRowTracking("t") // v2: the op commits v3
-      ts
-    }
-    val op = (ts: TableStore) =>
-      ts.updateVectorized("t", col("id") <= 3L, Map("v" -> lit("gdpr")))
-    val steps = trace(build, op)
-    assert(steps === Seq("batch-written", "dv-written", "cdf-staged",
-      "manifest-linked", "latest-published", "cdf-published"), steps.toString)
-    val linkAt = steps.indexOf("manifest-linked") + 1
-    for (k <- 1 to steps.length) {
-      val ts = crashAt(build, op, k)
-      val td = root(ts, "t")
-      ageScratch(td)
-      val tsR = new TableStore(spark, td.getParent.toString)
-      tsR.append("t", Seq((99L, "x")).toDF("id", "v"))
-      val got = tsR.read("t").as[(Long, String)].collect()
-      val durable = k >= linkAt
-      val expected = (1L to 10L).map(i =>
-        i -> (if (durable && i <= 3L) "gdpr" else s"r$i")).toMap + (99L -> "x")
-      assert(got.length === expected.size && got.toMap === expected,
-        s"step $k (${steps(k - 1)})")
-      // stable ids survive the tombstone + re-append
-      def idsAt(v: Long): Map[Long, Long] =
-        tsR.readWithRowIds("t", v).filter(col("id") <= 10L)
-          .select("id", "_row_id").as[(Long, Long)].collect().toMap
-      assert(idsAt(tsR.currentVersion("t")) === idsAt(2L), s"step $k ids")
-      val ch = tsR.readChangesBetween("t", 2L, 3L, withRowIds = true)
-        .select("id", "_row_id", "_change_type").as[(Long, Long, String)]
-        .collect().toSeq
-      if (durable) {
-        // the adopted/healed version's feed reads each image ONCE, keyed
-        // by the rows' pre-update ids
-        val pre = ch.filter(_._3 == "update_preimage").map(r => r._1 -> r._2)
-        val post = ch.filter(_._3 == "update_postimage").map(r => r._1 -> r._2)
-        assert(pre.sorted === idsAt(2L).filter(_._1 <= 3L).toSeq.sorted, s"step $k pre")
-        assert(post.sorted === pre.sorted, s"step $k post")
-        assert(ch.size === 6, s"step $k feed")
-      } else {
-        // the orphan staging must not be mis-adopted onto the recovery
-        // append's version: its changes synthesize as pure inserts
-        assert(ch.map(_._3).toSet === Set("insert"), s"step $k: orphan staging leaked in")
+    for (buckets <- Seq(0, 16)) {
+      def build(): TableStore = {
+        val ts = new TableStore(spark,
+          Files.createTempDirectory("sweep_gdpr").toString)
+        val df = (1L to 10L).map(i => (i, s"r$i")).toDF("id", "v")
+        if (buckets == 0) ts.create("t", df)
+        else ts.createBucketed("t", df, Seq("id"), buckets)
+        ts.setChangeFeed("t", enabled = true)
+        ts.enableRowTracking("t") // v2: the op commits v3
+        ts
+      }
+      val op = (ts: TableStore) =>
+        ts.updateVectorized("t", col("id") <= 3L, Map("v" -> lit("gdpr")))
+      val steps = trace(build, op)
+      assert(steps === Seq("batch-written", "dv-written", "cdf-staged",
+        "manifest-linked", "latest-published", "cdf-published"), steps.toString)
+      val linkAt = steps.indexOf("manifest-linked") + 1
+      for (k <- 1 to steps.length) {
+        val at = s"buckets=$buckets step $k"
+        val ts = crashAt(build, op, k)
+        val td = root(ts, "t")
+        ageScratch(td)
+        val tsR = new TableStore(spark, td.getParent.toString)
+        tsR.append("t", Seq((99L, "x")).toDF("id", "v"))
+        val got = tsR.read("t").as[(Long, String)].collect()
+        val durable = k >= linkAt
+        val expected = (1L to 10L).map(i =>
+          i -> (if (durable && i <= 3L) "gdpr" else s"r$i")).toMap + (99L -> "x")
+        assert(got.length === expected.size && got.toMap === expected,
+          s"$at (${steps(k - 1)})")
+        // stable ids survive the tombstone + re-append
+        def idsAt(v: Long): Map[Long, Long] =
+          tsR.readWithRowIds("t", v).filter(col("id") <= 10L)
+            .select("id", "_row_id").as[(Long, Long)].collect().toMap
+        assert(idsAt(tsR.currentVersion("t")) === idsAt(2L), s"$at ids")
+        val ch = tsR.readChangesBetween("t", 2L, 3L, withRowIds = true)
+          .select("id", "_row_id", "_change_type").as[(Long, Long, String)]
+          .collect().toSeq
+        if (durable) {
+          // the adopted/healed version's feed reads each image ONCE, keyed
+          // by the rows' pre-update ids
+          val pre = ch.filter(_._3 == "update_preimage").map(r => r._1 -> r._2)
+          val post = ch.filter(_._3 == "update_postimage").map(r => r._1 -> r._2)
+          assert(pre.sorted === idsAt(2L).filter(_._1 <= 3L).toSeq.sorted, s"$at pre")
+          assert(post.sorted === pre.sorted, s"$at post")
+          assert(ch.size === 6, s"$at feed")
+        } else {
+          // the orphan staging must not be mis-adopted onto the recovery
+          // append's version: its changes synthesize as pure inserts
+          assert(ch.map(_._3).toSet === Set("insert"), s"$at: orphan staging leaked in")
+        }
+        // the table's rows never land as a recorded change kind
+        val cdfRoot = td.resolve("_cdf")
+        val current = if (!Files.isDirectory(cdfRoot)) Nil
+          else scala.util.Using.resource(Files.walk(cdfRoot))(_.iterator()
+            .asScala.map(_.getFileName.toString).filter(_ == "__cdc=current").toSeq)
+        assert(current.isEmpty, s"$at: a current kind under _cdf")
+        // the crashed writer's data/.cdc-* staging goes with vacuum
+        ageScratch(td, ageMs = 2 * 3600L * 1000)
+        tsR.vacuum("t", retainVersions = 10)
+        val cdcStaging = scala.util.Using.resource(Files.list(td.resolve("data")))(
+          _.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith(".cdc-")).toSeq)
+        assert(cdcStaging.isEmpty, s"$at: staging left: $cdcStaging")
+        assert(tsR.read("t").count() === expected.size, s"$at after vacuum")
       }
     }
   }

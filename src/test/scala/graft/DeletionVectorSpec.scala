@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -162,6 +164,35 @@ class DeletionVectorSpec extends AnyFunSuite {
     ts2.create("u", (1L to 10L).map(i => (i, i * 1L)).toDF("id", "x"))
     ts2.updateVectorized("u", col("id") === 1L, Map("x" -> lit(0L)))
     intercept[IllegalStateException](ts2.readChangesBetween("u", 0, 1).count())
+  }
+
+  test("feed-on updateVectorized sizes its postimage like a batch; " +
+      "bucketed postimages keep their leaves") {
+    val (ts, root) = fresh()
+    // one dir of 8 files (an external write: the store's own writes are
+    // sized), so the staged scan has one partition per file
+    ts.create("t", Seq((0L, "v0")).toDF("id", "v"))
+    (1L to 80L).map(i => (i, s"v$i")).toDF("id", "v").repartition(8)
+      .write.parquet(ts.dataRoot("t").resolve("ext").toString)
+    ts.attachDir("t", "ext", replace = true)
+    ts.setChangeFeed("t", enabled = true)
+    val before = ts.liveDirs("t").toSet
+    ts.updateVectorized("t", col("id") % 2 === 0L, Map("v" -> lit("u")))
+    val post = ts.liveDirs("t").filterNot(before)
+    assert(post.size === 1)
+    def parquets(d: java.nio.file.Path): Seq[String] =
+      scala.util.Using.resource(Files.list(d))(_.iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq)
+    assert(parquets(root.resolve("t").resolve("data").resolve(post.head)).size === 1)
+    assert(ts.read("t").filter(col("v") === "u").count() === 40)
+    val (tb, _) = fresh()
+    tb.createBucketed("t", (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v"),
+      Seq("id"), 4)
+    tb.setChangeFeed("t", enabled = true)
+    tb.updateVectorized("t", col("id") <= 20L, Map("v" -> lit("u")))
+    assert(tb.liveDirs("t").size > 4 && tb.liveDirs("t").forall(_.contains("/__b=")))
+    assert(tb.readChangesBetween("t", 1L, 2L).count() === 40)
+    assert(tb.read("t").filter(col("v") === "u").count() === 20)
   }
 
   test("bucketed updateVectorized keeps layout; merge/compact materialize") {

@@ -67,11 +67,10 @@ class OverwriteWhereSpec extends AnyFunSuite {
     val ts = freshStore()
     ts.create("t", Seq((1L, "a"), (50L, "z")).toDF("id", "v"))
     val v0 = ts.currentVersion("t")
-    val e = intercept[Exception](
+    val e = intercept[IllegalArgumentException](
       ts.overwriteWhere("t", col("id") <= 10L,
         Seq((5L, "ok"), (99L, "outside")).toDF("id", "v")))
-    assert(e.getMessage.contains("does not satisfy the replace predicate")
-      || e.getCause != null)
+    assert(e.getMessage.contains("does not satisfy the replace predicate"))
     assert(ts.currentVersion("t") === v0, "failed replace must not commit")
     assert(ts.read("t").count() === 2)
   }

@@ -321,16 +321,14 @@ class ProcedureSpec extends AnyFunSuite {
     // over-retraction fails loudly: re-applying the delete window
     // without a txn drives a bin count negative
     val head = ts.currentVersion("src")
-    // (r15: the guard is fused into the merged-bins checkpoint, so it
-    // surfaces as a task failure whose cause chain carries the message)
-    val ex = intercept[Exception] {
+    // (the guard is fused into the merged-bins checkpoint; the apply
+    // rethrows its task failure as the typed error)
+    val ex = intercept[IllegalArgumentException] {
       graft.ops.Ivm.applyQuantileDelta(ts, "vq",
         ts.readChangesBetween("src", head - 2, head - 1),
         Seq("grp"), "qty", graft.ops.Ivm.QuantileAlpha, txn = None)
     }
-    def exMsgs(t: Throwable): String =
-      if (t == null) "" else s"${t.getMessage}\n${exMsgs(t.getCause)}"
-    assert(exMsgs(ex).contains("negative"))
+    assert(ex.getMessage.contains("IVM quantile bin count went negative on vq"))
     // registry faces: describe carries the registered α; drop
     assert(spark.sql("CALL gmvq.system.describe_view('vq')").collect()
       .map(r => (r.getString(0), r.getString(1)))
