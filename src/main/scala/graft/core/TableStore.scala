@@ -3770,12 +3770,13 @@ class TableStore(spark: SparkSession, root: String) {
       }
   }
 
-  /** Per-FILE change groups for the SQL `<table>.changes` scan: each
-    * group is (absolute files, per-file DV sidecar refs, change kind,
-    * commit version, per-file row-id bases) — enough for a file-based
-    * DSv2 scan to reproduce [[readChangesBetween]] exactly. Rid bases
-    * come from the GROUP's version manifest (synthesized groups only;
-    * recorded `_cdf` files carry a materialized `__rid` instead).
+  /** The change FILES of (fromVersion, toVersion] for the SQL
+    * `<table>.changes` scan, each read as a table file is: its path,
+    * its lazy DV reference, its row-id base and its change kind and
+    * commit version as constants — enough for a file-based DSv2 scan
+    * to reproduce [[readChangesBetween]] exactly. Rid bases come from
+    * the version manifest of a synthesized group; recorded `_cdf`
+    * files carry a materialized `__rid` instead.
     *
     * DV delivery is LAZY, like the batch scan's ([[dvSidecarsByDir]]):
     * each DV'd file maps to (manifest relpath, sidecar parquet files)
@@ -3786,8 +3787,8 @@ class TableStore(spark: SparkSession, root: String) {
     * over a DV-heavy prior version (e.g. a full-replace commit on a
     * table with a large tombstone backlog) stays O(files) driver
     * memory instead of O(tombstones). */
-  private[graft] def changeFileGroups(name: String, fromVersion: Long, toVersion: Long)
-      : Seq[(Seq[String], Map[String, (String, Seq[String])], String, Long, Map[String, Long])] = {
+  private[graft] def changeFiles(name: String, fromVersion: Long, toVersion: Long)
+      : Seq[graft.sources.GraftFileRead] = {
     def filesUnder(p: Path): Seq[String] =
       if (!Files.isDirectory(p)) Seq.empty
       else Using.resource(Files.list(p))(_.iterator().asScala
@@ -3803,34 +3804,24 @@ class TableStore(spark: SparkSession, root: String) {
       else Using.resource(Files.walk(p))(_.iterator().asScala
         .filter(f => f.getFileName.toString.endsWith(".parquet"))
         .map(_.toString).toSeq.sorted)
+    // the scan's trailing (_change_type, _commit_version) columns
+    def consts(kind: String, v: Long) =
+      org.apache.spark.sql.catalyst.InternalRow(
+        org.apache.spark.unsafe.types.UTF8String.fromString(kind), v)
     changeSources(name, fromVersion, toVersion).flatMap {
       case RecordedChanges(cdfDir, kinds, v, _) =>
-        kinds.map(k =>
-          (filesUnderRecursive(cdfDir.resolve(s"__cdc=$k")),
-            Map.empty[String, (String, Seq[String])], k, v, Map.empty[String, Long]))
+        kinds.flatMap(k => filesUnderRecursive(cdfDir.resolve(s"__cdc=$k")).map(f =>
+          graft.sources.GraftFileRead(f, consts = consts(k, v))))
       case SynthesizedChanges(m, dirs, kind, v) =>
-        val files = dirs.flatMap(d => filesUnder(dataRoot(name).resolve(d)))
-        val ridBase: Map[String, Long] =
-          if (m.rowbase.isEmpty) Map.empty
-          else m.rowbase.map { case (rel, b) =>
-            dataRoot(name).resolve(rel).toString -> b
-          }
-        val dvd = dirs.filter(m.dvs.contains)
-        val dv: Map[String, (String, Seq[String])] =
-          if (dvd.isEmpty) Map.empty
-          else {
-            val sidecarsByName: Map[String, Seq[String]] =
-              dvd.flatMap(m.dvs.get).map(_.path).distinct.map { n =>
-                n -> filesUnder(dvRoot(name).resolve(n))
-              }.toMap
-            dvd.flatMap { d =>
-              val sc = sidecarsByName(m.dvs(d).path)
-              filesUnder(dataRoot(name).resolve(d)).map { f =>
-                f -> (s"$d/${f.substring(f.lastIndexOf('/') + 1)}", sc)
-              }
-            }.toMap
-          }
-        Seq((files, dv, kind, v, ridBase))
+        val sidecarsByName: Map[String, Seq[String]] =
+          dirs.flatMap(m.dvs.get).map(_.path).distinct.map { n =>
+            n -> filesUnder(dvRoot(name).resolve(n))
+          }.toMap
+        graft.sources.GraftFileRead.of(
+          dirs.map(d => d -> filesUnder(dataRoot(name).resolve(d))),
+          dirs.flatMap(d => m.dvs.get(d).map(ref => d -> sidecarsByName(ref.path))).toMap,
+          m.rowbase.map { case (rel, b) => dataRoot(name).resolve(rel).toString -> b },
+          consts(kind, v))
     }
   }
 

@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import scala.util.Using
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetReader
@@ -37,13 +36,13 @@ import graft.core.TableStore
   *   UPDATE / MERGE INTO graft.<table> ...    (row-level operations,
   *                                             copy-on-write ReplaceData)
   *
-  * The read path is a self-contained parquet-mr reader (one input
-  * partition per live parquet file, as listed by the committed
-  * manifest), so SQL reads observe the same atomic snapshot isolation
-  * as TableStore.read; the requested projection is pushed into
-  * parquet-mr. Flat schemas only (the engine's data model, SURVEY §1.2)
-  * and INT64 timestamps (TableStore pins TIMESTAMP_MICROS output; INT96
-  * legacy files are not supported).
+  * The read path plans the live parquet files the committed manifest
+  * lists (small ones packed into shared tasks, [[GraftInputPartition]]),
+  * so SQL reads observe the same atomic snapshot isolation as
+  * TableStore.read; the requested projection and pushed predicates
+  * reach the parquet reader. Flat schemas only (the engine's data
+  * model, SURVEY §1.2) and INT64 timestamps (TableStore pins
+  * TIMESTAMP_MICROS output; INT96 legacy files are not supported).
   */
 class GraftCatalog extends TableCatalog
     with org.apache.spark.sql.connector.catalog.FunctionCatalog
@@ -820,12 +819,12 @@ class GraftScan(fullSchema: StructType, required: StructType,
     * bucket (padded to all n so both join sides report identical key
     * sets) and reports KeyGroupedPartitioning for storage-partitioned
     * joins; any unbucketed dir in the mix disables the grouping. */
-  private def bucketGroups: Option[(Seq[String], Int, Seq[(Int, Seq[String])])] =
+  private def bucketGroups
+      : Option[(Seq[String], Int, Seq[(Int, Seq[(String, Seq[String])])])] =
     bucketing.flatMap { case (keys, n) =>
       if (live.nonEmpty && live.forall(_._1.contains("/__b="))) {
         val byBucket = live.groupBy(df => df._1.split("/__b=", 2)(1).toInt)
-        Some((keys, n,
-          (0 until n).map(b => b -> byBucket.getOrElse(b, Seq.empty).flatMap(_._2))))
+        Some((keys, n, (0 until n).map(b => b -> byBucket.getOrElse(b, Seq.empty))))
       } else None
     }
 
@@ -922,84 +921,17 @@ class GraftScan(fullSchema: StructType, required: StructType,
       } catch { case _: IllegalArgumentException => None }
     }
 
-  // lazy DV reference per file of a DV'd dir: the file's
-  // manifest-relative path plus the sidecar parquet files holding its
-  // dir's tombstones — the reader probes them executor-side, so NO
-  // tombstone position ever materializes on the driver (100 TB heavy
-  // churn would otherwise reach driver-memory scale)
-  private lazy val dvRefByFile: Map[String, (String, Seq[String])] =
-    if (dvSidecars.isEmpty) Map.empty
-    else dirFilesLive.flatMap { case (d, fs) =>
-      dvSidecars.get(d).toSeq.flatMap(sc => fs.map(f =>
-        f -> (s"$d/${f.substring(f.lastIndexOf('/') + 1)}", sc)))
-    }.toMap
-  private def part(f: String, skipLive: Long = 0L): GraftInputPartition =
-    dvRefByFile.get(f) match {
-      case Some((rel, sc)) =>
-        GraftInputPartition(f, dvRelpath = rel, dvFiles = sc, skipLive = skipLive)
-      case None => GraftInputPartition(f, skipLive = skipLive)
-    }
-
-  /** Small-file packing (the FilePartition bin-packing Spark's own file
-    * source does): one task per FILE makes a 10^5-tiny-file table pay
-    * 10^5 task launches (~3 ms each = the whole scan wall in
-    * ProbeManifest's catScan). Greedy in-order packing up to
-    * min(maxPartitionBytes, max(totalBytes/defaultParallelism,
-    * openCost)) with the standard openCostInBytes padding per file —
-    * big files keep one task each, small ones share. Order-preserving,
-    * so dir locality and the limit/topN dir prefixes survive; the
-    * chained reader is lazy, so a pushed LIMIT still stops early. */
-  private def packedPartitions(fs: Seq[String]): Array[InputPartition] = {
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-    val coresNow = math.max(SparkSession.active.sparkContext.defaultParallelism, 1)
-    // packing exists to cap TASK-LAUNCH overhead, which only bites when
-    // files far outnumber cores; below that, per-file tasks keep the
-    // parallelism a small hot table wants (packing everything under the
-    // 4 MB openCost floor into one task serialized cdc1's apply-loop
-    // scans and cost it 2.4 s on the bench — the floor is right for a
-    // 10^5-file tail, wrong for a 32-file working table)
-    if (fs.sizeIs <= 4 * coresNow)
-      return fs.map(part(_): InputPartition).toArray
-    val openCost = conf.filesOpenCostInBytes
-    val sizes: Seq[(String, Long)] = { import scala.collection.parallel.CollectionConverters._
-      fs.par.map(f => f -> (try java.nio.file.Files.size(java.nio.file.Paths.get(f))
-        catch { case _: java.io.IOException => 0L })).seq }
-    val total = sizes.iterator.map(_._2 + openCost).sum
-    // openCost is per-file PADDING in the bin arithmetic, not a bin
-    // floor: flooring the bin size at openCost collapsed an accreted
-    // ~200-tiny-file working table into a handful of tasks and
-    // serialized its decode (the commit-dense job queries regressed
-    // ~25% on the bench). total/cores keeps ~parallelism bins on small
-    // tables — never fewer tasks than the session can use — while the
-    // maxPartitionBytes cap still bounds bins on the 10^5-file tail.
-    val target = math.min(conf.filesMaxPartitionBytes,
-      math.max(total / coresNow, 1L))
-    val parts = Seq.newBuilder[InputPartition]
-    val cur = scala.collection.mutable.ArrayBuffer.empty[String]
-    var bytes = 0L
-    def flush(): Unit = if (cur.nonEmpty) {
-      parts += (if (cur.sizeIs == 1) part(cur.head)
-        else GraftPackedInputPartition(cur.toSeq,
-          cur.flatMap(f => dvRefByFile.get(f).map(f -> _)).toMap))
-      cur.clear(); bytes = 0L
-    }
-    sizes.foreach { case (f, sz) =>
-      val c = sz + openCost
-      if (bytes > 0L && bytes + c > target) flush()
-      cur += f; bytes += c
-    }
-    flush()
-    parts.result().toArray
-  }
+  private def reads(dfs: Seq[(String, Seq[String])]): Seq[GraftFileRead] =
+    GraftFileRead.of(dfs, dvSidecars, rowBase)
 
   override def planInputPartitions(): Array[InputPartition] = bucketGroups match {
     case Some((_, _, groups)) =>
-      groups.map { case (b, fs) => GraftBucketInputPartition(b, fs,
-        fs.flatMap(f => dvRefByFile.get(f).map(f -> _)).toMap): InputPartition }.toArray
+      groups.map { case (b, dfs) =>
+        GraftBucketInputPartition(b, reads(dfs)): InputPartition }.toArray
     case None =>
       val sched = topNScheduled.getOrElse(limitScheduled)
       offset match {
-        case None => packedPartitions(sched.flatMap(_._2))
+        case None => GraftInputPartition.packed(reads(sched))
         case Some(o) =>
           // drop whole leading dirs by live count; the boundary dir is
           // a single file (the builder's acceptance condition) whose
@@ -1008,15 +940,15 @@ class GraftScan(fullSchema: StructType, required: StructType,
           val parts = Seq.newBuilder[InputPartition]
           sched.foreach { case (d, fs) =>
             if (toSkip == 0L)
-              fs.foreach(f => parts += part(f))
+              reads(Seq(d -> fs)).foreach(r => parts += GraftInputPartition(Seq(r)))
             else {
               // stats exist through the boundary dir (the builder's
               // acceptance condition); past it this branch never runs
               val dv = dvDeleted.getOrElse(d, 0L)
               val liveRows = math.max(0L, stats(d).rows - dv)
               if (toSkip >= liveRows) toSkip -= liveRows // dir fully skipped
-              else fs.foreach { f =>
-                parts += part(f, skipLive = toSkip)
+              else reads(Seq(d -> fs)).foreach { r =>
+                parts += GraftInputPartition(Seq(r), skipLive = toSkip)
                 toSkip = 0L
               }
             }
@@ -1043,7 +975,7 @@ class GraftScan(fullSchema: StructType, required: StructType,
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required, fullSchema, pushed, colmap = colmap,
-      rowBase = rowBase, forceRowPath = offsetNeedsRowPath)
+      forceRowPath = offsetNeedsRowPath)
   override def description(): String =
     s"graft parquet scan, ${files.size} files" +
       s" (stats pruning: $dirsScanned/$dirsTotal dirs)" +
@@ -1196,13 +1128,8 @@ class GraftRowLevelScan(fullSchema: StructType, required: StructType,
     }
 
   override def planInputPartitions(): Array[InputPartition] =
-    live.flatMap { case (d, fs) => fs.map { f =>
-      dvSidecars.get(d) match {
-        case Some(sc) => GraftInputPartition(f,
-          dvRelpath = s"$d/${f.substring(f.lastIndexOf('/') + 1)}", dvFiles = sc)
-        case None => GraftInputPartition(f)
-      }
-    }: Seq[InputPartition] }.toArray
+    GraftFileRead.of(live, dvSidecars)
+      .map(r => GraftInputPartition(Seq(r)): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(required, fullSchema, Array.empty, colmap = colmap)
   override def description(): String =
@@ -1300,22 +1227,6 @@ class GraftFilesTable(root: String, table: String)
     }
 }
 
-/** The CHANGE DATA FEED as a SQL metadata table:
-  *   SELECT * FROM graft.<t>.changes
-  *   spark.read.option("startVersion", a).option("endVersion", b)
-  *     .table("graft.<t>.changes")
-  *   spark.readStream.option("startVersion", a)
-  *     .table("graft.<t>.changes")               -- streaming CDF
-  * Columns = the table's schema + _change_type + _commit_version.
-  * Planning resolves the same per-version decision tree as
-  * [[graft.core.TableStore.readChangesBetween]] (recorded `_cdf` dirs,
-  * synthesized appends/drops/full-replaces, DV tombstones applied via
-  * the position-skipping reader); each file scans once with its group's
-  * change kind and commit version appended as constants.
-  * `startVersion` is EXCLUSIVE on both surfaces ((start, end], matching
-  * readChangesBetween); a STREAM without it starts at the CURRENT
-  * version — only new changes flow, the Delta readChangeFeed default.
-  * Streaming honors `maxVersionsPerTrigger` + Trigger.AvailableNow. */
 /** `graft.<t>.rowids`: the table with its stable row id attached as a
   * REAL schema column — the STREAMING surface for row tracking.
   * DSv2 streaming scans are built before column resolution, so a
@@ -1345,6 +1256,24 @@ class GraftRowIdsTable(root: String, tableName: String)
       options, withRowBase = true)
 }
 
+/** The CHANGE DATA FEED as a SQL metadata table:
+  *   SELECT * FROM graft.<t>.changes
+  *   spark.read.option("startVersion", a).option("endVersion", b)
+  *     .table("graft.<t>.changes")
+  *   spark.readStream.option("startVersion", a)
+  *     .table("graft.<t>.changes")               -- streaming CDF
+  * Columns = the table's schema + _change_type + _commit_version.
+  * Planning resolves the same per-version decision tree as
+  * [[graft.core.TableStore.readChangesBetween]] (recorded `_cdf` dirs,
+  * synthesized appends/drops/full-replaces with their lazy DV
+  * references); the change files then read like table files — packed
+  * into shared tasks and decoded by [[GraftReaderFactory]], columnar
+  * unless `_row_id` is projected — with each file's change kind and
+  * commit version as per-file constant columns.
+  * `startVersion` is EXCLUSIVE on both surfaces ((start, end], matching
+  * readChangesBetween); a STREAM without it starts at the CURRENT
+  * version — only new changes flow, the Delta readChangeFeed default.
+  * Streaming honors `maxVersionsPerTrigger` + Trigger.AvailableNow. */
 class GraftChangesTable(root: String, table: String)
     extends Table with SupportsRead {
   private def store = new TableStore(SparkSession.active, root)
@@ -1358,22 +1287,42 @@ class GraftChangesTable(root: String, table: String)
   override def schema(): StructType = StructType(base.fields ++
     (if (snap.rowTracking)
        Seq(StructField(GraftRowIdMeta.Name, LongType, nullable = true))
-     else Nil) :+
-    StructField("_change_type", StringType, nullable = false) :+
-    StructField("_commit_version", LongType, nullable = false))
+     else Nil) ++
+    GraftChangesScan.Consts.fields)
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with SupportsPushDownRequiredColumns {
       private var required: StructType = schema()
-      override def pruneColumns(s: StructType): Unit = required = s
+      // the constants are free per-file columns: always read both, so
+      // every change file carries the same constant row
+      override def pruneColumns(s: StructType): Unit =
+        required = StructType(s.fields.filterNot(f =>
+          GraftChangesScan.Consts.fieldNames.contains(f.name)) ++
+          GraftChangesScan.Consts.fields)
       override def build(): Scan =
         new GraftChangesScan(root, table, base, required,
           Option(options.get("startVersion")).map(_.toLong),
           Option(options.get("endVersion")).map(_.toLong),
           Option(options.get("maxVersionsPerTrigger")).map(_.toLong))
     }
+}
+
+object GraftChangesScan {
+  /** The per-file constant columns trailing every change scan's data
+    * columns. */
+  val Consts: StructType = StructType(Seq(
+    StructField("_change_type", StringType, nullable = false),
+    StructField("_commit_version", LongType, nullable = false)))
+
+  /** Change files (data AND `_cdf`) carry PHYSICAL names; physical
+    * identities are stable across renames, so the CURRENT mapping reads
+    * files of every version. */
+  def readerFactory(store: TableStore, table: String, base: StructType,
+                    required: StructType): PartitionReaderFactory =
+    new GraftReaderFactory(required, base, Array.empty,
+      colmap = store.snapshot(table).colmap, constSchema = Consts)
 }
 
 class GraftChangesScan(root: String, table: String,
@@ -1386,18 +1335,11 @@ class GraftChangesScan(root: String, table: String,
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
     val st = store
-    val groups = st.changeFileGroups(table, startVersion.getOrElse(-1L),
-      endVersion.getOrElse(st.currentVersion(table)))
-    groups.flatMap { case (files, dv, kind, v, ridBase) =>
-      files.map { f =>
-        val (rel, sc) = dv.getOrElse(f, ("", Nil))
-        GraftChangeInputPartition(f, rel, sc, kind, v,
-          ridBase.getOrElse(f, Long.MinValue)): InputPartition
-      }
-    }.toArray
+    GraftInputPartition.packed(st.changeFiles(table, startVersion.getOrElse(-1L),
+      endVersion.getOrElse(st.currentVersion(table))))
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftChangesReaderFactory(base, required, store.snapshot(table).colmap)
+    GraftChangesScan.readerFactory(store, table, base, required)
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftChangeFeedStream(root, table, base, required,
@@ -1431,79 +1373,12 @@ class GraftChangeFeedStream(root: String, table: String,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftStreamOffset].v
     val e = end.asInstanceOf[GraftStreamOffset].v
-    if (e <= s) return Array.empty
-    store.changeFileGroups(table, s, e).flatMap { case (files, dv, kind, v, ridBase) =>
-      files.map { f =>
-        val (rel, sc) = dv.getOrElse(f, ("", Nil))
-        GraftChangeInputPartition(f, rel, sc, kind, v,
-          ridBase.getOrElse(f, Long.MinValue)): InputPartition
-      }
-    }.toArray
+    if (e <= s) Array.empty
+    else GraftInputPartition.packed(store.changeFiles(table, s, e))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftChangesReaderFactory(base, required, store.snapshot(table).colmap)
-}
-
-/** One change-scan task: a data (or `_cdf`) file plus its LAZY DV
-  * reference — (manifest relpath, sidecar parquet files), probed
-  * executor-side via [[GraftDvSidecars]] exactly like the batch scan;
-  * empty `dvFiles` = no pending tombstones for this file. */
-case class GraftChangeInputPartition(file: String, dvRelpath: String,
-                                     dvFiles: Seq[String],
-                                     changeType: String, version: Long,
-                                     ridBase: Long = Long.MinValue)
-    extends InputPartition
-
-class GraftChangesReaderFactory(base: StructType, required: StructType,
-                                colmap: Map[String, String] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftChangeInputPartition]
-    val innerRequired = StructType(required.fields.filter(f =>
-      f.name != "_change_type" && f.name != "_commit_version"))
-    // files (data AND _cdf) carry PHYSICAL names; physical identities
-    // are stable across renames, so the CURRENT mapping reads files of
-    // every version. The row assembler keeps logical names (positional).
-    // `_row_id` stays in innerRequired: the row reader synthesizes it
-    // (in-file `__rid` if materialized, else the group's base +
-    // position; Long.MinValue base -> null for unattributable commits)
-    val raw = new GraftPartitionReader(p.file,
-      ColPhys.schema(innerRequired, colmap), ColPhys.schema(base, colmap),
-      Array.empty, rowIdBase = p.ridBase)
-    // executor-side DV probe (same lazy sidecar path as the batch scan)
-    val dvPositions =
-      if (p.dvFiles.isEmpty) Array.empty[Long]
-      else GraftDvSidecars.positions(p.dvFiles, p.dvRelpath)
-    val inner =
-      if (dvPositions.isEmpty) raw else new GraftDvSkipReader(raw, dvPositions)
-    new GraftChangeRowReader(inner, required, innerRequired,
-      UTF8String.fromString(p.changeType), p.version)
-  }
-}
-
-/** Appends the group's constant (_change_type, _commit_version) to each
-  * row, in the projection order Spark asked for. */
-class GraftChangeRowReader(inner: PartitionReader[InternalRow],
-                           required: StructType, innerRequired: StructType,
-                           kind: UTF8String, version: Long)
-    extends PartitionReader[InternalRow] {
-  private val innerIdx = innerRequired.fieldNames.zipWithIndex.toMap
-  override def next(): Boolean = inner.next()
-  override def get(): InternalRow = {
-    val in = inner.get()
-    val vals: Array[Any] = required.fields.map { f =>
-      f.name match {
-        case "_change_type" => kind
-        case "_commit_version" => version
-        case n =>
-          val i = innerIdx(n)
-          if (in.isNullAt(i)) null else in.get(i, f.dataType)
-      }
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-  }
-  override def close(): Unit = inner.close()
+    GraftChangesScan.readerFactory(store, table, base, required)
 }
 
 /** Offset = committed store version (-1 = before any data). */
@@ -1608,21 +1483,12 @@ class GraftMicroBatchStream(root: String, table: String,
     val dvSidecars: Map[String, Seq[String]] =
       if (s < 0 && endSnap.dvs.nonEmpty) st.dvSidecarsByDir(table, e)
       else Map.empty
-    // `_row_id` on a stream: per-batch files carry their own manifest
-    // base (the factory-time map can't know files of future batches)
+    // `_row_id` on a stream: each batch's files carry their base from
+    // the batch's end manifest
     val ridBase: Map[String, Long] =
       if (endSnap.rowTracking) st.rowBaseByFile(table, e) else Map.empty
-    endSnap.copy(dirs = newDirs).filesByDir(st, table).flatMap { case (d, fs) =>
-      fs.map { f =>
-        val (rel, sc) = dvSidecars.get(d) match {
-          case Some(sc0) =>
-            (s"$d/${f.substring(f.lastIndexOf('/') + 1)}", sc0)
-          case None => ("", Nil)
-        }
-        GraftInputPartition(f, dvRelpath = rel, dvFiles = sc,
-          ridBase = ridBase.getOrElse(f, Long.MinValue)): InputPartition
-      }
-    }.toArray
+    GraftInputPartition.packed(GraftFileRead.of(
+      endSnap.copy(dirs = newDirs).filesByDir(st, table), dvSidecars, ridBase))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1630,12 +1496,94 @@ class GraftMicroBatchStream(root: String, table: String,
       colmap = store.snapshot(table).colmap)
 }
 
-case class GraftInputPartition(file: String,
-                               dvRelpath: String = "",
-                               dvFiles: Seq[String] = Nil,
-                               ridBase: Long = Long.MinValue,
-                               skipLive: Long = 0L)
+/** One file of a scan: its path, its LAZY deletion-vector reference
+  * (manifest relpath, sidecar parquet files — probed executor-side via
+  * [[GraftDvSidecars]]; None = no pending tombstones), the manifest
+  * row-id base `_row_id` derives from, and the per-file constant
+  * columns trailing the data columns (a change file's `_change_type`
+  * and `_commit_version`; empty on a table scan). */
+case class GraftFileRead(path: String,
+                         dv: Option[(String, Seq[String])] = None,
+                         // no-base sentinel: `_row_id` reads NULL
+                         rowIdBase: Long = Long.MinValue,
+                         consts: InternalRow = InternalRow.empty)
+
+object GraftFileRead {
+  /** The reads of manifest dirs' files: a file of a dir with sidecars
+    * carries its lazy DV reference, a file with a manifest base its
+    * row-id base, and every file the same constants. */
+  def of(dirFiles: Seq[(String, Seq[String])],
+         dvSidecars: Map[String, Seq[String]] = Map.empty,
+         rowBase: Map[String, Long] = Map.empty,
+         consts: InternalRow = InternalRow.empty): Seq[GraftFileRead] =
+    dirFiles.flatMap { case (d, fs) =>
+      val sc = dvSidecars.get(d)
+      fs.map(f => GraftFileRead(f,
+        sc.map(s"$d/${f.substring(f.lastIndexOf('/') + 1)}" -> _),
+        rowBase.getOrElse(f, Long.MinValue), consts))
+    }
+}
+
+/** Files read in order as one task; `skipLive` drops the first live
+  * rows (the boundary file of a pushed OFFSET). */
+case class GraftInputPartition(files: Seq[GraftFileRead], skipLive: Long = 0L)
     extends InputPartition
+
+object GraftInputPartition {
+  /** Small-file packing (the FilePartition bin-packing Spark's own file
+    * source does): one task per FILE makes a 10^5-tiny-file table pay
+    * 10^5 task launches (~3 ms each = the whole scan wall in
+    * ProbeManifest's catScan). Greedy in-order packing with the
+    * standard openCostInBytes padding per file, each bin aiming at an
+    * even share of the bytes still unpacked over the bins still open —
+    * never more bins than cores unless maxPartitionBytes caps a bin.
+    * Big files keep one task each, small ones share. Order-preserving,
+    * so dir locality and the limit/topN dir prefixes survive; the
+    * chained reader is lazy, so a pushed LIMIT still stops early. */
+  def packed(reads: Seq[GraftFileRead]): Array[InputPartition] = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val cores = math.max(SparkSession.active.sparkContext.defaultParallelism, 1)
+    // packing exists to cap TASK-LAUNCH overhead, which only bites when
+    // files far outnumber cores; below that, per-file tasks keep the
+    // parallelism a small hot table wants (packing everything under the
+    // 4 MB openCost floor into one task serialized cdc1's apply-loop
+    // scans and cost it 2.4 s on the bench — the floor is right for a
+    // 10^5-file tail, wrong for a 32-file working table)
+    if (reads.sizeIs <= 4 * cores)
+      return reads.map(r => GraftInputPartition(Seq(r)): InputPartition).toArray
+    val openCost = conf.filesOpenCostInBytes
+    // a file gone since planning sizes as 0 here; its reader still
+    // fails loudly when it opens the file
+    val sizes: Seq[Long] = { import scala.collection.parallel.CollectionConverters._
+      reads.par.map(r => openCost + (try Files.size(Paths.get(r.path))
+        catch { case _: java.io.IOException => 0L })).seq }
+    // openCost is per-file PADDING in the bin arithmetic, not a bin
+    // floor: flooring the bin size at openCost collapsed an accreted
+    // ~200-tiny-file working table into a handful of tasks and
+    // serialized its decode (the commit-dense job queries regressed
+    // ~25% on the bench). An even share keeps ~parallelism bins on
+    // small tables — never fewer tasks than the session can use —
+    // while the maxPartitionBytes cap still bounds bins on the
+    // 10^5-file tail.
+    var unpacked = sizes.sum
+    var binsOpen = cores
+    val parts = Array.newBuilder[InputPartition]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[GraftFileRead]
+    var bytes = 0L
+    reads.iterator.zip(sizes.iterator).foreach { case (r, c) =>
+      val target = math.min(conf.filesMaxPartitionBytes,
+        math.max(unpacked / binsOpen, 1L))
+      if (bytes > 0L && bytes + c > target) {
+        parts += GraftInputPartition(cur.toSeq)
+        unpacked -= bytes; binsOpen = math.max(binsOpen - 1, 1)
+        cur.clear(); bytes = 0L
+      }
+      cur += r; bytes += c
+    }
+    parts += GraftInputPartition(cur.toSeq)
+    parts.result()
+  }
+}
 
 /** Drops the first `n` live rows of the wrapped reader — the boundary
   * file of a pushed OFFSET (applied after deletion-vector skipping, so
@@ -1656,20 +1604,11 @@ class GraftSkipRowsReader(inner: PartitionReader[InternalRow], n: Long)
 
 /** One hash bucket's files as a single input partition, keyed for
   * Spark's key-grouped (storage-partitioned) execution. */
-case class GraftBucketInputPartition(bucket: Int, files: Seq[String],
-                                     dvRefs: Map[String, (String, Seq[String])] = Map.empty)
+case class GraftBucketInputPartition(bucket: Int, files: Seq[GraftFileRead])
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow(bucket)
 }
-
-/** Several SMALL files as one task (bin-packed by on-disk size at plan
-  * time) — the reader chains them like a bucket group, each file
-  * keeping its own lazy DV reference and (via the factory's map) its
-  * own row-id base. */
-case class GraftPackedInputPartition(files: Seq[String],
-                                     dvRefs: Map[String, (String, Seq[String])] = Map.empty)
-    extends InputPartition
 
 /** Drops deletion-vector positions from a sequential full-file read:
   * `positions` are sorted file row indexes; the inner reader must not
@@ -1748,14 +1687,21 @@ object ColPhys {
   }
 }
 
+/** Reads [[GraftInputPartition]]s and [[GraftBucketInputPartition]]s:
+  * each partition's files in order, each with its own deletion vector,
+  * row-id base and constant columns. `constSchema` names the per-file
+  * constant columns, which must trail the data columns of `required0`. */
 class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
                          pushed0: Array[Filter],
                          colmap: Map[String, String] = Map.empty,
-                         rowBase: Map[String, Long] = Map.empty,
-                         forceRowPath: Boolean = false)
+                         forceRowPath: Boolean = false,
+                         constSchema: StructType = new StructType())
     extends PartitionReaderFactory {
+  require(required0.fields.takeRight(constSchema.length).sameElements(constSchema.fields),
+    s"constant columns ${constSchema.simpleString} must trail ${required0.simpleString}")
   // translate once at construction; everything below speaks physical
-  private val required = ColPhys.schema(required0, colmap)
+  private val required =
+    ColPhys.schema(StructType(required0.fields.dropRight(constSchema.length)), colmap)
   private val fullSchema = ColPhys.schema(fullSchema0, colmap)
   private val pushed = ColPhys.filters(pushed0, colmap)
   /** Files with a deletion vector read WITHOUT parquet-mr skipping (the
@@ -1766,49 +1712,45 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
     * same sequential guarantee as `_pos` (id = base + file position). */
   private val noSkip = required.fieldNames.contains(GraftPosMeta.Name) ||
     required.fieldNames.contains(GraftRowIdMeta.Name)
-  private def dvOf(ref: Option[(String, Seq[String])]): Array[Long] = ref match {
+  private def dvOf(r: GraftFileRead): Array[Long] = r.dv match {
     case Some((rel, files)) => GraftDvSidecars.positions(files, rel)
     case None => Array.empty
   }
-  private def dvOf(gp: GraftInputPartition): Array[Long] =
-    if (gp.dvFiles.isEmpty) Array.empty
-    else GraftDvSidecars.positions(gp.dvFiles, gp.dvRelpath)
-  private def rowReader(f: String, dv: Array[Long],
-                        base: Long = Long.MinValue): PartitionReader[InternalRow] = {
-    // a file with no known base reads `_row_id` as NULL (Long.MinValue
-    // sentinel), never as a silently wrong 0-based id
-    val b = if (base != Long.MinValue) base else rowBase.getOrElse(f, Long.MinValue)
-    if (dv.isEmpty) new GraftPartitionReader(f, required, fullSchema,
-      if (noSkip) Array.empty else pushed, rowIdBase = b)
-    else new GraftDvSkipReader(
-      new GraftPartitionReader(f, required, fullSchema, Array.empty,
-        rowIdBase = b), dv)
+  private def filesOf(partition: InputPartition): Seq[GraftFileRead] = partition match {
+    case GraftBucketInputPartition(_, fs) => fs
+    case GraftInputPartition(fs, _) => fs
   }
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case GraftBucketInputPartition(_, fs, dvs) =>
-        new GraftChainedReader(fs.map(f =>
-          () => rowReader(f, dvOf(dvs.get(f)))))
-      case GraftPackedInputPartition(fs, dvs) =>
-        new GraftChainedReader(fs.map(f =>
-          () => rowReader(f, dvOf(dvs.get(f)))))
-      case p =>
-        val gp = p.asInstanceOf[GraftInputPartition]
-        val r =
-          if (gp.ridBase != Long.MinValue)
-            rowReader(gp.file, dvOf(gp), gp.ridBase)
-          else rowReader(gp.file, dvOf(gp))
-        if (gp.skipLive > 0L) new GraftSkipRowsReader(r, gp.skipLive) else r
+
+  private def rowReader(r: GraftFileRead): PartitionReader[InternalRow] = {
+    val dv = dvOf(r)
+    val raw = new GraftPartitionReader(r.path, required, fullSchema,
+      if (noSkip || dv.nonEmpty) Array.empty else pushed, rowIdBase = r.rowIdBase)
+    val live = if (dv.isEmpty) raw else new GraftDvSkipReader(raw, dv)
+    if (constSchema.isEmpty) live
+    else new PartitionReader[InternalRow] {
+      private val row = new org.apache.spark.sql.catalyst.expressions.JoinedRow
+      override def next(): Boolean = live.next()
+      override def get(): InternalRow = row(live.get(), r.consts)
+      override def close(): Unit = live.close()
     }
+  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val r = new GraftChainedReader(filesOf(partition).map(f => () => rowReader(f)))
+    partition match {
+      case GraftInputPartition(_, skip) if skip > 0L => new GraftSkipRowsReader(r, skip)
+      case _ => r
+    }
+  }
 
   /** Batch reads decode through Spark's vectorized parquet reader
-    * (ColumnarBatch straight into whole-stage codegen). Scans
-    * projecting the `_file` metadata column (group-filter subqueries —
-    * tiny) take the row path, which synthesizes it per row. Files
-    * carrying a deletion vector stay columnar too: their batches pass
-    * through [[GraftDvSkipColumnarReader]] (pushdown disabled on just
-    * those files so the running row count is the file row index) —
-    * DV'd hot files no longer demote the whole scan to the row path. */
+    * (ColumnarBatch straight into whole-stage codegen), with the
+    * per-file constants as constant vectors. Scans projecting the
+    * `_file`/`_pos`/`_row_id` metadata columns take the row path, which
+    * synthesizes them per row. Files carrying a deletion vector stay
+    * columnar too: their batches pass through
+    * [[GraftDvSkipColumnarReader]] (pushdown disabled on just those
+    * files so the running row count is the file row index) — DV'd hot
+    * files no longer demote the whole scan to the row path. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     !forceRowPath &&
       !required.fieldNames.contains(GraftFileMeta.Name) &&
@@ -1816,26 +1758,13 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
       !required.fieldNames.contains(GraftRowIdMeta.Name)
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    def mk(f: String, dv: Array[Long])
-        : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-      if (dv.isEmpty)
-        new GraftColumnarPartitionReader(f, required, pushed, fullSchema)
-      else new GraftDvSkipColumnarReader(
-        new GraftColumnarPartitionReader(f, required,
-          Array.empty[org.apache.spark.sql.sources.Filter], fullSchema), dv)
-    partition match {
-      case GraftBucketInputPartition(_, fs, dvs) =>
-        new GraftChainedReader(fs.map(f =>
-          () => mk(f, dvOf(dvs.get(f)))))
-      case GraftPackedInputPartition(fs, dvs) =>
-        new GraftChainedReader(fs.map(f =>
-          () => mk(f, dvOf(dvs.get(f)))))
-      case p =>
-        val gp = p.asInstanceOf[GraftInputPartition]
-        mk(gp.file, dvOf(gp))
-    }
-  }
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new GraftChainedReader(filesOf(partition).map { f => () =>
+      val dv = dvOf(f)
+      val r = new GraftColumnarPartitionReader(f.path, required,
+        if (dv.isEmpty) pushed else Array.empty, fullSchema, constSchema, f.consts)
+      if (dv.isEmpty) r else new GraftDvSkipColumnarReader(r, dv)
+    })
 }
 
 /** Executor-side deletion-vector resolution: probe the (relpath,
@@ -2047,7 +1976,7 @@ class GraftPartitionReader(file: String, required: StructType,
                            rowIdBase: Long = Long.MinValue)
     extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
+  private val conf = GraftParquet.newConf()
 
   // `_row_id` synthesis: a postimage file materializes its rows' ids in
   // a physical __rid column (preferred); every other file derives
@@ -2130,7 +2059,8 @@ class GraftPartitionReader(file: String, required: StructType,
 
   // ---- per-FILE decode state, hoisted out of the per-row/per-cell hot
   // loop (the same treatment GraftDataWriter.write got: this row path
-  // serves .changes/rowid/bucketed/DV scans — the CDC/streaming family).
+  // serves `_file`/`_pos`/`_row_id` scans, OFFSET boundaries and every
+  // DV sidecar probe).
   // The group type is CONSTANT across a file (the projection schema), so
   // field indices, the extraction choice (the file's physical primitive
   // is fixed per file), and the logical-type dispatch all resolve ONCE,

@@ -19,7 +19,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *   - decoding is columnar (no per-row boxed Group materialization),
   *   - columns a file predates (ALTER TABLE ADD COLUMN) come back as
   *     null vectors,
-  *   - a pushed FilterPredicate does row-group statistics skipping.
+  *   - a pushed FilterPredicate does row-group statistics skipping,
+  *   - `consts` (schema `constSchema`, a change file's kind and commit
+  *     version) follow the data columns as constant vectors.
   *
   * The batch is handed to Spark as-is, so whole-stage codegen consumes
   * ColumnVectors directly — at scale this is the difference between a
@@ -27,7 +29,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   */
 class GraftColumnarPartitionReader(file: String, required: StructType,
                                    pushed: Array[Filter],
-                                   fullSchema: StructType)
+                                   fullSchema: StructType,
+                                   constSchema: StructType,
+                                   consts: InternalRow)
     extends PartitionReader[ColumnarBatch] {
 
   private def mk(pred: FilterPredicate): VectorizedParquetRecordReader = {
@@ -59,7 +63,7 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
       new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
     try {
       r.initialize(split, ctx)
-      r.initBatch(new StructType(), InternalRow.empty)
+      r.initBatch(constSchema, consts)
       r.enableReturningBatches()
       r
     } catch { case e: Throwable =>

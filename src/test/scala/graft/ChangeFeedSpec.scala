@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -290,6 +292,97 @@ class ChangeFeedSpec extends AnyFunSuite {
       .filter(col("_change_type") === "delete")
       .select("id").as[Long].collect().toSet
     assert(lib === dels)
+  }
+
+  test("packed change scans keep per-file constants: batch and stream " +
+      "read many change files in at most one task per core, row for row") {
+    import org.apache.spark.graftest.ListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.streaming.Trigger
+    val cores = spark.sparkContext.defaultParallelism
+    val root = Files.createTempDirectory("cdfpack").toString
+    spark.conf.set("spark.sql.catalog.gcpk", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gcpk.root", root)
+    val ts = new TableStore(spark, root)
+    // the tasks of every stage submitted while `op` runs
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stageTasks.add(e.stageInfo.numTasks): Unit
+    }
+    def tasksOf[T](op: => T): (T, Seq[Int]) = {
+      ListenerBus.drain(spark.sparkContext)
+      stageTasks.clear()
+      val out = op
+      ListenerBus.drain(spark.sparkContext)
+      (out, stageTasks.toArray.toSeq.map(_.asInstanceOf[Int]))
+    }
+    // recorded bucketed merges, a synthesized append, a DV'd delete and
+    // a full replace whose synthesized delete-all reads DV'd dirs: far
+    // more than 4 x cores change files, of many kinds and versions
+    def build(t: String, rowTracking: Boolean): Unit = {
+      ts.createBucketed(t, (1L to 400L).map(i => (i, s"a$i")).toDF("id", "v"),
+        Seq("id"), n = 8)
+      ts.setChangeFeed(t, true)
+      if (rowTracking) ts.enableRowTracking(t)
+      Seq(1L, 2L).foreach { r =>
+        ts.mergeUpsert(t, (r to 480L by 3L).map(i => (i, s"m$r-$i")).toDF("id", "v"),
+          Seq("id"), changeTypeCol = None)
+      }
+      ts.append(t, (1000L to 1040L).map(i => (i, s"p$i")).toDF("id", "v"))
+      ts.deleteVectorized(t, col("id") % 7 === 0L)
+      ts.overwrite(t, (2000L to 2010L).map(i => (i, s"o$i")).toDF("id", "v"))
+      val recorded = scala.util.Using.resource(
+          Files.walk(java.nio.file.Paths.get(root, t, "_cdf")))(
+        _.iterator().asScala.count(_.toString.endsWith(".parquet")))
+      assert(recorded > 4 * cores, s"only $recorded change files for $cores cores")
+    }
+    type Row5 = (Long, String, String, Long, Option[Long])
+    def projected(df: org.apache.spark.sql.DataFrame, rid: Boolean) =
+      df.select(col("id"), col("v"), col("_change_type"), col("_commit_version"),
+        if (rid) col("_row_id") else lit(null).cast("long").as("_row_id"))
+    def ordered(rows: Seq[Row5]): Seq[Row5] = rows.sortBy(r => (r._4, r._3, r._1, r._2))
+    def sorted(df: org.apache.spark.sql.DataFrame, rid: Boolean): Seq[Row5] =
+      ordered(projected(df, rid).as[(Long, String, String, Long, Option[Long])]
+        .collect().toSeq)
+
+    spark.sparkContext.addSparkListener(listener)
+    try Seq(false, true).foreach { rid =>
+      val t = if (rid) "tracked" else "plain"
+      build(t, rowTracking = rid)
+      val lib = sorted(ts.readChangesBetween(t, -1L, ts.currentVersion(t),
+        withRowIds = rid), rid)
+      assert(lib.map(_._3).toSet === Set("insert", "update_preimage",
+        "update_postimage", "delete"))
+      // batch: `_row_id` projected takes the row path, otherwise columnar
+      val batch = spark.read.option("startVersion", "-1").table(s"gcpk.$t.changes")
+      val (rows, tasks) = tasksOf(sorted(batch, rid))
+      assert(rows === lib)
+      val scans = projected(batch, rid).queryExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          (s.inputRDD.getNumPartitions, s.supportsColumnar)
+      }
+      assert(scans === Seq((cores, !rid)), s"scans for $cores cores: $scans")
+      // the pin: one stage, one task per core — never one per file
+      assert(tasks === Seq(8), s"batch .changes stages: $tasks")
+      // stream: Trigger.AvailableNow drains the same window in one batch
+      val streamed = scala.collection.mutable.Buffer.empty[Row5]
+      val (q, streamTasks) = tasksOf {
+        val q = spark.readStream.option("startVersion", "-1").table(s"gcpk.$t.changes")
+          .writeStream.trigger(Trigger.AvailableNow())
+          .foreachBatch { (feed: org.apache.spark.sql.DataFrame, _: Long) =>
+            streamed ++= sorted(feed, rid): Unit
+          }.start()
+        q.awaitTermination()
+        q
+      }
+      assert(ordered(streamed.toSeq) === lib)
+      assert(streamTasks === Seq(8), s"stream .changes stages: $streamTasks")
+      // a stream's scan carries every column, `_row_id` included
+      val plan = new java.io.ByteArrayOutputStream
+      Console.withOut(plan)(q.explain())
+      assert(plan.toString.contains("ColumnarToRow") === !rid, plan.toString)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("streaming change feed delivers updates/deletes per commit") {
