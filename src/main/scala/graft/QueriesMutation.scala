@@ -448,9 +448,9 @@ object QueriesMutation {
              |SELECT t.* FROM t WHERE NOT EXISTS (SELECT 1 FROM s WHERE s.o_orderkey = t.o_orderkey)""".stripMargin)),
 
     // ---- SQL SELECT ... WHERE through the DSv2 catalog: the predicate
-    //      is pushed into the parquet-mr scan (row-group statistics skip
-    //      + record-level skip — GraftScanBuilder.pushFilters), so the
-    //      store decodes only matching pages instead of every row. The
+    //      is pushed into the parquet scan (row-group statistics skip —
+    //      GraftScanBuilder.pushFilters), so the store skips row groups
+    //      that cannot match instead of decoding every row. The
     //      plan audit shows PushedFilters on the graft scan node. ----
     "sql_select_pushdown" -> QDef(
       (s, dir) => {

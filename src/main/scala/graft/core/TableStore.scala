@@ -206,7 +206,7 @@ class TableStore(spark: SparkSession, root: String) {
   import TableStore.{Bucketing, DvRef, Manifest, Snapshot, Tombstones}
 
   // Spark 4 defaults parquet timestamps to INT96 (legacy); the DSv2 SQL
-  // read path (GraftPartitionReader) decodes INT64 micros, so pin the
+  // read path (GraftColumnarPartitionReader) reads no INT96, so pin the
   // modern representation for everything this store writes
   spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 

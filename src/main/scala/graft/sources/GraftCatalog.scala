@@ -6,11 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import scala.util.Using
 
-import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -312,11 +308,11 @@ object GraftBucketFunction
 
 /** The `_pos` metadata column: a row's ordinal position within its
   * file — with `_file`, the stable ROW IDENTITY of the store's
-  * immutable-file layout (what deletion vectors key on). Synthesized
-  * by the row reader from its running record count, so it is only
-  * served on scans with NO parquet-mr skipping (the reader factory
-  * drops pushdown when `_pos` is requested; DV position-skipping
-  * composes correctly because the inner counter keeps counting
+  * immutable-file layout (what deletion vectors key on). Built per
+  * batch by [[GraftColumnarPartitionReader]] from its running row
+  * count, so it is only served on scans with NO parquet-mr skipping
+  * (the reader factory drops pushdown when `_pos` is requested; DV
+  * position-skipping composes correctly because the count includes
   * tombstoned rows). The delta row-level path uses (`_file`, `_pos`)
   * as its rowId. */
 object GraftPosMeta extends MetadataColumn {
@@ -329,9 +325,9 @@ object GraftPosMeta extends MetadataColumn {
 /** The `_row_id` metadata column (row tracking): the row's STABLE id —
   * the manifest's per-file base + position for fresh rows, or the
   * materialized `__rid` a merge-on-read postimage file carries.
-  * Synthesized by the row reader like `_pos` (requesting it drops
-  * parquet-mr skipping so the running count stays the file position;
-  * DV position-skips compose — the inner counter keeps counting). */
+  * Built per batch like `_pos` (requesting it drops parquet-mr
+  * skipping so the running count stays the file position; DV
+  * position-skips compose — the count includes tombstoned rows). */
 object GraftRowIdMeta extends MetadataColumn {
   val Name = "_row_id"
   override def name(): String = Name
@@ -691,11 +687,9 @@ class GraftScanBuilder(schema: StructType, dirFiles: Seq[(String, Seq[String])],
   }
 
   /** Push translatable predicates into parquet-mr (row-group statistics
-    * skip + record-level skip). ALL filters are returned as post-scan —
-    * Spark re-evaluates them above the scan — so the pushdown is purely
-    * an I/O/decode reduction and can never change results; this also
-    * keeps the filters' columns in the required projection, which the
-    * parquet-mr record filter needs. */
+    * skip). ALL filters are returned as post-scan — Spark re-evaluates
+    * them above the scan — so the pushdown is purely an I/O/decode
+    * reduction and can never change results. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     if (allowFilterPushdown)
       pushed = filters.filter(f => GraftFilters.translate(f, schema).isDefined)
@@ -956,26 +950,8 @@ class GraftScan(fullSchema: StructType, required: StructType,
           parts.result().toArray
       }
   }
-  /** A mid-file OFFSET boundary reads through the row path; Spark
-    * refuses mixed row/columnar partitions in one scan, so the skip
-    * demotes the WHOLE scan (which an offset query has already pruned
-    * to the boundary + tail dirs). */
-  private def offsetNeedsRowPath: Boolean = offset.exists { o =>
-    var toSkip = o.toLong
-    live.foreach { case (d, fs) =>
-      if (toSkip > 0L) {
-        val dv = dvDeleted.getOrElse(d, 0L)
-        val liveRows = math.max(0L,
-          stats.get(d).map(_.rows).getOrElse(return true) - dv)
-        if (toSkip >= liveRows) toSkip -= liveRows
-        else return true // mid-dir boundary -> a skip partition exists
-      }
-    }
-    false
-  }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, fullSchema, pushed, colmap = colmap,
-      forceRowPath = offsetNeedsRowPath)
+    new GraftReaderFactory(required, fullSchema, pushed, colmap = colmap)
   override def description(): String =
     s"graft parquet scan, ${files.size} files" +
       s" (stats pruning: $dirsScanned/$dirsTotal dirs)" +
@@ -1267,9 +1243,9 @@ class GraftRowIdsTable(root: String, tableName: String)
   * [[graft.core.TableStore.readChangesBetween]] (recorded `_cdf` dirs,
   * synthesized appends/drops/full-replaces with their lazy DV
   * references); the change files then read like table files — packed
-  * into shared tasks and decoded by [[GraftReaderFactory]], columnar
-  * unless `_row_id` is projected — with each file's change kind and
-  * commit version as per-file constant columns.
+  * into shared tasks and decoded columnar by [[GraftReaderFactory]] —
+  * with each file's change kind and commit version as per-file
+  * constant columns.
   * `startVersion` is EXCLUSIVE on both surfaces ((start, end], matching
   * readChangesBetween); a STREAM without it starts at the CURRENT
   * version — only new changes flow, the Delta readChangeFeed default.
@@ -1585,49 +1561,12 @@ object GraftInputPartition {
   }
 }
 
-/** Drops the first `n` live rows of the wrapped reader — the boundary
-  * file of a pushed OFFSET (applied after deletion-vector skipping, so
-  * the skip counts the rows a reader would actually emit). */
-class GraftSkipRowsReader(inner: PartitionReader[InternalRow], n: Long)
-    extends PartitionReader[InternalRow] {
-  private var remaining = n
-  override def next(): Boolean = {
-    while (remaining > 0L) {
-      if (!inner.next()) return false
-      remaining -= 1L
-    }
-    inner.next()
-  }
-  override def get(): InternalRow = inner.get()
-  override def close(): Unit = inner.close()
-}
-
 /** One hash bucket's files as a single input partition, keyed for
   * Spark's key-grouped (storage-partitioned) execution. */
 case class GraftBucketInputPartition(bucket: Int, files: Seq[GraftFileRead])
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = InternalRow(bucket)
-}
-
-/** Drops deletion-vector positions from a sequential full-file read:
-  * `positions` are sorted file row indexes; the inner reader must not
-  * skip rows (no pushdown), so the running count IS the row index. */
-class GraftDvSkipReader(inner: PartitionReader[InternalRow],
-                        positions: Array[Long])
-    extends PartitionReader[InternalRow] {
-  private var idx = -1L
-  private var p = 0
-  override def next(): Boolean = {
-    while (inner.next()) {
-      idx += 1
-      if (p < positions.length && positions(p) == idx) p += 1
-      else return true
-    }
-    false
-  }
-  override def get(): InternalRow = inner.get()
-  override def close(): Unit = inner.close()
 }
 
 /** Sequentially chains per-file readers for multi-file partitions. */
@@ -1687,14 +1626,14 @@ object ColPhys {
   }
 }
 
-/** Reads [[GraftInputPartition]]s and [[GraftBucketInputPartition]]s:
+/** Reads [[GraftInputPartition]]s and [[GraftBucketInputPartition]]s
+  * through [[GraftColumnarPartitionReader]], the one Parquet decoder:
   * each partition's files in order, each with its own deletion vector,
   * row-id base and constant columns. `constSchema` names the per-file
   * constant columns, which must trail the data columns of `required0`. */
 class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
                          pushed0: Array[Filter],
                          colmap: Map[String, String] = Map.empty,
-                         forceRowPath: Boolean = false,
                          constSchema: StructType = new StructType())
     extends PartitionReaderFactory {
   require(required0.fields.takeRight(constSchema.length).sameElements(constSchema.fields),
@@ -1708,69 +1647,49 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
     * running row count must equal the file row index) and drop the
     * tombstoned positions; Spark re-applies all filters above the scan
     * so losing their pushdown on these files is purely an I/O cost on
-    * exactly the files that have pending deletes. `_row_id` needs the
-    * same sequential guarantee as `_pos` (id = base + file position). */
+    * exactly the files that have pending deletes. `_pos` and `_row_id`
+    * (id = base + file position) need the same sequential guarantee on
+    * every file. */
   private val noSkip = required.fieldNames.contains(GraftPosMeta.Name) ||
     required.fieldNames.contains(GraftRowIdMeta.Name)
   private def dvOf(r: GraftFileRead): Array[Long] = r.dv match {
     case Some((rel, files)) => GraftDvSidecars.positions(files, rel)
     case None => Array.empty
   }
-  private def filesOf(partition: InputPartition): Seq[GraftFileRead] = partition match {
-    case GraftBucketInputPartition(_, fs) => fs
-    case GraftInputPartition(fs, _) => fs
-  }
 
-  private def rowReader(r: GraftFileRead): PartitionReader[InternalRow] = {
-    val dv = dvOf(r)
-    val raw = new GraftPartitionReader(r.path, required, fullSchema,
-      if (noSkip || dv.nonEmpty) Array.empty else pushed, rowIdBase = r.rowIdBase)
-    val live = if (dv.isEmpty) raw else new GraftDvSkipReader(raw, dv)
-    if (constSchema.isEmpty) live
-    else new PartitionReader[InternalRow] {
-      private val row = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      override def next(): Boolean = live.next()
-      override def get(): InternalRow = row(live.get(), r.consts)
-      override def close(): Unit = live.close()
-    }
-  }
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val r = new GraftChainedReader(filesOf(partition).map(f => () => rowReader(f)))
-    partition match {
-      case GraftInputPartition(_, skip) if skip > 0L => new GraftSkipRowsReader(r, skip)
-      case _ => r
-    }
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft scans read columnar batches only")
 
-  /** Batch reads decode through Spark's vectorized parquet reader
-    * (ColumnarBatch straight into whole-stage codegen), with the
-    * per-file constants as constant vectors. Scans projecting the
-    * `_file`/`_pos`/`_row_id` metadata columns take the row path, which
-    * synthesizes them per row. Files carrying a deletion vector stay
-    * columnar too: their batches pass through
-    * [[GraftDvSkipColumnarReader]] (pushdown disabled on just those
-    * files so the running row count is the file row index) — DV'd hot
-    * files no longer demote the whole scan to the row path. */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    !forceRowPath &&
-      !required.fieldNames.contains(GraftFileMeta.Name) &&
-      !required.fieldNames.contains(GraftPosMeta.Name) &&
-      !required.fieldNames.contains(GraftRowIdMeta.Name)
+  /** Every partition decodes through Spark's vectorized parquet reader
+    * (ColumnarBatch straight into whole-stage codegen): per-file
+    * constants and `_file` as constant vectors, `_pos`/`_row_id` built
+    * per batch. Files carrying a deletion vector and the boundary file
+    * of a pushed OFFSET pass through [[GraftDvSkipColumnarReader]]. */
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftChainedReader(filesOf(partition).map { f => () =>
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    val (files, skipLive) = partition match {
+      case GraftBucketInputPartition(_, fs) => (fs, 0L)
+      case GraftInputPartition(fs, skip) => (fs, skip)
+    }
+    // the planner gives an OFFSET boundary its own one-file partition
+    require(skipLive == 0L || files.size == 1, s"OFFSET skip over ${files.size} files")
+    new GraftChainedReader(files.map { f => () =>
       val dv = dvOf(f)
       val r = new GraftColumnarPartitionReader(f.path, required,
-        if (dv.isEmpty) pushed else Array.empty, fullSchema, constSchema, f.consts)
-      if (dv.isEmpty) r else new GraftDvSkipColumnarReader(r, dv)
+        if (noSkip || dv.nonEmpty) Array.empty else pushed, fullSchema, constSchema,
+        f.consts, f.rowIdBase)
+      if (dv.isEmpty && skipLive == 0L) r else new GraftDvSkipColumnarReader(r, dv, skipLive)
     })
+  }
 }
 
 /** Executor-side deletion-vector resolution: probe the (relpath,
   * pos)-sorted sidecar parquet for ONE data file's tombstone positions.
-  * parquet-mr record-level filtering on `relpath` plus the sidecar's
-  * sorted row groups make each probe O(this file's tombstones) I/O —
+  * The pushed `relpath` equality skips row groups and pages, and the
+  * sidecar's sorted layout makes each probe O(this file's tombstones)
+  * I/O —
   * the driver never materializes any position (contrast the old
   * planning-time collect, which held every pending tombstone of the
   * table in driver memory). */
@@ -1812,11 +1731,20 @@ object GraftDvSidecars {
 
   private def probe(sidecarFiles: Seq[String], relpath: String): Array[Long] = {
     val pushed: Array[Filter] = Array(EqualTo("relpath", relpath))
+    val want = UTF8String.fromString(relpath)
     val buf = Array.newBuilder[Long]
     sidecarFiles.foreach { f =>
-      val r = new GraftPartitionReader(f, SidecarSchema, SidecarSchema, pushed)
-      try while (r.next()) buf += r.get().getLong(1)
-      finally r.close()
+      val r = new GraftColumnarPartitionReader(f, SidecarSchema, pushed, SidecarSchema)
+      // the kept row groups and pages still hold other files' rows
+      try while (r.next()) {
+        val b = r.get()
+        val (rel, pos) = (b.column(0), b.column(1))
+        var i = 0
+        while (i < b.numRows()) {
+          if (want == rel.getUTF8String(i)) buf += pos.getLong(i)
+          i += 1
+        }
+      } finally r.close()
     }
     val arr = buf.result()
     java.util.Arrays.sort(arr)
@@ -1852,11 +1780,6 @@ object GraftFilters {
   }
 
   private object Op extends Enumeration { val Eq, NotEq, Gt, GtEq, Lt, LtEq = Value }
-
-  /** Columns a translated filter references (to drop filters on columns
-    * a pre-ADD-COLUMN file doesn't have — parquet-mr's schema validator
-    * rejects predicates over absent columns). */
-  def references(f: Filter): Seq[String] = f.references.toSeq
 
   private def leaf(name: String, schema: StructType, value: Any,
                    op: Op.Value): Option[FilterPredicate] = {
@@ -1946,244 +1869,4 @@ object GraftFilters {
     case d: java.time.LocalDate => Some(d.toEpochDay.toInt)
     case _ => None
   }
-}
-
-/** Column-pruning ReadSupport: projects the FILE's own schema down to
-  * the requested names, so field repetition (required vs optional)
-  * always matches the file and unrequested columns are never decoded. */
-class ProjectingGroupReadSupport(names: Seq[String]) extends GroupReadSupport {
-  override def init(context: org.apache.parquet.hadoop.api.InitContext)
-      : org.apache.parquet.hadoop.api.ReadSupport.ReadContext = {
-    val fileSchema = context.getFileSchema
-    val projected = new org.apache.parquet.schema.MessageType(
-      fileSchema.getName,
-      names.filter(fileSchema.containsField)
-        .map(n => fileSchema.getFields.get(fileSchema.getFieldIndex(n))): _*)
-    new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(projected)
-  }
-}
-
-/** parquet-mr Group reader -> InternalRow for the engine's flat types.
-  * Columns the file predates (ALTER TABLE ADD COLUMN) read as NULL;
-  * pushed filters are applied per-file via parquet-mr's filter2 stack
-  * (row-group statistics skip + record-level skip), restricted to the
-  * columns the file actually has. */
-class GraftPartitionReader(file: String, required: StructType,
-                           fullSchema: StructType, pushed: Array[Filter],
-                           // no-base sentinel (emit NULL _row_id), never
-                           // 0L: a defaulted base would mint ids colliding
-                           // with the file whose real manifest base IS 0
-                           rowIdBase: Long = Long.MinValue)
-    extends PartitionReader[InternalRow] {
-
-  private val conf = GraftParquet.newConf()
-
-  // `_row_id` synthesis: a postimage file materializes its rows' ids in
-  // a physical __rid column (preferred); every other file derives
-  // base + position
-  private val wantRowId = required.fieldNames.contains(GraftRowIdMeta.Name)
-
-  // one footer read up front: the file's own schema decides which
-  // required columns exist (ADD COLUMN back-compat) and which pushed
-  // filters are applicable (parquet-mr rejects predicates over columns
-  // absent from the file schema)
-  private val fileSchema: org.apache.parquet.schema.MessageType =
-    Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file), conf)))(
-      _.getFooter.getFileMetaData.getSchema)
-
-  private val present: Array[Boolean] =
-    required.fields.map(f => fileSchema.containsField(f.name))
-
-  private val hasRidCol = wantRowId && fileSchema.containsField("__rid")
-
-  private val reader: ParquetReader[Group] = {
-    val b = ParquetReader.builder(
-        new ProjectingGroupReadSupport(required.fieldNames.toSeq ++
-          (if (hasRidCol) Seq("__rid") else Nil)),
-        new org.apache.hadoop.fs.Path(file))
-      .withConf(conf)
-    // a filter is pushed to parquet-mr only if THIS file can evaluate
-    // it: the column must exist (ADD COLUMN back-compat) AND its file
-    // primitive must match what the logical type's predicate expects —
-    // after a metadata-only type widening an old INT32 file under a
-    // BIGINT predicate fails parquet's schema validation. Dropping is
-    // always safe: pushFilters returns every filter to Spark, which
-    // re-evaluates above the scan; only row-group skipping is lost,
-    // and only on pre-widening files.
-    def fileEvaluable(ref: String): Boolean = fileSchema.containsField(ref) && {
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-      val filePrim = fileSchema
-        .getFields.get(fileSchema.getFieldIndex(ref)).asPrimitiveType()
-      fullSchema.fields
-        .find(_.name.equalsIgnoreCase(ref)).map(_.dataType).exists {
-          case LongType | TimestampType | TimestampNTZType =>
-            filePrim.getPrimitiveTypeName == INT64
-          case IntegerType | DateType => filePrim.getPrimitiveTypeName == INT32
-          case DoubleType => filePrim.getPrimitiveTypeName == DOUBLE
-          case FloatType => filePrim.getPrimitiveTypeName == FLOAT
-          case BooleanType => filePrim.getPrimitiveTypeName == BOOLEAN
-          case StringType => filePrim.getPrimitiveTypeName == BINARY
-          case d: DecimalType if d.precision > 9 && d.precision <= 18 =>
-            // GraftFilters.translate compares INT64-backed decimals by
-            // unscaled long AT THE LOGICAL SCALE — evaluable only when
-            // this file stores the same scale on the same primitive. A
-            // pre-widening file (plain-integer column or a narrower
-            // decimal annotation from before a rescale widen) drops the
-            // predicate; Spark re-evaluates above the scan regardless,
-            // so only row-group skipping is at stake.
-            filePrim.getPrimitiveTypeName == INT64 &&
-              (filePrim.getLogicalTypeAnnotation match {
-                case dec: org.apache.parquet.schema.LogicalTypeAnnotation
-                    .DecimalLogicalTypeAnnotation => dec.getScale == d.scale
-                case _ => false
-              })
-          case _ => false // INT32-backed decimals etc: never push
-        }
-    }
-    val pred = pushed.toSeq
-      .filter(_.references.forall(fileEvaluable))
-      .flatMap(f => GraftFilters.translate(f, fullSchema))
-      .reduceOption(FilterApi.and)
-    pred.fold(b)(p => b.withFilter(FilterCompat.get(p))).build()
-  }
-  private var current: Group = _
-  private var rowIdx = -1L
-
-  override def next(): Boolean = {
-    current = reader.read()
-    rowIdx += 1
-    current != null
-  }
-
-  // ---- per-FILE decode state, hoisted out of the per-row/per-cell hot
-  // loop (the same treatment GraftDataWriter.write got: this row path
-  // serves `_file`/`_pos`/`_row_id` scans, OFFSET boundaries and every
-  // DV sidecar probe).
-  // The group type is CONSTANT across a file (the projection schema), so
-  // field indices, the extraction choice (the file's physical primitive
-  // is fixed per file), and the logical-type dispatch all resolve ONCE,
-  // on the first row; get() is then an index walk over closure arrays.
-  private final val KFile = 0; private final val KPos = 1
-  private final val KRid = 2; private final val KNull = 3
-  private final val KCol = 4
-  private[this] val fileNameUtf8 = UTF8String.fromString(file)
-  private[this] var kinds: Array[Int] = _
-  private[this] var idxs: Array[Int] = _
-  private[this] var gets: Array[Group => Any] = _
-  private[this] var ridIdx: Int = -1
-
-  /** Per-column extractor: the FILE's physical type decides how to
-    * extract; the REQUIRED (logical) type decides what to widen to.
-    * After a metadata-only type widening (TableStore.alterColumnType)
-    * this reader sees old narrow files under the widened requested
-    * schema — exactly like the vectorized path, it must upcast at
-    * decode, not cast parquet-mr value boxes (IntegerValue -> LongValue
-    * CCE). */
-  private def columnDecoder(gt: org.apache.parquet.schema.GroupType,
-                            idx: Int, name: String,
-                            dataType: DataType): Group => Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val primType = gt.getType(idx).asPrimitiveType()
-    val prim = primType.getPrimitiveTypeName
-    dataType match {
-      case LongType =>
-        if (prim == INT32) g => g.getInteger(idx, 0).toLong
-        else g => g.getLong(idx, 0)
-      case IntegerType => g => g.getInteger(idx, 0)
-      case DoubleType => prim match {
-        case FLOAT => g => g.getFloat(idx, 0).toDouble
-        case INT32 => g => g.getInteger(idx, 0).toDouble
-        case _ => g => g.getDouble(idx, 0)
-      }
-      case FloatType => g => g.getFloat(idx, 0)
-      case BooleanType => g => g.getBoolean(idx, 0)
-      case StringType => g => UTF8String.fromString(g.getString(idx, 0))
-      case TimestampType | TimestampNTZType =>
-        // a DATE file column under a widened TIMESTAMP_NTZ request:
-        // days -> midnight micros (exact)
-        if (prim == INT32) g => g.getInteger(idx, 0).toLong * 86400000000L
-        else g => g.getLong(idx, 0) // INT64 micros
-      case DateType => g => g.getInteger(idx, 0)
-      case d: DecimalType =>
-        // unscaled INT32 (precision <= 9) or INT64, per the file; a
-        // plain-integer file column under a widened DECIMAL request has
-        // no DECIMAL annotation (file scale 0), and a rescaled request
-        // multiplies the unscaled value up by a per-FILE constant.
-        // multiplyExact: the <=18-precision cap makes overflow
-        // unreachable from this engine's own widenings, but a foreign
-        // file must fail loudly, never return a corrupt decimal.
-        val fileScale = primType.getLogicalTypeAnnotation match {
-          case dec: org.apache.parquet.schema.LogicalTypeAnnotation
-              .DecimalLogicalTypeAnnotation => dec.getScale
-          case _ => 0
-        }
-        require(fileScale <= d.scale,
-          s"$name: file decimal scale $fileScale exceeds requested ${d.scale}")
-        var mult = 1L
-        var k = fileScale
-        while (k < d.scale) { mult = Math.multiplyExact(mult, 10L); k += 1 }
-        val isInt32 = prim == INT32
-        g => {
-          val raw = if (isInt32) g.getInteger(idx, 0).toLong else g.getLong(idx, 0)
-          org.apache.spark.sql.types.Decimal.createUnsafe(
-            Math.multiplyExact(raw, mult), d.precision, d.scale)
-        }
-      case other => throw new UnsupportedOperationException(
-        s"type $other (flat schemas only — SURVEY §1.2)")
-    }
-  }
-
-  private def buildDecoders(gt: org.apache.parquet.schema.GroupType): Unit = {
-    val n = required.fields.length
-    val ks = new Array[Int](n)
-    val is = new Array[Int](n)
-    val gs = new Array[Group => Any](n)
-    var fi = 0
-    while (fi < n) {
-      val f = required.fields(fi)
-      if (f.name == GraftFileMeta.Name) ks(fi) = KFile
-      else if (f.name == GraftPosMeta.Name) ks(fi) = KPos
-      else if (f.name == GraftRowIdMeta.Name) ks(fi) = KRid
-      else if (!present(fi)) ks(fi) = KNull
-      else {
-        ks(fi) = KCol
-        val idx = gt.getFieldIndex(f.name)
-        is(fi) = idx
-        gs(fi) = columnDecoder(gt, idx, f.name, f.dataType)
-      }
-      fi += 1
-    }
-    if (hasRidCol) ridIdx = gt.getFieldIndex("__rid")
-    idxs = is; gets = gs
-    kinds = ks // last: the published signal that the arrays are built
-  }
-
-  override def get(): InternalRow = {
-    val g = current
-    if (kinds == null) buildDecoders(g.getType)
-    val n = kinds.length
-    val values = new Array[Any](n)
-    var fi = 0
-    while (fi < n) {
-      values(fi) = kinds(fi) match {
-        case KFile => fileNameUtf8
-        case KPos => rowIdx
-        case KRid =>
-          if (ridIdx >= 0 && g.getFieldRepetitionCount(ridIdx) > 0)
-            g.getLong(ridIdx, 0)
-          else if (rowIdBase == Long.MinValue) null // unknowable (pre-tracking)
-          else rowIdBase + rowIdx
-        case KNull => null
-        case _ =>
-          val idx = idxs(fi)
-          if (g.getFieldRepetitionCount(idx) == 0) null else gets(fi)(g)
-      }
-      fi += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
-  }
-
-  override def close(): Unit = reader.close()
 }

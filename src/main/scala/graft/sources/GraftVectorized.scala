@@ -8,20 +8,31 @@ import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DecimalType, StructType}
-import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Vectorized (ColumnarBatch) read path for the DSv2 catalog scan,
-  * built on Spark's own VectorizedParquetRecordReader — the same class
-  * behind FileSourceScanExec's parquet scans — driven through the
-  * production ParquetReadSupport schema-clipping path so:
-  *   - decoding is columnar (no per-row boxed Group materialization),
+/** The engine's one Parquet decoder: every catalog scan (table,
+  * row-level, `.rowids`, `.changes`) and every deletion-vector sidecar
+  * probe reads through it. Built on Spark's own
+  * VectorizedParquetRecordReader — the same class behind
+  * FileSourceScanExec's parquet scans — driven through the production
+  * ParquetReadSupport schema-clipping path so:
+  *   - decoding is columnar (no per-row boxed materialization),
   *   - columns a file predates (ALTER TABLE ADD COLUMN) come back as
   *     null vectors,
   *   - a pushed FilterPredicate does row-group statistics skipping,
   *   - `consts` (schema `constSchema`, a change file's kind and commit
   *     version) follow the data columns as constant vectors.
+  *
+  * `required` may also name the metadata columns, which never reach
+  * the decoder: `_file` is one more per-file constant, `_pos` the
+  * running file row index, and `_row_id` the file's materialized
+  * `__rid` where non-null, else `rowIdBase + _pos` (NULL under the
+  * `Long.MinValue` no-base sentinel). `_pos` and `_row_id` are file
+  * positions only when nothing is pushed — the caller's contract.
   *
   * The batch is handed to Spark as-is, so whole-stage codegen consumes
   * ColumnVectors directly — at scale this is the difference between a
@@ -30,14 +41,52 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 class GraftColumnarPartitionReader(file: String, required: StructType,
                                    pushed: Array[Filter],
                                    fullSchema: StructType,
-                                   constSchema: StructType,
-                                   consts: InternalRow)
+                                   constSchema: StructType = new StructType(),
+                                   consts: InternalRow = InternalRow.empty,
+                                   // no-base sentinel (NULL `_row_id`), never
+                                   // 0L: a defaulted base would mint ids
+                                   // colliding with the file whose real
+                                   // manifest base IS 0
+                                   rowIdBase: Long = Long.MinValue)
     extends PartitionReader[ColumnarBatch] {
+  import GraftColumnarPartitionReader._
+
+  private val wantFile = required.fieldNames.contains(GraftFileMeta.Name)
+  private val wantPos = required.fieldNames.contains(GraftPosMeta.Name)
+  private val wantRowId = required.fieldNames.contains(GraftRowIdMeta.Name)
+  private val data = required.fields.filterNot(f => MetaNames.contains(f.name))
+  /** What the decoder reads: the data columns, plus the materialized
+    * `__rid` a merge-on-read postimage carries when `_row_id` is wanted
+    * (a null vector in files without it). */
+  private val decoded = StructType(
+    if (wantRowId) data :+ StructField(RidCol, LongType) else data)
+  /** The decoder's constant columns: `_file` when wanted, then the
+    * caller's. */
+  private val (allConstSchema, allConsts) =
+    if (!wantFile) (constSchema, consts)
+    else (StructType(StructField(GraftFileMeta.Name, StringType, nullable = false) +:
+            constSchema.fields),
+          InternalRow.fromSeq(UTF8String.fromString(file) +: consts.toSeq(constSchema)))
+
+  /** Output column i is decoder column `layout(i)`, or the `_pos` (-1)
+    * or `_row_id` (-2) vector; null when the decoder's batch already
+    * is the output (no metadata column asked for). */
+  private val layout: Array[Int] =
+    if (data.length == required.length) null
+    else required.fields.map { f =>
+      if (f.name == GraftPosMeta.Name) -1
+      else if (f.name == GraftRowIdMeta.Name) -2
+      else if (f.name == GraftFileMeta.Name) decoded.length
+      else decoded.fieldIndex(f.name)
+    } ++ constSchema.indices.map(_ + decoded.length + (if (wantFile) 1 else 0))
+  private val posVec = if (wantPos) new OnHeapColumnVector(Capacity, LongType) else null
+  private val ridVec = if (wantRowId) new OnHeapColumnVector(Capacity, LongType) else null
+  private var pos = 0L // file row index of the next batch's first row
 
   private def mk(pred: FilterPredicate): VectorizedParquetRecordReader = {
     val conf = GraftParquet.newConf()
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, required.json)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, decoded.json)
     // the engine's files are written by this store (Spark parquet or the
     // GraftParquet writer): binary=UTF8 strings, INT64-micros timestamps,
     // no INT96, modern (proleptic-Gregorian) dates -> CORRECTED rebase
@@ -53,7 +102,7 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
     if (pred != null) ParquetInputFormat.setFilterPredicate(conf, pred)
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
-      /* useOffHeap = */ false, /* capacity = */ 4096)
+      /* useOffHeap = */ false, Capacity)
     // mapred.FileSplit (extends the mapreduce one): Spark's reader base
     // casts the split to the old API class
     val split = new org.apache.hadoop.mapred.FileSplit(
@@ -63,7 +112,7 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
       new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
     try {
       r.initialize(split, ctx)
-      r.initBatch(constSchema, consts)
+      r.initBatch(allConstSchema, allConsts)
       r.enableReturningBatches()
       r
     } catch { case e: Throwable =>
@@ -91,8 +140,8 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
     // silent wrong answer, not a perf loss. No exception fires, so this
     // must be gated PROACTIVELY: when the pushed set references a
     // decimal column, one footer read decides per-file whether the
-    // annotation scale matches (same rule as the row path's
-    // fileEvaluable); mismatching files keep every NON-decimal conjunct.
+    // annotation scale matches; mismatching files keep every
+    // NON-decimal conjunct.
     val effective: Array[Filter] = {
       def decimalCol(ref: String): Option[DecimalType] =
         fullSchema.fields.find(_.name.equalsIgnoreCase(ref))
@@ -116,8 +165,8 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
     }
     // a predicate over a column this file predates (ALTER TABLE ADD
     // COLUMN) fails parquet's schema validation at row-group filtering.
-    // Retry with the subset of filters THIS file can evaluate (same
-    // containsField rule as the row path) — dropping everything would
+    // Retry with the subset of filters THIS file can evaluate (the
+    // columns its footer holds) — dropping everything would
     // lose row-group skipping on the still-valid conjuncts; Spark
     // re-applies all filters above the scan, so any dropped pushdown is
     // safe, never wrong. The footer read happens only on evolved files.
@@ -140,13 +189,49 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
 
   override def next(): Boolean = {
     val has = reader.nextKeyValue()
-    if (has) batch = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
+    if (has) {
+      val b = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
+      batch = if (layout == null) b else withMeta(b)
+    }
     has
+  }
+
+  private def withMeta(b: ColumnarBatch): ColumnarBatch = {
+    val n = b.numRows()
+    var i = 0
+    if (posVec != null) while (i < n) { posVec.putLong(i, pos + i); i += 1 }
+    if (ridVec != null) {
+      ridVec.reset()
+      val rid = b.column(decoded.length - 1)
+      i = 0
+      while (i < n) {
+        if (!rid.isNullAt(i)) ridVec.putLong(i, rid.getLong(i))
+        else if (rowIdBase == Long.MinValue) ridVec.putNull(i) // unknowable (pre-tracking)
+        else ridVec.putLong(i, rowIdBase + pos + i)
+        i += 1
+      }
+    }
+    pos += n
+    new ColumnarBatch(layout.map {
+      case -1 => posVec: ColumnVector
+      case -2 => ridVec: ColumnVector
+      case c => b.column(c)
+    }, n)
   }
 
   override def get(): ColumnarBatch = batch
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = {
+    reader.close()
+    if (posVec != null) posVec.close()
+    if (ridVec != null) ridVec.close()
+  }
+}
+
+object GraftColumnarPartitionReader {
+  private val Capacity = 4096
+  private val RidCol = "__rid"
+  private val MetaNames = Set(GraftFileMeta.Name, GraftPosMeta.Name, GraftRowIdMeta.Name)
 }
 
 /** A ColumnVector view that remaps row ids through a surviving-rows
@@ -195,19 +280,20 @@ private[sources] class RemappedColumnVector(base: org.apache.spark.sql.vectorize
     }
 }
 
-/** Columnar deletion-vector skip: wraps the vectorized per-file reader
-  * (run WITHOUT parquet-mr pushdown, so the running row count equals
-  * the file row index) and re-exposes each batch with the tombstoned
-  * positions removed via [[RemappedColumnVector]] — no data copy, no
-  * row-path fallback. DV'd files stay on the ColumnarBatch path that
-  * whole-stage codegen consumes; without this, one deletion vector
-  * anywhere in a snapshot used to demote the ENTIRE scan to the
-  * row-at-a-time reader (the round-4 read-amplification cliff). */
+/** Columnar row skip: wraps the vectorized per-file reader (run
+  * WITHOUT parquet-mr pushdown, so the running row count equals the
+  * file row index) and re-exposes each batch with the deletion
+  * vector's tombstoned `positions` removed, then the first `skipLive`
+  * surviving rows dropped (the boundary file of a pushed OFFSET), via
+  * [[RemappedColumnVector]] — no data copy. DV'd files stay on the
+  * ColumnarBatch path that whole-stage codegen consumes. */
 class GraftDvSkipColumnarReader(inner: PartitionReader[ColumnarBatch],
-                                positions: Array[Long])
+                                positions: Array[Long],
+                                skipLive: Long = 0L)
     extends PartitionReader[ColumnarBatch] {
   private var base = 0L // file row index of the current batch's first row
   private var p = 0 // cursor into the sorted positions
+  private var toSkip = skipLive // live rows the OFFSET still drops
   private var out: ColumnarBatch = _
 
   override def next(): Boolean = {
@@ -217,22 +303,25 @@ class GraftDvSkipColumnarReader(inner: PartitionReader[ColumnarBatch],
       val startP = p
       while (p < positions.length && positions(p) < base + n) p += 1
       val ndel = p - startP
-      if (ndel == 0) { out = b; base += n; return true }
-      if (ndel < n) {
-        val map = new Array[Int](n - ndel)
-        var i = 0; var q = startP; var j = 0
+      val skip = math.min(toSkip, (n - ndel).toLong).toInt
+      toSkip -= skip
+      if (ndel == 0 && skip == 0) { out = b; base += n; return true }
+      if (ndel + skip < n) {
+        val map = new Array[Int](n - ndel - skip)
+        var i = 0; var q = startP; var j = 0; var s = skip
         while (i < n) {
           if (q < p && positions(q) == base + i) q += 1
+          else if (s > 0) s -= 1
           else { map(j) = i; j += 1 }
           i += 1
         }
-        val cols = Array.tabulate[org.apache.spark.sql.vectorized.ColumnVector](
-          b.numCols())(c => new RemappedColumnVector(b.column(c), map))
+        val cols = Array.tabulate[ColumnVector](b.numCols())(c =>
+          new RemappedColumnVector(b.column(c), map))
         out = new ColumnarBatch(cols, map.length)
         base += n
         return true
       }
-      base += n // every row in the batch tombstoned: skip it entirely
+      base += n // every row in the batch tombstoned or skipped
     }
     false
   }

@@ -354,7 +354,7 @@ class ChangeFeedSpec extends AnyFunSuite {
         withRowIds = rid), rid)
       assert(lib.map(_._3).toSet === Set("insert", "update_preimage",
         "update_postimage", "delete"))
-      // batch: `_row_id` projected takes the row path, otherwise columnar
+      // batch: columnar whether or not `_row_id` is projected
       val batch = spark.read.option("startVersion", "-1").table(s"gcpk.$t.changes")
       val (rows, tasks) = tasksOf(sorted(batch, rid))
       assert(rows === lib)
@@ -362,7 +362,7 @@ class ChangeFeedSpec extends AnyFunSuite {
         case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
           (s.inputRDD.getNumPartitions, s.supportsColumnar)
       }
-      assert(scans === Seq((cores, !rid)), s"scans for $cores cores: $scans")
+      assert(scans === Seq((cores, true)), s"scans for $cores cores: $scans")
       // the pin: one stage, one task per core — never one per file
       assert(tasks === Seq(8), s"batch .changes stages: $tasks")
       // stream: Trigger.AvailableNow drains the same window in one batch
@@ -381,7 +381,7 @@ class ChangeFeedSpec extends AnyFunSuite {
       // a stream's scan carries every column, `_row_id` included
       val plan = new java.io.ByteArrayOutputStream
       Console.withOut(plan)(q.explain())
-      assert(plan.toString.contains("ColumnarToRow") === !rid, plan.toString)
+      assert(plan.toString.contains("ColumnarToRow"), plan.toString)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

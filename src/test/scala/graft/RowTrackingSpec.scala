@@ -387,4 +387,90 @@ class RowTrackingSpec extends AnyFunSuite {
     assert(ids() === baseIds,
       "restore past the enablement point lost or moved ids")
   }
+
+  test("catalog _file/_pos/_row_id match Spark's file source and " +
+      "readWithRowIds, with and without a mid-file OFFSET") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val root = Files.createTempDirectory("rowtrackdiff").toString
+    spark.conf.set("spark.sql.catalog.grtd", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.grtd.root", root)
+    val ts = new TableStore(spark, root)
+    // one file written before tracking, INT `x` (widened below) and
+    // more than two 4096-row batches long
+    ts.create("t", (0L until 10000L).map(i => (i, i.toInt)).toDF("k", "x").coalesce(1))
+    ts.enableRowTracking("t")
+    val first = ts.liveDirs("t").head
+    ts.alterColumnType("t", "x", LongType)
+    assert(ts.liveDirs("t").head === first, "the widen must keep the INT file")
+    ts.append("t", (10000L until 10100L).map(i => (i, i << 33)).toDF("k", "x"))
+    // tombstones in both dirs, then merge-on-read postimages carrying
+    // their preimage ids in `__rid`
+    ts.deleteVectorized("t", col("k") % 5 === 0L)
+    ts.updateVectorized("t", col("k") % 7 === 1L, Map("x" -> (col("x") + 1L)))
+    val snap = ts.snapshot("t")
+    assert(snap.dvs.contains(first))
+    val files = snap.filesByDir(ts, "t").flatMap(_._2)
+    val bases = ts.rowBaseByFile("t", snap.version)
+
+    type Row = (Long, Long, String, Long, Option[Long])
+    def read(sql: String): Seq[Row] = {
+      val df = spark.sql(sql)
+      val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+      assert(scans.nonEmpty && scans.forall(_.supportsColumnar), df.queryExecution.executedPlan)
+      df.select("k", "x", "_file", "_pos", "_row_id")
+        .as[(Long, Long, String, Long, Option[Long])].collect().toSeq
+    }
+    val all = read("SELECT *, _file, _pos, _row_id FROM grtd.t")
+
+    // Spark's own file source: every physical row, tombstoned ones too,
+    // keyed by (file, row index), with the materialized `__rid`
+    val physical: Map[(String, Long), (Long, Long, Option[Long])] =
+      spark.read.schema(StructType(Seq(StructField("k", LongType),
+          StructField("x", LongType), StructField("__rid", LongType))))
+        .parquet(files: _*)
+        .select(col("k"), col("x"), col("__rid"),
+          col("_metadata.file_path"), col("_metadata.row_index"))
+        .as[(Long, Long, Option[Long], String, Long)].collect()
+        .map(r => (new java.net.URI(r._4).getPath, r._5) -> ((r._1, r._2, r._3))).toMap
+    assert(physical.values.exists(_._3.isDefined), "no postimage carries __rid")
+    assert(all.map(r => (r._3, r._4)).distinct.size === all.size)
+    all.foreach { case (k, x, f, pos, rid) =>
+      val (pk, px, prid) = physical((f, pos))
+      assert((k, x) === ((pk, px)), s"$f@$pos")
+      assert(rid === prid.orElse(bases.get(f).map(_ + pos)), s"$f@$pos")
+    }
+    // readWithRowIds: the same live rows with the same ids
+    val lib = ts.readWithRowIds("t").select("k", "x", "_row_id")
+      .as[(Long, Long, Option[Long])].collect().toSeq
+    assert(all.map(r => (r._1, r._2, r._5)).sortBy(_._1) === lib.sortBy(_._1))
+
+    // a mid-file OFFSET past the first batch of the DV'd first file
+    val off = 5000
+    val q = s"SELECT *, _file, _pos, _row_id FROM grtd.t OFFSET $off"
+    assert(spark.sql(q).queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+      .head.scan.description().contains(s"PushedOffset: $off"))
+    val firstFile = snap.filesByDir(ts, "t").head._2.head
+    val skipped = all.filter(_._3 == firstFile).sortBy(_._4).take(off).toSet
+    assert(read(q).sortBy(r => (r._3, r._4)) ===
+      all.filterNot(skipped).sortBy(r => (r._3, r._4)))
+
+    // the no-base sentinel: a file read without a manifest base reports
+    // its materialized `__rid`, else NULL, never a derived id
+    val meta = StructType(Seq(StructField("k", LongType),
+      StructField(graft.sources.GraftPosMeta.Name, LongType, nullable = false),
+      StructField(graft.sources.GraftRowIdMeta.Name, LongType)))
+    files.foreach { f =>
+      val r = new graft.sources.GraftReaderFactory(meta, snap.schema, Array.empty)
+        .createColumnarReader(graft.sources.GraftInputPartition(
+          Seq(graft.sources.GraftFileRead(f))))
+      val got = Seq.newBuilder[(Long, Option[Long])]
+      try while (r.next()) r.get().rowIterator().forEachRemaining { row =>
+        got += ((row.getLong(1), if (row.isNullAt(2)) None else Some(row.getLong(2))))
+      } finally r.close()
+      val rows = got.result()
+      assert(rows.map(_._1) === rows.indices.map(_.toLong), f)
+      rows.foreach { case (pos, rid) => assert(rid === physical((f, pos))._3, s"$f@$pos") }
+    }
+  }
 }

@@ -171,15 +171,15 @@ class TypeWideningSpec extends AnyFunSuite {
       .take(8).exists(t => String.valueOf(t.getMessage).contains("x_pos")))
   }
 
-  test("row-path scan with a pushed filter over a widened column reads " +
+  test("catalog scan with a pushed filter over a widened column reads " +
       "old narrow files correctly (pushdown dropped per-file, never wrong)") {
     val root = Files.createTempDirectory("widenpush").toString
     spark.conf.set("spark.sql.catalog.graft_widenpush", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_widenpush.root", root)
     val ts = new TableStore(spark, root)
-    // bucketed: the DSv2 scan takes the row-reader (Group) path, which
-    // pushes filters into parquet-mr — a BIGINT predicate over an old
-    // INT32 file must drop per-file instead of failing schema validation
+    // the DSv2 scan pushes filters into parquet-mr — a BIGINT predicate
+    // over an old INT32 file must drop per-file instead of failing
+    // schema validation
     ts.createBucketed("b", (1L to 100L).map(i => (i, i.toInt)).toDF("k", "x"),
       Seq("k"), 4)
     ts.alterColumnType("b", "x", LongType)
@@ -255,14 +255,14 @@ class TypeWideningSpec extends AnyFunSuite {
   }
 
   test("decimal rescale widening within the writable range: metadata-only, " +
-      "exact values through the row path, predicates push only on " +
+      "exact values through the catalog scan, predicates push only on " +
       "scale-matching files") {
     val root = Files.createTempDirectory("widendec").toString
     spark.conf.set("spark.sql.catalog.graft_widendec", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_widendec.root", root)
     val ts = new TableStore(spark, root)
-    // bucketed: the DSv2 scan takes the row-reader path — the one that
-    // rescales unscaled longs per-file and decides pushdown per-file
+    // the DSv2 scan's vectorized reader rescales unscaled longs per
+    // file, and the reader decides pushdown per file
     ts.createBucketed("b", (1 to 100).map(i => i).toDF("k")
       .select(col("k").cast("long").as("k"),
         col("k").cast(DecimalType(10, 2)).as("amt")), Seq("k"), 4)
@@ -286,7 +286,7 @@ class TypeWideningSpec extends AnyFunSuite {
   }
 
   test("unwidened INT64-backed decimal predicates stay pushable on the " +
-      "row path (scale matches the file annotation)") {
+      "catalog scan (scale matches the file annotation)") {
     val root = Files.createTempDirectory("decpush").toString
     spark.conf.set("spark.sql.catalog.graft_decpush", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft_decpush.root", root)
