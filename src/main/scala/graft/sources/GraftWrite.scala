@@ -128,9 +128,11 @@ class GraftWriteBuilder(root: String, table: String, schema: StructType,
 
   /** Plain INSERTs into a bucketed table keep the bucketed layout:
     * executors route each row to its `__b=<k>` leaf, and the write
-    * REQUESTS clustering by the catalog's `bucket` v2 function (n
-    * output partitions), so same-bucket rows co-locate and the batch
-    * lands as ~n files instead of tasks x buckets. Row-level rewrites
+    * REQUESTS clustering by the catalog's `bucket` v2 function, so
+    * same-bucket rows co-locate and the batch lands as ~n files instead
+    * of tasks x buckets. No partition count is requested: like the
+    * store's own bucketed writes, adaptive execution coalesces small
+    * buckets into few write tasks. Row-level rewrites
     * keep the unbucketed replacement path (their group filter already
     * did the pruning). Correctness never depends on the distribution —
     * routing is per-row — the clustering only shapes file counts. */
@@ -145,7 +147,6 @@ class GraftWriteBuilder(root: String, table: String, schema: StructType,
         Distributions.clustered(Array(Expressions.bucket(n, keys: _*)))
       case None => Distributions.unspecified()
     }
-    override def requiredNumPartitions(): Int = bucketedInsert.map(_._2).getOrElse(0)
     override def requiredOrdering(): Array[SortOrder] = Array.empty
     override def toBatch: BatchWrite =
       new GraftBatchWrite(root, table, physSchema, replace, rowLevel = replaceAll,

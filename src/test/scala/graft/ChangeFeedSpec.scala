@@ -317,15 +317,16 @@ class ChangeFeedSpec extends AnyFunSuite {
       ListenerBus.drain(spark.sparkContext)
       (out, stageTasks.toArray.toSeq.map(_.asInstanceOf[Int]))
     }
-    // recorded bucketed merges, a synthesized append, a DV'd delete and
-    // a full replace whose synthesized delete-all reads DV'd dirs: far
-    // more than 4 x cores change files, of many kinds and versions
+    // recorded bucketed merges (one change file per kind each), a
+    // synthesized append, a DV'd delete and a full replace whose
+    // synthesized delete-all reads DV'd dirs: far more than 4 x cores
+    // change files, of many kinds and versions
     def build(t: String, rowTracking: Boolean): Unit = {
       ts.createBucketed(t, (1L to 400L).map(i => (i, s"a$i")).toDF("id", "v"),
         Seq("id"), n = 8)
       ts.setChangeFeed(t, true)
       if (rowTracking) ts.enableRowTracking(t)
-      Seq(1L, 2L).foreach { r =>
+      (1L to 16L).foreach { r =>
         ts.mergeUpsert(t, (r to 480L by 3L).map(i => (i, s"m$r-$i")).toDF("id", "v"),
           Seq("id"), changeTypeCol = None)
       }
@@ -383,6 +384,103 @@ class ChangeFeedSpec extends AnyFunSuite {
       Console.withOut(plan)(q.explain())
       assert(plan.toString.contains("ColumnarToRow"), plan.toString)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Entries directly under `p` whose names pass `keep`, sorted. */
+  private def entries(p: java.nio.file.Path, keep: String => Boolean = _ => true) =
+    scala.util.Using.resource(Files.list(p))(_.iterator().asScala
+      .filter(f => keep(f.getFileName.toString)).toSeq.sorted)
+
+  /** The `__cdc=<kind>` dirs that version `v` recorded under `_cdf/<v>`. */
+  private def kindDirs(root: String, t: String, v: Long) =
+    entries(java.nio.file.Paths.get(root, t, "_cdf", v.toString), _.startsWith("__cdc="))
+
+  test("a bucketed feed-on commit writes one change file per kind and " +
+      "one file per new data leaf") {
+    val root = Files.createTempDirectory("cdfcount").toString
+    val ts = new TableStore(spark, root)
+    ts.createBucketed("t", (1L to 2000L).map(i => (i, s"a$i")).toDF("id", "v"),
+      Seq("id"), n = 16)
+    ts.setChangeFeed("t", true)
+    def commitFiles(kinds: Set[String])(op: => Unit): Unit = {
+      val before = ts.liveDirs("t").toSet
+      op
+      val v = ts.currentVersion("t")
+      val recorded = kindDirs(root, "t", v)
+      assert(recorded.map(_.getFileName.toString.stripPrefix("__cdc=")).toSet === kinds)
+      recorded.foreach { k =>
+        assert(entries(k, _.startsWith("__b=")).isEmpty, s"bucket dirs under $k")
+        assert(entries(k, _.endsWith(".parquet")).size === 1, s"files under $k")
+      }
+      val added = ts.liveDirs("t").filterNot(before)
+      assert(added.nonEmpty && added.forall(_.contains("/__b=")), added)
+      added.foreach(d => assert(
+        entries(ts.dataRoot("t").resolve(d), _.endsWith(".parquet")).size === 1,
+        s"files in new leaf $d"))
+    }
+    commitFiles(Set("insert", "update_preimage", "update_postimage")) {
+      ts.mergeUpsert("t", (1990L to 2100L).map(i => (i, s"m$i")).toDF("id", "v"),
+        Seq("id"), changeTypeCol = None)
+    }
+    commitFiles(Set("update_preimage", "update_postimage")) {
+      ts.updateVectorized("t", col("id") % 100 === 0L, Map("v" -> lit("u")))
+    }
+  }
+
+  test("change readers read a bucketed table's old nested change layout " +
+      "next to the flat one, row for row") {
+    import org.apache.spark.sql.streaming.Trigger
+    type Row4 = (Long, String, String, Long)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[Row4] =
+      df.select("id", "v", "_change_type", "_commit_version")
+        .as[(Long, String, String, Long)]
+        .collect().toSeq.sortBy(r => (r._4, r._3, r._1, r._2))
+    val root = Files.createTempDirectory("cdfnested").toString
+    spark.conf.set("spark.sql.catalog.gcnl", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gcnl.root", root)
+    val ts = new TableStore(spark, root)
+    ts.createBucketed("t", (1L to 200L).map(i => (i, s"a$i")).toDF("id", "v"),
+      Seq("id"), n = 4)
+    ts.setChangeFeed("t", true)
+    val v0 = ts.currentVersion("t")
+    ts.mergeUpsert("t", (150L to 260L by 2L).map(i => (i, s"m$i")).toDF("id", "v"),
+      Seq("id"), changeTypeCol = None)
+    val old = ts.currentVersion("t")
+    val oldRows = sorted(ts.readChangesBetween("t", v0, old))
+    // the layout an older writer recorded on a bucketed table: each
+    // change file (and its .crc) one level down, under a bucket leaf
+    kindDirs(root, "t", old).foreach { k =>
+      entries(k, _.endsWith(".parquet")).zipWithIndex.foreach { case (f, i) =>
+        val leaf = Files.createDirectories(k.resolve(s"__b=$i"))
+        val crc = k.resolve(s".${f.getFileName}.crc")
+        (f +: Seq(crc).filter(Files.exists(_))).foreach(e =>
+          Files.move(e, leaf.resolve(e.getFileName)))
+      }
+    }
+    ts.deleteVectorized("t", col("id") % 5 === 0L)
+    ts.mergeUpsert("t", (1L to 40L by 3L).map(i => (i, s"n$i")).toDF("id", "v"),
+      Seq("id"), changeTypeCol = None)
+    val last = ts.currentVersion("t")
+    // old version nested, later ones flat
+    val oldKinds = kindDirs(root, "t", old)
+    assert(oldKinds.nonEmpty && oldKinds.forall(k =>
+      entries(k, _.endsWith(".parquet")).isEmpty && entries(k, _.startsWith("__b=")).nonEmpty))
+    (old + 1 to last).foreach(v => kindDirs(root, "t", v).foreach(k =>
+      assert(entries(k, _.startsWith("__b=")).isEmpty, s"bucket dirs under $k")))
+
+    val lib = sorted(ts.readChangesBetween("t", v0, last))
+    assert(lib.map(_._4).toSet === (old to last).toSet)
+    assert(sorted(ts.readChangesBetween("t", v0, old)) === oldRows)
+    assert(lib.filter(_._4 == old) === oldRows)
+    assert(sorted(spark.read.option("startVersion", v0.toString)
+      .table("gcnl.t.changes")) === lib)
+    val streamed = scala.collection.mutable.Buffer.empty[Row4]
+    spark.readStream.option("startVersion", v0.toString).table("gcnl.t.changes")
+      .writeStream.trigger(Trigger.AvailableNow())
+      .foreachBatch { (feed: org.apache.spark.sql.DataFrame, _: Long) =>
+        streamed ++= sorted(feed): Unit
+      }.start().awaitTermination()
+    assert(streamed.toSeq.sortBy(r => (r._4, r._3, r._1, r._2)) === lib)
   }
 
   test("streaming change feed delivers updates/deletes per commit") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -349,6 +351,26 @@ class GraftCatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("a bucketed SQL INSERT from many partitions lands one file per " +
+      "leaf, written by one task") {
+    val st = store // registers the catalog
+    spark.sql("CREATE TABLE graft.ins_b (id BIGINT, v STRING) PARTITIONED BY (bucket(16, id))")
+    spark.sql("INSERT INTO graft.ins_b SELECT id, CAST(id AS STRING) FROM range(0, 2000, 1, 8)")
+    assert(spark.sql("SELECT count(*) FROM graft.ins_b").head().getLong(0) === 2000)
+    val leaves = st.liveDirs("ins_b")
+    assert(leaves.size === 16 && leaves.forall(_.contains("/__b=")), leaves)
+    val files = leaves.map(l => scala.util.Using.resource(
+        Files.list(st.dataRoot("ins_b").resolve(l)))(
+      _.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).toSeq))
+    assert(files.forall(_.size == 1), files)
+    // part-<partition>-<task>.parquet: the clustering requests no
+    // partition count, so adaptive execution packs the small buckets
+    // of a 2,000-row insert into one write task
+    val writers = files.flatten.map(_.split('-')(1)).distinct
+    assert(writers.size === 1, files)
+  }
+
   test("row-level ops with non-pushable predicates stay correct (fallback)") {
     // an expression condition (id % 2 = 0) is not translatable for the
     // DELETE pushdown and gives the runtime group filter nothing exact
@@ -444,11 +466,12 @@ class GraftCatalogSpec extends AnyFunSuite {
   test(".changes over a BUCKETED table's recorded merge CDC matches the " +
       "library read (regression: bucket-nested _cdf files were invisible " +
       "to the SQL/stream surface)") {
-    // a mergeUpsert on a bucketed CDF table writes its change rows under
-    // __cdc=<kind>/__b=<bucket>/ — one level deeper than the flat layout;
-    // the file-group lister must recurse or the SQL `.changes` read (and
-    // every `.changes` STREAM batch) silently returns ZERO rows while
-    // readChangesBetween sees them all (found by st20, r12)
+    // a mergeUpsert on a bucketed CDF table writes its change rows flat
+    // under __cdc=<kind>/, but an older writer nested them one level
+    // deeper (__cdc=<kind>/__b=<bucket>/): the file-group lister recurses
+    // so the SQL `.changes` read (and every `.changes` STREAM batch)
+    // reads both layouts, never ZERO rows where readChangesBetween sees
+    // them all (ChangeFeedSpec reads the nested layout next to the flat)
     import org.apache.spark.sql.functions.col
     val ts = store
     ts.createBucketed("bcdc",
