@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.types._
@@ -39,6 +41,14 @@ object DirStats {
   // immutable instance (footer reads never mutate it)
   private lazy val hadoopConf = new Configuration()
 
+  /** One Parquet file's footer. The read options come from the shared
+    * conf: opened without them, the reader builds them on a fresh
+    * Configuration, which parses the XML resources on every open. */
+  def footer(file: String): ParquetMetadata =
+    Using.resource(ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file), hadoopConf),
+      HadoopReadOptions.builder(hadoopConf).build()))(_.getFooter)
+
   /** Per-file row counts for one data dir (footer reads only) — row
     * tracking assigns each file's base row id from these. Sorted by
     * file name so base assignment is deterministic. */
@@ -50,10 +60,7 @@ object DirStats {
         .sortBy(_.getFileName.toString)
     import scala.collection.parallel.CollectionConverters._
     files.par.map { f =>
-      val rows = Using.resource(ParquetFileReader.open(
-        HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), hadoopConf)))(
-        _.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
+      val rows = footer(f.toString).getBlocks.asScala.map(_.getRowCount).sum
       f.getFileName.toString -> rows
     }.seq
   }
@@ -77,11 +84,7 @@ object DirStats {
     // footer reads are independent metadata fetches — do them in parallel
     // (commit latency on a 32-bucket write is otherwise 32 serial opens)
     import scala.collection.parallel.CollectionConverters._
-    val footers = files.par.map { f =>
-      Using.resource(ParquetFileReader.open(
-        HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), hadoopConf)))(_.getFooter)
-    }.seq
+    val footers = files.par.map(f => footer(f.toString)).seq
     var rows = 0L
     // per column: (min, max, nulls, reliable) — reliable drops to false
     // the moment any row group lacks usable stats for that column.

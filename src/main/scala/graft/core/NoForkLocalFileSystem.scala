@@ -1,10 +1,12 @@
 package graft.core
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's checksummed local file system (`.crc` files kept) over
@@ -25,7 +27,25 @@ object NoForkLocalFileSystem {
   def install(conf: Configuration): Unit = {
     conf.set("fs.file.impl", classOf[NoForkLocalFileSystem].getName)
     conf.setBoolean("fs.file.impl.disable.cache", true)
+    // what `FileContext` (Spark's streaming checkpoint) opens; not cached
+    conf.set("fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
   }
+}
+
+/** `FileContext`'s `file:` system, as Hadoop's `LocalFs` (checksummed,
+  * `.crc` files kept) but over [[NoForkRawLocalFileSystem]]. */
+class NoForkLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new NoForkRawLocalFs(conf))
+
+/** Hadoop's `RawLocalFs` (whose constructors are package-private) over
+  * [[NoForkRawLocalFileSystem]]. */
+class NoForkRawLocalFs(conf: Configuration)
+    extends DelegateToFileSystem(FsConstants.LOCAL_FS_URI, new NoForkRawLocalFileSystem,
+      conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+  // the OS validates local names, as in RawLocalFileSystem
+  override def isValidName(src: String): Boolean = true
 }
 
 /** `RawLocalFileSystem` whose `setPermission` sets the same mode bits

@@ -54,6 +54,10 @@ object TableStore {
     def expr: Column = pmod(hash(keys.map(col): _*), lit(n))
   }
 
+  /** The codec of every Parquet file the engine writes, through the
+    * store and through the SQL and streaming writers alike. */
+  val ParquetCodec = "zstd"
+
   /** Run `body`, rethrowing a failed guard — an `assert_true(cond,
     * message)` evaluated in a task, whose message reaches the driver
     * buried in a SparkException's cause chain — as an
@@ -680,13 +684,11 @@ class TableStore(spark: SparkSession, root: String) {
         // leaf dir per bucket; __b derives from the keys so it is
         // not stored in the files and never needs recovering.
         // (__b computes from LOGICAL keys, before the physical rename)
-        bucketShuffle(d.withColumn("__b", b.expr)
-          .select(physCols ++ extraPhys :+ col("__b"): _*))
-          .write.mode("overwrite").partitionBy("__b").parquet(target.toString)
+        writeParquet(bucketShuffle(d.withColumn("__b", b.expr)
+          .select(physCols ++ extraPhys :+ col("__b"): _*)), target, "__b")
         leafNames(target).map(l => s"$batch/$l")
       case None =>
-        sizedForWrite(d.select(physCols ++ extraPhys: _*))
-          .write.mode("overwrite").parquet(target.toString)
+        writeParquet(sizedForWrite(d.select(physCols ++ extraPhys: _*)), target)
         Seq(batch)
     }
     onStep("batch-written")
@@ -700,6 +702,15 @@ class TableStore(spark: SparkSession, root: String) {
     * coalesces small buckets into few tasks: a 16-bucket commit of a
     * few thousand rows is one write task, not 16. */
   private def bucketShuffle(d: DataFrame): DataFrame = d.repartition(col("__b"))
+
+  /** Every Parquet file this store writes (data, change files, DV
+    * sidecars, rewrites) goes through here, zstd-compressed at parquet's
+    * default level. The codec is set on the write, never on the session,
+    * so the caller's own writes keep theirs; readers decode any codec
+    * per file, so older snappy or uncompressed files stay readable. */
+  private def writeParquet(d: DataFrame, target: Path, partitionBy: String*): Unit =
+    d.write.mode("overwrite").option("compression", TableStore.ParquetCodec)
+      .partitionBy(partitionBy: _*).parquet(target.toString)
 
   /** The `<prefix><k>` leaf dirs a partitioned write laid out under
     * `batch` (bucket leaves by default), by name, sorted — none when the
@@ -754,16 +765,19 @@ class TableStore(spark: SparkSession, root: String) {
     * rows. A 100 TB append estimates >= the cluster's parallelism and
     * is left untouched; Catalyst's sizeInBytes only OVERestimates
     * under joins, which degrades to the status quo. */
-  private def sizedForWrite(d: DataFrame): DataFrame = {
+  private def sizedForWrite(d: DataFrame): DataFrame =
+    filesFor(d.queryExecution.optimizedPlan.stats.sizeInBytes).fold(d)(d.repartition(_))
+
+  /** How many ~128 MB (`graft.write.targetFileBytes`) files `bytes`
+    * fill, when that is fewer than the cluster's parallelism; None when
+    * it is not, or the estimate is unknown. */
+  private def filesFor(bytes: BigInt): Option[Int] = {
     val targetBytes = spark.conf.getOption("graft.write.targetFileBytes")
       .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    val est = d.queryExecution.optimizedPlan.stats.sizeInBytes
     val wanted =
-      if (!est.isValidLong || est <= 0L) Long.MaxValue
-      else math.max(1L, (est.toLong + targetBytes - 1) / targetBytes)
-    if (wanted < spark.sparkContext.defaultParallelism)
-      d.repartition(wanted.toInt)
-    else d
+      if (!bytes.isValidLong || bytes <= 0L) Long.MaxValue
+      else math.max(1L, (bytes.toLong + targetBytes - 1) / targetBytes)
+    if (wanted < spark.sparkContext.defaultParallelism) Some(wanted.toInt) else None
   }
 
   /** [[writeBatch]]'s sizing for a frame written under `m`'s layout
@@ -1412,8 +1426,14 @@ class TableStore(spark: SparkSession, root: String) {
           .select(col("__dv_relpath").as("relpath"), col("__dv_pos").as("pos"))
           .withColumn("dir", dirOf("relpath"))
           .select("dir", "relpath", "pos"))
-    combined.sortWithinPartitions("relpath", "pos")
-      .write.mode("overwrite").parquet(dvRoot(name).resolve(dvName).toString)
+    // sized to its bytes (the tombstone count is known; rows at their
+    // default width), not to the staged rows' partitioning. The staging
+    // is persisted (or a few small staged files), so a coalesce does it
+    // where a shuffle would add a job
+    val tombstones = perDir.values.sum + priorDvd.map(m.dvs(_).deleted).sum
+    val sized = filesFor(BigInt(tombstones) * combined.schema.defaultSize)
+      .fold(combined)(combined.coalesce(_))
+    writeParquet(sized.sortWithinPartitions("relpath", "pos"), dvRoot(name).resolve(dvName))
     onStep("dv-written")
     perDir.map { case (d, n) =>
       d -> DvRef(dvName, m.dvs.get(d).map(_.deleted).getOrElse(0L) + n)
@@ -2159,10 +2179,9 @@ class TableStore(spark: SparkSession, root: String) {
     // so each leaf dir holds one contiguous range of the clustering key
     val keepRid = // id-preserving rewrite: materialize resolved ids
       if (clustered.columns.contains(RidCol)) Seq(col(RidCol)) else Nil
-    clustered
+    writeParquet(clustered
       .select(m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ keepRid :+
-        spark_partition_id().as("__r"): _*)
-      .write.mode("overwrite").partitionBy("__r").parquet(target.toString)
+        spark_partition_id().as("__r"): _*), target, "__r")
     val leaves = leafNames(target, prefix = "__r=").map(l => s"$batch/$l")
     (leaves, collectStats(name, m, leaves))
   }
@@ -3276,7 +3295,7 @@ class TableStore(spark: SparkSession, root: String) {
         .withColumn("__cdc", lit("delete")))
       // insert rows null-fill __rid (ids only exist after the commit)
       (deletes ++ inserts).reduceOption(_.unionByName(_, allowMissingColumns = true))
-        .foreach(_.write.mode("overwrite").partitionBy("__cdc").parquet(cdfDir.toString))
+        .foreach(writeParquet(_, cdfDir, "__cdc"))
     }
     val dropped = tomb.fold(Set.empty[String])(_.dropped)
     commitWithCdf(name, v, m.copy(dirs = m.dirs.filterNot(dropped) ++ newDirs,
@@ -3570,9 +3589,8 @@ class TableStore(spark: SparkSession, root: String) {
     // cols, never stored); checks run on LOGICAL names first
     val physCols = meta.schema.map(f => col(f.name).as(meta.phys(f.name))) ++
       ridOf(exploded)
-    enforceChecks(toWrite, meta.allChecks)
-      .select(col("__cdc") +: physCols ++: parts.drop(1).map(col): _*)
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(staging.toString)
+    writeParquet(enforceChecks(toWrite, meta.allChecks)
+      .select(col("__cdc") +: physCols ++: parts.drop(1).map(col): _*), staging, parts: _*)
     val batch = f"b$v%09d-$uuid"
     val target = dataRoot(name).resolve(batch)
     val curStaged = staging.resolve("__cdc=current")

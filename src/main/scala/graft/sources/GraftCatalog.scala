@@ -405,7 +405,7 @@ class GraftSqlTable(root: String, tableName: String,
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
 
   /** INSERT INTO (append) / INSERT OVERWRITE (truncate) via the
-    * parquet-mr executor writers + one manifest version bump; streaming
+    * executors' Spark Parquet writers + one manifest version bump; streaming
     * writes (writeStream.toTable) take the exactly-once epoch path. */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {

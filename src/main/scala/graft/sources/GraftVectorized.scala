@@ -124,11 +124,7 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
   }
 
   private def footerSchema(): org.apache.parquet.schema.MessageType =
-    scala.util.Using.resource(
-      org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(file), GraftParquet.newConf())))(
-      _.getFooter.getFileMetaData.getSchema)
+    graft.core.DirStats.footer(file).getFileMetaData.getSchema
 
   private val reader: VectorizedParquetRecordReader = {
     // DECIMAL predicates translate to unscaled longs AT THE LOGICAL

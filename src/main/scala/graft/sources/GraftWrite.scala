@@ -3,22 +3,23 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.TableStore
 
 /** DSv2 write path: INSERT INTO (append) and INSERT OVERWRITE
-  * (truncate+append) over TableStore. Executors write plain parquet
-  * files via parquet-mr into a fresh `data/sq<uuid>` dir; the driver's
+  * (truncate+append) over TableStore. Executors write zstd Parquet
+  * files through Spark's Parquet writer ([[GraftParquetOut]]) into a
+  * fresh `data/sq<uuid>` dir; the driver's
   * commit attaches that dir to the manifest in one atomic version bump —
   * a failed/aborted write leaves an orphan dir that no manifest
   * references (invisible to readers, GC-able), so the commit protocol
@@ -180,7 +181,7 @@ class GraftStreamingWrite(root: String, table: String, schema: StructType,
   private val scratch = Paths.get(root, table, ".stream-scratch")
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftStreamingWriterFactory(scratch.toString, schema, bucketing)
+    new GraftStreamingWriterFactory(scratch.toString, GraftParquet.prepare(schema), bucketing)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.flatMap {
@@ -210,8 +211,8 @@ case class GraftFileMessage(path: String) extends WriterCommitMessage
 case class GraftFilesMessage(paths: Seq[String]) extends WriterCommitMessage
 
 /** Executor-side factory for streaming epochs (serializable — carries
-  * only the scratch path, schema, and bucket layout). */
-class GraftStreamingWriterFactory(scratch: String, schema: StructType,
+  * only the scratch path, the prepared writer, and bucket layout). */
+class GraftStreamingWriterFactory(scratch: String, out: GraftParquetOut,
                                   bucketing: Option[(Seq[String], Int)] = None)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
@@ -220,10 +221,9 @@ class GraftStreamingWriterFactory(scratch: String, schema: StructType,
       java.util.UUID.randomUUID.toString.take(8)
     bucketing match {
       case Some((keys, n)) =>
-        new GraftBucketedStreamWriter(base, schema, keys, n, partitionId, taskId)
+        new GraftBucketedStreamWriter(base, out, keys, n, partitionId, taskId)
       case None =>
-        new GraftDataWriter(base + ".parquet", schema,
-          rowLevel = false, reportFile = true)
+        new GraftDataWriter(base + ".parquet", out, rowLevel = false, reportFile = true)
     }
   }
 }
@@ -233,11 +233,11 @@ class GraftStreamingWriterFactory(scratch: String, schema: StructType,
   * maps to manifest bucket-leaf dirs — streaming into a bucketed table
   * KEEPS its layout (SPJ scans, key-driven merge pruning) instead of
   * silently demoting it to unbucketed until the next full compact. */
-class GraftBucketedStreamWriter(baseDir: String, schema: StructType,
+class GraftBucketedStreamWriter(baseDir: String, out: GraftParquetOut,
                                 keys: Seq[String], n: Int,
                                 partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
-  private val keyFields = GraftBucketHash.keyFields(schema, keys)
+  private val keyFields = GraftBucketHash.keyFields(out.schema, keys)
   private val open = scala.collection.mutable.HashMap[Int, (String, GraftDataWriter)]()
 
   override def write(row: InternalRow): Unit = {
@@ -249,7 +249,7 @@ class GraftBucketedStreamWriter(baseDir: String, schema: StructType,
       // one epoch write the same bucket, a shared part-0.parquet name
       // would collide at epoch commit and kill the query (r8 ADVICE)
       val p = s"$baseDir/__b=$b/part-$partitionId-$taskId.parquet"
-      (p, new GraftDataWriter(p, schema, rowLevel = false))
+      (p, new GraftDataWriter(p, out, rowLevel = false))
     })._2.write(row)
   }
 
@@ -299,8 +299,8 @@ class GraftBatchWrite(root: String, table: String, schema: StructType,
   private val batchDir = "sq" + java.util.UUID.randomUUID.toString.replace("-", "").take(16)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftDataWriterFactory(
-      Paths.get(root, table, "data", batchDir).toString, schema, rowLevel, bucketing)
+    new GraftDataWriterFactory(Paths.get(root, table, "data", batchDir).toString,
+      GraftParquet.prepare(schema), rowLevel, bucketing)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val store = new TableStore(SparkSession.active, root)
@@ -342,16 +342,16 @@ class GraftBatchWrite(root: String, table: String, schema: StructType,
     graft.core.FsUtil.deleteRecursively(Paths.get(root, table, "data", batchDir).toFile)
 }
 
-class GraftDataWriterFactory(dirPath: String, schema: StructType,
+class GraftDataWriterFactory(dirPath: String, out: GraftParquetOut,
                              rowLevel: Boolean,
                              bucketing: Option[(Seq[String], Int)] = None)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     bucketing match {
       case Some((keys, n)) =>
-        new GraftBucketedDataWriter(dirPath, schema, keys, n, partitionId, taskId)
+        new GraftBucketedDataWriter(dirPath, out, keys, n, partitionId, taskId)
       case None =>
-        new GraftDataWriter(s"$dirPath/part-$partitionId-$taskId.parquet", schema, rowLevel)
+        new GraftDataWriter(s"$dirPath/part-$partitionId-$taskId.parquet", out, rowLevel)
     }
 }
 
@@ -362,17 +362,17 @@ class GraftDataWriterFactory(dirPath: String, schema: StructType,
   * leaves always agree with the layout merges and SPJ scans assume.
   * With the write's requested clustering each task sees one bucket
   * (or a few), so the batch lands as ~n files total. */
-class GraftBucketedDataWriter(dirPath: String, schema: StructType,
+class GraftBucketedDataWriter(dirPath: String, out: GraftParquetOut,
                               keys: Seq[String], n: Int,
                               partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
-  private val keyFields = GraftBucketHash.keyFields(schema, keys)
+  private val keyFields = GraftBucketHash.keyFields(out.schema, keys)
   private val open = scala.collection.mutable.HashMap[Int, GraftDataWriter]()
 
   override def write(row: InternalRow): Unit = {
     val b = GraftBucketHash.bucketOf(row, keyFields, 0, n)
     open.getOrElseUpdate(b, new GraftDataWriter(
-      s"$dirPath/__b=$b/part-$partitionId-$taskId.parquet", schema,
+      s"$dirPath/__b=$b/part-$partitionId-$taskId.parquet", out,
       rowLevel = false)).write(row)
   }
 
@@ -384,72 +384,55 @@ class GraftBucketedDataWriter(dirPath: String, schema: StructType,
   override def close(): Unit = open.values.foreach(_.close())
 }
 
+/** Spark's Parquet writer for one schema, prepared once on the driver:
+  * the `OutputWriterFactory` that `ParquetUtils.prepareWrite` returns
+  * (the call Spark's own `ParquetFileFormat.prepareWrite` makes) and the
+  * Hadoop conf it filled in, which travel to the executors inside the
+  * writer factories. */
+final class GraftParquetOut(val schema: StructType, factory: OutputWriterFactory,
+                            conf: SerializableConfiguration) extends Serializable {
+  // one per deserialized copy, shared by the task's files like Spark's
+  // own writers share theirs
+  @transient private lazy val ctx = new TaskAttemptContextImpl(conf.value,
+    new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
+
+  def open(file: String): OutputWriter = factory.newInstance(file, schema, ctx)
+}
+
 object GraftParquet {
-  /** StructType -> parquet MessageType for the engine's flat data model
-    * (SURVEY §1.2): all fields optional, INT64-micros timestamps. */
-  def messageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      def prim(t: PrimitiveTypeName, ann: LogicalTypeAnnotation = null): Unit = {
-        val built = if (ann != null) Types.optional(t).as(ann).named(f.name)
-                    else Types.optional(t).named(f.name)
-        b.addField(built): Unit
-      }
-      f.dataType match {
-        case LongType => prim(INT64)
-        case IntegerType => prim(INT32)
-        case DoubleType => prim(DOUBLE)
-        case FloatType => prim(FLOAT)
-        case BooleanType => prim(BOOLEAN)
-        case StringType => prim(BINARY, LogicalTypeAnnotation.stringType())
-        case TimestampType =>
-          prim(INT64, LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case TimestampNTZType =>
-          prim(INT64, LogicalTypeAnnotation.timestampType(false,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case DateType => prim(INT32, LogicalTypeAnnotation.dateType())
-        // Spark's parquet convention: unscaled INT32 up to precision 9,
-        // INT64 up to 18 (the reference's DECIMAL(10,2) amounts —
-        // bronze/dags/bronze_full_refresh_dag.py:34-36). Wider decimals
-        // are outside the engine's flat data model.
-        case d: DecimalType if d.precision <= 9 =>
-          prim(INT32, LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-        case d: DecimalType if d.precision <= 18 =>
-          prim(INT64, LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-        case other => throw new UnsupportedOperationException(
-          s"type $other (flat schemas only)")
-      }
-    }
-    b.named("graft_row")
+  /** Prepare `schema`'s writer under the session's SQL and Hadoop confs
+    * (so the store's `file:` system reaches these writes too), with
+    * INT64-micros timestamps, the columnar reader reads no INT96, and
+    * the store's codec. */
+  def prepare(schema: StructType): GraftParquetOut = {
+    val spark = SparkSession.active
+    val sqlConf = spark.sessionState.conf.clone()
+    sqlConf.setConfString("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map("compression" -> TableStore.ParquetCodec), sqlConf))
+    new GraftParquetOut(schema, factory, new SerializableConfiguration(job.getConfiguration))
   }
 
   // Hadoop Configuration construction parses the default XML resources —
   // ~10 ms a pop, paid per file open; copy from one parsed template
   // instead (the copy constructor clones properties without re-parsing).
   // The template is never mutated after init; each copy is private to
-  // its reader/writer and safe to mutate.
+  // its reader and safe to mutate.
   private lazy val confTemplate = new Configuration()
   private[sources] def newConf(): Configuration = new Configuration(confTemplate)
 }
 
-class GraftDataWriter(file: String, schema: StructType, rowLevel: Boolean,
+class GraftDataWriter(file: String, out: GraftParquetOut, rowLevel: Boolean,
                       reportFile: Boolean = false)
     extends DataWriter[InternalRow] {
 
   Files.createDirectories(Paths.get(file).getParent)
-  private val msgType = GraftParquet.messageType(schema)
-  private val factory = new SimpleGroupFactory(msgType)
-  // fields hoisted once: the write loop below is the hottest path of
-  // bulk INSERT — no per-row tuple allocation, and index-based
-  // Group.add (messageType preserves schema order, so parquet field i
-  // IS schema field i) instead of a per-cell linear name lookup
-  private val fields: Array[StructField] = schema.fields
-  private val writer = ExampleParquetWriter
-    .builder(new org.apache.hadoop.fs.Path(file))
-    .withType(msgType)
-    .withConf(GraftParquet.newConf())
-    .build()
+  private val width = out.schema.length
+  private val writer = out.open(file)
+  /** A row-level row's data columns, past its leading marker column. */
+  private lazy val dataOf = UnsafeProjection.create(out.schema.fields.toSeq.zipWithIndex
+    .map { case (f, i) => BoundReference(i + 1, f.dataType, nullable = true) })
 
   override def write(row: InternalRow): Unit = {
     // group-based row-level operations (SQL UPDATE / MERGE INTO) prepend
@@ -462,36 +445,15 @@ class GraftDataWriter(file: String, schema: StructType, rowLevel: Boolean,
     //  - plain INSERT writes carry EXACTLY the data columns (off == 0);
     //  - Spark 4.x group-based ReplaceData prepends at most the one
     //    internal row-operation marker (off <= 1).
-    val off = row.numFields - schema.length
+    val off = row.numFields - width
     if (rowLevel)
       require(off == 0 || off == 1,
         s"unexpected ReplaceData row layout: ${row.numFields} fields for " +
-          s"${schema.length} columns (expected 0 or 1 leading metadata cols)")
+          s"$width columns (expected 0 or 1 leading metadata cols)")
     else
       require(off == 0,
-        s"INSERT row has ${row.numFields} fields for ${schema.length} columns")
-    val g = factory.newGroup()
-    var i0 = 0
-    while (i0 < fields.length) {
-      val i = off + i0
-      if (!row.isNullAt(i)) fields(i0).dataType match {
-        case LongType => g.add(i0, row.getLong(i))
-        case IntegerType => g.add(i0, row.getInt(i))
-        case DoubleType => g.add(i0, row.getDouble(i))
-        case FloatType => g.add(i0, row.getFloat(i))
-        case BooleanType => g.add(i0, row.getBoolean(i))
-        case StringType =>
-          g.add(i0, Binary.fromString(row.getUTF8String(i).toString))
-        case TimestampType | TimestampNTZType => g.add(i0, row.getLong(i))
-        case DateType => g.add(i0, row.getInt(i))
-        case d: DecimalType =>
-          val u = row.getDecimal(i, d.precision, d.scale).toUnscaledLong
-          if (d.precision <= 9) g.add(i0, u.toInt) else g.add(i0, u)
-        case other => throw new UnsupportedOperationException(s"type $other")
-      }
-      i0 += 1
-    }
-    writer.write(g)
+        s"INSERT row has ${row.numFields} fields for $width columns")
+    writer.write(if (off == 0) row else dataOf(row))
   }
 
   override def commit(): WriterCommitMessage = {
@@ -542,7 +504,8 @@ class GraftDeltaBatchWrite(root: String, table: String, physSchema: StructType,
     ".delta-" + java.util.UUID.randomUUID.toString.replace("-", "").take(16))
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-    new GraftDeltaWriterFactory(scratch.toString, physSchema, bucketing)
+    new GraftDeltaWriterFactory(scratch.toString, GraftParquet.prepare(physSchema),
+      GraftParquet.prepare(GraftDeltaWriter.DelSchema), bucketing)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val ms = messages.collect { case m: GraftDeltaMessage => m }
@@ -557,24 +520,28 @@ class GraftDeltaBatchWrite(root: String, table: String, physSchema: StructType,
     graft.core.FsUtil.deleteRecursively(scratch.toFile)
 }
 
-class GraftDeltaWriterFactory(scratch: String, physSchema: StructType,
+class GraftDeltaWriterFactory(scratch: String, ins: GraftParquetOut, del: GraftParquetOut,
                               bucketing: Option[(Seq[String], Int)] = None)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(scratch, physSchema, bucketing, partitionId, taskId)
+    new GraftDeltaWriter(scratch, ins, del, bucketing, partitionId, taskId)
+}
+
+object GraftDeltaWriter {
+  /** A staged tombstone: manifest-relative file path and row position. */
+  val DelSchema: StructType = StructType(Seq(
+    StructField("relpath", StringType), StructField("pos", LongType)))
 }
 
 /** Executor side: tombstones buffer to a (relpath, pos) parquet,
   * inserted rows stream through a plain [[GraftDataWriter]]. The id
   * row carries the operation's rowId = (`_file`, `_pos`). */
-class GraftDeltaWriter(scratch: String, physSchema: StructType,
+class GraftDeltaWriter(scratch: String, ins: GraftParquetOut, del: GraftParquetOut,
                        bucketing: Option[(Seq[String], Int)],
                        partitionId: Int, taskId: Long)
     extends DeltaWriter[InternalRow] {
 
-  private val delSchema = StructType(Seq(
-    StructField("relpath", StringType), StructField("pos", LongType)))
   private var delWriter: GraftDataWriter = _
   private def delFile = s"$scratch/del-$partitionId-$taskId.parquet"
   // unbucketed tables stream inserts to one file; bucketed tables route
@@ -585,7 +552,7 @@ class GraftDeltaWriter(scratch: String, physSchema: StructType,
   private def insFile = s"$scratch/ins-$partitionId-$taskId.parquet"
   private val insByBucket = scala.collection.mutable.HashMap[Int, GraftDataWriter]()
   private val keyFields =
-    GraftBucketHash.keyFields(physSchema, bucketing.map(_._1).getOrElse(Seq.empty))
+    GraftBucketHash.keyFields(ins.schema, bucketing.map(_._1).getOrElse(Seq.empty))
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     require(id.numFields == 2,
@@ -601,22 +568,20 @@ class GraftDeltaWriter(scratch: String, physSchema: StructType,
     if (cut < 0)
       throw new IllegalStateException(s"unexpected _file path: $file")
     val rel = file.substring(cut + "/data/".length)
-    if (delWriter == null) delWriter = new GraftDataWriter(delFile, delSchema,
-      rowLevel = false)
+    if (delWriter == null) delWriter = new GraftDataWriter(delFile, del, rowLevel = false)
     delWriter.write(InternalRow(
       org.apache.spark.unsafe.types.UTF8String.fromString(rel), pos))
   }
 
   override def insert(row: InternalRow): Unit = bucketing match {
     case Some((_, n)) =>
-      val off = row.numFields - physSchema.length
+      val off = row.numFields - ins.schema.length
       val b = GraftBucketHash.bucketOf(row, keyFields, off, n)
       insByBucket.getOrElseUpdate(b, new GraftDataWriter(
-        s"$scratch/ins/__b=$b/part-$partitionId-$taskId.parquet", physSchema,
+        s"$scratch/ins/__b=$b/part-$partitionId-$taskId.parquet", ins,
         rowLevel = true)).write(row)
     case None =>
-      if (insWriter == null) insWriter = new GraftDataWriter(insFile, physSchema,
-        rowLevel = true)
+      if (insWriter == null) insWriter = new GraftDataWriter(insFile, ins, rowLevel = true)
       insWriter.write(row)
   }
 

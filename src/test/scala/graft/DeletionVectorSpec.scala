@@ -211,6 +211,29 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(ts.read("t").as[(Long, String)].collect().toMap.apply(7L) === "W7")
   }
 
+  test("a small mark writes one sidecar file, sized to its bytes") {
+    val (ts, root) = fresh()
+    ts.createBucketed("t", (1L to 1000L).map(i => (i, i % 100, s"v$i"))
+      .toDF("id", "c", "v"), Seq("id"), 16)
+    (1 to 3).foreach(k => ts.append("t", (1L to 1000L).map(i => (k * 1000L + i, i % 100, s"v$i"))
+      .toDF("id", "c", "v")))
+    ts.setChangeFeed("t", true)
+    // 40 rows spread over every batch and bucket
+    ts.updateVectorized("t", col("c") === 7L && col("id") % 1000 < 400,
+      Map("v" -> lit("erased")))
+    assert(ts.read("t").filter(col("v") === "erased").count() === 16)
+    ts.updateVectorized("t", col("c") === 3L, Map("v" -> lit("erased")))
+    assert(ts.read("t").filter(col("v") === "erased").count() === 56)
+    val sidecars = Files.list(root.resolve("t").resolve("_dv")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("dv-")).toSeq
+    assert(sidecars.size === 2)
+    sidecars.foreach { s =>
+      val files = Files.list(s).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      assert(files.size === 1, s"$s: ${files.map(_.getFileName)}")
+    }
+  }
+
   test("CALL graft.system.update_vectorized drives it from SQL") {
     val root = Files.createTempDirectory("dvproc").toString
     spark.conf.set("spark.sql.catalog.gdvp", "graft.sources.GraftCatalog")

@@ -235,6 +235,37 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(agg.getDecimal(1).toString === "56.78")
   }
 
+  test("every column type the store accepts round-trips through SQL INSERT") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      "b" -> ByteType, "s" -> ShortType, "i" -> IntegerType, "l" -> LongType,
+      "f" -> FloatType, "d" -> DoubleType, "dec9" -> DecimalType(9, 2),
+      "dec18" -> DecimalType(18, 4), "dec38" -> DecimalType(38, 6),
+      "str" -> StringType, "bin" -> BinaryType, "bool" -> BooleanType,
+      "date" -> DateType, "ts" -> TimestampType, "ntz" -> TimestampNTZType,
+      "arr" -> ArrayType(IntegerType), "m" -> MapType(StringType, LongType),
+      "st" -> StructType(Seq(StructField("x", IntegerType), StructField("y", StringType))))
+      .map { case (n, t) => StructField(n, t) })
+    val rows = Seq(
+      Row(1.toByte, -2.toShort, 3, 4L << 40, 1.5f, -2.25,
+        new java.math.BigDecimal("1234567.89"), new java.math.BigDecimal("12345678901234.5678"),
+        new java.math.BigDecimal("12345678901234567890123456789012.345678"),
+        "héllo", Array[Byte](0, 1, -1), true, java.sql.Date.valueOf("2026-08-12"),
+        java.sql.Timestamp.valueOf("2026-08-12 10:30:00.123456"),
+        java.time.LocalDateTime.parse("2026-08-12T10:30:00.654321"),
+        Seq(1, 2, 3), Map("a" -> 1L, "b" -> 2L), Row(5, "y")),
+      Row.fromSeq(Seq.fill(schema.length)(null)))
+    val src = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+    store.createEmpty("alltypes", schema)
+    src.createOrReplaceTempView("alltypes_src")
+    spark.sql("INSERT INTO graft.alltypes SELECT * FROM alltypes_src")
+    def sorted(rs: Array[Row]) = rs.sortBy(_.isNullAt(0)).toSeq
+    val expected = sorted(src.collect())
+    assert(sorted(spark.sql("SELECT * FROM graft.alltypes").collect()) === expected)
+    assert(sorted(store.read("alltypes").collect()) === expected)
+  }
+
   test("_file metadata column names the producing parquet file") {
     store.create("fmeta", Seq((1L, "a")).toDF("id", "v"))
     store.append("fmeta", Seq((2L, "b")).toDF("id", "v"))

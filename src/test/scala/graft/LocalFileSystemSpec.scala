@@ -34,8 +34,40 @@ class LocalFileSystemSpec extends AnyFunSuite {
     } finally { rec.close(); Files.deleteIfExists(out): Unit }
   }
 
+  /** Runs `op`, then asserts it forked no `chmod` (and that the
+    * recording saw this JVM's processes at all). */
+  private def forksNoChmod(op: => Unit): Unit = {
+    val started = processesStartedBy {
+      op
+      // the recording sees processes this JVM starts
+      new ProcessBuilder("true").start().waitFor(): Unit
+    }
+    assert(started.exists(_.split(' ').head.endsWith("true")), started)
+    val chmods = started.filter(_.split(' ').head.endsWith("chmod"))
+    assert(chmods.isEmpty, s"${chmods.size} chmod forks, e.g. ${chmods.take(3)}")
+  }
+
   private def mode(p: Path): String =
     PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  /** `dir` and its first `suffix` file and that file's `.crc` carry the
+    * modes Hadoop's `chmod` gives them. */
+  private def assertHadoopModes(dir: Path, suffix: String = ".parquet"): Unit = {
+    val file = Using.resource(Files.list(dir))(_.iterator().asScala
+      .find(_.getFileName.toString.endsWith(suffix))).get
+    val crc = dir.resolve(s".${file.getFileName}.crc")
+    assert(mode(file) === "rw-r--r--")
+    assert(mode(crc) === "rw-r--r--")
+    assert(mode(dir) === "rwxr-xr-x")
+  }
+
+  private def catalogStore(prefix: String): (TableStore, String) = {
+    val root = Files.createTempDirectory(prefix).toString
+    val cat = s"graft_$prefix"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    (new TableStore(spark, root), cat)
+  }
 
   test("a bucketed feed-on write forks no chmod and keeps Hadoop's modes") {
     val ts = new TableStore(spark, Files.createTempDirectory("nofork").toString)
@@ -43,23 +75,34 @@ class LocalFileSystemSpec extends AnyFunSuite {
       Seq("id"), n = 16)
     ts.setChangeFeed("t", true)
     val before = ts.liveDirs("t").toSet
-    val started = processesStartedBy {
-      ts.mergeUpsert("t", (390L to 420L).map(i => (i, s"m$i")).toDF("id", "v"),
-        Seq("id"), changeTypeCol = None)
-      // the recording sees processes this JVM starts
-      new ProcessBuilder("true").start().waitFor(): Unit
-    }
-    assert(started.exists(_.split(' ').head.endsWith("true")), started)
-    val chmods = started.filter(_.split(' ').head.endsWith("chmod"))
-    assert(chmods.isEmpty, s"${chmods.size} chmod forks, e.g. ${chmods.take(3)}")
+    forksNoChmod(ts.mergeUpsert("t", (390L to 420L).map(i => (i, s"m$i")).toDF("id", "v"),
+      Seq("id"), changeTypeCol = None))
+    assertHadoopModes(ts.dataRoot("t").resolve(ts.liveDirs("t").filterNot(before).head))
+  }
 
-    val leaf = ts.dataRoot("t").resolve(ts.liveDirs("t").filterNot(before).head)
-    val file = Using.resource(Files.list(leaf))(_.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet"))).get
-    val crc = leaf.resolve(s".${file.getFileName}.crc")
-    assert(mode(file) === "rw-r--r--")
-    assert(mode(crc) === "rw-r--r--")
-    assert(mode(leaf) === "rwxr-xr-x")
+  test("a SQL INSERT into a bucketed table forks no chmod and keeps Hadoop's modes") {
+    val (ts, cat) = catalogStore("nofork_sql")
+    ts.createEmpty("t", Seq((1L, "a")).toDF("id", "v").schema, Some((Seq("id"), 16)))
+    spark.range(2000).selectExpr("id", "concat('v', id) AS v")
+      .createOrReplaceTempView("nofork_src")
+    forksNoChmod(spark.sql(s"INSERT INTO $cat.t SELECT * FROM nofork_src"): Unit)
+    assert(ts.read("t").count() === 2000)
+    assertHadoopModes(ts.dataRoot("t").resolve(ts.liveDirs("t").head))
+  }
+
+  test("an AvailableNow trigger's checkpoint forks no chmod and keeps Hadoop's modes") {
+    val (ts, cat) = catalogStore("nofork_stream")
+    ts.create("feed", (1L to 100L).map(i => (i, s"a$i")).toDF("id", "v"))
+    val ckpt = Files.createTempDirectory("nofork_ckpt")
+    forksNoChmod {
+      val q = spark.readStream.table(s"$cat.feed").writeStream.format("noop")
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      assert(q.awaitTermination(60000))
+    }
+    assertHadoopModes(ckpt.resolve("offsets"), suffix = "0")
+    assertHadoopModes(ckpt.resolve("commits"), suffix = "0")
   }
 
   test("the file system sets each mode Hadoop's chmod would, sticky bit " +

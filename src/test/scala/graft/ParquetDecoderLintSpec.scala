@@ -8,9 +8,18 @@ import scala.util.Using
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins Spark's vectorized reader (sources/GraftVectorized.scala) as the
-  * engine's one Parquet decoder: no main source may bring back a
-  * row-at-a-time parquet-mr reader beside it. */
+  * engine's one Parquet decoder and Spark's Parquet writer as its one
+  * encoder: no main source may bring back a row-at-a-time parquet-mr
+  * reader or writer beside them. */
 class ParquetDecoderLintSpec extends AnyFunSuite {
+
+  /** (file under src/main, text) of every main Scala source. */
+  private lazy val sources: List[(String, String)] = {
+    val src = Paths.get("src/main")
+    Using.resource(Files.walk(src))(_.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => src.relativize(p).toString -> Files.readString(p)).toList)
+  }
 
   test("no main source uses parquet-mr's row reader or its Group records") {
     // `pkg.Name`, or `Name` inside a `pkg.{...}` selector; the package
@@ -21,13 +30,46 @@ class ParquetDecoderLintSpec extends AnyFunSuite {
     val banned = Seq(
       ref(Seq("org", "apache", "parquet", "hadoop").mkString("."), "ParquetReader"),
       ref(Seq("org", "apache", "parquet", "example", "data").mkString("."), "Group"))
-    val src = Paths.get("src/main")
-    val hits = Using.resource(Files.walk(src))(_.iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        val text = Files.readString(p)
-        banned.flatMap(_.findFirstIn(text)).map(m => s"${src.relativize(p)}: $m")
-      }.toList)
+    val hits = sources.flatMap { case (f, text) =>
+      banned.flatMap(_.findFirstIn(text)).map(m => s"$f: $m")
+    }
+    assert(hits === Nil)
+  }
+
+  test("no main source uses parquet-mr's example writer or records") {
+    val banned = Seq(Seq("org", "apache", "parquet", "hadoop", "example"),
+      Seq("org", "apache", "parquet", "example"))
+      .map(pkg => (java.util.regex.Pattern.quote(pkg.mkString(".")) + raw"\b").r)
+    val hits = sources.flatMap { case (f, text) =>
+      banned.flatMap(_.findFirstIn(text)).map(m => s"$f: $m")
+    }
+    assert(hits === Nil)
+  }
+
+  test("no main source opens a Parquet file without read options") {
+    // `ParquetFileReader.open(file)` builds its read options on a fresh
+    // Hadoop Configuration, which parses the XML resources on every open
+    val call = (Seq("ParquetFileReader", "open").mkString(raw"\.") + raw"\(").r
+    /** Top-level arguments of the call whose `(` ends at `from`. */
+    def arity(text: String, from: Int): Int = {
+      var depth = 1
+      var commas = 0
+      var i = from
+      while (depth > 0 && i < text.length) {
+        text(i) match {
+          case '(' | '[' | '{' => depth += 1
+          case ')' | ']' | '}' => depth -= 1
+          case ',' if depth == 1 => commas += 1
+          case _ => ()
+        }
+        i += 1
+      }
+      commas + 1
+    }
+    val hits = sources.flatMap { case (f, text) =>
+      call.findAllMatchIn(text).filter(m => arity(text, m.end) == 1)
+        .map(m => s"$f: ${text.substring(m.start, (m.end + 60).min(text.length))}")
+    }
     assert(hits === Nil)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -307,8 +309,18 @@ class TableStoreSpec extends AnyFunSuite {
     assert(ts.read("t").count() === (10 + 11 + 5 + 4801))
     // small-file pass: the [1,10] dir and the folded dir are tiny, the
     // 4801-row dir is not — with a threshold between the two sizes only
-    // the small ones fold
-    val folded = ts.compactSmall("t", maxBytes = 20000L)
+    // the small ones fold. The line sits midway between the measured
+    // sizes, so it holds under any codec.
+    def dirBytes(d: String): Long = {
+      val files = Files.list(ts.dataRoot("t").resolve(d))
+      try files.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(Files.size).sum
+      finally files.close()
+    }
+    val big = dirBytes(before(3))
+    val small = after.filterNot(_ == before(3)).map(dirBytes).max
+    assert(small < big)
+    val folded = ts.compactSmall("t", maxBytes = (small + big) / 2)
     assert(folded === 2)
     assert(ts.liveDirs("t").size === 2)
     assert(ts.read("t").count() === (10 + 11 + 5 + 4801))
