@@ -33,7 +33,9 @@ object NoForkLocalFileSystem {
 }
 
 /** `FileContext`'s `file:` system, as Hadoop's `LocalFs` (checksummed,
-  * `.crc` files kept) but over [[NoForkRawLocalFileSystem]]. */
+  * `.crc` files kept) but over [[NoForkRawLocalFileSystem]]. Hadoop
+  * builds it through this (URI, Configuration) constructor and, like
+  * `LocalFs`, it ignores the URI: `file:` has one root. */
 class NoForkLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new NoForkRawLocalFs(conf))
 

@@ -402,7 +402,7 @@ final class GraftParquetOut(val schema: StructType, factory: OutputWriterFactory
 object GraftParquet {
   /** Prepare `schema`'s writer under the session's SQL and Hadoop confs
     * (so the store's `file:` system reaches these writes too), with
-    * INT64-micros timestamps, the columnar reader reads no INT96, and
+    * INT64-micros timestamps (the columnar reader reads no INT96) and
     * the store's codec. */
   def prepare(schema: StructType): GraftParquetOut = {
     val spark = SparkSession.active
