@@ -7,7 +7,7 @@ import scala.util.Using
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructType, TimestampNTZType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, Metadata, ShortType, StringType, StructField, StructType, TimestampNTZType}
 
 /** Versioned Parquet tables with atomic commit — the row-level mutation
   * layer (MERGE / UPDATE / DELETE / INSERT OVERWRITE / APPEND) that the
@@ -71,6 +71,27 @@ object TableStore {
         throw new IllegalArgumentException(message, e)
     }
 
+  /** The key a deletion vector records a row's file under: the file's
+    * path after the LAST `/data/` segment, i.e. its manifest dir entry
+    * and base name. The last one, so a store root that itself holds a
+    * `/data/` segment cannot shift every key. The `Column` form keys a
+    * scan's `_file` column, the `String` form a SQL delta writer's
+    * rowId. */
+  def relpath(file: Column): Column = substring_index(file, "/data/", -1)
+  def relpath(file: String): String = {
+    val cut = file.lastIndexOf("/data/")
+    if (cut < 0) throw new IllegalStateException(s"not a table data file: $file")
+    file.substring(cut + "/data/".length)
+  }
+
+  /** The rows of a tombstone file: a deleted row's file key
+    * ([[relpath]]) and its position in that file. The SQL delta writer
+    * stages them; a DV sidecar carries them under their manifest `dir`. */
+  val TombstoneSchema: StructType = StructType(Seq(
+    StructField("relpath", StringType), StructField("pos", LongType)))
+  private val SidecarSchema: StructType =
+    StructType(StructField("dir", StringType) +: TombstoneSchema.fields)
+
   /** Per-table-path monitor serializing `_LATEST` pointer moves for
     * every same-process writer, whatever TableStore instance they hold
     * (tests and the catalog routinely open several stores on one root).
@@ -133,8 +154,6 @@ object TableStore {
     def physSchema: StructType =
       if (colmap.isEmpty) schema
       else StructType(schema.map(f => f.copy(name = phys(f.name))))
-    /** Projection mapping a physical-named scan back to logical names. */
-    def logicalCols: Seq[Column] = schema.map(f => col(phys(f.name)).as(f.name))
     /** CHECK constraints plus the equality checks GENERATED columns
       * imply (`generated.<col>` props): every commit path validates
       * stored values against their generating expression. */
@@ -165,7 +184,9 @@ object TableStore {
                             bloomCols: Seq[String] = Nil,
                             dvs: Map[String, DvRef] = Map.empty,
                             colmap: Map[String, String] = Map.empty,
-                            props: Map[String, String] = Map.empty) {
+                            props: Map[String, String] = Map.empty,
+                            // per-FILE base row ids, keyed by relpath
+                            rowbase: Map[String, Long] = Map.empty) {
     /** Physical (in-file) name of a logical column (column mapping). */
     def phys(logical: String): String = colmap.getOrElse(logical, logical)
     /** Row tracking enabled (the `_row_id` metadata column exists). */
@@ -1259,15 +1280,32 @@ class TableStore(spark: SparkSession, root: String) {
     onStep("latest-published")
   }
 
-  private def scanDirs(dirs: Seq[String], name: String, schema: StructType): DataFrame =
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val paths = dirs.map(b => dir(name).resolve("data").resolve(b).toString)
-      // one multi-path scan, not a union of scans: keeps it a single
-      // FileSourceScanExec so filters/pruning apply once
-      spark.read.schema(schema).parquet(paths: _*)
-    }
+  /** The one read of table data: `dirs` under manifest `m` (its live
+    * dirs, a subset of them, or dirs a commit is about to link) as a
+    * DataFrame over the catalog's own Graft scan, built through
+    * [[graft.sources.GraftScanBuilder.forSnapshot]]. Deletion vectors,
+    * column mapping, stats pruning and COUNT/MIN/MAX from the manifest
+    * behave as on the SQL face, and the `_file`, `_pos` and `_row_id`
+    * metadata columns resolve by name ([[metaCol]]). Every internal
+    * reader of live table data goes through here, so merge, update and
+    * compact can never resurrect DV-deleted rows. */
+  private def scan(name: String, m: Manifest, dirs: Seq[String]): DataFrame = {
+    val dirSet = dirs.toSet
+    org.apache.spark.sql.graftshim.TableFrames.of(spark,
+      new graft.sources.GraftSnapshotTable(this, root, name,
+        Snapshot(m.baseVersion, m.schema, dirs, m.bucketing, m.stats, m.bloomCols,
+          m.dvs.view.filterKeys(dirSet).toMap, m.colmap, m.props, m.rowbase)))
+  }
+
+  /** A metadata column of a [[scan]] as a plain column named `as`. */
+  private def metaCol(c: String, as: String): Column = col(c).as(as, Metadata.empty)
+
+  /** A scanned row's identity as the mutation paths stage it: its
+    * file's DV key and its position in that file. */
+  private def positioned: Seq[Column] =
+    Seq(TableStore.relpath(col("_file")).as("__relpath"), metaCol("_pos", "__pos"))
+
+  private def logical(m: Manifest): Seq[Column] = m.schema.map(f => col(f.name))
 
   /** Time travel below the retention window must refuse LOUDLY, not
     * surface a bare NoSuchFileException from the manifest walk — the
@@ -1283,10 +1321,17 @@ class TableStore(spark: SparkSession, root: String) {
   def readVersion(name: String, v: Long): DataFrame = {
     requireVersionReadable(name, v)
     val m = readManifest(name, v)
-    scanLive(name, m, m.dirs)
+    scan(name, m, m.dirs)
   }
 
   def read(name: String): DataFrame = readVersion(name, currentVersion(name))
+
+  /** The table's live rows counted by decoding its files, where
+    * `read(name).count()` is answered from the manifest (stats rows
+    * minus DV tombstones): for checks that the manifest's bookkeeping
+    * matches the data, like a post-load count gate. */
+  def countDecoded(name: String): Long =
+    read(name).select(metaCol("_pos", "_pos")).rdd.count()
 
   /** Dir-pruned read for a PROBE JOIN: a SUPERSET of the table's rows
     * whose `cols` values appear in `probe` (callers keep their own
@@ -1314,7 +1359,7 @@ class TableStore(spark: SparkSession, root: String) {
     val v = version.getOrElse(currentVersion(name))
     requireVersionReadable(name, v)
     val m = readManifest(name, v)
-    scanLive(name, m, probeDirs(name, m, probe, cols, cap))
+    scan(name, m, probeDirs(name, m, probe, cols, cap))
   }
 
   /** [[readProbe]]'s dir selection, exposed for measurement: how many
@@ -1356,50 +1401,10 @@ class TableStore(spark: SparkSession, root: String) {
   /** Root of a table's deletion-vector sidecars. */
   def dvRoot(name: String): Path = dir(name).resolve("_dv")
 
-  /** `<dir>/<filename>` for a scanned row — the key deletion vectors
-    * are recorded under (matches the manifest dir entry + base name). */
-  private def relpathCol: Column =
-    substring_index(col("_metadata.file_path"), "/data/", -1)
-
   /** Manifest dir entry of a relpath: everything before the last '/'. */
   private def dirOf(c: String): Column =
     expr(s"substring($c, 1, length($c) - " +
       s"length(substring_index($c, '/', -1)) - 1)")
-
-  /** The (relpath, pos) rows of the given dirs' deletion vectors. */
-  private def dvRows(name: String, m: Manifest, dvDirs: Seq[String]): DataFrame = {
-    val paths = dvDirs.flatMap(d => m.dvs.get(d).map(_.path)).distinct
-      .map(p => dvRoot(name).resolve(p).toString)
-    spark.read.parquet(paths: _*)
-      .filter(col("dir").isin(dvDirs: _*))
-      .select(col("relpath").as("__dv_relpath"), col("pos").as("__dv_pos"))
-  }
-
-  /** Scan of live dirs with any deletion vectors APPLIED: dirs without
-    * DVs take the plain multi-path scan; DV'd dirs anti-join their
-    * (file, position) tombstones — the DV side is tiny (deleted rows
-    * only) so the anti-join broadcasts; pushdown/pruning on the main
-    * scan is unaffected. Every internal reader of live table data goes
-    * through here, so merge/update/compact can never resurrect
-    * DV-deleted rows. */
-  private def scanLive(name: String, m: Manifest, dirs: Seq[String]): DataFrame = {
-    val (dvd, clean) = dirs.partition(m.dvs.contains)
-    // files carry PHYSICAL names; the select maps back to logical (a
-    // no-op Project that Catalyst collapses when no column was renamed)
-    val cleanDf = scanDirs(clean, name, m.physSchema).select(m.logicalCols: _*)
-    if (dvd.isEmpty) cleanDf
-    else {
-      val schemaCols = m.schema.map(f => col(f.name))
-      val applied = scanDirs(dvd, name, m.physSchema)
-        .select(m.logicalCols :+ relpathCol.as("__relpath") :+
-          col("_metadata.row_index").as("__pos"): _*)
-        .join(broadcast(dvRows(name, m, dvd)),
-          col("__relpath") === col("__dv_relpath") && col("__pos") === col("__dv_pos"),
-          "left_anti")
-        .select(schemaCols: _*)
-      if (clean.isEmpty) applied else cleanDf.unionByName(applied)
-    }
-  }
 
   /** Write version v's deletion-vector sidecar `dv-<v>-<uuid>`: the
     * tombstones of `t`'s kept (not dropped) dirs merged with those
@@ -1421,11 +1426,10 @@ class TableStore(spark: SparkSession, root: String) {
     val priorDvd = perDir.keySet.toSeq.sorted.filter(m.dvs.contains)
     val combined =
       if (priorDvd.isEmpty) fresh
-      else fresh.unionByName(
-        dvRows(name, m, priorDvd)
-          .select(col("__dv_relpath").as("relpath"), col("__dv_pos").as("pos"))
-          .withColumn("dir", dirOf("relpath"))
-          .select("dir", "relpath", "pos"))
+      else fresh.unionByName(spark.read.schema(TableStore.SidecarSchema)
+        .parquet(priorDvd.map(m.dvs(_).path).distinct
+          .map(p => dvRoot(name).resolve(p).toString): _*)
+        .filter(col("dir").isin(priorDvd: _*)))
     // sized to its bytes (the tombstone count is known; rows at their
     // default width), not to the staged rows' partitioning. The staging
     // is persisted (or a few small staged files), so a coalesce does it
@@ -1518,15 +1522,14 @@ class TableStore(spark: SparkSession, root: String) {
                           withRid: Boolean, dropWhole: Boolean)(
       body: Option[Tombstones] => Unit): Unit = {
     val (touched, _) = pruneDirsByCondition(name, m, condition)
-    // a zero-dir scan has no file metadata to position against
     if (touched.isEmpty) return body(None)
-    val staged0 = scanLiveWithPos(name, m, touched, withRid)
+    val rid = if (withRid) Seq(metaCol("_row_id", RidCol)) else Nil
+    val staged = scan(name, m, touched).select(logical(m) ++ rid ++ positioned: _*)
       .filter(coalesce(condition, lit(false)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // unpersist in finally: a failed write or a lost commit race must
     // not leave the staged blocks pinned
     try {
-      val staged = if (!withRid) staged0 else resolveRid(staged0, m)
       val perDir = rowsPerDir(staged)
       val dropped =
         if (!dropWhole) Set.empty[String]
@@ -1538,57 +1541,8 @@ class TableStore(spark: SparkSession, root: String) {
           }.seq.toSet
         }
       body(if (perDir.isEmpty) None else Some(Tombstones(staged, perDir, dropped)))
-    } finally staged0.unpersist()
+    } finally staged.unpersist()
   }
-
-  /** Live scan of `dirs` with DVs applied AND position metadata kept
-    * (`__relpath`, `__pos`) — the input [[withMatches]] stages.
-    * With `withRid` the scan also surfaces the materialized `__rid`
-    * column row-tracking postimage files carry (null in files that
-    * predate tracking or were never rewritten — their ids derive from
-    * the manifest's per-file base instead). */
-  private def scanLiveWithPos(name: String, m: Manifest, dirs: Seq[String],
-                              withRid: Boolean = false): DataFrame = {
-    val schema =
-      if (!withRid) m.physSchema
-      else StructType(m.physSchema.fields :+
-        org.apache.spark.sql.types.StructField(RidCol, org.apache.spark.sql.types.LongType))
-    val extra =
-      if (!withRid) Seq.empty[Column] else Seq(col(RidCol))
-    val base = scanDirs(dirs, name, schema)
-      .select(m.logicalCols ++ extra :+ relpathCol.as("__relpath") :+
-        col("_metadata.row_index").as("__pos"): _*)
-    val dvd = dirs.filter(m.dvs.contains)
-    if (dvd.isEmpty) base
-    else base.join(broadcast(dvRows(name, m, dvd)),
-      col("__relpath") === col("__dv_relpath") && col("__pos") === col("__dv_pos"),
-      "left_anti")
-  }
-
-  /** Resolve each row's stable id into `__rid`: the materialized
-    * `__rid` a row-tracking postimage file carries when present, else
-    * the manifest's per-file base + file position. Input must carry
-    * `__relpath`/`__pos` (a [[scanLiveWithPos]] frame, or a staged
-    * copy of one). The base lookup broadcasts O(live files) rows. */
-  private def resolveRid(df: DataFrame, m: Manifest): DataFrame = {
-    val bases = spark.createDataFrame(
-      m.rowbase.toSeq.map(kv => (kv._1, kv._2)))
-      .toDF("__rb_relpath", "__rb_base")
-    val in = if (df.columns.contains(RidCol)) df
-             else df.withColumn(RidCol, lit(null).cast("long"))
-    in.join(broadcast(bases), col("__relpath") === col("__rb_relpath"), "left")
-      .withColumn(RidCol, coalesce(col(RidCol), col("__rb_base") + col("__pos")))
-      .drop("__rb_relpath", "__rb_base")
-  }
-
-  /** Live scan of `dirs` with every row's RESOLVED stable id attached
-    * as `__rid` — the input of every id-preserving rewrite (compact /
-    * optimize / copy-on-write mutations): the rewrite materializes the
-    * resolved ids into the new files, so the rows keep their identity
-    * across the physical move. Returns logical columns + `__rid`. */
-  private def scanLiveRid(name: String, m: Manifest, dirs: Seq[String]): DataFrame =
-    resolveRid(scanLiveWithPos(name, m, dirs, withRid = true), m)
-      .drop("__relpath", "__pos")
 
   /** ROW TRACKING (the Delta row-id model, re-expressed on the
     * manifest): once enabled, every data file is assigned a base row
@@ -1602,9 +1556,9 @@ class TableStore(spark: SparkSession, root: String) {
   def enableRowTracking(name: String): Unit =
     setProperties(name, Map(RowTrackingProp -> 0L.toString))
 
-  /** Read the table with its stable `_row_id` column attached.
-    * The per-file base lookup is a broadcast of O(live files) manifest
-    * metadata; everything else is the ordinary pruned live scan. */
+  /** Read the table with its stable `_row_id` column attached: the
+    * scan's `_row_id` metadata column, built per batch from each file's
+    * manifest base (or its materialized `__rid`). */
   def readWithRowIds(name: String): DataFrame =
     readWithRowIds(name, currentVersion(name))
 
@@ -1616,9 +1570,7 @@ class TableStore(spark: SparkSession, root: String) {
     val m = readManifest(name, version)
     require(m.props.contains(RowTrackingProp),
       s"row tracking is not enabled on $name — call enableRowTracking first")
-    resolveRid(scanLiveWithPos(name, m, m.dirs, withRid = true), m)
-      .withColumnRenamed(RidCol, "_row_id")
-      .drop("__relpath", "__pos")
+    scan(name, m, m.dirs).select(logical(m) :+ metaCol("_row_id", "_row_id"): _*)
   }
 
   /** One consistent view of a table: version + schema + live dirs +
@@ -1633,18 +1585,14 @@ class TableStore(spark: SparkSession, root: String) {
     requireVersionReadable(name, v)
     val m = readManifest(name, v)
     Snapshot(v, m.schema, m.dirs, m.bucketing, m.stats, m.bloomCols, m.dvs,
-      m.colmap, m.props)
+      m.colmap, m.props, m.rowbase)
   }
 
-  /** Per-FILE base row ids keyed by absolute path — the planning-time
-    * input of the DSv2 `_row_id` metadata column (row tracking). */
-  def rowBaseByFile(name: String, version: Long): Map[String, Long] = {
-    val m = readManifest(name, version)
-    if (m.rowbase.isEmpty) Map.empty
-    else m.rowbase.map { case (rel, b) =>
-      dataRoot(name).resolve(rel).toString -> b
-    }
-  }
+  /** A snapshot's per-FILE base row ids, keyed by absolute path — the
+    * planning-time input of the DSv2 `_row_id` metadata column (row
+    * tracking). */
+  def rowBaseByFile(name: String, rowbase: Map[String, Long]): Map[String, Long] =
+    rowbase.map { case (rel, b) => dataRoot(name).resolve(rel).toString -> b }
 
   /** LAZY deletion-vector delivery: per DV'd live dir, the absolute
     * sidecar parquet files holding its tombstones. Pure manifest + one
@@ -1654,16 +1602,14 @@ class TableStore(spark: SparkSession, root: String) {
     * 100 TB with heavy churn the driver never holds tombstone rows;
     * sidecar writes sort by (relpath, pos) so that per-file probe
     * prunes row groups. */
-  def dvSidecarsByDir(name: String, version: Long): Map[String, Seq[String]] = {
-    val m = readManifest(name, version)
-    if (m.dvs.isEmpty) return Map.empty
+  def dvSidecarsByDir(name: String, dvs: Map[String, DvRef]): Map[String, Seq[String]] = {
     val filesByName: Map[String, Seq[String]] =
-      m.dvs.values.map(_.path).toSet.iterator.map { n: String =>
+      dvs.values.map(_.path).toSet.iterator.map { n: String =>
         val d = dvRoot(name).resolve(n)
         n -> Using.resource(Files.list(d))(_.iterator().asScala
           .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted)
       }.toMap
-    m.dvs.map { case (d, ref) => d -> filesByName(ref.path) }
+    dvs.map { case (d, ref) => d -> filesByName(ref.path) }
   }
 
   /** Latest version whose manifest was committed at or before `tsMillis`
@@ -1867,8 +1813,7 @@ class TableStore(spark: SparkSession, root: String) {
     val dirs: Seq[String] =
       if (m.bucketing.isEmpty) Seq(batchDir)
       else leafNames(dataRoot(name).resolve(batchDir)).map(l => s"$batchDir/$l")
-    val stagedView = scanDirs(dirs, name, m.physSchema).select(m.logicalCols: _*)
-    if (!stagedView.filter(!coalesce(condition, lit(false))).isEmpty)
+    if (!scan(name, m, dirs).filter(!coalesce(condition, lit(false))).isEmpty)
       throw new IllegalArgumentException(
         s"REPLACE WHERE on $name: staged rows do not satisfy the replace " +
           s"predicate ($condition) — nothing committed")
@@ -1995,7 +1940,7 @@ class TableStore(spark: SparkSession, root: String) {
     * batch dir; everything else carries untouched with its stats. The
     * Delta pattern for compacting a hot partition of a 100 TB table
     * without touching the cold ones — cost is O(matching dirs). DVs on
-    * folded dirs materialize (scanLive applies them); carried dirs
+    * folded dirs materialize (the scan applies them); carried dirs
     * keep theirs. */
   def compactWhere(name: String, condition: Column): Unit = {
     val m = readManifest(name, currentVersion(name))
@@ -2040,8 +1985,9 @@ class TableStore(spark: SparkSession, root: String) {
     * resolved `__rid` (materialized into the rewritten files via
     * [[rewriteExtra]]); untracked tables scan plain. */
   private def rewriteSource(name: String, m: Manifest, dirs: Seq[String]): DataFrame =
-    if (m.props.contains(RowTrackingProp)) scanLiveRid(name, m, dirs)
-    else scanLive(name, m, dirs)
+    if (m.props.contains(RowTrackingProp))
+      scan(name, m, dirs).select(logical(m) :+ metaCol("_row_id", RidCol): _*)
+    else scan(name, m, dirs)
   private def rewriteExtra(m: Manifest): Seq[Column] =
     if (m.props.contains(RowTrackingProp)) Seq(col(RidCol)) else Nil
 
@@ -2745,7 +2691,7 @@ class TableStore(spark: SparkSession, root: String) {
     val m = readManifest(name, currentVersion(name))
     require(!m.checks.contains(constraintName),
       s"constraint $constraintName already exists")
-    val cur = scanLive(name, m, m.dirs)
+    val cur = scan(name, m, m.dirs)
     val violating =
       try !cur.filter(!coalesce(expr(exprSql), lit(false))).isEmpty
       catch { case e: org.apache.spark.sql.AnalysisException =>
@@ -2776,8 +2722,7 @@ class TableStore(spark: SparkSession, root: String) {
     if (m.allChecks.nonEmpty) {
       val combined = m.allChecks.values.map(e => coalesce(expr(e), lit(false)))
         .reduce(_ && _)
-      val bad = !scanDirs(newDirs, name, m.physSchema).select(m.logicalCols: _*)
-        .filter(!combined).isEmpty
+      val bad = !scan(name, m, newDirs).filter(!combined).isEmpty
       if (bad) throw new IllegalStateException(
         s"rows violate CHECK constraints ${m.allChecks.keys.mkString(",")} — commit refused")
     }
@@ -3260,7 +3205,8 @@ class TableStore(spark: SparkSession, root: String) {
       else moveIntoBatch(name, f"b${m.baseVersion + 1}%09d-$uuid", insertFiles)
     requireChecksPass(name, m, newDirs)
     val tomb = if (deleteFiles.isEmpty) None else {
-      val staged = spark.read.parquet(deleteFiles.map(_.toString): _*)
+      val staged = spark.read.schema(TableStore.TombstoneSchema)
+        .parquet(deleteFiles.map(_.toString): _*)
         .select(col("relpath").as("__relpath"), col("pos").as("__pos"))
       Some(Tombstones(staged, rowsPerDir(staged))).filter(_.perDir.nonEmpty)
     }
@@ -3268,9 +3214,9 @@ class TableStore(spark: SparkSession, root: String) {
     require(unknown.isEmpty,
       s"delta delete references non-live dirs: ${unknown.take(3).mkString(",")}")
     commitWritten(name, m, uuid, newDirs, tomb, tomb.map(t =>
-      scanLiveWithPos(name, m, t.perDir.keySet.toSeq.sorted)
+      scan(name, m, t.perDir.keySet.toSeq.sorted).select(logical(m) ++ positioned: _*)
         .join(t.staged, Seq("__relpath", "__pos"), "left_semi")
-        .select(m.schema.map(f => col(f.name)): _*)))
+        .select(logical(m): _*)))
     deleteFiles.foreach(Files.deleteIfExists(_))
   }
 
@@ -3287,8 +3233,7 @@ class TableStore(spark: SparkSession, root: String) {
     val stagedCdf = stageChanges(name, m, v, uuid) { cdfDir =>
       // _cdf files carry PHYSICAL names, like every parquet this store writes
       val inserts = if (newDirs.isEmpty) None else Some(
-        scanDirs(newDirs, name, m.physSchema)
-          .select(m.schema.map(f => col(m.phys(f.name))): _*)
+        scan(name, m, newDirs).select(m.schema.map(f => col(f.name).as(m.phys(f.name))): _*)
           .withColumn("__cdc", lit("insert")))
       val deletes = deleted.map(d => d.select(
         m.schema.map(f => col(f.name).as(m.phys(f.name))) ++ ridOf(d): _*)
@@ -3450,8 +3395,7 @@ class TableStore(spark: SparkSession, root: String) {
             "not an append; full refresh required")
       prev = m1.dirs; prevDvs = m1.dvs
     }
-    scanDirs(m1.dirs.filterNot(m0Dirs.toSet), name, m1.physSchema)
-      .select(m1.logicalCols: _*)
+    scan(name, m1, m1.dirs.filterNot(m0Dirs.toSet))
   }
 
   // ---- change data feed ----
@@ -3800,17 +3744,14 @@ class TableStore(spark: SparkSession, root: String) {
       case SynthesizedChanges(m, dirs, kind, v) =>
         val mapped = m.schema.flatMap(f => curByPhys.get(m.phys(f.name)).map(cur =>
           col(f.name).as(cur)))
-        val base =
-          if (!withRowIds) scanLive(name, m, dirs).select(mapped: _*)
-          else resolveRid(scanLiveWithPos(name, m, dirs, withRid = true), m)
-            .select(mapped :+ col(RidCol).as("_row_id"): _*)
-        base
+        scan(name, m, dirs)
+          .select(mapped ++ (if (withRowIds) Seq(metaCol("_row_id", "_row_id")) else Nil): _*)
           .withColumn("_change_type", lit(kind))
           .withColumn("_commit_version", lit(v))
     }
     parts.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
       .getOrElse {
-        val empty = scanDirs(Seq.empty, name, curM.schema)
+        val empty = scan(name, curM, Seq.empty)
         (if (withRowIds) empty.withColumn("_row_id", lit(null).cast("long"))
          else empty)
           .withColumn("_change_type", lit(null).cast("string"))
@@ -3912,7 +3853,7 @@ class TableStore(spark: SparkSession, root: String) {
     if (newChecks.nonEmpty) {
       val combined = newChecks.values.map(e => coalesce(expr(e), lit(false)))
         .reduce(_ && _)
-      if (!scanLive(name, m, m.dirs).filter(!combined).isEmpty)
+      if (!scan(name, m, m.dirs).filter(!combined).isEmpty)
         throw new IllegalStateException(
           s"cannot restore $name to $v: rows violate CHECK constraint(s) " +
             s"${newChecks.keys.mkString(",")} added since — restore refused")

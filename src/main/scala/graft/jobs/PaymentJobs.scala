@@ -195,7 +195,7 @@ object PaymentJobs {
   def fullRefresh(store: TableStore, table: String, df: DataFrame): DataFrame = {
     val expected = df.count()
     store.overwrite(table, df)
-    val actual = store.read(table).count()
+    val actual = store.countDecoded(table)
     require(actual == expected,
       s"full-refresh count gate failed for $table: staged $expected, table has $actual")
     store.read(table)

@@ -424,7 +424,7 @@ class GraftSqlTable(root: String, tableName: String,
     // the scan can drop whole dirs against pushed predicates (data
     // skipping) before any file is opened.
     GraftScanBuilder.forSnapshot(store, root, tableName, snap, snap.schema,
-      options, withRowBase = snap.rowTracking)
+      options, snap.filesByDir(store, tableName))
 
   /** SQL MERGE INTO / UPDATE via GROUP-BASED (file-subset copy-on-write)
     * row-level operations. Spark's RowLevelOperationRuntimeGroupFiltering
@@ -466,7 +466,7 @@ class GraftSqlTable(root: String, tableName: String,
           override def build(): Scan =
             new GraftRowLevelScan(snap.schema, required,
               snap.filesByDir(store, tableName), _ => (),
-              store.dvSidecarsByDir(tableName, snap.version), snap.colmap)
+              store.dvSidecarsByDir(tableName, snap.dvs), snap.colmap)
         }
       override def newWriteBuilder(
           wInfo: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -503,7 +503,7 @@ class GraftSqlTable(root: String, tableName: String,
           override def build(): Scan =
             new GraftRowLevelScan(snap.schema, required,
               snap.filesByDir(store, tableName), t => touched = Some(t),
-              store.dvSidecarsByDir(tableName, snap.version), snap.colmap)
+              store.dvSidecarsByDir(tableName, snap.dvs), snap.colmap)
         }
       override def newWriteBuilder(
           wInfo: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -557,30 +557,51 @@ class GraftSqlTable(root: String, tableName: String,
   }
 }
 
+/** A snapshot of a store table as the library face reads it: the dirs
+  * of `snap` (a manifest's live dirs, a subset of them, or dirs a commit
+  * is about to link) through the catalog's own scan, with the `_file`,
+  * `_pos` and `_row_id` metadata columns. The files are listed once,
+  * when the table is built, like a file source's index. Read-only, and
+  * named by no catalog: [[TableStore]] wraps it in a DataFrame. */
+class GraftSnapshotTable(store: TableStore, root: String, tableName: String,
+                         snap: TableStore.Snapshot)
+    extends Table with SupportsRead with SupportsMetadataColumns {
+  private val dirFiles = snap.filesByDir(store, tableName)
+  override def name(): String = tableName
+  override def schema(): StructType = snap.schema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def metadataColumns(): Array[MetadataColumn] =
+    Array(GraftFileMeta, GraftPosMeta, GraftRowIdMeta)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    GraftScanBuilder.forSnapshot(store, root, tableName, snap, snap.schema, options,
+      dirFiles)
+}
+
 object GraftScanBuilder {
   /** The ONE place a table snapshot becomes a scan builder — every scan
     * input (stats, bloom config, DV sidecars, stream caps, colmap, row
     * bases) wires through here, so a new input added for one surface
     * can't silently miss the other (as separately-maintained copies
-    * would). Used by the main table scan and the `.rowids` projection. */
+    * would). Used by the main table scan, the `.rowids` projection and
+    * every library read ([[GraftSnapshotTable]]); `dirFiles` is the
+    * snapshot's file listing. */
   def forSnapshot(store: TableStore, root: String, tableName: String,
                   snap: TableStore.Snapshot, schema: StructType,
                   options: CaseInsensitiveStringMap,
-                  withRowBase: Boolean): GraftScanBuilder =
-    new GraftScanBuilder(schema, snap.filesByDir(store, tableName),
+                  dirFiles: Seq[(String, Seq[String])]): GraftScanBuilder =
+    new GraftScanBuilder(schema, dirFiles,
       snap.stats, streamSource = Some((root, tableName)),
       bucketing = snap.bucketing.map(b => (b.keys, b.n)),
       bloomPrune =
         if (snap.bloomCols.isEmpty) None
         else Some((snap.bloomCols, store.bloomRoot(tableName))),
-      dvSidecars = store.dvSidecarsByDir(tableName, snap.version),
+      dvSidecars = store.dvSidecarsByDir(tableName, snap.dvs),
       dvDeleted = snap.dvs.view.mapValues(_.deleted).toMap,
       streamMaxVersions =
         Option(options.get("maxVersionsPerTrigger")).map(_.toLong),
       colmap = snap.colmap,
-      rowBase =
-        if (withRowBase) store.rowBaseByFile(tableName, snap.version)
-        else Map.empty)
+      rowBase = store.rowBaseByFile(tableName, snap.rowbase))
 }
 
 class GraftScanBuilder(schema: StructType, dirFiles: Seq[(String, Seq[String])],
@@ -763,11 +784,13 @@ class GraftScan(fullSchema: StructType, required: StructType,
     * broadcasts its join-key values, and this scan drops whole dirs the
     * values can't touch — via manifest stats, the bloom index, and (for
     * a single-key bucket layout) the bucket ids of the values. The
-    * attributes offered are exactly the ones a value set can prune on. */
+    * attributes offered are exactly the ones a value set can prune on,
+    * among the columns the scan outputs: Spark resolves every one of
+    * them against that output. */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     val cols = (bucketing.toSeq.flatMap(_._1) ++ bloomPrune.toSeq.flatMap(_._1))
-      .distinct
+      .distinct.filter(c => required.fieldNames.exists(_.equalsIgnoreCase(c)))
     cols.map(org.apache.spark.sql.connector.expressions.Expressions.column).toArray
   }
 
@@ -1229,7 +1252,7 @@ class GraftRowIdsTable(root: String, tableName: String)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     GraftScanBuilder.forSnapshot(store, root, tableName, snap, schema(),
-      options, withRowBase = true)
+      options, snap.filesByDir(store, tableName))
 }
 
 /** The CHANGE DATA FEED as a SQL metadata table:
@@ -1457,12 +1480,12 @@ class GraftMicroBatchStream(root: String, table: String,
     // initial snapshot: lazy per-file DV refs, probed executor-side
     // exactly like the batch scan (no positions on the driver)
     val dvSidecars: Map[String, Seq[String]] =
-      if (s < 0 && endSnap.dvs.nonEmpty) st.dvSidecarsByDir(table, e)
+      if (s < 0 && endSnap.dvs.nonEmpty) st.dvSidecarsByDir(table, endSnap.dvs)
       else Map.empty
     // `_row_id` on a stream: each batch's files carry their base from
     // the batch's end manifest
     val ridBase: Map[String, Long] =
-      if (endSnap.rowTracking) st.rowBaseByFile(table, e) else Map.empty
+      if (endSnap.rowTracking) st.rowBaseByFile(table, endSnap.rowbase) else Map.empty
     GraftInputPartition.packed(GraftFileRead.of(
       endSnap.copy(dirs = newDirs).filesByDir(st, table), dvSidecars, ridBase))
   }
@@ -1630,7 +1653,8 @@ object ColPhys {
   * through [[GraftColumnarPartitionReader]], the one Parquet decoder:
   * each partition's files in order, each with its own deletion vector,
   * row-id base and constant columns. `constSchema` names the per-file
-  * constant columns, which must trail the data columns of `required0`. */
+  * constant columns, which must trail the data columns of `required0`.
+  * Built on the driver, once per scan. */
 class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
                          pushed0: Array[Filter],
                          colmap: Map[String, String] = Map.empty,
@@ -1643,6 +1667,13 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
     ColPhys.schema(StructType(required0.fields.dropRight(constSchema.length)), colmap)
   private val fullSchema = ColPhys.schema(fullSchema0, colmap)
   private val pushed = ColPhys.filters(pushed0, colmap)
+  /** The session's Hadoop conf (`spark.hadoop.*`, the store's local
+    * file system), broadcast once per scan as Spark's file scans do. */
+  private val conf = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
+  }
   /** Files with a deletion vector read WITHOUT parquet-mr skipping (the
     * running row count must equal the file row index) and drop the
     * tombstoned positions; Spark re-applies all filters above the scan
@@ -1653,7 +1684,7 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
   private val noSkip = required.fieldNames.contains(GraftPosMeta.Name) ||
     required.fieldNames.contains(GraftRowIdMeta.Name)
   private def dvOf(r: GraftFileRead): Array[Long] = r.dv match {
-    case Some((rel, files)) => GraftDvSidecars.positions(files, rel)
+    case Some((rel, files)) => GraftDvSidecars.positions(files, rel, conf.value.value)
     case None => Array.empty
   }
 
@@ -1677,7 +1708,7 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
     require(skipLive == 0L || files.size == 1, s"OFFSET skip over ${files.size} files")
     new GraftChainedReader(files.map { f => () =>
       val dv = dvOf(f)
-      val r = new GraftColumnarPartitionReader(f.path, required,
+      val r = new GraftColumnarPartitionReader(f.path, conf.value.value, required,
         if (noSkip || dv.nonEmpty) Array.empty else pushed, fullSchema, constSchema,
         f.consts, f.rowIdBase)
       if (dv.isEmpty && skipLive == 0L) r else new GraftDvSkipColumnarReader(r, dv, skipLive)
@@ -1694,9 +1725,6 @@ class GraftReaderFactory(required0: StructType, fullSchema0: StructType,
   * planning-time collect, which held every pending tombstone of the
   * table in driver memory). */
 object GraftDvSidecars {
-  private val SidecarSchema = StructType(Seq(
-    StructField("relpath", StringType), StructField("pos", LongType)))
-
   // Executor-local probe cache: without it a DV'd dir with F files
   // rescans its sidecars F times PER QUERY (each probe opens every
   // sidecar for a footer read + filtered read — O(files x sidecars)
@@ -1710,11 +1738,12 @@ object GraftDvSidecars {
   private val cache =
     new java.util.LinkedHashMap[(Seq[String], String), Array[Long]](64, 0.75f, true)
 
-  def positions(sidecarFiles: Seq[String], relpath: String): Array[Long] = {
+  def positions(sidecarFiles: Seq[String], relpath: String,
+                conf: org.apache.hadoop.conf.Configuration): Array[Long] = {
     val key = (sidecarFiles, relpath)
     val hit = cache.synchronized(cache.get(key))
     if (hit != null) return hit
-    val arr = probe(sidecarFiles, relpath)
+    val arr = probe(sidecarFiles, relpath, conf)
     cache.synchronized {
       if (cache.get(key) == null) { // concurrent probes: first write wins
         cache.put(key, arr)
@@ -1729,12 +1758,14 @@ object GraftDvSidecars {
     arr
   }
 
-  private def probe(sidecarFiles: Seq[String], relpath: String): Array[Long] = {
+  private def probe(sidecarFiles: Seq[String], relpath: String,
+                    conf: org.apache.hadoop.conf.Configuration): Array[Long] = {
     val pushed: Array[Filter] = Array(EqualTo("relpath", relpath))
     val want = UTF8String.fromString(relpath)
     val buf = Array.newBuilder[Long]
     sidecarFiles.foreach { f =>
-      val r = new GraftColumnarPartitionReader(f, SidecarSchema, pushed, SidecarSchema)
+      val r = new GraftColumnarPartitionReader(f, conf, TableStore.TombstoneSchema, pushed,
+        TableStore.TombstoneSchema)
       // the kept row groups and pages still hold other files' rows
       try while (r.next()) {
         val b = r.get()

@@ -1,16 +1,18 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.FilterPredicate
 import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,6 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - a pushed FilterPredicate does row-group statistics skipping,
   *   - `consts` (schema `constSchema`, a change file's kind and commit
   *     version) follow the data columns as constant vectors.
+  * Each file opens under a copy of `hadoopConf`, the session's conf
+  * that [[GraftReaderFactory]] broadcasts.
   *
   * `required` may also name the metadata columns, which never reach
   * the decoder: `_file` is one more per-file constant, `_pos` the
@@ -38,7 +42,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * ColumnVectors directly — at scale this is the difference between a
   * scan bound by object churn and one bound by I/O.
   */
-class GraftColumnarPartitionReader(file: String, required: StructType,
+class GraftColumnarPartitionReader(file: String, hadoopConf: Configuration,
+                                   required: StructType,
                                    pushed: Array[Filter],
                                    fullSchema: StructType,
                                    constSchema: StructType = new StructType(),
@@ -84,7 +89,7 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
   private var pos = 0L // file row index of the next batch's first row
 
   private def mk(pred: FilterPredicate): VectorizedParquetRecordReader = {
-    val conf = GraftParquet.newConf()
+    val conf = new Configuration(hadoopConf)
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, decoded.json)
     // the engine's files are written by this store (Spark parquet or the
@@ -105,8 +110,15 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
       /* useOffHeap = */ false, Capacity)
     // mapred.FileSplit (extends the mapreduce one): Spark's reader base
     // casts the split to the old API class
-    val split = new org.apache.hadoop.mapred.FileSplit(
-      new Path(file), 0, java.nio.file.Files.size(java.nio.file.Paths.get(file)),
+    val size =
+      try java.nio.file.Files.size(java.nio.file.Paths.get(file))
+      catch { case _: java.nio.file.NoSuchFileException =>
+        // a planned file is gone (a vacuum swept its version): the read
+        // fails loudly and typed, never with partial rows
+        throw new java.io.FileNotFoundException(
+          s"$file does not exist: removed since the scan was planned")
+      }
+    val split = new org.apache.hadoop.mapred.FileSplit(new Path(file), 0, size,
       Array.empty[String])
     val ctx = new TaskAttemptContextImpl(conf,
       new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0))
@@ -128,35 +140,40 @@ class GraftColumnarPartitionReader(file: String, required: StructType,
 
   private val reader: VectorizedParquetRecordReader = {
     // DECIMAL predicates translate to unscaled longs AT THE LOGICAL
-    // SCALE — pushing one into a file whose DECIMAL annotation carries a
-    // DIFFERENT scale (pre-rescale-widening files) passes parquet's
-    // schema validation (both sides INT64) but compares wrongly-scaled
-    // unscaled values: row groups with MATCHING rows get skipped and
-    // Spark's re-evaluation above the scan cannot resurrect them — a
+    // SCALE, TIMESTAMP predicates to MICROS — pushing one into a file
+    // whose annotation carries a DIFFERENT scale (pre-rescale-widening
+    // files) or unit (an external TIMESTAMP(MILLIS) writer) passes
+    // parquet's schema validation (both sides INT64) but compares
+    // wrongly-scaled values: row groups with MATCHING rows get skipped
+    // and Spark's re-evaluation above the scan cannot resurrect them — a
     // silent wrong answer, not a perf loss. No exception fires, so this
     // must be gated PROACTIVELY: when the pushed set references a
-    // decimal column, one footer read decides per-file whether the
-    // annotation scale matches; mismatching files keep every
-    // NON-decimal conjunct.
+    // decimal or timestamp column, one footer read decides per-file
+    // whether the annotation matches the literal's encoding;
+    // mismatching files keep every other conjunct.
     val effective: Array[Filter] = {
-      def decimalCol(ref: String): Option[DecimalType] =
-        fullSchema.fields.find(_.name.equalsIgnoreCase(ref))
-          .map(_.dataType).collect { case d: DecimalType => d }
-      if (!pushed.exists(_.references.exists(r => decimalCol(r).isDefined))) pushed
+      def encoded(ref: String): Option[DataType] =
+        fullSchema.fields.find(_.name.equalsIgnoreCase(ref)).map(_.dataType).filter {
+          case _: DecimalType | TimestampType | TimestampNTZType => true
+          case _ => false
+        }
+      if (!pushed.exists(_.references.exists(r => encoded(r).isDefined))) pushed
       else {
         val fs = try footerSchema() catch { case _: Exception => null }
-        def scaleMatches(ref: String): Boolean = decimalCol(ref) match {
-          case None => true // non-decimal: existing exception-retry covers it
-          case Some(d) => fs != null && fs.containsField(ref) && {
+        def encodingMatches(ref: String): Boolean = encoded(ref) match {
+          case None => true // other types: the exception-retry below covers them
+          case Some(t) => fs != null && fs.containsField(ref) && {
             val p = fs.getFields.get(fs.getFieldIndex(ref))
-            p.isPrimitive && (p.asPrimitiveType().getLogicalTypeAnnotation match {
-              case dec: org.apache.parquet.schema.LogicalTypeAnnotation
-                  .DecimalLogicalTypeAnnotation => dec.getScale == d.scale
+            p.isPrimitive && ((t, p.asPrimitiveType().getLogicalTypeAnnotation) match {
+              case (d: DecimalType, dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
+                dec.getScale == d.scale
+              case (_, ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
+                ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
               case _ => false
             })
           }
         }
-        pushed.filter(_.references.forall(scaleMatches))
+        pushed.filter(_.references.forall(encodingMatches))
       }
     }
     // a predicate over a column this file predates (ALTER TABLE ADD

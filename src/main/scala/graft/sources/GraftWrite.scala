@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
@@ -413,14 +412,6 @@ object GraftParquet {
       new ParquetOptions(Map("compression" -> TableStore.ParquetCodec), sqlConf))
     new GraftParquetOut(schema, factory, new SerializableConfiguration(job.getConfiguration))
   }
-
-  // Hadoop Configuration construction parses the default XML resources —
-  // ~10 ms a pop, paid per file open; copy from one parsed template
-  // instead (the copy constructor clones properties without re-parsing).
-  // The template is never mutated after init; each copy is private to
-  // its reader and safe to mutate.
-  private lazy val confTemplate = new Configuration()
-  private[sources] def newConf(): Configuration = new Configuration(confTemplate)
 }
 
 class GraftDataWriter(file: String, out: GraftParquetOut, rowLevel: Boolean,
@@ -505,7 +496,7 @@ class GraftDeltaBatchWrite(root: String, table: String, physSchema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
     new GraftDeltaWriterFactory(scratch.toString, GraftParquet.prepare(physSchema),
-      GraftParquet.prepare(GraftDeltaWriter.DelSchema), bucketing)
+      GraftParquet.prepare(TableStore.TombstoneSchema), bucketing)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val ms = messages.collect { case m: GraftDeltaMessage => m }
@@ -526,12 +517,6 @@ class GraftDeltaWriterFactory(scratch: String, ins: GraftParquetOut, del: GraftP
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] =
     new GraftDeltaWriter(scratch, ins, del, bucketing, partitionId, taskId)
-}
-
-object GraftDeltaWriter {
-  /** A staged tombstone: manifest-relative file path and row position. */
-  val DelSchema: StructType = StructType(Seq(
-    StructField("relpath", StringType), StructField("pos", LongType)))
 }
 
 /** Executor side: tombstones buffer to a (relpath, pos) parquet,
@@ -557,17 +542,8 @@ class GraftDeltaWriter(scratch: String, ins: GraftParquetOut, del: GraftParquetO
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     require(id.numFields == 2,
       s"delta rowId row has ${id.numFields} fields (expected (_file, _pos))")
-    val file = id.getUTF8String(0).toString
+    val rel = TableStore.relpath(id.getUTF8String(0).toString)
     val pos = id.getLong(1)
-    // manifest-relative key: <dir...>/<filename> after the data root.
-    // LAST occurrence of "/data/", matching the store's own convention
-    // (TableStore.relpathCol's substring_index(..., -1)) — a warehouse
-    // root containing a /data/ segment would otherwise shift every
-    // relpath and fail the commit's live-dir check
-    val cut = file.lastIndexOf("/data/")
-    if (cut < 0)
-      throw new IllegalStateException(s"unexpected _file path: $file")
-    val rel = file.substring(cut + "/data/".length)
     if (delWriter == null) delWriter = new GraftDataWriter(delFile, del, rowLevel = false)
     delWriter.write(InternalRow(
       org.apache.spark.unsafe.types.UTF8String.fromString(rel), pos))

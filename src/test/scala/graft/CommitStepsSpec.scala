@@ -22,9 +22,11 @@ import graft.core.TableStore
   * deletion-vector count, dirs carrying stats, live rows, and the
   * change-kind dirs recorded under `_cdf/<v>` (`-` when none exists,
   * `[]` for an empty "no logical change" marker) — and the Spark jobs
-  * the operation ran (`jobs=`). A refactor of the commit-side helpers
-  * must leave every row byte-identical; a change that lowers a job
-  * count updates its row and says so in CHANGES.md. */
+  * the operation ran (`jobs=`). Live rows are counted twice, from the
+  * manifest and by decoding the files, and the two must agree. A
+  * refactor of the commit-side helpers must leave every row
+  * byte-identical; a change that lowers a job count updates its row
+  * and says so in CHANGES.md. */
 class CommitStepsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
   import spark.implicits._
@@ -139,12 +141,12 @@ class CommitStepsSpec extends AnyFunSuite {
         replaceAll = true): Unit },
       "manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=2 cdf=- jobs=1"),
     ("commitDelta (SQL MERGE merge-on-read)", () => plain(), commitDeltaOf,
-      "dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=- jobs=6"),
+      "dv-written,manifest-linked,latest-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=- jobs=5"),
     ("commitDelta (SQL MERGE merge-on-read) cdf", () => plain(cdf = true),
       commitDeltaOf,
-      "dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[delete,insert] jobs=8"),
+      "dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[delete,insert] jobs=7"),
     ("commitDelta (SQL MERGE merge-on-read) bucketed", () => bucketed(), commitDeltaOf,
-      "dv-written,manifest-linked,latest-published | +1 dirs=6 dvs=1 stats=6 rows=22 cdf=- jobs=7"),
+      "dv-written,manifest-linked,latest-published | +1 dirs=6 dvs=1 stats=6 rows=22 cdf=- jobs=6"),
     ("mergeUpsert", () => bucketed(),
       ts => ts.mergeUpsert("t", upsertSrc(), Seq("id"), changeTypeCol = None),
       "batch-written,manifest-linked,latest-published | +1 dirs=4 dvs=0 stats=4 rows=21 cdf=- jobs=7"),
@@ -192,7 +194,7 @@ class CommitStepsSpec extends AnyFunSuite {
     ("updateVectorized cdf rowtracking",
       () => { val ts = plain(cdf = true); ts.enableRowTracking("t"); ts },
       ts => ts.updateVectorized("t", col("id") <= 3L, Map("v" -> lit("g"))),
-      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage] jobs=9"),
+      "batch-written,dv-written,cdf-staged,manifest-linked,latest-published,cdf-published | +1 dirs=3 dvs=1 stats=3 rows=20 cdf=[update_postimage,update_preimage] jobs=6"),
     ("compact", () => plain(),
       ts => ts.compact("t"),
       "batch-written,manifest-linked,latest-published | +1 dirs=1 dvs=0 stats=1 rows=20 cdf=- jobs=2"),
@@ -230,9 +232,11 @@ class CommitStepsSpec extends AnyFunSuite {
       else Using.resource(Files.list(cdfDir))(_.iterator().asScala
         .map(_.getFileName.toString).filter(_.startsWith("__cdc="))
         .map(_.stripPrefix("__cdc=")).toSeq.sorted).mkString("[", ",", "]")
+    val rows = ts.read("t").count()
+    assert(ts.countDecoded("t") === rows, "manifest count vs decoded count")
     s"${steps.mkString(",")} | +${v - before} dirs=${snap.dirs.size} " +
       s"dvs=${snap.dvs.size} stats=${snap.dirs.count(snap.stats.contains)} " +
-      s"rows=${ts.read("t").count()} cdf=$kinds jobs=$jobs"
+      s"rows=$rows cdf=$kinds jobs=$jobs"
   }
 
   cases.foreach { case (label, build, op, expected) =>

@@ -365,10 +365,12 @@ class ConcurrencySpec extends AnyFunSuite {
     val pinned = ts.readVersion("t", 0)
     val swept = ts.vacuum("t", retainVersions = 1)
     assert(swept.nonEmpty, "v0's superseded dirs must sweep")
+    // the manifest answers COUNT exactly, without the files
+    assert(pinned.count() === 500)
     // materializing the already-planned scan must surface a loud
     // missing-file error; 0 or 500-minus-some rows would be a silent
     // wrong answer
-    val e = intercept[Exception](pinned.count())
+    val e = intercept[Exception](pinned.collect())
     val chain = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).take(8).toSeq
     assert(chain.exists(t =>

@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graftest.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,10 +33,35 @@ class DeletionVectorSpec extends AnyFunSuite {
     ts.deleteVectorized("t", col("id") % 10 === 0L)
     assert(ts.liveDirs("t") === dirsBefore) // no dir rewritten
     assert(ts.read("t").count() === 180)
+    assert(ts.countDecoded("t") === 180)
     assert(ts.read("t").filter(col("id") % 10 === 0L).count() === 0)
     // sidecar exists; time travel shows the pre-delete state
     assert(Files.isDirectory(root.resolve("t").resolve("_dv")))
     assert(ts.readVersion("t", 1).count() === 200)
+  }
+
+  test("a library read of a DV'd 16-bucket table over 32 dirs is one Spark job") {
+    val (ts, _) = fresh()
+    def rows(k: Long) =
+      ((k * 1000L + 1L) to (k * 1000L + 400L)).map(i => (i, s"v$i")).toDF("id", "v")
+    ts.createBucketed("t", rows(0L), Seq("id"), 16)
+    ts.append("t", rows(1L))
+    ts.append("t", rows(2L))
+    assert(ts.liveDirs("t").size > 32)
+    ts.deleteVectorized("t", col("id") % 10 === 0L)
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val got = ts.read("t").collect()
+      ListenerBus.drain(sc)
+      assert(got.length === 1080)
+      assert(jobs.get === 1)
+    } finally sc.removeSparkListener(counter)
   }
 
   test("a second DV delete on the same dir merges tombstones") {
@@ -333,7 +361,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     ts.deleteVectorized("t", col("id") % 13 === 0L)
     ts.deleteVectorized("t", col("id") % 17 === 0L) // merges into new sidecars
     val v = ts.currentVersion("t")
-    val byDir = ts.dvSidecarsByDir("t", v)
+    val byDir = ts.dvSidecarsByDir("t", ts.snapshotAt("t", v).dvs)
     assert(byDir.nonEmpty, "expected DV'd dirs")
     // ground truth per file from the sidecar rows read through Spark
     val truth = byDir.values.flatten.toSeq.distinct
@@ -346,13 +374,14 @@ class DeletionVectorSpec extends AnyFunSuite {
     truth.foreach { case (relpath, expected) =>
       val dir = relpath.split('/').dropRight(1).mkString("/")
       val got = graft.sources.GraftDvSidecars
-        .positions(byDir(dir), relpath).toSeq
+        .positions(byDir(dir), relpath, spark.sessionState.newHadoopConf()).toSeq
       assert(got === expected, s"probe mismatch for $relpath")
     }
     // a file with no tombstones probes empty, not an error
     val dvdDir = byDir.keys.head
     assert(graft.sources.GraftDvSidecars
-      .positions(byDir(dvdDir), s"$dvdDir/no-such-file.parquet").isEmpty)
+      .positions(byDir(dvdDir), s"$dvdDir/no-such-file.parquet",
+        spark.sessionState.newHadoopConf()).isEmpty)
     // end-to-end: live scan equals the predicate-derived survivor set
     assert(ts.read("t").count() === (1L to 4000L)
       .count(i => i % 13 != 0 && i % 17 != 0))

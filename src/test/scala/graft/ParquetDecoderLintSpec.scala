@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins Spark's vectorized reader (sources/GraftVectorized.scala) as the
   * engine's one Parquet decoder and Spark's Parquet writer as its one
   * encoder: no main source may bring back a row-at-a-time parquet-mr
-  * reader or writer beside them. */
+  * reader or writer beside them. Table data has one read path, the
+  * Graft scan, on the SQL and the library face alike. */
 class ParquetDecoderLintSpec extends AnyFunSuite {
 
   /** (file under src/main, text) of every main Scala source. */
@@ -42,6 +43,48 @@ class ParquetDecoderLintSpec extends AnyFunSuite {
       .map(pkg => (java.util.regex.Pattern.quote(pkg.mkString(".")) + raw"\b").r)
     val hits = sources.flatMap { case (f, text) =>
       banned.flatMap(_.findFirstIn(text)).map(m => s"$f: $m")
+    }
+    assert(hits === Nil)
+  }
+
+  test("table data is read only through the Graft scan") {
+    // the file source's `_metadata` columns were the library face's row
+    // identity; the Graft scan serves `_file`, `_pos` and `_row_id`
+    val meta = sources.filter(_._2.contains("_metadata")).map(_._1)
+    assert(meta === Nil)
+    // a `spark.read` may read the bloom build's raw files (a bloom over a
+    // superset of the live rows stays sound) and benchmark input; in the
+    // store only tombstone files and recorded change files, each with
+    // its schema given, so no job infers one
+    val rawFiles = Set("scala/graft/core/BloomIndex.scala", "scala/graft/Tables.scala")
+    val targets = Seq("dvRoot(", "deleteFiles", "cdfDir")
+    val call = raw"\bspark\s*\.read\b".r
+    val parquet = raw"\.parquet\(".r
+    val comment = raw"(?s)/\*.*?\*/|//[^\n]*".r
+    val hits = sources.filterNot(s => rawFiles(s._1)).flatMap { case (f, source) =>
+      val text = comment.replaceAllIn(source, "")
+      call.findAllMatchIn(text).flatMap { m =>
+        val from = text.substring(m.start)
+        parquet.findFirstMatchIn(from) match {
+          case None => Some(s"$f: ${from.takeWhile(_ != '\n')}")
+          case Some(p) =>
+            // the `.parquet(...)` argument, up to its closing paren
+            var depth = 1
+            var end = p.end
+            while (depth > 0) {
+              from(end) match {
+                case '(' => depth += 1
+                case ')' => depth -= 1
+                case _ => ()
+              }
+              end += 1
+            }
+            val chain = from.substring(0, p.start)
+            val arg = from.substring(p.end, end - 1)
+            if (chain.contains(".schema(") && targets.exists(arg.contains)) None
+            else Some(s"$f: $chain.parquet($arg)")
+        }
+      }
     }
     assert(hits === Nil)
   }

@@ -388,6 +388,40 @@ class RowTrackingSpec extends AnyFunSuite {
       "restore past the enablement point lost or moved ids")
   }
 
+  test("readWithRowIds is one Graft scan with the SQL face's (row, _row_id) " +
+      "set through a DV delete, an updateVectorized and a compaction") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val root = Files.createTempDirectory("rowtrackone").toString
+    spark.conf.set("spark.sql.catalog.grto", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.grto.root", root)
+    val ts = new TableStore(spark, root)
+    ts.createBucketed("t", (1L to 400L).map(i => (i, s"v$i")).toDF("k", "v"), Seq("k"), 4)
+    ts.enableRowTracking("t")
+    ts.append("t", (401L to 600L).map(i => (i, s"v$i")).toDF("k", "v"))
+    def ids(): Set[(Long, String, Long)] = {
+      val df = ts.readWithRowIds("t")
+      val leaves = df.queryExecution.executedPlan.collectLeaves()
+      assert(leaves.size === 1 && leaves.head.isInstanceOf[BatchScanExec],
+        df.queryExecution.executedPlan)
+      val lib = df.select("k", "v", "_row_id").as[(Long, String, Long)].collect().toSet
+      assert(lib === spark.sql("SELECT k, v, _row_id FROM grto.t")
+        .as[(Long, String, Long)].collect().toSet)
+      lib
+    }
+    val created = ids()
+    assert(created.map(_._3).size === 600)
+    ts.deleteVectorized("t", col("k") % 10 === 0L)
+    val deleted = ids()
+    assert(deleted === created.filter(_._1 % 10 != 0))
+    ts.updateVectorized("t", col("k") % 7 === 1L, Map("v" -> concat(col("v"), lit("u"))))
+    val updated = ids()
+    assert(updated === deleted.map { case (k, v, id) =>
+      if (k % 7 == 1) (k, v + "u", id) else (k, v, id) })
+    ts.compact("t")
+    assert(ts.snapshot("t").dvs.isEmpty)
+    assert(ids() === updated)
+  }
+
   test("catalog _file/_pos/_row_id match Spark's file source and " +
       "readWithRowIds, with and without a mid-file OFFSET") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -411,7 +445,7 @@ class RowTrackingSpec extends AnyFunSuite {
     val snap = ts.snapshot("t")
     assert(snap.dvs.contains(first))
     val files = snap.filesByDir(ts, "t").flatMap(_._2)
-    val bases = ts.rowBaseByFile("t", snap.version)
+    val bases = ts.rowBaseByFile("t", snap.rowbase)
 
     type Row = (Long, Long, String, Long, Option[Long])
     def read(sql: String): Seq[Row] = {
