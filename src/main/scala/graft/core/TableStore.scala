@@ -908,7 +908,7 @@ class TableStore(spark: SparkSession, root: String) {
     * `_cdf` contents under a dot-dir and only a SUCCESSFUL manifest
     * commit moves it to `_cdf/<v>`. A commit that loses the version
     * race (put-if-absent collision) deletes its staging instead of
-    * leaving change rows where changeSources would attribute them to
+    * leaving change rows where changeFiles would attribute them to
     * the WINNER's version v — poisoning the feed with a failed
     * operation's rows. Crash leftovers (dot-dirs under `_cdf`) are
     * age-swept by vacuum. */
@@ -1289,12 +1289,15 @@ class TableStore(spark: SparkSession, root: String) {
     * metadata columns resolve by name ([[metaCol]]). Every internal
     * reader of live table data goes through here, so merge, update and
     * compact can never resurrect DV-deleted rows. */
-  private def scan(name: String, m: Manifest, dirs: Seq[String]): DataFrame = {
-    val dirSet = dirs.toSet
+  private def scan(name: String, m: Manifest, dirs: Seq[String]): DataFrame =
     org.apache.spark.sql.graftshim.TableFrames.of(spark,
-      new graft.sources.GraftSnapshotTable(this, root, name,
-        Snapshot(m.baseVersion, m.schema, dirs, m.bucketing, m.stats, m.bloomCols,
-          m.dvs.view.filterKeys(dirSet).toMap, m.colmap, m.props, m.rowbase)))
+      new graft.sources.GraftSnapshotTable(this, root, name, snapshotOf(m, dirs)))
+
+  /** `dirs` under manifest `m` as a [[Snapshot]], its DVs cut to them. */
+  private def snapshotOf(m: Manifest, dirs: Seq[String]): Snapshot = {
+    val dirSet = dirs.toSet
+    Snapshot(m.baseVersion, m.schema, dirs, m.bucketing, m.stats, m.bloomCols,
+      m.dvs.view.filterKeys(dirSet).toMap, m.colmap, m.props, m.rowbase)
   }
 
   /** A metadata column of a [[scan]] as a plain column named `as`. */
@@ -3373,29 +3376,38 @@ class TableStore(spark: SparkSession, root: String) {
     * my last run" without timestamps or a full diff. Throws when a
     * version in the range removed or rewrote dirs (the consumer must
     * full-refresh; silently returning partial changes would be wrong). */
-  def readAppendsBetween(name: String, fromVersion: Long, toVersion: Long): DataFrame = {
+  def readAppendsBetween(name: String, fromVersion: Long, toVersion: Long): DataFrame =
+    org.apache.spark.sql.graftshim.TableFrames.of(spark,
+      new graft.sources.GraftSnapshotTable(this, root, name,
+        appendedSnapshot(name, fromVersion, toVersion)))
+
+  /** Version `toVersion`'s snapshot cut to the dirs the range
+    * (`fromVersion`, `toVersion`] added: the one append-only rule of
+    * [[readAppendsBetween]] and the append stream
+    * ([[graft.sources.GraftMicroBatchStream]]), whatever the batch
+    * boundaries. Every STEP must be an append — an endpoint-only diff
+    * would miss a dir added at v+1 and rewritten at v+2 — so a version
+    * that removed dirs or changed deletion vectors throws. */
+  private[graft] def appendedSnapshot(name: String, fromVersion: Long,
+                                     toVersion: Long): Snapshot = {
     require(fromVersion <= toVersion, s"bad range ($fromVersion, $toVersion]")
-    // every STEP in the range must be append-only — an endpoint-only
-    // diff would miss a dir added at v+1 and rewritten at v+2
-    var prev = readManifest(name, fromVersion).dirs
-    val m0Dirs = prev
-    var m1 = readManifest(name, fromVersion)
-    var prevDvs = readManifest(name, fromVersion).dvs
-    (fromVersion + 1 to toVersion).foreach { v =>
-      m1 = readManifest(name, v)
-      val curSet = m1.dirs.toSet
-      val removed = prev.filterNot(curSet)
+    requireVersionReadable(name, fromVersion)
+    val first = readManifest(name, fromVersion)
+    val last = (fromVersion + 1 to toVersion).foldLeft(first) { (prev, v) =>
+      requireVersionReadable(name, v)
+      val m = readManifest(name, v)
+      val removed = prev.dirs.filterNot(m.dirs.toSet)
       if (removed.nonEmpty)
         throw new IllegalStateException(
-          s"$name version $v is not an append: ${removed.size} dirs " +
-            "removed/rewritten — full refresh required")
-      if (m1.dvs != prevDvs)
+          s"$name version $v removed data dirs (${removed.take(3).mkString(", ")}…) " +
+            "— not an append; full refresh required")
+      if (m.dvs != prev.dvs)
         throw new IllegalStateException(
-          s"$name version $v applied deletion vectors (rows removed) — " +
-            "not an append; full refresh required")
-      prev = m1.dirs; prevDvs = m1.dvs
+          s"$name version $v applied deletion-vector tombstones (rows removed) " +
+            "— not an append; full refresh required")
+      m
     }
-    scan(name, m1, m1.dirs.filterNot(m0Dirs.toSet))
+    snapshotOf(last, last.dirs.filterNot(first.dirs.toSet))
   }
 
   // ---- change data feed ----
@@ -3571,20 +3583,6 @@ class TableStore(spark: SparkSession, root: String) {
         }
   }
 
-  /** One per-version change source, resolved by the shared decision
-    * tree both CDF read surfaces interpret. */
-  private[graft] sealed trait ChangeSrc
-  /** Recorded `_cdf/<v>/__cdc=<kind>/` dirs (files carry version v's
-    * PHYSICAL column names; `mv` is version v's manifest). */
-  private[graft] final case class RecordedChanges(cdfDir: Path, kinds: Seq[String],
-                                                  v: Long, mv: Manifest)
-      extends ChangeSrc
-  /** Changes synthesized from a manifest diff: the rows of `dirs` under
-    * manifest `m` (whose DVs bound what was live), all of one kind. */
-  private[graft] final case class SynthesizedChanges(m: Manifest, dirs: Seq[String],
-                                                     kind: String, v: Long)
-      extends ChangeSrc
-
   /** A vacuum may have swept part of a requested change window
     * (manifests, checkpoints and `_cdf` dirs all sweep below its
     * retained head together) — refuse with the window semantics spelled
@@ -3604,15 +3602,90 @@ class TableStore(spark: SparkSession, root: String) {
             "restart the change reader from a retained version", e)
     }
 
-  /** The change-feed decision tree (see [[readChangesBetween]] for the
-    * semantics): cheapest valid source per version, or throw when the
-    * changes were never captured and can't be reconstructed. */
-  private[graft] def changeSources(name: String, fromVersion: Long,
-                                   toVersion: Long): Seq[ChangeSrc] = {
+  /** CHANGE DATA FEED read: every row-level change in
+    * `(fromVersion, toVersion]` with `_change_type` ∈ {insert, delete,
+    * update_preimage, update_postimage} and `_commit_version`. Three
+    * sources, cheapest wins per version (the Delta CDF read model):
+    *   - a recorded `_cdf/<v>` dir (row-level mutations after
+    *     [[setChangeFeed]]) — read as-is, zero derivation;
+    *   - a pure append / pure dir-drop step — synthesized from the
+    *     added (insert) or removed (delete) dirs; dirs are immutable so
+    *     this is exact, and it is why appends never write change rows;
+    *   - a full replace (INSERT OVERWRITE / truncate-load / restore) —
+    *     delete-of-prior-snapshot + insert-of-new-snapshot.
+    * A partial rewrite with no recorded dir throws: the change rows
+    * were never captured and cannot be reconstructed from immutable
+    * dirs alone. `fromVersion = -1` includes version 0's creation.
+    *
+    * The frame is one Graft scan, the SQL `<table>.changes` scan's own,
+    * over the change files [[changeFiles]] lists NOW (so a window a
+    * vacuum swept refuses here, not at the first action). Its columns
+    * are version `toVersion`'s logical schema — files of every version
+    * decode under its column mapping, so renames bridge, columns
+    * dropped since are skipped and columns added since read null —
+    * then `_row_id` when `withRowIds`, `_change_type` and
+    * `_commit_version`.
+    *
+    * With `withRowIds`, every change row also carries `_row_id` — the
+    * row's stable tracking id: recorded MoR change rows read the
+    * `__rid` their `_cdf` files materialize; synthesized
+    * appends/drops derive base + position from that version's
+    * manifest. NULL where the id is unknowable (commits that predate
+    * [[enableRowTracking]], or copy-on-write rewrites whose postimage
+    * ids are only assigned at commit).
+    *
+    * CONTRACT — rid-uniqueness per commit: within one `_commit_version`
+    * a non-null `_row_id` appears at most once among
+    * insert/update_postimage rows and at most once among deletes. This
+    * holds for every write path in this store (an append assigns fresh
+    * ids; a MoR update records one postimage per touched rid; a merge
+    * commits one outcome per target row), which is what lets a rid-keyed
+    * replicator apply a version's upserts with the uniqueness gate off
+    * (cdc2). A future path that could emit both an insert and a
+    * postimage for one rid in one commit would break that gate-skip —
+    * cdc2 asserts the contract always-on (upsert-row count vs distinct
+    * rids per version, folded into its apply-plan aggregate), so a
+    * violation fails the replication loudly instead of corrupting the
+    * replica. */
+  def readChangesBetween(name: String, fromVersion: Long, toVersion: Long,
+                         withRowIds: Boolean = false): DataFrame = {
+    val files = changeFiles(name, fromVersion, toVersion)
+    val to = manifestForChanges(name, toVersion, fromVersion, toVersion)
+    org.apache.spark.sql.graftshim.TableFrames.of(spark,
+      new graft.sources.GraftChangeFilesTable(name, to.schema, to.colmap, withRowIds, files))
+  }
+
+  /** The change FILES of (fromVersion, toVersion], each read as a table
+    * file is: its path, its lazy DV reference, its row-id base and its
+    * change kind and commit version as constants. Every change reader
+    * (the SQL `<table>.changes` scan, its stream and
+    * [[readChangesBetween]]) plans through here. Per version, the
+    * cheapest valid source (see [[readChangesBetween]]), or a throw
+    * when the changes were never captured and can't be reconstructed.
+    * Recorded `_cdf` files carry a materialized `__rid`; a synthesized
+    * group's files take their rid bases and lazy DV references from
+    * the manifest whose dirs they are, like a table scan's: the scan
+    * task probes each sidecar executor-side (GraftDvSidecars), so a
+    * synthesized `delete` group over a DV-heavy prior version (e.g. a
+    * full-replace commit on a table with a large tombstone backlog)
+    * stays O(files) driver memory, with NO Spark job here. */
+  private[graft] def changeFiles(name: String, fromVersion: Long, toVersion: Long)
+      : Seq[graft.sources.GraftFileRead] = {
     require(fromVersion >= -1 && fromVersion <= toVersion,
       s"bad range ($fromVersion, $toVersion]")
     require(toVersion <= currentVersion(name),
       s"version $toVersion does not exist")
+    // the scan's trailing (_change_type, _commit_version) columns
+    def consts(kind: String, v: Long) =
+      org.apache.spark.sql.catalyst.InternalRow(
+        org.apache.spark.unsafe.types.UTF8String.fromString(kind), v)
+    // the rows of `dirs` under manifest `m` (whose DVs bound what was
+    // live), all of one kind
+    def synthesized(m: Manifest, dirs: Seq[String], kind: String, v: Long) = {
+      val snap = snapshotOf(m, dirs)
+      graft.sources.GraftFileRead.of(snap.filesByDir(this, name),
+        dvSidecarsByDir(name, snap.dvs), rowBaseByFile(name, snap.rowbase), consts(kind, v))
+    }
     (fromVersion + 1 to toVersion).flatMap { v =>
       val cur = manifestForChanges(name, v, fromVersion, toVersion)
       // physical-only version (compact/optimize/purge): zero logical
@@ -3643,11 +3716,16 @@ class TableStore(spark: SparkSession, root: String) {
               "staging ages past the recovery grace period")
         }))
       if (recorded) {
+        // no kind dir: a marker, recorded with zero logical changes.
+        // Kind dirs are flat, but versions that an older writer recorded
+        // on a bucketed table nest one more level
+        // (`__cdc=<kind>/__b=<n>/part-*.parquet`), so the listing recurses
         val kinds = Using.resource(Files.list(cdfDir))(_.iterator().asScala
           .map(_.getFileName.toString).filter(_.startsWith("__cdc="))
           .map(_.stripPrefix("__cdc=")).toSeq.sorted)
-        if (kinds.isEmpty) Seq.empty // marker: recorded, zero logical changes
-        else Seq(RecordedChanges(cdfDir, kinds, v, cur))
+        kinds.flatMap(k => Using.resource(Files.walk(cdfDir.resolve(s"__cdc=$k")))(
+          _.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted)
+          .map(f => graft.sources.GraftFileRead(f, consts = consts(k, v))))
       } else {
         val curDirSet = cur.dirs.toSet
         val prevDirSet = prevDirs.toSet
@@ -3661,155 +3739,15 @@ class TableStore(spark: SparkSession, root: String) {
           throw new IllegalStateException(
             s"$name version $v applied deletion vectors with no recorded " +
               "change data — enable the change feed (setChangeFeed) first")
-        if (removed.isEmpty && added.isEmpty) Seq.empty
-        else if (removed.isEmpty)
-          Seq(SynthesizedChanges(cur, added, "insert", v))
-        else if (added.isEmpty)
-          Seq(SynthesizedChanges(prev, removed, "delete", v))
-        else if ({ val r = removed.toSet; prevDirs.forall(r.contains) })
-          Seq(SynthesizedChanges(prev, removed, "delete", v),
-            SynthesizedChanges(cur, added, "insert", v))
-        else throw new IllegalStateException(
-          s"$name version $v partially rewrote dirs with no recorded " +
-            "change data — enable the change feed (setChangeFeed) before " +
-            "row-level mutations to read changes across them")
+        if (removed.nonEmpty && added.nonEmpty && removed.size < prevDirs.size)
+          throw new IllegalStateException(
+            s"$name version $v partially rewrote dirs with no recorded " +
+              "change data — enable the change feed (setChangeFeed) before " +
+              "row-level mutations to read changes across them")
+        // a full replace reads as delete-all, then insert-all
+        synthesized(prev, removed, "delete", v) ++ synthesized(cur, added, "insert", v)
       }
       }
-    }
-  }
-
-  /** CHANGE DATA FEED read: every row-level change in
-    * `(fromVersion, toVersion]` with `_change_type` ∈ {insert, delete,
-    * update_preimage, update_postimage} and `_commit_version`. Three
-    * sources, cheapest wins per version (the Delta CDF read model):
-    *   - a recorded `_cdf/<v>` dir (row-level mutations after
-    *     [[setChangeFeed]]) — read as-is, zero derivation;
-    *   - a pure append / pure dir-drop step — synthesized from the
-    *     added (insert) or removed (delete) dirs; dirs are immutable so
-    *     this is exact, and it is why appends never write change rows;
-    *   - a full replace (INSERT OVERWRITE / truncate-load / restore) —
-    *     delete-of-prior-snapshot + insert-of-new-snapshot.
-    * A partial rewrite with no recorded dir throws: the change rows
-    * were never captured and cannot be reconstructed from immutable
-    * dirs alone. `fromVersion = -1` includes version 0's creation.
-    *
-    * With `withRowIds`, every change row also carries `_row_id` — the
-    * row's stable tracking id: recorded MoR change rows read the
-    * `__rid` their `_cdf` files materialize; synthesized
-    * appends/drops derive base + position from that version's
-    * manifest. NULL where the id is unknowable (commits that predate
-    * [[enableRowTracking]], or copy-on-write rewrites whose postimage
-    * ids are only assigned at commit).
-    *
-    * CONTRACT — rid-uniqueness per commit: within one `_commit_version`
-    * a non-null `_row_id` appears at most once among
-    * insert/update_postimage rows and at most once among deletes. This
-    * holds for every write path in this store (an append assigns fresh
-    * ids; a MoR update records one postimage per touched rid; a merge
-    * commits one outcome per target row), which is what lets a rid-keyed
-    * replicator apply a version's upserts with the uniqueness gate off
-    * (cdc2). A future path that could emit both an insert and a
-    * postimage for one rid in one commit would break that gate-skip —
-    * cdc2 asserts the contract always-on (upsert-row count vs distinct
-    * rids per version, folded into its apply-plan aggregate), so a
-    * violation fails the replication loudly instead of corrupting the
-    * replica. */
-  def readChangesBetween(name: String, fromVersion: Long, toVersion: Long,
-                         withRowIds: Boolean = false): DataFrame = {
-    val curM = manifestForChanges(name, toVersion, fromVersion, toVersion)
-    // physical identity bridges RENAMEs between v and toVersion: each
-    // version's columns surface under their CURRENT logical names;
-    // columns dropped since v are skipped, columns added since v are
-    // null-filled by the final unionByName
-    val curByPhys: Map[String, String] =
-      curM.schema.map(f => curM.phys(f.name) -> f.name).toMap
-    def toCurrent(mv: Manifest): Seq[Column] =
-      mv.schema.flatMap(f => curByPhys.get(mv.phys(f.name)).map(cur =>
-        col(mv.phys(f.name)).as(cur)))
-    val ridField = org.apache.spark.sql.types.StructField(RidCol,
-      org.apache.spark.sql.types.LongType)
-    val parts: Seq[DataFrame] = changeSources(name, fromVersion, toVersion).map {
-      case RecordedChanges(cdfDir, _, v, mv) =>
-        // `__rid` null-fills for files that don't materialize it
-        val fields = mv.physSchema.fields ++
-          (if (withRowIds) Seq(ridField) else Nil) :+
-          org.apache.spark.sql.types.StructField("__cdc",
-            org.apache.spark.sql.types.StringType)
-        val rid = if (withRowIds) Seq(col(RidCol).as("_row_id")) else Nil
-        spark.read
-          .schema(org.apache.spark.sql.types.StructType(fields))
-          .parquet(cdfDir.toString)
-          .select(toCurrent(mv) ++ rid :+ col("__cdc").as("_change_type"): _*)
-          .withColumn("_commit_version", lit(v))
-      case SynthesizedChanges(m, dirs, kind, v) =>
-        val mapped = m.schema.flatMap(f => curByPhys.get(m.phys(f.name)).map(cur =>
-          col(f.name).as(cur)))
-        scan(name, m, dirs)
-          .select(mapped ++ (if (withRowIds) Seq(metaCol("_row_id", "_row_id")) else Nil): _*)
-          .withColumn("_change_type", lit(kind))
-          .withColumn("_commit_version", lit(v))
-    }
-    parts.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
-      .getOrElse {
-        val empty = scan(name, curM, Seq.empty)
-        (if (withRowIds) empty.withColumn("_row_id", lit(null).cast("long"))
-         else empty)
-          .withColumn("_change_type", lit(null).cast("string"))
-          .withColumn("_commit_version", lit(null).cast("long"))
-      }
-  }
-
-  /** The change FILES of (fromVersion, toVersion] for the SQL
-    * `<table>.changes` scan, each read as a table file is: its path,
-    * its lazy DV reference, its row-id base and its change kind and
-    * commit version as constants — enough for a file-based DSv2 scan
-    * to reproduce [[readChangesBetween]] exactly. Rid bases come from
-    * the version manifest of a synthesized group; recorded `_cdf`
-    * files carry a materialized `__rid` instead.
-    *
-    * DV delivery is LAZY, like the batch scan's ([[dvSidecarsByDir]]):
-    * each DV'd file maps to (manifest relpath, sidecar parquet files)
-    * and the scan task probes the sidecar executor-side
-    * (GraftDvSidecars) — pure manifest reads + one directory listing
-    * per distinct sidecar here, NO Spark job, NO tombstone position
-    * ever materialized on the driver. A synthesized `delete` group
-    * over a DV-heavy prior version (e.g. a full-replace commit on a
-    * table with a large tombstone backlog) stays O(files) driver
-    * memory instead of O(tombstones). */
-  private[graft] def changeFiles(name: String, fromVersion: Long, toVersion: Long)
-      : Seq[graft.sources.GraftFileRead] = {
-    def filesUnder(p: Path): Seq[String] =
-      if (!Files.isDirectory(p)) Seq.empty
-      else Using.resource(Files.list(p))(_.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq.sorted)
-    // recorded `_cdf` kind dirs are flat, but versions that an older
-    // writer recorded on a bucketed table nest one more level
-    // (`__cdc=<kind>/__b=<n>/part-*.parquet`); a flat listing read ZERO
-    // change files from those through the SQL/stream `.changes` surface
-    def filesUnderRecursive(p: Path): Seq[String] =
-      if (!Files.isDirectory(p)) Seq.empty
-      else Using.resource(Files.walk(p))(_.iterator().asScala
-        .filter(f => f.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq.sorted)
-    // the scan's trailing (_change_type, _commit_version) columns
-    def consts(kind: String, v: Long) =
-      org.apache.spark.sql.catalyst.InternalRow(
-        org.apache.spark.unsafe.types.UTF8String.fromString(kind), v)
-    changeSources(name, fromVersion, toVersion).flatMap {
-      case RecordedChanges(cdfDir, kinds, v, _) =>
-        kinds.flatMap(k => filesUnderRecursive(cdfDir.resolve(s"__cdc=$k")).map(f =>
-          graft.sources.GraftFileRead(f, consts = consts(k, v))))
-      case SynthesizedChanges(m, dirs, kind, v) =>
-        val sidecarsByName: Map[String, Seq[String]] =
-          dirs.flatMap(m.dvs.get).map(_.path).distinct.map { n =>
-            n -> filesUnder(dvRoot(name).resolve(n))
-          }.toMap
-        graft.sources.GraftFileRead.of(
-          dirs.map(d => d -> filesUnder(dataRoot(name).resolve(d))),
-          dirs.flatMap(d => m.dvs.get(d).map(ref => d -> sidecarsByName(ref.path))).toMap,
-          m.rowbase.map { case (rel, b) => dataRoot(name).resolve(rel).toString -> b },
-          consts(kind, v))
     }
   }
 

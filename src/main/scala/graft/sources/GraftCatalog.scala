@@ -1262,13 +1262,12 @@ class GraftRowIdsTable(root: String, tableName: String)
   *   spark.readStream.option("startVersion", a)
   *     .table("graft.<t>.changes")               -- streaming CDF
   * Columns = the table's schema + _change_type + _commit_version.
-  * Planning resolves the same per-version decision tree as
-  * [[graft.core.TableStore.readChangesBetween]] (recorded `_cdf` dirs,
+  * Planning lists the change files through
+  * [[graft.core.TableStore.changeFiles]] (recorded `_cdf` dirs,
   * synthesized appends/drops/full-replaces with their lazy DV
-  * references); the change files then read like table files — packed
-  * into shared tasks and decoded columnar by [[GraftReaderFactory]] —
-  * with each file's change kind and commit version as per-file
-  * constant columns.
+  * references); they then read like table files — packed into shared
+  * tasks and decoded columnar by [[GraftReaderFactory]] — with each
+  * file's change kind and commit version as per-file constant columns.
   * `startVersion` is EXCLUSIVE on both surfaces ((start, end], matching
   * readChangesBetween); a STREAM without it starts at the CURRENT
   * version — only new changes flow, the Delta readChangeFeed default.
@@ -1280,32 +1279,43 @@ class GraftChangesTable(root: String, table: String)
   private lazy val base = snap.schema
 
   override def name(): String = s"$table.changes"
-  /** Row-tracked tables surface each change row's stable `_row_id`
-    * (nullable: commits that predate tracking, or copy-on-write
-    * rewrites, can't attribute one). */
-  override def schema(): StructType = StructType(base.fields ++
-    (if (snap.rowTracking)
-       Seq(StructField(GraftRowIdMeta.Name, LongType, nullable = true))
-     else Nil) ++
-    GraftChangesScan.Consts.fields)
+  /** Row-tracked tables surface each change row's stable `_row_id`. */
+  override def schema(): StructType = GraftChangesScan.schema(base, snap.rowTracking)
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns {
-      private var required: StructType = schema()
-      // the constants are free per-file columns: always read both, so
-      // every change file carries the same constant row
-      override def pruneColumns(s: StructType): Unit =
-        required = StructType(s.fields.filterNot(f =>
-          GraftChangesScan.Consts.fieldNames.contains(f.name)) ++
-          GraftChangesScan.Consts.fields)
-      override def build(): Scan =
-        new GraftChangesScan(root, table, base, required,
-          Option(options.get("startVersion")).map(_.toLong),
-          Option(options.get("endVersion")).map(_.toLong),
-          Option(options.get("maxVersionsPerTrigger")).map(_.toLong))
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    def opt(k: String) = Option(options.get(k)).map(_.toLong)
+    val (start, end) = (opt("startVersion"), opt("endVersion"))
+    GraftChangesScan.builder(schema()) { required =>
+      new GraftChangesScan(table, base, required, snap.colmap, () => {
+        val st = store
+        st.changeFiles(table, start.getOrElse(-1L), end.getOrElse(st.currentVersion(table)))
+      }) {
+        override def toMicroBatchStream(checkpointLocation: String)
+            : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+          new GraftChangeFeedStream(root, table, base, required,
+            start, opt("maxVersionsPerTrigger"))
+      }
     }
+  }
+}
+
+/** The change files of one version range as the library face reads
+  * them ([[graft.core.TableStore.readChangesBetween]]): the list
+  * resolved when the frame was built, decoded under one version's
+  * logical schema `base` and column mapping, with `_row_id` when
+  * `rowId`. Read-only, and named by no catalog. */
+class GraftChangeFilesTable(table: String, base: StructType, colmap: Map[String, String],
+                            rowId: Boolean, files: Seq[GraftFileRead])
+    extends Table with SupportsRead {
+  override def name(): String = s"$table.changes"
+  override def schema(): StructType = GraftChangesScan.schema(base, rowId)
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    GraftChangesScan.builder(schema())(
+      new GraftChangesScan(table, base, _, colmap, () => files))
 }
 
 object GraftChangesScan {
@@ -1315,34 +1325,45 @@ object GraftChangesScan {
     StructField("_change_type", StringType, nullable = false),
     StructField("_commit_version", LongType, nullable = false)))
 
+  /** A change table's columns: the logical schema `base`, then
+    * `_row_id` when asked for (nullable: commits that predate
+    * tracking, or copy-on-write rewrites, can't attribute one), then
+    * the constants. */
+  def schema(base: StructType, rowId: Boolean): StructType = StructType(base.fields ++
+    (if (rowId) Seq(StructField(GraftRowIdMeta.Name, LongType, nullable = true)) else Nil) ++
+    Consts.fields)
+
+  /** A change table's scan builder: the constants are free per-file
+    * columns, so pruning always keeps both and every change file
+    * carries the same constant row. */
+  def builder(full: StructType)(scan: StructType => Scan): ScanBuilder =
+    new ScanBuilder with SupportsPushDownRequiredColumns {
+      private var required: StructType = full
+      override def pruneColumns(s: StructType): Unit =
+        required = StructType(s.fields.filterNot(f =>
+          Consts.fieldNames.contains(f.name)) ++ Consts.fields)
+      override def build(): Scan = scan(required)
+    }
+
   /** Change files (data AND `_cdf`) carry PHYSICAL names; physical
-    * identities are stable across renames, so the CURRENT mapping reads
-    * files of every version. */
-  def readerFactory(store: TableStore, table: String, base: StructType,
-                    required: StructType): PartitionReaderFactory =
-    new GraftReaderFactory(required, base, Array.empty,
-      colmap = store.snapshot(table).colmap, constSchema = Consts)
+    * identities are stable across renames, so one version's mapping
+    * reads files of every version. */
+  def readerFactory(base: StructType, required: StructType,
+                    colmap: Map[String, String]): PartitionReaderFactory =
+    new GraftReaderFactory(required, base, Array.empty, colmap = colmap, constSchema = Consts)
 }
 
-class GraftChangesScan(root: String, table: String,
-                       base: StructType, required: StructType,
-                       startVersion: Option[Long], endVersion: Option[Long],
-                       maxVersionsPerTrigger: Option[Long])
+/** A change-feed scan of the files `files` lists when Spark plans it,
+  * decoded under `base` and `colmap`. */
+class GraftChangesScan(table: String, base: StructType, required: StructType,
+                       colmap: Map[String, String], files: () => Seq[GraftFileRead])
     extends Scan with Batch {
-  private def store = new TableStore(SparkSession.active, root)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    val st = store
-    GraftInputPartition.packed(st.changeFiles(table, startVersion.getOrElse(-1L),
-      endVersion.getOrElse(st.currentVersion(table))))
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    GraftInputPartition.packed(files())
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftChangesScan.readerFactory(store, table, base, required)
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftChangeFeedStream(root, table, base, required,
-      startVersion, maxVersionsPerTrigger)
+    GraftChangesScan.readerFactory(base, required, colmap)
   override def description(): String =
     s"graft change-feed scan of $table"
 }
@@ -1377,7 +1398,7 @@ class GraftChangeFeedStream(root: String, table: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftChangesScan.readerFactory(store, table, base, required)
+    GraftChangesScan.readerFactory(base, required, store.snapshot(table).colmap)
 }
 
 /** Offset = committed store version (-1 = before any data). */
@@ -1453,41 +1474,17 @@ class GraftMicroBatchStream(root: String, table: String,
     val e = end.asInstanceOf[GraftStreamOffset].v
     if (e <= s) return Array.empty
     val st = store
-    val startSnap = if (s < 0) None else Some(st.snapshotAt(table, s))
-    val startDirs: Set[String] = startSnap.fold(Set.empty[String])(_.dirs.toSet)
-    val endSnap = st.snapshotAt(table, e)
-    val removed = startDirs -- endSnap.dirs.toSet
-    if (removed.nonEmpty)
-      throw new IllegalStateException(
-        s"streaming source $table: version range ($s, $e] removed data dirs " +
-          s"(${removed.take(3).mkString(", ")}…) — the stream requires append-only commits")
-    // merge-on-read DELETE/MERGE commits change only DV sidecars, not
-    // dirs — row-level deletes an INCREMENTAL batch can't represent, so
-    // they fail the same way removed dirs do (otherwise the batch would
-    // silently emit tombstoned rows). The INITIAL batch (s < 0) is a
-    // snapshot read, not a replay: it streams the end snapshot with its
-    // DVs applied, so a table whose history contains MoR deletes is
-    // still streamable from scratch.
-    val startDvs = startSnap.fold(Map.empty[String, TableStore.DvRef])(_.dvs)
-    val dvChanged = endSnap.dvs.collect {
-      case (d, ref) if !startDvs.get(d).contains(ref) => d }
-    if (s >= 0 && dvChanged.nonEmpty)
-      throw new IllegalStateException(
-        s"streaming source $table: version range ($s, $e] added deletion-" +
-          s"vector tombstones on dirs (${dvChanged.take(3).mkString(", ")}…) — " +
-          "the stream requires append-only commits")
-    val newDirs = endSnap.dirs.filterNot(startDirs.contains)
-    // initial snapshot: lazy per-file DV refs, probed executor-side
-    // exactly like the batch scan (no positions on the driver)
-    val dvSidecars: Map[String, Seq[String]] =
-      if (s < 0 && endSnap.dvs.nonEmpty) st.dvSidecarsByDir(table, endSnap.dvs)
-      else Map.empty
+    // the INITIAL batch (s < 0) is a snapshot read, not a replay: it
+    // streams the end snapshot with its DVs applied (lazy per-file refs,
+    // probed executor-side like the batch scan), so a table whose
+    // history contains MoR deletes is still streamable from scratch.
+    // An incremental batch takes the dirs its range appended, each step
+    // checked append-only, whatever the batch boundaries.
+    val snap = if (s < 0) st.snapshotAt(table, e) else st.appendedSnapshot(table, s, e)
     // `_row_id` on a stream: each batch's files carry their base from
     // the batch's end manifest
-    val ridBase: Map[String, Long] =
-      if (endSnap.rowTracking) st.rowBaseByFile(table, endSnap.rowbase) else Map.empty
-    GraftInputPartition.packed(GraftFileRead.of(
-      endSnap.copy(dirs = newDirs).filesByDir(st, table), dvSidecars, ridBase))
+    GraftInputPartition.packed(GraftFileRead.of(snap.filesByDir(st, table),
+      st.dvSidecarsByDir(table, snap.dvs), st.rowBaseByFile(table, snap.rowbase)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

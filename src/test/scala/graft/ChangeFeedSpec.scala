@@ -245,8 +245,11 @@ class ChangeFeedSpec extends AnyFunSuite {
     val sql = spark.sql(
       "SELECT id, v, _change_type, _commit_version FROM gcdf.t.changes")
       .as[(Long, String, String, Long)].collect().toSet
-    assert(sql === lib)
-    assert(sql.contains((1L, "a", "delete", 3L)))
+    val expected = Set((1L, "a", "insert", 0L), (2L, "b", "insert", 0L),
+      (2L, "b", "update_preimage", 2L), (2L, "B", "update_postimage", 2L),
+      (3L, "c", "insert", 2L), (1L, "a", "delete", 3L))
+    assert(lib === expected)
+    assert(sql === expected)
     // bounded range via read options
     val ranged = spark.read.option("startVersion", "1").option("endVersion", "2")
       .table("gcdf.t.changes")
@@ -285,13 +288,14 @@ class ChangeFeedSpec extends AnyFunSuite {
       .table("gdvfr.t.changes")
       .filter(col("_change_type") === "delete")
       .select("id").as[Long].collect().toSet
+    val survivors = (1L to 1000L).filter(i => i % 10 >= 2).toSet
     assert(dels.size === 800)
-    assert(dels === (1L to 1000L).filter(i => i % 10 >= 2).toSet)
+    assert(dels === survivors)
     // and the library path agrees exactly
     val lib = ts.readChangesBetween("t", 3, 4)
       .filter(col("_change_type") === "delete")
       .select("id").as[Long].collect().toSet
-    assert(lib === dels)
+    assert(lib === survivors)
   }
 
   test("packed change scans keep per-file constants: batch and stream " +
@@ -351,21 +355,29 @@ class ChangeFeedSpec extends AnyFunSuite {
     try Seq(false, true).foreach { rid =>
       val t = if (rid) "tracked" else "plain"
       build(t, rowTracking = rid)
-      val lib = sorted(ts.readChangesBetween(t, -1L, ts.currentVersion(t),
-        withRowIds = rid), rid)
+      // the library and the SQL batch face: one columnar Graft scan
+      // whether or not `_row_id` is projected
+      val faces = Seq(
+        "library" -> ts.readChangesBetween(t, -1L, ts.currentVersion(t), withRowIds = rid),
+        "batch" -> spark.read.option("startVersion", "-1").table(s"gcpk.$t.changes"))
+      val Seq(lib, rows) = faces.map { case (face, df) =>
+        val (rows, tasks) = tasksOf(sorted(df, rid))
+        val plan = projected(df, rid).queryExecution.executedPlan
+        val scans = plan.collect {
+          case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            (s.inputRDD.getNumPartitions, s.supportsColumnar)
+        }
+        assert(scans === Seq((cores, true)), s"$face scans for $cores cores: $scans")
+        assert(plan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+        }.isEmpty, s"$face plan reads files beside the Graft scan: $plan")
+        // the pin: one stage, one task per core — never one per file
+        assert(tasks === Seq(8), s"$face .changes stages: $tasks")
+        rows
+      }
       assert(lib.map(_._3).toSet === Set("insert", "update_preimage",
         "update_postimage", "delete"))
-      // batch: columnar whether or not `_row_id` is projected
-      val batch = spark.read.option("startVersion", "-1").table(s"gcpk.$t.changes")
-      val (rows, tasks) = tasksOf(sorted(batch, rid))
       assert(rows === lib)
-      val scans = projected(batch, rid).queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          (s.inputRDD.getNumPartitions, s.supportsColumnar)
-      }
-      assert(scans === Seq((cores, true)), s"scans for $cores cores: $scans")
-      // the pin: one stage, one task per core — never one per file
-      assert(tasks === Seq(8), s"batch .changes stages: $tasks")
       // stream: Trigger.AvailableNow drains the same window in one batch
       val streamed = scala.collection.mutable.Buffer.empty[Row5]
       val (q, streamTasks) = tasksOf {

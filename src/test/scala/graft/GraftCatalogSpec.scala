@@ -512,17 +512,24 @@ class GraftCatalogSpec extends AnyFunSuite {
     ts.mergeUpsert("bcdc",
       (50L to 120L).map(i => (i, i * 10L + 1L)).toDF("k", "qty"),
       Seq("k"), changeTypeCol = None)
-    val lib = ts.readChangesBetween("bcdc", v0, ts.currentVersion("bcdc"))
-      .groupBy("_change_type").count()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "qty", "_change_type").as[(Long, Long, String)].collect().toSet
+    val expected = (50L to 100L).map(i => (i, i * 10L, "update_preimage")).toSet ++
+      (50L to 100L).map(i => (i, i * 10L + 1L, "update_postimage")) ++
+      (101L to 120L).map(i => (i, i * 10L + 1L, "insert"))
+    val libDf = ts.readChangesBetween("bcdc", v0, ts.currentVersion("bcdc"))
+    val lib = libDf.groupBy("_change_type").count()
       .as[(String, Long)].collect().toMap
     assert(lib === Map("update_preimage" -> 51L, "update_postimage" -> 51L,
       "insert" -> 20L), lib.toString)
+    assert(rows(libDf) === expected)
     val sqlRead = spark.read
       .option("startVersion", v0.toString)
       .option("endVersion", ts.currentVersion("bcdc").toString)
       .table("graft.bcdc.changes")
     assert(sqlRead.groupBy("_change_type").count()
       .as[(String, Long)].collect().toMap === lib)
+    assert(rows(sqlRead) === expected)
     // values identical, not just counts
     assert(sqlRead.filter(col("_change_type") === "update_postimage")
       .agg(org.apache.spark.sql.functions.sum("qty")).head().getLong(0) ===
@@ -530,13 +537,16 @@ class GraftCatalogSpec extends AnyFunSuite {
     // and the DELETE kind rides the same nested layout
     val v1 = ts.currentVersion("bcdc")
     ts.deleteVectorized("bcdc", col("k") <= 10L)
+    val delExpected = (1L to 10L).map(i => (i, i * 10L, "delete")).toSet
     val delLib = ts.readChangesBetween("bcdc", v1, ts.currentVersion("bcdc"))
-      .filter(col("_change_type") === "delete").count()
+      .filter(col("_change_type") === "delete")
     val delSql = spark.read
       .option("startVersion", v1.toString)
       .table("graft.bcdc.changes")
-      .filter(col("_change_type") === "delete").count()
-    assert(delLib === 10L)
-    assert(delSql === delLib)
+      .filter(col("_change_type") === "delete")
+    assert(delLib.count() === 10L)
+    assert(delSql.count() === delLib.count())
+    assert(rows(delLib) === delExpected)
+    assert(rows(delSql) === delExpected)
   }
 }

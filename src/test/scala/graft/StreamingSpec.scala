@@ -273,6 +273,54 @@ class StreamingSpec extends AnyFunSuite {
       s"expected the DV guard to fail the stream, got: $e")
   }
 
+  test("the append stream refuses a dir appended and rewritten inside one " +
+      "batch's range, as it does when each version is its own batch") {
+    import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+    val root = Files.createTempDirectory("aostream").toString
+    val store = new TableStore(spark, root)
+    spark.conf.set("spark.sql.catalog.graft_ao", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_ao.root", root)
+    store.create("feed", (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")) // v0
+    val seen = scala.collection.mutable.Map.empty[String, Set[Long]]
+    def run(ckpt: String, maxVersions: Option[Int]) = {
+      val reader = spark.readStream
+      maxVersions.foreach(n => reader.option("maxVersionsPerTrigger", n.toLong))
+      reader.table("graft_ao.feed")
+        .writeStream
+        .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          seen.synchronized {
+            seen(ckpt) = seen.getOrElse(ckpt, Set.empty[Long]) ++ df.collect().map(_.getLong(0))
+          }: Unit)
+        .option("checkpointLocation", s"$root/$ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
+    val faces = Seq("one_batch" -> None, "per_version" -> Some(1))
+    // both streams drain v0 into their checkpoints
+    faces.foreach { case (c, n) => run(c, n).awaitTermination(60000) }
+    assert(faces.forall(f => seen(f._1) === (1L to 10L).toSet))
+    val v0Dirs = store.liveDirs("feed")
+    store.append("feed", (11L to 20L).map(i => (i, s"v$i")).toDF("id", "v")) // v1
+    val v1Dirs = store.liveDirs("feed").filterNot(v0Dirs.toSet)
+    store.delete("feed", col("id") === 15L)                                   // v2
+    // v2 rewrote v1's dir and left v0's: the range's end points alone
+    // look like an append of 9 rows
+    assert(!store.liveDirs("feed").exists(v1Dirs.contains))
+    assert(v0Dirs.forall(store.liveDirs("feed").contains))
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    faces.foreach { case (c, n) =>
+      val q = run(c, n)
+      val e = intercept[StreamingQueryException](q.awaitTermination(60000): Unit)
+      assert(causes(e).exists(x => Option(x.getMessage).exists(_.contains("removed data dirs"))),
+        s"$c: expected the append-only guard to fail the stream, got: $e")
+    }
+    // the one-batch range delivered nothing past v0; the per-version
+    // stream delivered v1 whole before v2 failed it
+    assert(seen("one_batch") === (1L to 10L).toSet)
+    assert(seen("per_version") === (1L to 20L).toSet)
+  }
+
   test("streaming bloom decontamination flags reference keys batch-by-batch") {
     implicit val sqlCtx = spark.sqlContext
     // reference set: 200 "contaminated" keys folded into a bitset batch-side
